@@ -109,25 +109,8 @@ object Bench {
       // timed runs must not read persisted staging warmed by a prior
       // run of the same query — clear so every run pays full cost
       spark.catalog.clearCache()
-      // the cluster-labels memo is a cross-query materialization; the
-      // producer must still pay (and report) the full propagation loop
-      if (name == "pipe_dup_clusters")
-        operators.PipelineOps.invalidateClusterMemo()
-      // same contract for the trained-quantizer frames: sim_kmeans
-      // pays full training, sim_pq_topk pays the full encode
-      if (name == "sim_kmeans")
-        operators.SimilarityOps.invalidateKmMemo()
-      if (name == "sim_pq_topk")
-        operators.SimilarityOps.invalidatePqMemo()
-      // same contract for the BPE training loop: txt_bpe_train pays
-      // (and reports) full training; txt_bpe_apply times the encode
-      // against the materialized vocab, the reuse a real pipeline gets
-      if (name == "txt_bpe_train")
-        operators.TextOps.invalidateBpeMemo()
-      // the frozen distill model (r15) needs NO invalidation hook:
-      // txt_quality_distill computes (and reports) the full training
-      // loop directly — the memo only serves auc/calibration, which
-      // time against the frozen artifact (the km/pq/bpe contract)
+      // producer pays: the query's own memo slots start cold
+      operators.Memo.beforeTimed(name)
       val fn = SparkEntry.queries(name)
       // sampled before the run, recorded only on SUCCESS — a failed
       // run drops its sample from `samples`, so recording its load

@@ -38,11 +38,7 @@ object JobCount {
     spark.sparkContext.addSparkListener(listener)
     names.foreach { n =>
       spark.catalog.clearCache()
-      operators.PipelineOps.invalidateClusterMemo()
-      operators.SimilarityOps.invalidateKmMemo()
-      operators.SimilarityOps.invalidatePqMemo()
-      operators.TextOps.invalidateBpeMemo()
-      operators.TextOps.invalidateDistillMemo()
+      operators.Memo.clearAll()
       jobs = 0; stages = 0; tasks = 0; shuffleWrite = 0L
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, dir)

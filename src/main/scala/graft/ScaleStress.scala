@@ -205,19 +205,8 @@ object ScaleStress {
   private def runOnce(spark: SparkSession, name: String, dir: String)
       : (Double, String) = {
     spark.catalog.clearCache()
-    // EVERY sample runs cold: invalidate all shared-subcomputation
-    // memos (cluster labels, k-means/PQ models, BPE merges), not just
-    // before their producer queries. Bench's warm-consumer policy is
-    // correct THERE (warmup and timed rounds hit the same dir, so
-    // consumers time warm-vs-warm — the reuse a real pipeline gets);
-    // here the 1× warmup would populate the memo for the 1× dir only,
-    // and a consumer's ratio would compare a memoized 1× run against
-    // a cold N× run — r12's tail sweep flagged pipe_curate_cc at 83×
-    // from exactly this asymmetry (cold-vs-cold it is ~linear).
-    operators.PipelineOps.invalidateClusterMemo()
-    operators.SimilarityOps.invalidateKmMemo()
-    operators.SimilarityOps.invalidatePqMemo()
-    operators.TextOps.invalidateBpeMemo()
+    // EVERY sample runs cold (the Memo clearAll policy)
+    operators.Memo.clearAll()
     // t0 BEFORE construction: iterative ops (pagerank, k-means, CC,
     // BPE) run their checkpointed loops eagerly while the DataFrame
     // is being built — Bench times them the same way

@@ -10,86 +10,26 @@ import graft.sources.Tables
   * finding 1: a compile-time plane count saturates its keyspace and
   * the within-bucket pair stage goes quadratic — 21.8×/75.5× measured
   * at a 10× corpus). Each blocking mode counts its population ONCE
-  * per (dir) — one cheap aggregate over a narrow column, memoized for
-  * the session — and keys at `HB.derivePlanes(n)`, so bucket
-  * occupancy stays ≈ TARGET_BUCKET at any corpus size. The DuckDB
-  * oracles derive the identical width in SQL from the identical
-  * COUNT (HB.derivePlanesSql), so every derived width stays
-  * hash-verified end to end.
+  * per (dir) — one cheap aggregate over a narrow column, memoized in
+  * [[Memo]] against the table's fingerprint — and keys at
+  * `HB.derivePlanes(n)`, so bucket occupancy stays ≈ TARGET_BUCKET at
+  * any corpus size. The DuckDB oracles derive the identical width in
+  * SQL from the identical COUNT (HB.derivePlanesSql), so every derived
+  * width stays hash-verified end to end.
   */
 object LshWidth {
-
-  /** Memo key is (dir, mode, table FINGERPRINT) — not bare dir
-    * (ADVICE r10): the DuckDB oracles recompute the population COUNT
-    * live, so if the data under a dir changes within one JVM session
-    * (re-materialization, append), a dir-keyed memo would keep Spark
-    * at a stale width while the oracle derives a fresh one — a
-    * spurious hash-gate mismatch. The fingerprint is the parquet
-    * directory's (name, mtime, length) listing for local paths
-    * (every test/bench/stress path here, so the seam is closed
-    * automatically everywhere this build runs); for non-local URIs
-    * the fingerprint degrades to a constant, and a deployment that
-    * rewrites such a table within one session must call
-    * [[invalidate]] itself — NO in-repo path does, because none
-    * reads non-local URIs. */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Int]
-
-  private def fingerprint(dir: String, table: String = "embeddings"): String = {
-    val d = new java.io.File(s"$dir/$table.parquet")
-    val fs = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-    if (fs.isEmpty) "static"
-    else {
-      // (name, mtime, length) listing + file count + a CONTENT
-      // component (ADVICE r11): on filesystems with 1s mtime
-      // granularity a same-second rewrite that reproduces the same
-      // names and byte lengths would fingerprint identically while
-      // the DuckDB oracle counts the new rows live. The parquet
-      // footer (row counts, column stats) lives in the file TAIL, so
-      // a CRC of the first data file's last 64 KiB changes whenever
-      // its row population does, closing that residue for one small
-      // read per derivation call.
-      // skip zero-byte markers (_SUCCESS) — an empty tail CRCs to a
-      // constant and would void the content component entirely
-      val first = fs.filter(f => f.isFile && f.length > 0)
-        .sortBy(_.getName).headOption
-      val tailCrc = first.fold("nofile") { f =>
-        try {
-          val raf = new java.io.RandomAccessFile(f, "r")
-          try {
-            val n = math.min(f.length(), 65536L).toInt
-            raf.seek(f.length() - n)
-            val buf = new Array[Byte](n)
-            raf.readFully(buf)
-            val crc = new java.util.zip.CRC32()
-            crc.update(buf)
-            java.lang.Long.toHexString(crc.getValue)
-          } finally raf.close()
-        } catch { case _: java.io.IOException => "ioerr" }
-      }
-      val listing = fs.map(f => s"${f.getName}:${f.lastModified}:${f.length}")
-        .sorted.mkString("|") + s"|n=${fs.length}|crc=$tailCrc"
-      java.lang.Integer.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(listing))
-    }
-  }
-
-  /** Drop every memoized width under `dir` (any fingerprint) — for
-    * callers that rewrite a table through a non-filesystem path. */
-  def invalidate(dir: String): Unit =
-    cache.keys.filter(_._1 == dir).foreach(cache.remove)
 
   /** Width for label-blocked dedup (pairs only form within a label):
     * the quadratic stage is per (label, table, key), so the driving
     * population is the LARGEST label. */
   def labelPlanes(spark: SparkSession, dir: String): Int =
-    cache.getOrElseUpdate((dir, "label", fingerprint(dir)), {
+    Memo(Memo.lshPlanes, spark, dir, "label") {
       val n = Tables.embeddings(spark, dir)
         .groupBy("label").count()
         .agg(coalesce(max("count"), lit(0L)).as("m"))
         .first().getLong(0)
       HB.derivePlanes(n)
-    })
+    }
 
   /** Width for unblocked (whole-corpus) candidate generation — ANN
     * search, k-NN graph build, and the cluster-blocked SemDeDup pass
@@ -97,7 +37,7 @@ object LshWidth {
     * but the total is a safe upper bound that needs no training
     * pass first). */
   def corpusPlanes(spark: SparkSession, dir: String): Int =
-    cache.getOrElseUpdate((dir, "corpus", fingerprint(dir)),
+    Memo(Memo.lshPlanes, spark, dir, "corpus")(
       HB.derivePlanes(Tables.embeddings(spark, dir).count()))
 
   /** Manku block count for the simhash/phash dedup families — the
@@ -106,7 +46,7 @@ object LshWidth {
     * consumers' filtered subsets; the oracle replays the identical
     * COUNT via [[docsCountSql]]). */
   def simhashBlocks(spark: SparkSession, dir: String): Int =
-    cache.getOrElseUpdate((dir, "simhash", fingerprint(dir, "documents")),
+    Memo(Memo.simhashBlocks, spark, dir)(
       DedupOps.deriveSimhashBlocks(Tables.documents(spark, dir).count()))
 
   /** SQL twins of the population counts (embedded inside

@@ -129,24 +129,11 @@ object PipelineOps extends Suite {
   // for O(log n) rounds, same join shape). The driver loop only
   // checks a convergence COUNT per round — no row data ever collects.
   // Four §H queries consume the converged labels (dup_clusters,
-  // curate_cc, split, funnel_report); run standalone each would pay
-  // the whole loop again. An engine materializes the common
-  // subcomputation ONCE — the labels frame is already backed by
-  // materialized blocks that outlive the loop, so memoizing the
-  // frame per (session, data dir) replays nothing and holds no row
-  // data on the driver. Keyed by the exact dir string: different
-  // datasets never share an entry.
-  private val clusterMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
+  // curate_cc, split, funnel_report) through Memo.clusterLabels.
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    clusterMemo.getOrElseUpdate((spark, dir), computeClusterLabels(spark, dir))
+    Memo(Memo.clusterLabels, spark, dir)(computeClusterLabels(spark, dir))
 
-  /** Drop memoized cluster labels — the bench invalidates before
-    * timing the PRODUCER query so pipe_dup_clusters' recorded cost is
-    * the true loop, while the three consumer queries time against the
-    * materialized labels (the reuse a real pipeline gets). */
-  private[graft] def invalidateClusterMemo(): Unit = clusterMemo.clear()
+  private[graft] def invalidateClusterMemo(): Unit = Memo.clear(Memo.clusterLabels)
 
   private def computeClusterLabels(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id")

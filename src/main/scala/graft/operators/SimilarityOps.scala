@@ -387,11 +387,8 @@ object SimilarityOps extends Suite {
     * the query-side lookup table (dq) consume it — without the
     * checkpoint the whole distance subtree plans (and runs) under
     * both branches. Shared by sim_pq_topk and sim_ivfpq. */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private def pqSubDist(spark: SparkSession, dir: String): DataFrame =
-    pqMemo.getOrElseUpdate((spark, dir), pqSubDistCompute(spark, dir))
+    Memo(Memo.pqSubDist, spark, dir)(pqSubDistCompute(spark, dir))
 
   private def pqSubDistCompute(spark: SparkSession, dir: String): DataFrame = {
     // staged once (r15): the per-label sums AND the distance join both
@@ -531,29 +528,15 @@ object SimilarityOps extends Suite {
 
   /** Lloyd's training core: returns the final checkpointed assignment
     * frame (vec_id, dq, cluster, dist_sq). Shared by the stats query,
-    * the WSS-descent spec, and the trained-IVF/IVFADC searches.
-    * Like the dup-cluster labels, the trained assignment is an
-    * engine-level common subcomputation (three §F queries consume
-    * it), already materialized by Ckpt.stage — so it
-    * memoizes per (session, dataset, iters). The bench invalidates
-    * before the PRODUCER (sim_kmeans pays and reports full training;
-    * the searches time against the materialization, which is the
-    * reuse a real serving pipeline gets). */
+    * the WSS-descent spec, and the trained-IVF/IVFADC searches through
+    * Memo.kmeansTrain, per (session, dataset, iters). */
   private[graft] def kmeansTrain(spark: SparkSession, dir: String,
       iters: Int): DataFrame =
-    kmMemo.getOrElseUpdate((spark, dir, iters),
+    Memo(Memo.kmeansTrain, spark, dir, iters)(
       kmeansTrainCompute(spark, dir, iters))
 
-  private val kmMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
-
-  /** Drop a memoized producer frame — bench hooks (see
-    * [[kmeansTrain]]; PipelineOps.invalidateClusterMemo is the same
-    * contract for the dup-cluster labels). Separate so clearing one
-    * producer's frame doesn't force the other's consumers to
-    * recompute. */
-  private[graft] def invalidateKmMemo(): Unit = kmMemo.clear()
-  private[graft] def invalidatePqMemo(): Unit = pqMemo.clear()
+  private[graft] def invalidateKmMemo(): Unit = Memo.clear(Memo.kmeansTrain)
+  private[graft] def invalidatePqMemo(): Unit = Memo.clear(Memo.pqSubDist)
 
   private def kmeansTrainCompute(spark: SparkSession, dir: String,
       iters: Int): DataFrame = {

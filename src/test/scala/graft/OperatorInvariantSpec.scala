@@ -247,12 +247,58 @@ class OperatorInvariantSpec extends SparkSpec {
       "dominant language oversampled above a tail language")
   }
 
-  test("cluster-label memo survives invalidation with identical labels") {
-    val before = run("pipe_dup_clusters").collect()
-    operators.PipelineOps.invalidateClusterMemo()
-    val after = run("pipe_dup_clusters").collect()
-    assert(before.sameElements(after),
-      "recomputed cluster labels differ from the memoized frame")
+  // producer pays: one input per memo slot that has a producer query
+  private val producerSlots = {
+    import operators.Memo._
+    Seq(clusterLabels -> "cluster-label memo survives invalidation with identical labels",
+      kmeansTrain -> "k-means memo survives invalidation with identical cluster stats",
+      pqSubDist -> "PQ memo survives invalidation with identical top-k",
+      bpeTrain -> "BPE memo survives invalidation with identical merges",
+      qdFeatures -> "distill-feature memo survives invalidation with identical rounds")
+  }
+  private def rows(name: String) = run(name).collect().toSeq.sortBy(_.toString)
+
+  producerSlots.foreach { case (slot, title) =>
+    test(title) {
+      val q = slot.producer.get
+      rows(q)
+      val memoized = rows(q)
+      val held = operators.Memo.held
+      operators.Memo.beforeTimed(q)
+      assert(held -- operators.Memo.held == Set(slot.name),
+        s"beforeTimed($q) must clear exactly ${slot.name}")
+      assert(memoized == rows(q),
+        s"recomputed $q differs from the memoized ${slot.name}")
+    }
+  }
+
+  test("beforeTimed clears only producer slots; each forwarder clears its own") {
+    import operators.{Memo, LshWidth, PipelineOps => P, SimilarityOps => S,
+      TextOps => T}
+    def fill(): Unit = {
+      producerSlots.foreach { case (slot, _) => run(slot.producer.get).collect() }
+      T.distillTrain(spark, sf)
+      LshWidth.labelPlanes(spark, sf)
+      LshWidth.simhashBlocks(spark, sf)
+      assert(Memo.held == Memo.slots.map(_.name).toSet)
+    }
+    def clears(hook: => Unit): Set[String] = {
+      val held = Memo.held
+      hook
+      held -- Memo.held
+    }
+    fill()
+    val producers = Memo.slots.flatMap(_.producer).toSet
+    SparkEntry.queries.keys.filterNot(producers).foreach(q =>
+      assert(clears(Memo.beforeTimed(q)).isEmpty, s"$q produces no slot"))
+    Memo.slots.filter(_.producer.nonEmpty).foreach(slot =>
+      assert(clears(Memo.beforeTimed(slot.producer.get)) == Set(slot.name)))
+    fill()
+    assert(clears(P.invalidateClusterMemo()) == Set(Memo.clusterLabels.name))
+    assert(clears(S.invalidateKmMemo()) == Set(Memo.kmeansTrain.name))
+    assert(clears(S.invalidatePqMemo()) == Set(Memo.pqSubDist.name))
+    assert(clears(T.invalidateBpeMemo()) == Set(Memo.bpeTrain.name))
+    assert(clears(T.invalidateDistillMemo()) == Set(Memo.distillModel.name))
   }
 
   test("sim_range_search returns exactly the τ-ball and agrees with the exact path") {

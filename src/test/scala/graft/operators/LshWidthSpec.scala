@@ -42,7 +42,7 @@ class LshWidthSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_lshwidth2").toString
     writeEmbeddings(dir, 10)
     assert(LshWidth.labelPlanes(spark, dir) == HB.PLANES)
-    LshWidth.invalidate(dir) // must not throw, must leave re-derivation intact
+    Memo.invalidate(dir) // must not throw, must leave re-derivation intact
     assert(LshWidth.labelPlanes(spark, dir) == HB.PLANES)
   }
 
