@@ -295,6 +295,18 @@ object VersionedTable {
     pmod(hash(col(pk)), lit(p))
   }
 
+  /** The distinct partition ids `df`'s `pidCol` holds, from ONE
+    * narrow job: each task reduces its rows to their pid set and the
+    * driver unions the sets. `distinct().collect()` would pay a
+    * shuffle-map job plus a result job for the same answer; the
+    * result is bounded by the partition count either way. */
+  def touchedPids(df: DataFrame, pidCol: String = PidCol): Set[Int] = {
+    import df.sparkSession.implicits._
+    df.select(pidCol).as[Int]
+      .mapPartitions(pids => Iterator.single(pids.toArray.distinct))
+      .collect().iterator.flatten.toSet
+  }
+
   private def stringFieldAt(root: String, v: Int,
       field: String): Option[String] =
     stringFieldOf(Files.readString(versionFile(root, v)), field)
@@ -1292,8 +1304,8 @@ object VersionedTable {
         val k = keys.select(col(pk).cast(pkType).as(pk)).distinct()
           .withColumn(PidCol, keyPid(pk, p)).persist()
         try {
-          val candidates = k.select(PidCol).distinct().collect()
-            .map(_.getInt(0).toString).filter(pm.contains).sorted
+          val candidates = touchedPids(k).toSeq
+            .map(_.toString).filter(pm.contains).sorted
           if (candidates.isEmpty) return (0L, Nil)
           val dirs = candidates.flatMap(pm(_))
           val existing = readWithPid(spark, root, dirs, schema).persist()

@@ -1,8 +1,13 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.util.concurrent.{CompletionException, ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{classic, Dataset, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** One decoded CDC event (the pgoutput-decoded row analog —
@@ -168,6 +173,18 @@ case class TracedCdcEvent(
 object CdcDemux {
   import CdcStream.{applied, newer}
 
+  /** The driver threads the per-table merges run on. Daemon threads,
+    * so an idle pool never holds the JVM open; cached, so the thread
+    * count follows the number of tables in flight. */
+  private lazy val pool: ExecutorService = {
+    val n = new AtomicInteger
+    Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, s"graft-cdc-demux-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
   /** Route one multiplexed CDC stream to per-table merge targets —
     * the reference's one-replication-slot → many-table-buffers shape.
     * Each micro-batch is cached once, then each REGISTERED table's
@@ -178,6 +195,23 @@ object CdcDemux {
     * reference logs-and-skips unpublished relations) — they are NOT
     * an error: replication slots commonly carry more tables than one
     * pipeline consumes.
+    *
+    * Concurrency: the tables merge AT THE SAME TIME, one driver
+    * thread each, so a batch costs its slowest table's merge instead
+    * of the sum of all of them (each merge is a handful of small,
+    * driver-bound Spark jobs that leave the executors mostly idle).
+    * Each thread carries the micro-batch thread's Spark thread-locals
+    * (active session, job group, local properties), so cancelling the
+    * query cancels every table's jobs. The batch waits for EVERY
+    * table before it finishes: if any merge failed, the first failure
+    * in table-name order is rethrown (inside the breaker), after the
+    * other tables' merges have returned. Only then is the cached
+    * batch unpersisted and the unrouted events counted — nothing
+    * unpersists the cache under a running merge. A table whose merge
+    * committed before a failure elsewhere is skipped on redelivery by
+    * its own txn/sequence guard. Targets are therefore called from
+    * several threads at once — one object registered under two table
+    * names must be thread-safe.
     *
     * Scale: the demux adds no shuffle — each table's slice is a
     * filter over the cached batch, and the per-key dedupe shuffles
@@ -203,15 +237,26 @@ object CdcDemux {
           // circuit, as in mergeInto): a failing table target fails
           // the batch, and redelivery is per-table idempotent via
           // each target's txn/sequence guard
-          def route(): Unit =
-            targets.toSeq.sortBy(_._1).foreach { case (tbl, target) =>
-              val deduped = cached.filter(_.table == tbl)
-                .map(e => CdcEvent(e.event_id, e.ts, e.user_id,
-                  e.event_type, e.value))
-                .groupByKey(_.user_id)
-                .reduceGroups(newer _).map(_._2).map(applied)
-              target.merge(batchId, deduped)
+          def route(): Unit = {
+            val session = cached.sparkSession.asInstanceOf[classic.SparkSession]
+            val merges = targets.toSeq.sortBy(_._1).map { case (tbl, target) =>
+              SQLExecution.withThreadLocalCaptured(session, pool) {
+                val deduped = cached.filter(_.table == tbl)
+                  .map(e => CdcEvent(e.event_id, e.ts, e.user_id,
+                    e.event_type, e.value))
+                  .groupByKey(_.user_id)
+                  .reduceGroups(newer _).map(_._2).map(applied)
+                target.merge(batchId, deduped)
+              }
             }
+            // join() waits uninterruptibly: every merge has returned
+            // before a failure surfaces or the cache is released
+            val failures = merges.flatMap(f => Try(f.join()).failed.toOption)
+            failures.headOption.foreach {
+              case e: CompletionException if e.getCause != null => throw e.getCause
+              case e => throw e
+            }
+          }
           breaker.fold(route())(_.protect(route()))
           val unrouted = cached.filter(e => !known.contains(e.table)).count()
           if (unrouted > 0) onUnrouted(unrouted)

@@ -19,13 +19,25 @@ import graft.sources.VersionedTable
   *  1. redelivery fast-path before any staging (manifest txn guard);
   *  2. partition count resolved from TABLE state ([[VersionedTable
   *     .partCount]]), the constructor count only seeding fresh tables;
-  *  3. touched pids from one distinct over the micro-batch (bounded
-  *     by the partition count — a control-plane frame);
-  *  4. read ONLY the touched partitions, union the batch, keep
-  *     latest-per-key under the lexicographic `seqCols` order;
+  *  3. touched pids from ONE narrow job over the micro-batch
+  *     ([[VersionedTable.touchedPids]] — no shuffle; the result is
+  *     bounded by the partition count, a control-plane frame);
+  *  4. read ONLY the touched partitions under an explicit schema
+  *     (`readSchema`, else the rows' schema restricted to `cols` — no
+  *     schema-inference job), union the batch, keep latest-per-key
+  *     under the lexicographic `seqCols` order;
   *  5. stage in one partitioned write, publish via
   *     [[VersionedTable.commitPartitions]] — untouched dirs carried
   *     verbatim, write amplification O(touched), not O(table).
+  *
+  * Steps 4–5 run as ONE shuffle: the union is hash-partitioned on the
+  * pid and aggregated per (pid, pk). Since the pid is a function of
+  * the key, that grouping equals the per-key one, and because the
+  * output keeps the grouping pid column itself, its partitioning
+  * already satisfies the staged write's `repartition(pid)` — Spark's
+  * EnsureRequirements drops that second exchange. The merge runs
+  * three jobs of its own: the touched-pid job, the shuffle's map
+  * stage, the write.
   *
   * Rescale safety (r13): a [[VersionedTable.rescalePartitions]]
   * landing between step 2's layout read and step 5's commit means the
@@ -62,7 +74,7 @@ private[streaming] object PartitionedMerge {
       try {
         val touched: Set[Int] =
           if (flatLegacy) (0 until p).toSet
-          else batch.select(Pid).distinct().collect().map(_.getInt(0)).toSet
+          else VersionedTable.touchedPids(batch)
         if (touched.isEmpty) return // empty batch: merging nothing is a no-op
         val existing: DataFrame =
           if (flatLegacy)
@@ -78,16 +90,18 @@ private[streaming] object PartitionedMerge {
               .flatMap(k => parts.getOrElse(k.toString, Nil))
               .map(rel => Paths.get(root, rel).toString)
             if (dirs.isEmpty) batch.limit(0)
-            else readSchema.map(spark.read.schema(_)).getOrElse(spark.read)
+            else spark.read
+              .schema(readSchema.getOrElse(StructType(cols.map(rows.schema(_)))))
               .parquet(dirs: _*)
               .withColumn(Pid, VersionedTable.keyPid(pk, p))
           }
         val merged = existing.unionByName(batch)
-          .groupBy(pk)
+          .repartition(col(Pid))
+          .groupBy(col(Pid), col(pk))
           .agg(max_by(
-            struct((cols :+ Pid).map(col): _*),
+            struct(cols.map(col): _*),
             struct(seqCols.map(col): _*)).as("r"))
-          .select("r.*")
+          .select(col(Pid) +: cols.map(c => col("r").getField(c).as(c)): _*)
         val staged = VersionedTable.stagePartitioned(merged, root, Pid)
         beforeCommit()
         try {

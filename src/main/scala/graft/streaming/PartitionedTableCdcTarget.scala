@@ -16,9 +16,9 @@ import graft.sources.VersionedTable
   *
   * Layout: rows live under `pid = pmod(hash(user_id), numPartitions)`
   * dirs; the manifest maps pid → live dir, and each merge:
-  *  1. computes the batch's touched pids (one distinct over a batch
-  *     that is already micro-batch sized — the result is bounded by
-  *     `numPartitions`, a control-plane cell frame);
+  *  1. computes the batch's touched pids (one narrow job over a
+  *     batch that is already micro-batch sized — the result is
+  *     bounded by `numPartitions`, a control-plane cell frame);
   *  2. reads ONLY the touched partitions' current dirs, unions the
   *     batch, and keeps latest-per-key under the (ts, event_id)
   *     sequence order — the same one-aggregation merge+guard as the

@@ -315,8 +315,7 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
             attempt += 1
             val pNow = effP
             val withP = withPid(delta, pNow)
-            val touched = withP.select(Pid).distinct().collect()
-              .map(_.getInt(0)).toSet // bounded by the partition count
+            val touched = VersionedTable.touchedPids(withP)
             // the rows coming back in: insert/update post-images,
             // through the derivation — a post-image the transform
             // filters out simply doesn't return, which IS the derived

@@ -2,12 +2,16 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
+import graft.sources.VersionedTable
 
 class CdcDemuxSpec extends SparkSpec {
 
@@ -76,5 +80,103 @@ class CdcDemuxSpec extends SparkSpec {
 
     assert(a.snapshot(7L).event_id == 10, "a's newer state must survive")
     assert(b.snapshot(7L).event_id == 12, "b must advance independently")
+  }
+
+  test("every table of a micro-batch merges at the same time") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+
+    // each target's first merge waits until BOTH merges are in flight:
+    // run one after the other, the first would time out and fail
+    val inFlight = new CountDownLatch(2)
+    def rendezvous(inner: CdcTarget): CdcTarget = new CdcTarget {
+      private val calls = new AtomicInteger
+      override def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit = {
+        if (calls.getAndIncrement() == 0) {
+          inFlight.countDown()
+          if (!inFlight.await(20, TimeUnit.SECONDS))
+            sys.error(s"batch $batchId: the other table's merge never started")
+        }
+        inner.merge(batchId, rows)
+      }
+    }
+    val input = MemoryStream[TableCdcEvent]
+    val a = new InMemoryCdcTarget
+    val b = new InMemoryCdcTarget
+    val q = CdcDemux.mergeInto(input.toDS(),
+      Map("a" -> rendezvous(a), "b" -> rendezvous(b)),
+      Files.createTempDirectory("graft_demux3").toString,
+      Trigger.ProcessingTime("50 milliseconds"))
+    input.addData(ev("a", 1, 1000, 1, "click", 1.0),
+      ev("b", 2, 1000, 2, "click", 2.0))
+    try q.processAllAvailable() finally q.stop()
+    assert(a.snapshot.keySet == Set(1L) && b.snapshot.keySet == Set(2L))
+  }
+
+  test("a failing table fails the batch only after the others finish; redelivery commits each once") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+
+    val rootA = Files.createTempDirectory("graft_demux_a").toString
+    val rootB = Files.createTempDirectory("graft_demux_b").toString
+    val failA = new AtomicBoolean(true)
+    val bDone = new AtomicBoolean(false)
+    val bSawCache = new AtomicBoolean(false)
+    val bCalls = new AtomicInteger
+    val a = new CdcTarget {
+      private val inner = new PartitionedTableCdcTarget(s, rootA, 4)
+      override def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit =
+        if (failA.get) sys.error("table a unavailable")
+        else inner.merge(batchId, rows)
+    }
+    val b = new CdcTarget {
+      private val inner = new PartitionedTableCdcTarget(s, rootB, 4)
+      override def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit = {
+        if (bCalls.incrementAndGet() == 1) {
+          // outlast a's failure, then check the batch is still cached:
+          // a fresh plan over `rows` resolves to the cached relation
+          Thread.sleep(1500)
+          bSawCache.set(rows.toDF().queryExecution.withCachedData
+            .collectFirst { case r: InMemoryRelation => r }.isDefined)
+        }
+        inner.merge(batchId, rows)
+        bDone.set(true)
+      }
+    }
+    val targets = Map[String, CdcTarget]("a" -> a, "b" -> b)
+    val input = MemoryStream[TableCdcEvent]
+    val checkpoint = Files.createTempDirectory("graft_demux4").toString
+    input.addData(ev("a", 1, 1000, 1, "click", 1.0),
+      ev("b", 2, 1000, 2, "click", 2.0), ev("b", 3, 2000, 2, "view", 3.0))
+
+    val q1 = CdcDemux.mergeInto(input.toDS(), targets, checkpoint,
+      Trigger.ProcessingTime("50 milliseconds"))
+    val err = intercept[StreamingQueryException] {
+      try q1.processAllAvailable() finally q1.stop()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("table a unavailable"))))
+    assert(bDone.get, "the batch failed before table b's merge finished")
+    assert(bSawCache.get, "the cached batch was released under b's running merge")
+    assert(VersionedTable.committedTxns(rootB) == Set(0L))
+    assert(VersionedTable.versions(rootA).isEmpty)
+
+    // restart on the same checkpoint: batch 0 is redelivered; a commits
+    // it now, b's txn guard skips it
+    failA.set(false)
+    val q2 = CdcDemux.mergeInto(input.toDS(), targets, checkpoint,
+      Trigger.ProcessingTime("50 milliseconds"))
+    try q2.processAllAvailable() finally q2.stop()
+    assert(bCalls.get == 2, "redelivery must reach both tables")
+    Seq(rootA, rootB).foreach { r =>
+      assert(VersionedTable.versions(r).size == 1, s"$r committed more than once")
+      assert(VersionedTable.committedTxns(r) == Set(0L))
+    }
+    assert(new PartitionedTableCdcTarget(s, rootB).snapshot
+      .as[CdcApplied].collect().map(r => r.user_id -> r.event_id).toSeq == Seq(2L -> 3L))
+    assert(new PartitionedTableCdcTarget(s, rootA).snapshot
+      .as[CdcApplied].collect().map(r => r.user_id -> r.event_id).toSeq == Seq(1L -> 1L))
   }
 }
