@@ -33,8 +33,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    resolved file set stays valid under any concurrent writer.
   *  - '''Optimistic concurrency.''' Two writers racing to v(N+1):
   *    the link succeeds for exactly one; the loser sees
-  *    [[ConcurrentCommit]], re-reads the new state, and retries on
-  *    top of it ([[commit]] loops; [[commitOnce]] surfaces the race).
+  *    [[ConcurrentCommit]]. Every retrying operation runs its attempt
+  *    through ONE loop, [[rebasing]], which re-runs it (at most
+  *    [[CommitAttempts]] times) on exactly two kinds of race:
+  *    [[headMoved]] — a lost link, or a file a racing expire/vacuum
+  *    removed mid-attempt; the attempt re-reads the new head and
+  *    retries on top of it — and [[layoutMoved]] — a rescale changed
+  *    the partition count under staged dirs; the caller restages.
+  *    The single-attempt forms ([[commitOnce]],
+  *    [[commitPartitionsOnce]]) surface the race instead.
   *  - '''Time travel.''' [[readAt]] opens any retained version.
   *
   * On an object store without atomic metadata ops this manifest game
@@ -52,16 +59,57 @@ object VersionedTable {
     * a rescale landed between the writer's layout read and its
     * commit, so its staged dirs were HASHED UNDER THE WRONG COUNT.
     * Retrying the commit cannot succeed (the staged labels are wrong,
-    * not the version number): the writer must re-read the count and
-    * restage, which is what [[graft.streaming.PartitionedMerge]]'s
-    * outer loop does. Without this guard the stale-count dirs would
-    * merge into the rescaled map and their keys would silently stop
-    * being replaced by later merges. */
+    * not the version number), so [[headMoved]] does not match it: it
+    * is the [[layoutMoved]] race, and the writer re-reads the count
+    * and restages inside `rebasing(layoutMoved)` (the staging loops
+    * of [[graft.streaming.PartitionedMerge]] and
+    * [[graft.streaming.TableFollower]]). Without this guard the
+    * stale-count dirs would merge into the rescaled map and their
+    * keys would silently stop being replaced by later merges. */
   final class PartitionCountChanged(val stamped: Int, val supplied: Int)
     extends RuntimeException(
       s"table partition count is $stamped but the staged dirs were " +
         s"hashed under $supplied — a rescale raced this commit; " +
         "re-read partCount() and restage")
+
+  /** Attempts every retrying operation gets unless a caller passes
+    * its own bound. */
+  private[graft] val CommitAttempts = 5
+
+  /** A file of the attempt's base vanished under it: a racing
+    * expire/vacuum deleted a manifest or data file between the head
+    * listing and the read. Directory walks (`Files.walk`) raise the
+    * same race wrapped in an `UncheckedIOException`. */
+  private def vanished(e: Throwable): Boolean = e match {
+    case _: java.nio.file.NoSuchFileException => true
+    case u: java.io.UncheckedIOException =>
+      u.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
+    case _ => false
+  }
+
+  /** Race kind 1, HEAD MOVED: another commit took v(N+1), or a file
+    * the attempt read vanished. Re-running the attempt at the new
+    * head can succeed. */
+  private[graft] def headMoved(e: Throwable): Boolean =
+    e.isInstanceOf[ConcurrentCommit] || vanished(e)
+
+  /** Race kind 2, LAYOUT MOVED: see [[PartitionCountChanged]]. Only
+    * an attempt that restages can succeed. */
+  private[graft] def layoutMoved(e: Throwable): Boolean =
+    e.isInstanceOf[PartitionCountChanged]
+
+  /** THE optimistic-commit loop: run `attempt`, re-running it while it
+    * throws a `race` and fewer than `maxAttempts` calls were made;
+    * the last race is rethrown. Only exceptions `race` names are
+    * caught — every other error, and a non-local `return` out of
+    * `attempt`, passes straight through. */
+  private[graft] def rebasing[T](race: Throwable => Boolean,
+      maxAttempts: Int = CommitAttempts)(attempt: => T): T =
+    try attempt
+    catch {
+      case e: Exception if maxAttempts > 1 && race(e) =>
+        rebasing(race, maxAttempts - 1)(attempt)
+    }
 
   private def versionsDir(root: String): Path = Paths.get(root, "_versions")
 
@@ -603,6 +651,31 @@ object VersionedTable {
     }.toMap
   }
 
+  /** Reads of a commit attempt's base (`next - 1` and its ancestry)
+    * can race a retention expire() that deleted a file between the
+    * caller's versions() listing and the read — a CONCURRENCY event,
+    * not corruption. Both [[vanished]] shapes surface as the commit
+    * race, so a single-attempt caller sees one exception for every
+    * lost race. */
+  private def raceGuard[T](next: Int)(body: => T): T =
+    try body
+    catch {
+      case e: Exception if vanished(e) => throw new ConcurrentCommit(next)
+    }
+
+  /** Publish manifest `tmp` as version `next`: the atomic hard link
+    * succeeds for exactly one writer; the loser drops its manifest and
+    * sees [[ConcurrentCommit]]. */
+  private def publish(root: String, next: Int, tmp: Path): Int = {
+    try Files.createLink(versionFile(root, next), tmp)
+    catch { case _: java.nio.file.FileAlreadyExistsException =>
+      Files.delete(tmp)
+      throw new ConcurrentCommit(next)
+    }
+    Files.delete(tmp)
+    next
+  }
+
   /** Bytes under every dir of a staged partition map. */
   private def stagedPartBytes(root: String, parts: Map[String, String]): Long =
     parts.values.map(stagedBytes(root, _)).sum
@@ -638,24 +711,6 @@ object VersionedTable {
       forceCheckpoint: Boolean = false): Int = {
     Files.createDirectories(versionsDir(root))
     val next = expected + 1
-    // Every read of `expected`'s manifest below can race a retention
-    // expire() that deleted it between the caller's versions() listing
-    // and here (a maintenance loop running beside a writer) — that is
-    // a CONCURRENCY event, not corruption: surface it as the commit
-    // race so the caller's retry loop re-reads the new base instead of
-    // dying on NoSuchFileException. The stats walk (dirStats via
-    // Files.walk) surfaces the SAME race as
-    // UncheckedIOException(NoSuchFileException) — unwrap it so the
-    // guard absorbs both shapes (ADVICE r13).
-    def raceGuard[T](body: => T): T =
-      try body
-      catch {
-        case _: java.nio.file.NoSuchFileException =>
-          throw new ConcurrentCommit(next)
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-          throw new ConcurrentCommit(next)
-      }
     // ONE read of the previous manifest: every carried field (count,
     // identity, provenance, chain depth) extracts from this text, and
     // the parts/stats resolve through it — the old five separate
@@ -663,7 +718,7 @@ object VersionedTable {
     // P=100k (SCALE_MANIFEST probe)
     val prevTxt: Option[String] =
       if (expected == 0) None
-      else Some(raceGuard(mverGuard(root, expected,
+      else Some(raceGuard(next)(mverGuard(root, expected,
         Files.readString(versionFile(root, expected)))))
     // layout guard: an incremental commit whose dirs were hashed under
     // a count the table no longer has must restage, not merge (see
@@ -683,7 +738,7 @@ object VersionedTable {
       prevTxt.exists(t => t.contains("\"parts\":") || t.contains("\"base\":"))
     if (!overwriteAll)
       for (txt <- prevTxt if !prevPartitioned)
-        if (raceGuard(manifestDirs(root, expected)).nonEmpty)
+        if (raceGuard(next)(manifestDirs(root, expected)).nonEmpty)
           throw new IllegalStateException(
             s"$root v$expected is an unpartitioned manifest; migrate " +
               "with a full rewrite (overwriteAll = true, staged map " +
@@ -719,12 +774,13 @@ object VersionedTable {
         val (prev, prevStats) =
           if (overwriteAll || prevTxt.isEmpty)
             (Map.empty[String, Seq[String]], Map.empty[String, (Long, Int)])
-          else raceGuard(resolved(root, expected, prevTxt.get))
+          else raceGuard(next)(resolved(root, expected, prevTxt.get))
         val parts = (prev -- dropParts) ++
           stagedParts.view.mapValues(Seq(_)).toMap
         val stats = (prev -- dropParts).map { case (k, ds) =>
           k -> prevStats.getOrElse(k,
-            raceGuard(ds.map(dirStats(root, _)).foldLeft((0L, 0))(sumStats)))
+            raceGuard(next)(
+              ds.map(dirStats(root, _)).foldLeft((0L, 0))(sumStats)))
         } ++ stagedStats
         (parts, stats)
       }
@@ -758,15 +814,9 @@ object VersionedTable {
       base = if (asDelta) Some(expected) else None,
       chain = if (asDelta) parentChain + 1 else 0,
       drops = if (asDelta) dropParts else Set.empty,
-      kinds = raceGuard(carryKinds(root, prevTxt)),
+      kinds = raceGuard(next)(carryKinds(root, prevTxt)),
       prevTs = prevTxt.flatMap(tsOf))
-    try Files.createLink(versionFile(root, next), tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      Files.delete(tmp)
-      throw new ConcurrentCommit(next)
-    }
-    Files.delete(tmp)
-    next
+    publish(root, next, tmp)
   }
 
   /** Exactly-once partition-scoped micro-batch merge: [[commitBatch]]'s
@@ -777,7 +827,7 @@ object VersionedTable {
     * debris, bytes already metered as moved). */
   def commitPartitions(stagedParts: Map[String, String], root: String,
       batchId: Long, overwriteAll: Boolean = false,
-      schemaDdl: Option[String] = None, maxAttempts: Int = 5,
+      schemaDdl: Option[String] = None,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default",
       dropParts: Set[String] = Set.empty,
@@ -790,21 +840,16 @@ object VersionedTable {
     // attempt because it also STAGES per attempt)
     meter.foreach(_.add(pipeline, root, "streaming",
       stagedPartBytes(root, stagedParts)))
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (committedTxns(root).contains(batchId)) return None
-      val base = versions(root).lastOption.getOrElse(0)
-      try return Some(commitPartitionsOnce(stagedParts, root, base,
-        overwriteAll, txn = Some(batchId), schemaDdl = schemaDdl,
-        dropParts = dropParts, nParts = nParts, followSrc = followSrc,
-        writerKind = writerKind))
-      // PartitionCountChanged deliberately NOT caught: a version-race
-      // retry can succeed with the same staged dirs, a count change
-      // cannot — the caller must restage under the new layout
-      catch { case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e }
+    // only the head race retries here: the same staged dirs can land
+    // on a new head, but not under a new layout — PartitionCountChanged
+    // passes to the caller, which restages
+    rebasing(headMoved) {
+      if (committedTxns(root).contains(batchId)) None
+      else Some(commitPartitionsOnce(stagedParts, root,
+        versions(root).lastOption.getOrElse(0), overwriteAll,
+        txn = Some(batchId), schemaDdl = schemaDdl, dropParts = dropParts,
+        nParts = nParts, followSrc = followSrc, writerKind = writerKind))
     }
-    None // unreachable
   }
 
   /** Exact on-disk bytes of one staged data dir — the byte-accounting
@@ -832,39 +877,21 @@ object VersionedTable {
     meter.foreach(_.add(pipeline, root,
       if (txn.isDefined) "streaming" else "table_copy",
       stagedBytes(root, staged)))
-    // expire() racing these reads of prior manifests surfaces as the
-    // commit race (caller retries against the new base), not a crash;
-    // walks surface it wrapped in UncheckedIOException — unwrap both
-    def raceGuard[T](body: => T): T =
-      try body
-      catch {
-        case _: java.nio.file.NoSuchFileException =>
-          throw new ConcurrentCommit(next)
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-          throw new ConcurrentCommit(next)
-      }
     val dirs = (if (overwrite) Nil
-                else raceGuard(versions(root).lastOption.toSeq
+                else raceGuard(next)(versions(root).lastOption.toSeq
                   .flatMap(manifestDirs(root, _)))) :+ staged
     val prevTxt: Option[String] =
       if (expected == 0) None
-      else Some(raceGuard(mverGuard(root, expected,
+      else Some(raceGuard(next)(mverGuard(root, expected,
         Files.readString(versionFile(root, expected)))))
     val id = prevTxt.flatMap(stringFieldOf(_, "tableid"))
       .getOrElse(UUID.randomUUID().toString)
     val tmp = writeManifest(root, next,
       if (overwrite) "overwrite" else "append", dirs, txn,
       tableId = Some(id), writerKind = writerKind,
-      kinds = raceGuard(carryKinds(root, prevTxt)),
+      kinds = raceGuard(next)(carryKinds(root, prevTxt)),
       prevTs = prevTxt.flatMap(tsOf))
-    try Files.createLink(versionFile(root, next), tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      Files.delete(tmp)
-      throw new ConcurrentCommit(next)
-    }
-    Files.delete(tmp)
-    next
+    publish(root, next, tmp)
   }
 
   /** Exactly-once micro-batch append: the Structured Streaming
@@ -876,38 +903,27 @@ object VersionedTable {
     * in the table — the txn check and the data publish are the same
     * atomic manifest link. Returns None for a skipped duplicate. */
   def commitBatch(df: DataFrame, root: String, batchId: Long,
-      overwrite: Boolean = false, maxAttempts: Int = 5,
+      overwrite: Boolean = false,
       meter: Option[graft.streaming.EgressMeter] = None,
-      pipeline: String = "default"): Option[Int] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      if (committedTxns(root).contains(batchId)) return None
-      val base = versions(root).lastOption.getOrElse(0)
-      try return Some(commitOnce(df, root, overwrite, base,
-        txn = Some(batchId), meter = meter, pipeline = pipeline))
-      catch { case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e }
+      pipeline: String = "default"): Option[Int] =
+    rebasing(headMoved) {
+      if (committedTxns(root).contains(batchId)) None
+      else Some(commitOnce(df, root, overwrite,
+        versions(root).lastOption.getOrElse(0), txn = Some(batchId),
+        meter = meter, pipeline = pipeline))
     }
-    None // unreachable
-  }
 
   /** Commit with optimistic retry: on a lost race the staged data of
     * the losing attempt is orphaned (vacuum reclaims it) and the
     * commit replays against the new table state. */
   def commit(df: DataFrame, root: String, overwrite: Boolean = false,
-      maxAttempts: Int = 5,
+      maxAttempts: Int = CommitAttempts,
       meter: Option[graft.streaming.EgressMeter] = None,
-      pipeline: String = "default"): Int = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = versions(root).lastOption.getOrElse(0)
-      try return commitOnce(df, root, overwrite, base,
+      pipeline: String = "default"): Int =
+    rebasing(headMoved, maxAttempts) {
+      commitOnce(df, root, overwrite, versions(root).lastOption.getOrElse(0),
         meter = meter, pipeline = pipeline)
-      catch { case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e }
     }
-    -1 // unreachable
-  }
 
   /** Latest committed snapshot. */
   def read(spark: SparkSession, root: String): DataFrame =
@@ -1174,78 +1190,59 @@ object VersionedTable {
     * the abandoned head's layout hits [[PartitionCountChanged]] and
     * restages, the same guard a rescale race uses — and always write
     * a FULL manifest (a checkpoint), cutting the delta chain exactly
-    * like compaction does.
+    * like compaction does. A lost race, or a manifest a racing expire
+    * deleted mid-read, re-runs the restore on the new head
+    * ([[rebasing]]).
     *
     * Stamped [[KindBatch]]: a restore CHANGES CONTENT, so on a
     * followed destination the follower's foreign-writer net refuses
     * the replica afterwards — restore the SOURCE and let replication
     * converge (the change feed across the restore commit emits the
     * inverse delta, partition-pruned, phantom-free). */
-  def restore(spark: SparkSession, root: String, toV: Int,
-      maxAttempts: Int = 5): Int = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        val vs = versions(root)
-        val head = vs.lastOption.getOrElse(throw new IllegalStateException(
-          s"no committed version under $root"))
-        require(vs.contains(toV),
-          s"$root has no retained version $toV (expired or never " +
-            "committed) — restore targets must be retained (pin release " +
-            "candidates with tag())")
-        val next = head + 1
-        val txt = mverGuard(root, toV,
-          Files.readString(versionFile(root, toV)))
-        val headTxt = mverGuard(root, head,
-          Files.readString(versionFile(root, head)))
-        // identity/provenance are INCARNATION state — carried from the
-        // head like any commit; content/layout/schema come from toV
-        val id = stringFieldOf(headTxt, "tableid")
-        val follow = stringFieldOf(headTxt, "followsrc")
-        val kinds = carryKinds(root, Some(headTxt))
-        val tmp =
-          if (txt.contains("\"parts\":") || txt.contains("\"base\":")) {
-            val (pm, ps) = resolved(root, toV, txt)
-            writeManifest(root, next, "restore", Nil, None,
-              parts = Some(pm), schemaDdl = schemaDdlOf(txt),
-              // from the text already in hand — no second multi-MB
-              // manifest read on the restore path (review r14)
-              nParts = "\"nparts\":(\\d+)".r.findFirstMatchIn(txt)
-                .map(_.group(1).toInt),
-              tableId = id,
-              followSrc = follow, pStats = Some(ps), kinds = kinds,
-              prevTs = tsOf(headTxt))
-          } else
-            writeManifest(root, next, "restore", flatDirsOf(txt), None,
-              tableId = id, followSrc = follow, kinds = kinds,
-              prevTs = tsOf(headTxt))
-        try Files.createLink(versionFile(root, next), tmp)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Files.delete(tmp)
-          throw new ConcurrentCommit(next)
-        }
-        Files.delete(tmp)
-        return next
-      } catch {
-        // lost race, or a racing expire deleted a manifest mid-read:
-        // rebase against the settled listing, like compactPartitions
-        case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e
-        case e: java.nio.file.NoSuchFileException =>
-          if (attempt >= maxAttempts) throw e
-      }
+  def restore(spark: SparkSession, root: String, toV: Int): Int =
+    rebasing(headMoved) {
+      val vs = versions(root)
+      val head = vs.lastOption.getOrElse(throw new IllegalStateException(
+        s"no committed version under $root"))
+      require(vs.contains(toV),
+        s"$root has no retained version $toV (expired or never " +
+          "committed) — restore targets must be retained (pin release " +
+          "candidates with tag())")
+      val next = head + 1
+      val txt = mverGuard(root, toV,
+        Files.readString(versionFile(root, toV)))
+      val headTxt = mverGuard(root, head,
+        Files.readString(versionFile(root, head)))
+      // identity/provenance are INCARNATION state — carried from the
+      // head like any commit; content/layout/schema come from toV
+      val id = stringFieldOf(headTxt, "tableid")
+      val follow = stringFieldOf(headTxt, "followsrc")
+      val kinds = carryKinds(root, Some(headTxt))
+      val tmp =
+        if (txt.contains("\"parts\":") || txt.contains("\"base\":")) {
+          val (pm, ps) = resolved(root, toV, txt)
+          writeManifest(root, next, "restore", Nil, None,
+            parts = Some(pm), schemaDdl = schemaDdlOf(txt),
+            // from the text already in hand — no second multi-MB
+            // manifest read on the restore path (review r14)
+            nParts = "\"nparts\":(\\d+)".r.findFirstMatchIn(txt)
+              .map(_.group(1).toInt),
+            tableId = id,
+            followSrc = follow, pStats = Some(ps), kinds = kinds,
+            prevTs = tsOf(headTxt))
+        } else
+          writeManifest(root, next, "restore", flatDirsOf(txt), None,
+            tableId = id, followSrc = follow, kinds = kinds,
+            prevTs = tsOf(headTxt))
+      publish(root, next, tmp)
     }
-    -1 // unreachable
-  }
 
   /** [[restore]] to the version a tag pinned — the named form an
     * operator actually types in an incident. */
-  def restoreTag(spark: SparkSession, root: String, name: String,
-      maxAttempts: Int = 5): Int =
+  def restoreTag(spark: SparkSession, root: String, name: String): Int =
     restore(spark, root, tags(root).getOrElse(name,
       throw new IllegalStateException(
-        s"no tag '$name' on $root (or it is stale — see readAtTag)")),
-      maxAttempts)
+        s"no tag '$name' on $root (or it is stale — see readAtTag)")))
 
   /** TARGETED DELETE BY KEY (the GDPR-erasure path; Delta's
     * `DELETE WHERE pk IN (...)` with partition pruning): physically
@@ -1263,76 +1260,67 @@ object VersionedTable {
     * feed across the commit emits true `delete` rows, so replicas
     * converge through the ordinary follower tick.
     *
-    * Rebase-on-race like [[compactPartitions]]: a racing writer wins,
-    * the delete re-applies on top. Stamped [[KindBatch]] — content
+    * A racing writer wins: [[rebasing]] re-applies the delete on the
+    * new head. Stamped [[KindBatch]] — content
     * changes on a followed replica are refused; erase at the SOURCE.
     * Returns (rows deleted, rewritten partition labels). */
   def deleteKeys(spark: SparkSession, root: String, pk: String,
-      keys: DataFrame, tasksPerWrite: Int = 0, maxAttempts: Int = 5,
+      keys: DataFrame, tasksPerWrite: Int = 0,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.col
     require(keys.columns.contains(pk),
       s"keys frame must carry the key column '$pk'")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        val head = versions(root).lastOption.getOrElse(
-          throw new IllegalStateException(s"no committed version under $root"))
-        val pm = manifestParts(root, head)
-        val p = partCountAt(root, head).getOrElse(
-          throw new IllegalStateException(
-            s"$root has no key-hash layout — delete on flat tables by " +
-              "overwrite commit"))
-        require(pm.nonEmpty, s"$root v$head is unpartitioned")
-        val schema = manifestSchema(spark, root, head)
-        // hash with the table's OWN pk type: Spark's hash is
-        // type-sensitive (hash(1) != hash(1L)), so a caller's Int
-        // keys against a BIGINT column would prune to the WRONG
-        // partitions and the erasure would silently delete nothing.
-        // Tables without a stored manifest schema (the fixed-schema
-        // targets) sample one partition dir's parquet footer — one
-        // footer read, not a table listing (review r14).
-        val pkType = schema.flatMap(_.fields.find(_.name == pk)
-          .map(_.dataType)).getOrElse {
-          val sample = Paths.get(root, pm.values.flatten.head).toString
-          spark.read.parquet(sample).schema.fields.find(_.name == pk)
-            .map(_.dataType).getOrElse(throw new IllegalArgumentException(
-              s"$root has no column '$pk'"))
-        }
-        val k = keys.select(col(pk).cast(pkType).as(pk)).distinct()
-          .withColumn(PidCol, keyPid(pk, p)).persist()
-        try {
-          val candidates = touchedPids(k).toSeq
-            .map(_.toString).filter(pm.contains).sorted
-          if (candidates.isEmpty) return (0L, Nil)
-          val dirs = candidates.flatMap(pm(_))
-          val existing = readWithPid(spark, root, dirs, schema).persist()
-          try {
-            // hit pids AND the doomed-row count from ONE aggregation
-            // over the semi-join (review r14)
-            val hitCounts = existing
-              .join(k.select(col(pk)), Seq(pk), "left_semi")
-              .groupBy(PidCol).count()
-              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-            if (hitCounts.isEmpty) return (0L, Nil)
-            val hit = hitCounts.keySet
-            val survivors = existing
-              .filter(col(PidCol).isInCollection(hit.toSeq))
-              .join(k.select(col(pk)), Seq(pk), "left_anti")
-            commitErasure(root, head, survivors, hit, Some(p),
-              schema.map(_.toDDL), tasksPerWrite, meter, pipeline)
-            return (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
-          } finally existing.unpersist()
-        } finally k.unpersist()
-      } catch {
-        case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e
-        case e: java.nio.file.NoSuchFileException =>
-          if (attempt >= maxAttempts) throw e
+    rebasing(headMoved) {
+      val head = versions(root).lastOption.getOrElse(
+        throw new IllegalStateException(s"no committed version under $root"))
+      val pm = manifestParts(root, head)
+      val p = partCountAt(root, head).getOrElse(
+        throw new IllegalStateException(
+          s"$root has no key-hash layout — delete on flat tables by " +
+            "overwrite commit"))
+      require(pm.nonEmpty, s"$root v$head is unpartitioned")
+      val schema = manifestSchema(spark, root, head)
+      // hash with the table's OWN pk type: Spark's hash is
+      // type-sensitive (hash(1) != hash(1L)), so a caller's Int
+      // keys against a BIGINT column would prune to the WRONG
+      // partitions and the erasure would silently delete nothing.
+      // Tables without a stored manifest schema (the fixed-schema
+      // targets) sample one partition dir's parquet footer — one
+      // footer read, not a table listing (review r14).
+      val pkType = schema.flatMap(_.fields.find(_.name == pk)
+        .map(_.dataType)).getOrElse {
+        val sample = Paths.get(root, pm.values.flatten.head).toString
+        spark.read.parquet(sample).schema.fields.find(_.name == pk)
+          .map(_.dataType).getOrElse(throw new IllegalArgumentException(
+            s"$root has no column '$pk'"))
       }
+      val k = keys.select(col(pk).cast(pkType).as(pk)).distinct()
+        .withColumn(PidCol, keyPid(pk, p)).persist()
+      try {
+        val candidates = touchedPids(k).toSeq
+          .map(_.toString).filter(pm.contains).sorted
+        if (candidates.isEmpty) return (0L, Nil)
+        val dirs = candidates.flatMap(pm(_))
+        val existing = readWithPid(spark, root, dirs, schema).persist()
+        try {
+          // hit pids AND the doomed-row count from ONE aggregation
+          // over the semi-join (review r14)
+          val hitCounts = existing
+            .join(k.select(col(pk)), Seq(pk), "left_semi")
+            .groupBy(PidCol).count()
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          if (hitCounts.isEmpty) return (0L, Nil)
+          val hit = hitCounts.keySet
+          val survivors = existing
+            .filter(col(PidCol).isInCollection(hit.toSeq))
+            .join(k.select(col(pk)), Seq(pk), "left_anti")
+          commitErasure(root, head, survivors, hit, Some(p),
+            schema.map(_.toDDL), tasksPerWrite, meter, pipeline)
+          (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
+        } finally existing.unpersist()
+      } finally k.unpersist()
     }
-    (0L, Nil) // unreachable
   }
 
   /** PREDICATE UPDATE (Delta's `UPDATE ... WHERE cond`): rewrite the
@@ -1345,12 +1333,13 @@ object VersionedTable {
     * is a delete + insert, not an in-place update (do it as one —
     * [[deleteKeys]] + a keyed merge — or the row would sit in the
     * wrong partition and silently stop being replaced by later
-    * merges). Rebase-on-race and checkpoint semantics as the delete
-    * ops. Returns (rows updated, rewritten partition labels). */
+    * merges). Checkpoint semantics as the delete ops; a head race
+    * re-runs the update on the new head ([[rebasing]]). Returns (rows
+    * updated, rewritten partition labels). */
   def updateWhere(spark: SparkSession, root: String, pk: String,
       cond: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
-      tasksPerWrite: Int = 0, maxAttempts: Int = 5,
+      tasksPerWrite: Int = 0,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
@@ -1361,7 +1350,7 @@ object VersionedTable {
         "in-place update")
     require(!set.contains(PidCol),
       s"'$PidCol' is the reserved internal partition column")
-    withHeadScan(spark, root, maxAttempts, "update") {
+    withHeadScan(spark, root, "update") {
       (head, _, schema, existing) =>
         // the layout-key guard above is only as good as the name the
         // caller passed — a typo'd pk would disarm it and let the
@@ -1405,40 +1394,28 @@ object VersionedTable {
     }
   }
 
-  /** Shared rebase-retry shell for the predicate DML ops (review r14
-    * — the third copy of this loop was drift waiting to happen):
-    * resolve the head, require a partitioned manifest, full-scan-read
-    * it with pid recovery, persist for the body's multiple passes,
-    * and rebase on the retention/commit races exactly as
-    * [[compactPartitions]] does. */
-  private def withHeadScan(spark: SparkSession, root: String,
-      maxAttempts: Int, what: String)(
+  /** Shared shell for the predicate DML ops: resolve the head,
+    * require a partitioned manifest, full-scan-read it with pid
+    * recovery, and persist it for the body's multiple passes. The
+    * whole attempt, body included, re-runs on a head race
+    * ([[rebasing]]). */
+  private def withHeadScan(spark: SparkSession, root: String, what: String)(
       body: (Int, Map[String, Seq[String]],
         Option[org.apache.spark.sql.types.StructType], DataFrame)
-        => (Long, Seq[String])): (Long, Seq[String]) = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        val head = versions(root).lastOption.getOrElse(
-          throw new IllegalStateException(s"no committed version under $root"))
-        val pm = manifestParts(root, head)
-        require(pm.nonEmpty,
-          s"$root v$head is unpartitioned — $what flat tables by " +
-            "overwrite commit")
-        val schema = manifestSchema(spark, root, head)
-        val existing = readWithPid(spark, root,
-          pm.values.flatten.toSeq.sorted, schema).persist()
-        try return body(head, pm, schema, existing)
-        finally existing.unpersist()
-      } catch {
-        case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e
-        case e: java.nio.file.NoSuchFileException =>
-          if (attempt >= maxAttempts) throw e
-      }
+        => (Long, Seq[String])): (Long, Seq[String]) =
+    rebasing(headMoved) {
+      val head = versions(root).lastOption.getOrElse(
+        throw new IllegalStateException(s"no committed version under $root"))
+      val pm = manifestParts(root, head)
+      require(pm.nonEmpty,
+        s"$root v$head is unpartitioned — $what flat tables by " +
+          "overwrite commit")
+      val schema = manifestSchema(spark, root, head)
+      val existing = readWithPid(spark, root,
+        pm.values.flatten.toSeq.sorted, schema).persist()
+      try body(head, pm, schema, existing)
+      finally existing.unpersist()
     }
-    (0L, Nil) // unreachable
-  }
 
   /** Hit-partition reader shared by the erasure ops: the given
     * relative dirs under the (optional) manifest schema, with the
@@ -1486,11 +1463,10 @@ object VersionedTable {
     * partition labels). */
   def deleteWhere(spark: SparkSession, root: String,
       cond: org.apache.spark.sql.Column, tasksPerWrite: Int = 0,
-      maxAttempts: Int = 5,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    withHeadScan(spark, root, maxAttempts, "delete on") {
+    withHeadScan(spark, root, "delete on") {
       (head, _, schema, existing) =>
         val matched = coalesce(cond, lit(false))
         // hit pids AND the doomed-row count from ONE aggregation
@@ -1529,10 +1505,8 @@ object VersionedTable {
     * layout and manifest schema must survive compaction, which is
     * [[compactPartitions]]' job. */
   def compact(spark: SparkSession, root: String, numFiles: Int = 1,
-      maxAttempts: Int = 5): Int = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      maxAttempts: Int = CommitAttempts): Int =
+    rebasing(headMoved, maxAttempts) {
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
       if (manifestParts(root, base).nonEmpty)
@@ -1540,12 +1514,9 @@ object VersionedTable {
           s"$root v$base is partitioned; compact() would flatten its " +
             "layout and drop its manifest schema — use compactPartitions()")
       val df = readAt(spark, root, base).coalesce(numFiles)
-      try return commitOnce(df, root, overwrite = true, expected = base,
+      commitOnce(df, root, overwrite = true, expected = base,
         writerKind = KindMaintenance)
-      catch { case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e }
     }
-    -1 // unreachable
-  }
 
   /** Partition-scoped OPTIMIZE — the maintenance loop for tables
     * written by [[commitPartitions]]: rewrite ONLY partitions whose
@@ -1557,13 +1528,14 @@ object VersionedTable {
     * over budget: each row's partition is recovered from its file
     * path (`pid=` is the on-disk layout invariant of
     * [[stagePartitioned]]), so no knowledge of the writer's key→pid
-    * hash is needed. Rebase-on-race as in [[compact]]: every attempt
-    * re-resolves the head manifest and restages from it. Returns the
+    * hash is needed. Each attempt re-resolves the head manifest and
+    * restages from it; [[rebasing]] re-runs it on a head race (the
+    * lost attempt's staged dirs become vacuum debris). Returns the
     * rewritten partition labels (empty = nothing over budget, no
     * commit). */
   def compactPartitions(spark: SparkSession, root: String,
       maxFilesPerPart: Int = 1, tasksPerWrite: Int = 0,
-      maxAttempts: Int = 5,
+      maxAttempts: Int = CommitAttempts,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Seq[String] = {
     def parquetFiles(rel: String): Int = {
@@ -1572,57 +1544,45 @@ object VersionedTable {
         p.getFileName.toString.endsWith(".parquet"))
       finally s.close()
     }
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      // the WHOLE attempt is guarded: the base's manifest (or its
-      // small files) can be expired/vacuumed by a maintenance racer
-      // between the versions() listing and any read below — rebase
-      // exactly like a lost commit race
-      try {
-        val base = versions(root).lastOption.getOrElse(
-          throw new IllegalStateException(s"no committed version under $root"))
-        val pm = manifestParts(root, base)
-        require(pm.nonEmpty,
-          s"$root v$base is unpartitioned; use compact()")
-        // budget check from stamped manifest stats when present —
-        // O(P) metadata instead of an O(table files) stat walk;
-        // unstamped labels (pre-stamp manifests) walk once
-        val stats = manifestPStatsAt(root, base)
-        val over = pm.filter { case (k, ds) =>
-          ds.size > 1 || stats.get(k).map(_._2)
-            .getOrElse(ds.map(parquetFiles).sum) > maxFilesPerPart }
-        if (over.isEmpty) return Nil
-        val schema = manifestSchema(spark, root, base)
-        val dirs = over.values.flatten.toSeq.sorted
-          .map(rel => Paths.get(root, rel).toString)
-        import org.apache.spark.sql.functions.{col, regexp_extract}
-        val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-        // recovery column uses the RESERVED name: a data column named
-        // "pid" is legal and must not be clobbered by the path-derived
-        // partition label
-        val df = reader.parquet(dirs: _*)
-          .withColumn(PidCol, regexp_extract(
-            col("_metadata.file_path"), "/pid=(\\d+)/", 1).cast("int"))
-        val staged = stagePartitioned(df, root, PidCol, tasksPerWrite)
-        // meter per attempt: a lost race's staged dirs are real bytes
-        // physically written (vacuum reclaims files, not the bill) —
-        // same accounting rule as commitOnce's table_copy path
-        meter.foreach(_.add(pipeline, root, "table_copy",
-          stagedPartBytes(root, staged)))
-        commitPartitionsOnce(staged, root, base,
-          schemaDdl = schema.map(_.toDDL), writerKind = KindMaintenance,
-          forceCheckpoint = true)
-        return over.keys.toSeq.sorted
-      } catch {
-        case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e
-        // lost race: the staged dirs become vacuum debris; loop
-        // re-reads the head (racer's merge included) and restages
-        case e: java.nio.file.NoSuchFileException =>
-          if (attempt >= maxAttempts) throw e
-      }
+    // the WHOLE attempt rebases: the base's manifest (or its small
+    // files) can be expired/vacuumed by a maintenance racer between
+    // the versions() listing and any read below
+    rebasing(headMoved, maxAttempts) {
+      val base = versions(root).lastOption.getOrElse(
+        throw new IllegalStateException(s"no committed version under $root"))
+      val pm = manifestParts(root, base)
+      require(pm.nonEmpty,
+        s"$root v$base is unpartitioned; use compact()")
+      // budget check from stamped manifest stats when present —
+      // O(P) metadata instead of an O(table files) stat walk;
+      // unstamped labels (pre-stamp manifests) walk once
+      val stats = manifestPStatsAt(root, base)
+      val over = pm.filter { case (k, ds) =>
+        ds.size > 1 || stats.get(k).map(_._2)
+          .getOrElse(ds.map(parquetFiles).sum) > maxFilesPerPart }
+      if (over.isEmpty) return Nil
+      val schema = manifestSchema(spark, root, base)
+      val dirs = over.values.flatten.toSeq.sorted
+        .map(rel => Paths.get(root, rel).toString)
+      import org.apache.spark.sql.functions.{col, regexp_extract}
+      val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
+      // recovery column uses the RESERVED name: a data column named
+      // "pid" is legal and must not be clobbered by the path-derived
+      // partition label
+      val df = reader.parquet(dirs: _*)
+        .withColumn(PidCol, regexp_extract(
+          col("_metadata.file_path"), "/pid=(\\d+)/", 1).cast("int"))
+      val staged = stagePartitioned(df, root, PidCol, tasksPerWrite)
+      // meter per attempt: a lost race's staged dirs are real bytes
+      // physically written (vacuum reclaims files, not the bill) —
+      // same accounting rule as commitOnce's table_copy path
+      meter.foreach(_.add(pipeline, root, "table_copy",
+        stagedPartBytes(root, staged)))
+      commitPartitionsOnce(staged, root, base,
+        schemaDdl = schema.map(_.toDDL), writerKind = KindMaintenance,
+        forceCheckpoint = true)
+      over.keys.toSeq.sorted
     }
-    Nil // unreachable
   }
 
   /** PARTITION-COUNT EVOLUTION (the Iceberg partition-spec-evolution
@@ -1635,13 +1595,13 @@ object VersionedTable {
     * back toward O(table).
     *
     * Safety against concurrent writers, both directions:
-    *  - rescale loses a commit race → rebase-on-race as in
-    *    [[compactPartitions]]: re-read the head (racer's merge
-    *    included) and restage — the writer always wins;
+    *  - rescale loses a commit race → [[rebasing]] on [[headMoved]]:
+    *    re-read the head (racer's merge included) and restage — the
+    *    writer always wins;
     *  - a writer loses to rescale → its staged dirs were hashed under
     *    the OLD count; [[commitPartitionsOnce]]'s count guard throws
     *    [[PartitionCountChanged]] and the writer restages under the
-    *    new stamp (PartitionedMerge's outer loop) instead of merging
+    *    new stamp (`rebasing(layoutMoved)`) instead of merging
     *    wrong-layout dirs.
     *
     * The manifest schema rides the commit (evolving tables keep their
@@ -1653,47 +1613,35 @@ object VersionedTable {
     * @param pk the key column whose [[keyPid]] hash defines the
     *   layout — must be the same key every writer of this table uses */
   def rescalePartitions(spark: SparkSession, root: String, pk: String,
-      newP: Int, tasksPerWrite: Int = 0, maxAttempts: Int = 5,
+      newP: Int, tasksPerWrite: Int = 0, maxAttempts: Int = CommitAttempts,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Int = {
     require(newP > 0, "newP must be positive")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      // whole attempt guarded: the base manifest can be expired by a
-      // maintenance racer between listing and read — rebase like a
-      // lost commit race (see compactPartitions)
-      try {
-        val base = versions(root).lastOption.getOrElse(
-          throw new IllegalStateException(s"no committed version under $root"))
-        val pm = manifestParts(root, base)
-        require(pm.nonEmpty,
-          s"$root v$base is unpartitioned; rescale applies to partitioned " +
-            "tables (seed one with commitPartitions)")
-        val schema = manifestSchema(spark, root, base)
-        val dirs = pm.values.flatten.toSeq.sorted
-          .map(rel => Paths.get(root, rel).toString)
-        val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-        val df = reader.parquet(dirs: _*)
-        require(!df.columns.contains(PidCol),
-          s"'$PidCol' is the reserved internal partition column")
-        val staged = stagePartitioned(
-          df.withColumn(PidCol, keyPid(pk, newP)), root, PidCol, tasksPerWrite)
-        // per attempt, like compactPartitions: a lost race's staged
-        // dirs are bytes physically written (vacuum reclaims files,
-        // not bills)
-        meter.foreach(_.add(pipeline, root, "table_copy",
-          stagedPartBytes(root, staged)))
-        return commitPartitionsOnce(staged, root, base,
-          overwriteAll = true, schemaDdl = schema.map(_.toDDL),
-          nParts = Some(newP), writerKind = KindMaintenance)
-      } catch {
-        case e: ConcurrentCommit => if (attempt >= maxAttempts) throw e
-        case e: java.nio.file.NoSuchFileException =>
-          if (attempt >= maxAttempts) throw e
-      }
+    rebasing(headMoved, maxAttempts) {
+      val base = versions(root).lastOption.getOrElse(
+        throw new IllegalStateException(s"no committed version under $root"))
+      val pm = manifestParts(root, base)
+      require(pm.nonEmpty,
+        s"$root v$base is unpartitioned; rescale applies to partitioned " +
+          "tables (seed one with commitPartitions)")
+      val schema = manifestSchema(spark, root, base)
+      val dirs = pm.values.flatten.toSeq.sorted
+        .map(rel => Paths.get(root, rel).toString)
+      val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
+      val df = reader.parquet(dirs: _*)
+      require(!df.columns.contains(PidCol),
+        s"'$PidCol' is the reserved internal partition column")
+      val staged = stagePartitioned(
+        df.withColumn(PidCol, keyPid(pk, newP)), root, PidCol, tasksPerWrite)
+      // per attempt, like compactPartitions: a lost race's staged
+      // dirs are bytes physically written (vacuum reclaims files,
+      // not bills)
+      meter.foreach(_.add(pipeline, root, "table_copy",
+        stagedPartBytes(root, staged)))
+      commitPartitionsOnce(staged, root, base,
+        overwriteAll = true, schemaDdl = schema.map(_.toDDL),
+        nParts = Some(newP), writerKind = KindMaintenance)
     }
-    -1 // unreachable
   }
 
   /** The rescale TRIGGER, derived from measured bytes rather than
@@ -1709,18 +1657,16 @@ object VersionedTable {
     * the (oldP, newP) transition or None when under budget. */
   def rescaleIfNeeded(spark: SparkSession, root: String, pk: String,
       targetBytesPerPart: Long, tasksPerWrite: Int = 0,
-      maxAttempts: Int = 5,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Option[(Int, Int)] = {
     require(targetBytesPerPart > 0, "budget must be positive")
     // The trigger reads the head manifest beside other maintenance
-    // actors (a racing expire can delete it mid-read) — rebase like
-    // compactPartitions does, bowing out quietly once retries are
-    // spent: the next maintenance tick re-runs the check anyway.
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      try {
+    // actors (a racing expire can delete it mid-read): it rebases, and
+    // bows out quietly once its attempts are spent — the next
+    // maintenance tick re-runs the check anyway. The rescale runs
+    // once, after the trigger, with its own rebase.
+    val grow: Option[(Int, Int)] =
+      try rebasing(headMoved) {
         val head = versions(root).lastOption.getOrElse(return None)
         val p = partCountAt(root, head).getOrElse(return None)
         val pm = manifestParts(root, head)
@@ -1742,20 +1688,13 @@ object VersionedTable {
         var newP = p.toLong
         while (total > targetBytesPerPart.toDouble * newP &&
             newP < (1L << 30)) newP *= 2
-        rescalePartitions(spark, root, pk,
-          math.min(newP, 1L << 30).toInt, tasksPerWrite, maxAttempts,
-          meter, pipeline)
-        return Some((p, newP.toInt))
-      } catch {
-        // a file vanishing mid-walk surfaces from Files.walk as
-        // UncheckedIOException(NoSuchFileException) — same race,
-        // same rebase (see raceGuard in commitPartitionsOnce)
-        case _: java.nio.file.NoSuchFileException => // rebase and retry
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-      }
+        Some((p, math.min(newP, 1L << 30).toInt))
+      } catch { case e: Exception if headMoved(e) => None }
+    grow.foreach { case (_, newP) =>
+      rescalePartitions(spark, root, pk, newP, tasksPerWrite,
+        meter = meter, pipeline = pipeline)
     }
-    None
+    grow
   }
 
   /** What one [[maintain]] pass did — every field names the table
@@ -1944,7 +1883,7 @@ object VersionedTable {
     // the walk and the deletes race other retention actors (a manual
     // maintain beside a managed loop): a vanished manifest means the
     // racer is doing this same work — bow out with what's done, like
-    // the commit-path raceGuards, instead of crashing the pass
+    // the commit path's raceGuard, instead of crashing the pass
     try {
       // crash recovery: a pass that died between condemn and verdict
       // left manifests renamed out of the listing — resurrect them

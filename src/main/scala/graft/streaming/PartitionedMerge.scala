@@ -42,10 +42,12 @@ import graft.sources.VersionedTable
   * Rescale safety (r13): a [[VersionedTable.rescalePartitions]]
   * landing between step 2's layout read and step 5's commit means the
   * staged dirs were hashed under a DEAD count — the commit throws
-  * [[VersionedTable.PartitionCountChanged]] and the outer loop here
-  * restages under the count now stamped on the manifest (the orphaned
-  * dirs are vacuum debris). Without the loop the writer would either
-  * corrupt the layout (unguarded) or wedge (guard with no retry).
+  * [[VersionedTable.PartitionCountChanged]] and the merge re-runs
+  * from step 2 inside `VersionedTable.rebasing(layoutMoved)`,
+  * restaging under the count now stamped on the manifest (the
+  * orphaned dirs are vacuum debris). Without the restage the writer
+  * would either corrupt the layout (unguarded) or wedge (guard with
+  * no retry).
   *
   * @param beforeCommit test seam: runs between staging and commit so
   *   specs can interleave a rescale deterministically into the race
@@ -63,9 +65,9 @@ private[streaming] object PartitionedMerge {
     // redelivery fast-path: skip BEFORE staging any data (the txn
     // check inside commitPartitions still guards the race window)
     if (VersionedTable.committedTxns(root).contains(batchId)) return
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    // a rescale racing this merge: restage under the count now stamped
+    // on the manifest
+    VersionedTable.rebasing(VersionedTable.layoutMoved) {
       val p = VersionedTable.partCount(root).getOrElse(configuredP)
       val parts = VersionedTable.parts(root)
       val flatLegacy = migrateFlat && parts.isEmpty &&
@@ -104,17 +106,9 @@ private[streaming] object PartitionedMerge {
           .select(col(Pid) +: cols.map(c => col("r").getField(c).as(c)): _*)
         val staged = VersionedTable.stagePartitioned(merged, root, Pid)
         beforeCommit()
-        try {
-          VersionedTable.commitPartitions(staged, root, batchId,
-            overwriteAll = flatLegacy, schemaDdl = schemaDdl,
-            nParts = Some(p))
-          return
-        } catch {
-          case e: VersionedTable.PartitionCountChanged =>
-            if (attempt >= 5) throw e
-          // a rescale raced this merge: loop restages under the count
-          // now stamped on the manifest
-        }
+        VersionedTable.commitPartitions(staged, root, batchId,
+          overwriteAll = flatLegacy, schemaDdl = schemaDdl,
+          nParts = Some(p))
       } finally batch.unpersist()
     }
   }

@@ -141,18 +141,6 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
     * deterministically (the PartitionedMerge seam's twin). */
   private[streaming] var beforeCommit: () => Unit = () => ()
 
-  /** Full-snapshot overwrite of the destination at source version
-    * `head` — initial sync, expired-cursor recovery, and upstream
-    * identity change all land here.
-    *
-    * `force` (identity-change path only) bypasses the txn-dedup
-    * guard: the same (identity, version) txn may have been burnt by a
-    * PRIOR ERA of this identity — a source restored from backup after
-    * an interloper table lived at the path re-presents a tableId
-    * whose nsTxn(head) the destination already carries, and a
-    * guard-skipped bootstrap would leave the replica serving the
-    * interloper's rows while reporting success. The forced commit
-    * still records the txn and still retries commit races. */
   /** Memo for the derived-table output DDL, keyed by the SOURCE
     * schema DDL it was computed from: the output schema can only
     * change when the source schema does (the transform is a pure
@@ -189,6 +177,18 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
     }
   }
 
+  /** Full-snapshot overwrite of the destination at source version
+    * `head` — initial sync, expired-cursor recovery, and upstream
+    * identity change all land here.
+    *
+    * `force` (identity-change path only) bypasses the txn-dedup
+    * guard: the same (identity, version) txn may have been burnt by a
+    * PRIOR ERA of this identity — a source restored from backup after
+    * an interloper table lived at the path re-presents a tableId
+    * whose nsTxn(head) the destination already carries, and a
+    * guard-skipped bootstrap would leave the replica serving the
+    * interloper's rows while reporting success. The forced commit
+    * still records the txn and still retries commit races. */
   private def bootstrap(head: Int, p: Int, sid: String,
       schemaDdl: Option[String], force: Boolean = false): Unit = {
     val snap = withPid(derived(VersionedTable.readAt(spark, srcRoot, head)), p)
@@ -199,22 +199,14 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
         followSrc = Some(sid), writerKind = VersionedTable.KindFollower)
       ()
     } else {
-      var attempt = 0
-      var done = false
-      while (!done) {
-        attempt += 1
-        val base = VersionedTable.versions(dstRoot).lastOption.getOrElse(0)
-        try {
-          VersionedTable.commitPartitionsOnce(staged, dstRoot, base,
-            overwriteAll = true, txn = Some(nsTxn(head)),
-            schemaDdl = schemaDdl, nParts = Some(p), followSrc = Some(sid),
-            writerKind = VersionedTable.KindFollower)
-          done = true
-        } catch {
-          case e: VersionedTable.ConcurrentCommit =>
-            if (attempt >= 5) throw e
-        }
+      VersionedTable.rebasing(VersionedTable.headMoved) {
+        VersionedTable.commitPartitionsOnce(staged, dstRoot,
+          VersionedTable.versions(dstRoot).lastOption.getOrElse(0),
+          overwriteAll = true, txn = Some(nsTxn(head)),
+          schemaDdl = schemaDdl, nParts = Some(p), followSrc = Some(sid),
+          writerKind = VersionedTable.KindFollower)
       }
+      ()
     }
   }
 
@@ -305,14 +297,11 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
             followSrc = Some(sid),
             writerKind = VersionedTable.KindFollower)
         } else {
-          // restage loop (PartitionedMerge's twin): a DESTINATION
-          // rescale landing inside this stage→commit window means the
-          // staged dirs hash under a dead count — re-read the stamp
-          // and restage instead of failing the tick
-          var attempt = 0
-          var done = false
-          while (!done) {
-            attempt += 1
+          // restage (PartitionedMerge's twin): a DESTINATION rescale
+          // landing inside this stage→commit window means the staged
+          // dirs hash under a dead count — re-read the stamp and
+          // restage instead of failing the tick
+          VersionedTable.rebasing(VersionedTable.layoutMoved) {
             val pNow = effP
             val withP = withPid(delta, pNow)
             val touched = VersionedTable.touchedPids(withP)
@@ -351,17 +340,11 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
             // the old dir would ride the manifest and resurrect rows
             val emptied = touched.map(_.toString) -- staged.keySet
             beforeCommit()
-            try {
-              VersionedTable.commitPartitions(staged, dstRoot,
-                batchId = nsTxn(head), schemaDdl = schemaDdl,
-                dropParts = emptied, nParts = Some(pNow),
-                followSrc = Some(sid),
-                writerKind = VersionedTable.KindFollower)
-              done = true
-            } catch {
-              case e: VersionedTable.PartitionCountChanged =>
-                if (attempt >= 3) throw e
-            }
+            VersionedTable.commitPartitions(staged, dstRoot,
+              batchId = nsTxn(head), schemaDdl = schemaDdl,
+              dropParts = emptied, nParts = Some(pNow),
+              followSrc = Some(sid),
+              writerKind = VersionedTable.KindFollower)
           }
         }
       } finally delta.unpersist()
