@@ -16,19 +16,20 @@ import org.apache.spark.storage.StorageLevel
   * kmeans, BPE) that doubled the whole iteration cost.
   *
   * Default mode (`local`): `Dataset.localCheckpoint()` — one job,
-  * blocks held by the block manager (memory, spilling to local disk),
+  * blocks held DISK_ONLY by the block manager (see [[stage]]),
   * lineage truncated identically. The stage's data, partitioning and
   * downstream plan shape are the same as the reliable form (both
   * re-enter the plan as an ExistingRDD scan), so results and exchange
   * counts are unchanged; only the double-compute and the checkpoint
   * file round-trip disappear.
   *
-  * Production mode (`spark.graft.checkpoint.reliable=true`): on a real
-  * multi-executor cluster a local checkpoint dies with its executor,
-  * so long-running jobs that must survive executor loss set the conf
-  * and get the former directory-backed reliable checkpoint — now with
-  * a persist() bracketing the write so the subtree still runs ONCE
-  * (the checkpoint-write job reads the cached blocks instead of
+  * Production mode (`spark.graft.checkpoint.reliable=true`, the one
+  * conf key Ckpt reads): on a real multi-executor cluster a local
+  * checkpoint dies with its executor, so long-running jobs that must
+  * survive executor loss set the conf and get the former
+  * directory-backed reliable checkpoint — now with a persist()
+  * bracketing the write so the subtree still runs ONCE (the
+  * checkpoint-write job reads the cached blocks instead of
   * recomputing the plan).
   */
 object Ckpt {
@@ -43,21 +44,16 @@ object Ckpt {
     * Also one job fewer: materialization rides the consuming action
     * instead of an eager staging job. Executor loss recomputes from
     * lineage (safer than a local checkpoint, which dies with its
-    * blocks), so no reliable-mode variant is needed. Blocks free on
-    * the session's clearCache between bench/verify queries. */
-  def cache(df: DataFrame): DataFrame = {
-    val level = df.sparkSession.conf
-      .getOption("spark.graft.cache.level")
-      .map(StorageLevel.fromString)
-      .getOrElse(StorageLevel.MEMORY_AND_DISK)
-    df.persist(level)
-  }
+    * blocks), so no reliable-mode variant is needed. Blocks are held
+    * MEMORY_AND_DISK and free on the session's clearCache between
+    * bench/verify queries. */
+  def cache(df: DataFrame): DataFrame =
+    df.persist(StorageLevel.MEMORY_AND_DISK)
 
   def stage(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val reliable = spark.conf
       .getOption("spark.graft.checkpoint.reliable")
-      .orElse(sys.env.get("SPARK_GRAFT_CKPT_RELIABLE"))
       .exists(_.equalsIgnoreCase("true"))
     if (reliable) {
       if (spark.sparkContext.getCheckpointDir.isEmpty)
@@ -76,11 +72,7 @@ object Ckpt {
       // 4s -> 15s under MEMORY_AND_DISK accumulation). Disk-backed
       // blocks ride the page cache, so the read-back stays cheap while
       // the JVM heap stays owned by execution.
-      val level = spark.conf
-        .getOption("spark.graft.checkpoint.level")
-        .map(StorageLevel.fromString)
-        .getOrElse(StorageLevel.DISK_ONLY)
-      df.localCheckpoint(true, level)
+      df.localCheckpoint(true, StorageLevel.DISK_ONLY)
     }
   }
 }

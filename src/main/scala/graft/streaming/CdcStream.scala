@@ -6,9 +6,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
-import org.apache.spark.sql.{classic, Dataset, SparkSession}
+import org.apache.spark.sql.{classic, Dataset}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 
 /** One decoded CDC event (the pgoutput-decoded row analog —
   * /root/reference/src/pipeline_manager.rs decodes logical-replication
@@ -57,6 +57,14 @@ object CdcStream {
       }
   }
 
+  /** The micro-batch dedupe every CDC sink runs before its target
+    * merge: latest row per key on the (ts, event_id) order — the
+    * reference's landing-table dedupe. */
+  private[streaming] def dedupe(events: Dataset[CdcEvent]): Dataset[CdcApplied] = {
+    import events.sparkSession.implicits._
+    events.groupByKey(_.user_id).reduceGroups(newer _).map(_._2).map(applied)
+  }
+
   /** Micro-batched CDC merge into an arbitrary target (the
     * foreachBatch sink = the reference's scheduled landing→target
     * MERGE task). The batch is deduped to latest-per-key before the
@@ -68,7 +76,7 @@ object CdcStream {
     * With a breaker, a failing target opens the circuit and the query
     * fails fast instead of hammering it; the checkpoint + the target's
     * sequence guard make the post-recovery redelivery lossless and
-    * idempotent (see [[CircuitBreaker]]).
+    * idempotent (see [[CircuitBreaker]], [[Sink.guarded]]).
     */
   def mergeInto(
       events: Dataset[CdcEvent],
@@ -77,39 +85,25 @@ object CdcStream {
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
       breaker: Option[CircuitBreaker] = None,
       mergeAttempts: Int = 1,
-      drift: Option[DriftGate] = None): StreamingQuery = {
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[CdcEvent], batchId: Long) =>
-        import batch.sparkSession.implicits._
-        // drift gate first, OUTSIDE the breaker: its batchId guard
-        // (+ durable store txn) makes redelivery exactly-once, and a
-        // failed histogram commit fails the micro-batch BEFORE the
-        // merge so Spark re-delivers both together — the gate can
-        // never observe a batch the target then didn't apply twice,
-        // nor vice versa (each side is idempotent under its own guard)
-        drift.foreach(_.observe(batch, batchId))
-        val deduped = batch.groupByKey(_.user_id)
-          .reduceGroups(newer _).map(_._2).map(applied)
-        // retry INSIDE the breaker: transient write errors burn
-        // attempts, only an exhausted retry counts as one breaker
-        // failure (the reference's per-write retry → breaker order)
-        def run(): Unit = Retry.withBackoff(mergeAttempts) {
-          target.merge(batchId, deduped)
-        }
-        breaker.fold(run())(_.protect(run()))
-      }
-      .start()
-  }
+      drift: Option[DriftGate] = None): StreamingQuery =
+    Sink.start(events, checkpoint, trigger) { (batch, batchId) =>
+      // drift gate first, OUTSIDE the breaker: its batchId guard
+      // (+ durable store txn) makes redelivery exactly-once, and a
+      // failed histogram commit fails the micro-batch BEFORE the
+      // merge so Spark re-delivers both together — the gate can
+      // never observe a batch the target then didn't apply twice,
+      // nor vice versa (each side is idempotent under its own guard)
+      drift.foreach(_.observe(batch, batchId))
+      val deduped = dedupe(batch)
+      Sink.guarded(breaker, mergeAttempts)(target.merge(batchId, deduped))
+    }
 
   /** [[mergeInto]] with trace propagation (tracing_context.rs's
     * per-operation spans made Spark-shaped): the pipeline's root
     * context spawns a child span per micro-batch merge, and when a
-    * batch's merge fails past its retries/breaker, the span — plus
-    * the batch's smallest record correlation id, the deterministic
-    * representative — lands in `traces` under the pipeline name,
+    * batch's merge fails, the span — plus the batch's smallest
+    * record correlation id, the deterministic representative — lands
+    * in `traces` under the pipeline name,
     * where the alert sweep ([[PipelineManager.sweep]]) and the
     * metrics scrape ([[Metrics.failureSample]]) pick it up. The
     * record-id reduction runs ONLY on the failure path (one
@@ -124,33 +118,22 @@ object CdcStream {
       rootCtx: TraceContext,
       traces: TraceRegistry,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
-      breaker: Option[CircuitBreaker] = None,
-      mergeAttempts: Int = 1): StreamingQuery = {
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[TracedCdcEvent], batchId: Long) =>
-        import batch.sparkSession.implicits._
-        val span = tracing.child(rootCtx, s"merge batch=$batchId")
-        val deduped = batch.map(_.event).groupByKey(_.user_id)
-          .reduceGroups(newer _).map(_._2).map(applied)
-        def run(): Unit = Retry.withBackoff(mergeAttempts) {
-          target.merge(batchId, deduped)
-        }
-        try breaker.fold(run())(_.protect(run()))
-        catch { case e: Throwable =>
-          val firstRec =
-            try Option(batch.agg(
-              org.apache.spark.sql.functions.min("trace_id")).head.getString(0))
-            catch { case scala.util.control.NonFatal(_) => None }
-          traces.recordFailure(pipeline, FailureTrace(
-            span, firstRec, batchId, System.currentTimeMillis()))
-          throw e
-        }
+      breaker: Option[CircuitBreaker] = None): StreamingQuery =
+    Sink.start(events, checkpoint, trigger) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
+      val span = tracing.child(rootCtx, s"merge batch=$batchId")
+      val deduped = dedupe(batch.map(_.event))
+      try Sink.guarded(breaker)(target.merge(batchId, deduped))
+      catch { case e: Throwable =>
+        val firstRec =
+          try Option(batch.agg(
+            org.apache.spark.sql.functions.min("trace_id")).head.getString(0))
+          catch { case scala.util.control.NonFatal(_) => None }
+        traces.recordFailure(pipeline, FailureTrace(
+          span, firstRec, batchId, System.currentTimeMillis()))
+        throw e
       }
-      .start()
-  }
+    }
 }
 
 /** One decoded CDC event tagged with its source table — the shape of
@@ -171,7 +154,6 @@ case class TracedCdcEvent(
 }
 
 object CdcDemux {
-  import CdcStream.{applied, newer}
 
   /** The driver threads the per-table merges run on. Daemon threads,
     * so an idle pool never holds the JVM open; cached, so the thread
@@ -224,45 +206,37 @@ object CdcDemux {
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
       onUnrouted: Long => Unit = _ => (),
       breaker: Option[CircuitBreaker] = None): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[TableCdcEvent], batchId: Long) =>
-        import batch.sparkSession.implicits._
-        val known = targets.keySet // closure-capture the names only
-        val cached = batch.persist()
-        try {
-          // the breaker wraps the whole routing pass (one slot = one
-          // circuit, as in mergeInto): a failing table target fails
-          // the batch, and redelivery is per-table idempotent via
-          // each target's txn/sequence guard
-          def route(): Unit = {
-            val session = cached.sparkSession.asInstanceOf[classic.SparkSession]
-            val merges = targets.toSeq.sortBy(_._1).map { case (tbl, target) =>
-              SQLExecution.withThreadLocalCaptured(session, pool) {
-                val deduped = cached.filter(_.table == tbl)
-                  .map(e => CdcEvent(e.event_id, e.ts, e.user_id,
-                    e.event_type, e.value))
-                  .groupByKey(_.user_id)
-                  .reduceGroups(newer _).map(_._2).map(applied)
-                target.merge(batchId, deduped)
-              }
-            }
-            // join() waits uninterruptibly: every merge has returned
-            // before a failure surfaces or the cache is released
-            val failures = merges.flatMap(f => Try(f.join()).failed.toOption)
-            failures.headOption.foreach {
-              case e: CompletionException if e.getCause != null => throw e.getCause
-              case e => throw e
+    Sink.start(events, checkpoint, trigger) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
+      val known = targets.keySet // closure-capture the names only
+      val cached = batch.persist()
+      try {
+        // the breaker wraps the whole routing pass (one slot = one
+        // circuit, as in mergeInto): a failing table target fails
+        // the batch, and redelivery is per-table idempotent via
+        // each target's txn/sequence guard
+        Sink.guarded(breaker) {
+          val session = cached.sparkSession.asInstanceOf[classic.SparkSession]
+          val merges = targets.toSeq.sortBy(_._1).map { case (tbl, target) =>
+            SQLExecution.withThreadLocalCaptured(session, pool) {
+              val slice = cached.filter(_.table == tbl)
+                .map(e => CdcEvent(e.event_id, e.ts, e.user_id,
+                  e.event_type, e.value))
+              target.merge(batchId, CdcStream.dedupe(slice))
             }
           }
-          breaker.fold(route())(_.protect(route()))
-          val unrouted = cached.filter(e => !known.contains(e.table)).count()
-          if (unrouted > 0) onUnrouted(unrouted)
-        } finally cached.unpersist()
-      }
-      .start()
+          // join() waits uninterruptibly: every merge has returned
+          // before a failure surfaces or the cache is released
+          val failures = merges.flatMap(f => Try(f.join()).failed.toOption)
+          failures.headOption.foreach {
+            case e: CompletionException if e.getCause != null => throw e.getCause
+            case e => throw e
+          }
+        }
+        val unrouted = cached.filter(e => !known.contains(e.table)).count()
+        if (unrouted > 0) onUnrouted(unrouted)
+      } finally cached.unpersist()
+    }
 }
 
 /** Merge destination abstraction (Snowflake/BigQuery/Iceberg writer
@@ -279,7 +253,13 @@ object CdcDemux {
   * sequence — apply a row only when `(ts, event_id)` exceeds the
   * target's stored pair for that key, the `WHEN MATCHED AND
   * source.seq > target.seq` MERGE predicate. That guard makes the
-  * merge both out-of-order-safe and redelivery-idempotent. */
+  * merge both out-of-order-safe and redelivery-idempotent.
+  *
+  * Every CDC sink calls a target the same way: [[Sink.start]] drives
+  * the micro-batches, [[CdcStream.dedupe]] reduces each to
+  * latest-per-key, and the merge runs under [[Sink.guarded]] (retry
+  * inside the circuit breaker). The JDBC targets share one warehouse
+  * transaction, [[Jdbc.mergeBatch]]. */
 trait CdcTarget extends Serializable {
   def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager}
-
 /** Durable backing for [[DriftStream]]'s accumulated current-side
   * histogram (VERDICT r10 item 7): the batchId guard made RE-DELIVERY
   * exactly-once, but the cell map lived only in memory — a process
@@ -27,16 +25,11 @@ import java.sql.{Connection, DriverManager}
   * /root/reference/src/store/redis_store.rs:346-398). */
 class DriftStateStore(url: String, table: String = "graft_drift_state") {
 
-  private def q(c: String) = "\"" + c + "\""
-
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
+  import Jdbc.q
 
   ensureSchema()
 
-  private def ensureSchema(): Unit = withConn { c =>
+  private def ensureSchema(): Unit = Jdbc.withConn(url) { c =>
     // vendor-portable + wildcard-escaped existence probe (Jdbc
     // scaladoc): a SQLState guard or an unescaped getTables pattern
     // both break exactly on the restart path this store exists for
@@ -54,7 +47,7 @@ class DriftStateStore(url: String, table: String = "graft_drift_state") {
 
   /** The last durable snapshot: accumulated cells + the id of the
     * last batch they include (-1 = nothing applied yet). */
-  def load(): (Map[(String, Long), Long], Long) = withConn { c =>
+  def load(): (Map[(String, Long), Long], Long) = Jdbc.withConn(url) { c =>
     val cells = scala.collection.mutable.Map.empty[(String, Long), Long]
     val rs = c.createStatement().executeQuery(
       s"SELECT ${q("typ")}, ${q("bucket")}, ${q("n")} FROM ${q(table)}")
@@ -73,7 +66,7 @@ class DriftStateStore(url: String, table: String = "graft_drift_state") {
     * batchId < 0 branch here (cells without marker) exists only for
     * tooling that owns its own idempotence. */
   def commitBatch(batchId: Long,
-      cells: Iterable[(String, Long, Long)]): Unit = withConn { c =>
+      cells: Iterable[(String, Long, Long)]): Unit = Jdbc.withConn(url) { c =>
     c.setAutoCommit(false)
     try {
       val upd = c.prepareStatement(

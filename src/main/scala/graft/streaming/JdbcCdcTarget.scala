@@ -1,39 +1,20 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager}
-
-import org.apache.spark.sql.{Dataset, SaveMode}
-import org.apache.spark.sql.functions.lit
-
-import graft.sources.Formats
+import org.apache.spark.sql.Dataset
 
 /** Warehouse-backed [[CdcTarget]]: the reference's core write path
   * (/root/reference/etl-snowflake-py/etl_snowflake/task.py:154-190 —
   * landing-table load, latest-per-key dedupe, guarded MERGE, landing
-  * purge) re-expressed against any JDBC warehouse, exercised in the
-  * specs against embedded Derby.
+  * purge) against any JDBC warehouse, exercised in the specs against
+  * embedded Derby. Each batch runs [[Jdbc.mergeBatch]], the one
+  * landing → staging → MERGE → purge transaction, over CdcApplied's
+  * columns keyed on `user_id` and guarded on `(ts, event_id)`.
   *
-  * Write path per micro-batch:
-  *  1. the batch Dataset appends to the LANDING table via Spark's
-  *     distributed JDBC writer (executors write in parallel — the
-  *     only step that touches batch-sized data, and it never funnels
-  *     through the driver);
-  *  2. one driver-side control connection then runs SET-BASED SQL:
-  *     dedupe this batch's landing rows to latest-per-key into a
-  *     staging table (Derby's MERGE needs a table source, and its
-  *     ROW_NUMBER has no PARTITION BY — the NOT EXISTS anti-join is
-  *     the portable rn=1), MERGE staging into the target under the
-  *     sequence guard, purge the batch's landing rows, commit. The
-  *     control statements move no rows through the JVM — the
-  *     warehouse executes them.
-  *
-  * Crash safety: step 2 is one transaction. A crash before commit
-  * leaves landing rows behind and the restarted query redelivers the
-  * batch (at-least-once); both replays are absorbed by batch-scoped
-  * landing reads, the DISTINCT (exact redelivered duplicates), and
-  * the `WHEN MATCHED AND s.seq > t.seq` guard (stale rows) — the
-  * [[CdcTarget]] contract's idempotence, enforced by the database
-  * rather than documented at the call site.
+  * Crash safety is [[Jdbc.mergeBatch]]'s: a redelivered batch is
+  * absorbed by the database (batch-scoped landing reads, DISTINCT,
+  * the `WHEN MATCHED AND s.seq > t.seq` guard) — the [[CdcTarget]]
+  * contract's idempotence, enforced by the database rather than
+  * documented at the call site.
   *
   * Writer contract: ONE writer per target table (the reference's
   * scheduled merge task is likewise singular per table). A streaming
@@ -47,9 +28,10 @@ class JdbcCdcTarget(
     connOptions: Map[String, String] = Map.empty,
     meter: Option[EgressMeter] = None,
     pipeline: String = "default") extends CdcTarget {
+  import Jdbc.q
 
-  private val landing = table + "_landing"
-  private val staging = table + "_staging"
+  private val landing = Jdbc.landingOf(table)
+  private val staging = Jdbc.stagingOf(table)
 
   /** CdcApplied's JDBC wire width: user_id/event_id BIGINT (8+8),
     * ts TIMESTAMP (8), value DOUBLE (8), is_deleted BOOLEAN (1) —
@@ -61,19 +43,11 @@ class JdbcCdcTarget(
   // quoted, lowercase — matches how Spark's JDBC writer quotes the
   // DataFrame's column names when appending to the landing table
   private val cols = Seq("user_id", "event_id", "ts", "value", "is_deleted")
-  private def q(c: String) = "\"" + c + "\""
   private val colList = cols.map(q).mkString(", ")
 
   ensureSchema()
 
-  private def withConn[A](f: Connection => A): A = {
-    val props = new java.util.Properties()
-    connOptions.foreach { case (k, v) => props.setProperty(k, v) }
-    val c = DriverManager.getConnection(url, props)
-    try f(c) finally c.close()
-  }
-
-  private def ensureSchema(): Unit = withConn { c =>
+  private def ensureSchema(): Unit = Jdbc.withConn(url, connOptions) { c =>
     val body =
       s"""${q("user_id")} BIGINT NOT NULL, ${q("event_id")} BIGINT NOT NULL,
          |${q("ts")} TIMESTAMP NOT NULL, ${q("value")} DOUBLE NOT NULL,
@@ -88,61 +62,18 @@ class JdbcCdcTarget(
     Jdbc.ensureTable(c, staging, s"CREATE TABLE $staging ($body)")
   }
 
-  /** seq(a) > seq(b) on the (ts, event_id) total order, in SQL. */
-  private def newer(a: String, b: String) =
-    s"""($a.${q("ts")} > $b.${q("ts")} OR
-       |($a.${q("ts")} = $b.${q("ts")} AND
-       | $a.${q("event_id")} > $b.${q("event_id")}))""".stripMargin
-
-  override def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit = {
-    // 1. distributed landing load — executors write, driver sees no rows
-    Formats.writeJdbc(
-      rows.toDF().withColumn("batch_id", lit(batchId)),
-      url, landing, connOptions, SaveMode.Append)
-    // 2. set-based dedupe + guarded MERGE + purge, one transaction
-    withConn { c =>
-      c.setAutoCommit(false)
-      val st = c.createStatement()
-      // byte accounting (inside the txn, before the purge): the
-      // landed row count is what the destination received this batch
-      meter.foreach { m =>
-        val rs = st.executeQuery(s"SELECT COUNT(*) FROM $landing " +
-          s"WHERE ${q("batch_id")} = $batchId")
-        rs.next()
-        m.add(pipeline, table, "streaming", rs.getLong(1) * rowBytes)
-      }
-      st.execute(s"DELETE FROM $staging")
-      // latest-per-key within the batch: keep a landing row iff no
-      // strictly-newer row for its key exists in the same batch;
-      // DISTINCT absorbs exact duplicates from a redelivered landing
-      // load that crashed before its purge committed
-      st.execute(
-        s"""INSERT INTO $staging
-           |SELECT DISTINCT $colList FROM $landing a
-           |WHERE a.${q("batch_id")} = $batchId AND NOT EXISTS (
-           |  SELECT 1 FROM $landing b
-           |  WHERE b.${q("batch_id")} = $batchId
-           |    AND b.${q("user_id")} = a.${q("user_id")}
-           |    AND ${newer("b", "a")})""".stripMargin)
-      st.execute(
-        s"""MERGE INTO $table t USING $staging s
-           |ON t.${q("user_id")} = s.${q("user_id")}
-           |WHEN MATCHED AND ${newer("s", "t")} THEN UPDATE SET
-           |  ${q("event_id")} = s.${q("event_id")}, ${q("ts")} = s.${q("ts")},
-           |  ${q("value")} = s.${q("value")},
-           |  ${q("is_deleted")} = s.${q("is_deleted")}
-           |WHEN NOT MATCHED THEN INSERT ($colList)
-           |  VALUES (${cols.map(c0 => "s." + q(c0)).mkString(", ")})""".stripMargin)
-      st.execute(s"DELETE FROM $landing WHERE ${q("batch_id")} = $batchId")
-      c.commit()
-    }
-  }
+  override def merge(batchId: Long, rows: Dataset[CdcApplied]): Unit =
+    // byte accounting inside the txn, before the purge: the landed
+    // row count is what the destination received this batch
+    Jdbc.mergeBatch(url, connOptions, table, "user_id", Seq("ts", "event_id"),
+      cols, batchId, rows.toDF(),
+      meter.map(m => (n: Long) => m.add(pipeline, table, "streaming", n * rowBytes)))
 
   /** Live (non-tombstoned) target state — operational introspection
     * for specs/debugging; reads the target table over the control
     * connection (target cardinality = number of distinct keys, not
     * batch-sized). */
-  def snapshot: Map[Long, CdcApplied] = withConn { c =>
+  def snapshot: Map[Long, CdcApplied] = Jdbc.withConn(url, connOptions) { c =>
     val rs = c.createStatement().executeQuery(
       s"SELECT $colList FROM $table WHERE ${q("is_deleted")} = FALSE")
     val out = Map.newBuilder[Long, CdcApplied]
@@ -156,7 +87,7 @@ class JdbcCdcTarget(
 
   /** Row count left in the landing table (0 after a clean merge —
     * specs assert the purge). */
-  def landingRows: Long = withConn { c =>
+  def landingRows: Long = Jdbc.withConn(url, connOptions) { c =>
     val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM $landing")
     rs.next(); rs.getLong(1)
   }

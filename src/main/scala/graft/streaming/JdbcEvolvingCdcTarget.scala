@@ -1,18 +1,14 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager}
-
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-import graft.sources.Formats
-
-/** Schema-evolving warehouse target: [[JdbcCdcTarget]]'s guarded
-  * landing→staging→MERGE machinery with the reference destination's
-  * schema self-heal (/root/reference/src/schema_cache.rs — "add
-  * missing columns, then retry") enforced by real `ALTER TABLE ADD
-  * COLUMN` DDL instead of an in-memory log. Consumed through
+/** Schema-evolving warehouse target: the same guarded
+  * landing→staging→MERGE transaction as [[JdbcCdcTarget]]
+  * ([[Jdbc.mergeBatch]]), over a column list that widens with the
+  * reference destination's schema self-heal (its schema_cache.rs —
+  * "add missing columns, then retry") enforced by real `ALTER TABLE
+  * ADD COLUMN` DDL instead of an in-memory log. Consumed through
   * [[SchemaEvolution.mergeEvolvingJson]]: by the time merge() runs,
   * the batch is already aligned to [[schema]], and a batch that
   * gained a column has already widened all three tables.
@@ -29,11 +25,12 @@ class JdbcEvolvingCdcTarget(
     pk: String = "user_id",
     seqCols: Seq[String] = Seq("ts", "event_id"),
     connOptions: Map[String, String] = Map.empty) extends EvolvingCdcTarget {
+  import Jdbc.q
 
   JdbcEvolvingCdcTarget.ensureDerbyVarcharDialect()
 
-  private val landing = table + "_landing"
-  private val staging = table + "_staging"
+  private val landing = Jdbc.landingOf(table)
+  private val staging = Jdbc.stagingOf(table)
 
   @volatile private var current: Option[StructType] = reloadFromDb()
 
@@ -46,13 +43,14 @@ class JdbcEvolvingCdcTarget(
     * previously-evolved columns and silently dropped them from the
     * MERGE column list. The evolved type set is closed (ddlType), so
     * the JDBC type codes map back losslessly. */
-  private def reloadFromDb(): Option[StructType] = withConn { c =>
-    val cols = Jdbc.columnsWithTypes(c, table)
-    if (cols.isEmpty) None
-    else Some(StructType(cols.map { case (n, t) =>
-      StructField(n, sparkType(n, t), nullable = true)
-    }.toArray))
-  }
+  private def reloadFromDb(): Option[StructType] =
+    Jdbc.withConn(url, connOptions) { c =>
+      val cols = Jdbc.columnsWithTypes(c, table)
+      if (cols.isEmpty) None
+      else Some(StructType(cols.map { case (n, t) =>
+        StructField(n, sparkType(n, t), nullable = true)
+      }.toArray))
+    }
 
   private def sparkType(name: String, sqlType: Int): DataType =
     sqlType match {
@@ -67,15 +65,6 @@ class JdbcEvolvingCdcTarget(
         s"$table.$name has JDBC type $other outside the evolved set — " +
           "not a table this target created")
     }
-
-  private def q(c: String) = "\"" + c + "\""
-
-  private def withConn[A](f: Connection => A): A = {
-    val props = new java.util.Properties()
-    connOptions.foreach { case (k, v) => props.setProperty(k, v) }
-    val c = DriverManager.getConnection(url, props)
-    try f(c) finally c.close()
-  }
 
   /** Spark type → Derby/ANSI DDL type for evolved columns. JSON
     * payload inference only produces this closed set; anything else
@@ -93,7 +82,7 @@ class JdbcEvolvingCdcTarget(
   }
 
   override def addColumns(newCols: Seq[StructField]): Unit = synchronized {
-    withConn { c =>
+    Jdbc.withConn(url, connOptions) { c =>
       val st = c.createStatement()
       current match {
         case None =>
@@ -134,7 +123,7 @@ class JdbcEvolvingCdcTarget(
       val ddl =
         try ddlType(to)
         catch { case _: IllegalArgumentException => return false }
-      withConn { c =>
+      Jdbc.withConn(url, connOptions) { c =>
         c.setAutoCommit(false)
         try {
           val st = c.createStatement()
@@ -151,62 +140,30 @@ class JdbcEvolvingCdcTarget(
       }
     }
 
-  /** seq(a) > seq(b) on the lexicographic `seqCols` order, in SQL. */
-  private def newer(a: String, b: String): String =
-    seqCols.reverse.foldLeft("1 = 0") { (rest, c0) =>
-      s"($a.${q(c0)} > $b.${q(c0)} OR ($a.${q(c0)} = $b.${q(c0)} AND $rest))"
-    }
-
+  /** [[Jdbc.mergeBatch]] with the column list taken from the CURRENT
+    * (possibly just-widened) schema. */
   override def merge(batchId: Long, rows: DataFrame): Unit = {
     val want = current.getOrElse(
       throw new IllegalStateException("merge before first addColumns"))
-    val cols = want.fieldNames.toSeq
-    val colList = cols.map(q).mkString(", ")
-    // 1. distributed landing load of the healed batch
-    Formats.writeJdbc(rows.withColumn("batch_id", lit(batchId)),
-      url, landing, connOptions, SaveMode.Append)
-    // 2. set-based dedupe + guarded MERGE + purge, one transaction —
-    //    identical machinery to JdbcCdcTarget, with the column list
-    //    taken from the CURRENT (possibly just-widened) schema
-    withConn { c =>
-      c.setAutoCommit(false)
-      val st = c.createStatement()
-      st.execute(s"DELETE FROM $staging")
-      st.execute(
-        s"""INSERT INTO $staging ($colList)
-           |SELECT DISTINCT $colList FROM $landing a
-           |WHERE a.${q("batch_id")} = $batchId AND NOT EXISTS (
-           |  SELECT 1 FROM $landing b
-           |  WHERE b.${q("batch_id")} = $batchId
-           |    AND b.${q(pk)} = a.${q(pk)}
-           |    AND ${newer("b", "a")})""".stripMargin)
-      val setList = cols.filterNot(_ == pk)
-        .map(c0 => s"${q(c0)} = s.${q(c0)}").mkString(", ")
-      st.execute(
-        s"""MERGE INTO $table t USING $staging s
-           |ON t.${q(pk)} = s.${q(pk)}
-           |WHEN MATCHED AND ${newer("s", "t")} THEN UPDATE SET $setList
-           |WHEN NOT MATCHED THEN INSERT ($colList)
-           |  VALUES (${cols.map(c0 => "s." + q(c0)).mkString(", ")})""".stripMargin)
-      st.execute(s"DELETE FROM $landing WHERE ${q("batch_id")} = $batchId")
-      c.commit()
-    }
+    Jdbc.mergeBatch(url, connOptions, table, pk, seqCols,
+      want.fieldNames.toSeq, batchId, rows)
   }
 
   /** All target rows keyed by pk (spec/debug introspection). */
-  def snapshot: Map[Long, Map[String, Any]] = withConn { c =>
-    val want = current.getOrElse(return Map.empty)
-    val cols = want.fieldNames.toSeq
-    val rs = c.createStatement().executeQuery(
-      s"SELECT ${cols.map(q).mkString(", ")} FROM $table")
-    val out = Map.newBuilder[Long, Map[String, Any]]
-    while (rs.next()) {
-      val row = cols.zipWithIndex
-        .map { case (c0, i) => c0 -> rs.getObject(i + 1) }.toMap
-      out += row(pk).asInstanceOf[Number].longValue() -> row
+  def snapshot: Map[Long, Map[String, Any]] =
+    Jdbc.withConn(url, connOptions) { c =>
+      val want = current.getOrElse(return Map.empty)
+      val cols = want.fieldNames.toSeq
+      val rs = c.createStatement().executeQuery(
+        s"SELECT ${cols.map(q).mkString(", ")} FROM $table")
+      val out = Map.newBuilder[Long, Map[String, Any]]
+      while (rs.next()) {
+        val row = cols.zipWithIndex
+          .map { case (c0, i) => c0 -> rs.getObject(i + 1) }.toMap
+        out += row(pk).asInstanceOf[Number].longValue() -> row
+      }
+      out.result()
     }
-    out.result()
-  }
 }
 
 object JdbcEvolvingCdcTarget {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager, Timestamp}
+import java.sql.{Connection, Timestamp}
 
 /** Desired pipeline state as one config row — the reference's
   * `pipelines` table shape (migrations/001_create_tables.sql defines
@@ -38,12 +38,7 @@ final case class PipelineSpec(
   * fail at registration, not at spawn). */
 class PipelineRegistry(url: String, table: String = "graft_pipelines") {
 
-  private def q(c: String) = "\"" + c + "\""
-
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
+  import Jdbc.q
 
   ensureSchema()
 
@@ -54,7 +49,7 @@ class PipelineRegistry(url: String, table: String = "graft_pipelines") {
   private def tableExists(c: Connection): Boolean =
     Jdbc.tableExists(c, table)
 
-  private def ensureSchema(): Unit = withConn { c =>
+  private def ensureSchema(): Unit = Jdbc.withConn(url) { c =>
     if (!tableExists(c)) {
       val ddl =
         s"""CREATE TABLE ${q(table)} (
@@ -89,7 +84,7 @@ class PipelineRegistry(url: String, table: String = "graft_pipelines") {
     * UPDATE (vendor-neutral MERGE is not in the common dialect). */
   def upsert(spec: PipelineSpec): Unit = {
     validate(spec)
-    withConn { c =>
+    Jdbc.withConn(url) { c =>
       val now = new Timestamp(System.currentTimeMillis())
       def update(): Int = {
         val upd = c.prepareStatement(
@@ -130,7 +125,7 @@ class PipelineRegistry(url: String, table: String = "graft_pipelines") {
   def enable(name: String): Unit = setEnabled(name, enabled = true)
 
   private def setEnabled(name: String, enabled: Boolean): Unit =
-    withConn { c =>
+    Jdbc.withConn(url) { c =>
       val upd = c.prepareStatement(
         s"UPDATE ${q(table)} SET ${q("enabled")} = ?, ${q("updated_at")} = ? " +
           s"WHERE ${q("name")} = ?")
@@ -141,14 +136,14 @@ class PipelineRegistry(url: String, table: String = "graft_pipelines") {
     }
 
   /** Remove a pipeline row entirely (the next reconcile stops it). */
-  def remove(name: String): Unit = withConn { c =>
+  def remove(name: String): Unit = Jdbc.withConn(url) { c =>
     val del = c.prepareStatement(
       s"DELETE FROM ${q(table)} WHERE ${q("name")} = ?")
     del.setString(1, name); del.executeUpdate()
   }
 
   /** All desired state, enabled or not. */
-  def list(): Seq[PipelineSpec] = withConn { c =>
+  def list(): Seq[PipelineSpec] = Jdbc.withConn(url) { c =>
     val rs = c.createStatement().executeQuery(
       s"SELECT ${q("name")}, ${q("source")}, ${q("target")}, " +
         s"${q("checkpoint")}, ${q("enabled")} FROM ${q(table)}")
@@ -255,7 +250,7 @@ class PipelineRegistry(url: String, table: String = "graft_pipelines") {
     }
 
   /** One row by name (None when absent). */
-  def lookup(name: String): Option[PipelineSpec] = withConn { c =>
+  def lookup(name: String): Option[PipelineSpec] = Jdbc.withConn(url) { c =>
     val ps = c.prepareStatement(
       s"SELECT ${q("name")}, ${q("source")}, ${q("target")}, " +
         s"${q("checkpoint")}, ${q("enabled")} FROM ${q(table)} " +

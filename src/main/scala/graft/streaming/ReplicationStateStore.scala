@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager, Timestamp}
+import java.sql.{Connection, Timestamp}
 
 import scala.collection.concurrent.TrieMap
 
@@ -60,14 +60,9 @@ class ReplicationStateStore(
   ensureSchema()
   load()
 
-  private def q(c: String) = "\"" + c + "\""
+  import Jdbc.q
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url)
-    try f(c) finally c.close()
-  }
-
-  private def ensureSchema(): Unit = withConn { c =>
+  private def ensureSchema(): Unit = Jdbc.withConn(url) { c =>
     // vendor-portable probe (Jdbc scaladoc) — the old Derby-only
     // X0Y32 guard crashed every non-Derby RESTART, the exact path
     // the 'any JDBC database' contract promises to survive
@@ -81,7 +76,7 @@ class ReplicationStateStore(
   }
 
   /** Warm memory from the last durable snapshot (crash restart). */
-  def load(): Int = withConn { c =>
+  def load(): Int = Jdbc.withConn(url) { c =>
     val rs = c.createStatement().executeQuery(
       s"SELECT ${q("tbl")}, ${q("phase")}, ${q("reason")}, " +
         s"${q("mapping")}, ${q("updated_at")} FROM ${q(table)}")
@@ -144,7 +139,7 @@ class ReplicationStateStore(
     } catch { case scala.util.control.NonFatal(_) => false }
   }
 
-  private def persistAll(entries: Seq[(String, Entry)]): Unit = withConn { c =>
+  private def persistAll(entries: Seq[(String, Entry)]): Unit = Jdbc.withConn(url) { c =>
     c.setAutoCommit(false)
     try {
       entries.foreach { case (tbl, e) =>
@@ -166,7 +161,7 @@ class ReplicationStateStore(
   /** Drop a table's state everywhere (reference cleanup_table_state). */
   def cleanup(tbl: String): Unit = {
     mem.remove(tbl)
-    withConn { c =>
+    Jdbc.withConn(url) { c =>
       val del = c.prepareStatement(
         s"DELETE FROM ${q(table)} WHERE ${q("tbl")} = ?")
       del.setString(1, tbl); del.executeUpdate()
@@ -174,7 +169,7 @@ class ReplicationStateStore(
   }
 
   private def persist(tbl: String, e: Entry): Unit =
-    withConn(persistOn(_, tbl, e))
+    Jdbc.withConn(url)(persistOn(_, tbl, e))
 
   private def persistOn(c: Connection, tbl: String, e: Entry): Unit = {
     val reason = e.phase match {

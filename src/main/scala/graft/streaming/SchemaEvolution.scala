@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming schema-evolution self-heal — the destination-side "add
@@ -97,32 +97,23 @@ object SchemaEvolution {
     * a mid-stream batch that gains a column widens the target and
     * keeps flowing instead of failing the sink.
     *
-    * Breaker/retry order mirrors [[CdcStream.mergeInto]]: retries
-    * burn INSIDE the breaker, so only an exhausted retry counts as a
-    * breaker failure. The heal sits inside the retry too — it is
-    * idempotent (a re-run finds no new columns), and a target whose
-    * widen itself failed transiently re-heals on the retry. */
+    * The merge runs under [[Sink.guarded]], like every sink. The heal
+    * sits inside the guard too — it is idempotent (a re-run finds no
+    * new columns), so a target whose widen itself failed is re-healed
+    * when the batch is redelivered. An empty batch is skipped before
+    * the guard: it has no payload to infer a schema from. */
   def mergeEvolvingJson(
       raw: Dataset[String],
       target: EvolvingCdcTarget,
       checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
-      breaker: Option[CircuitBreaker] = None,
-      mergeAttempts: Int = 1): StreamingQuery =
-    raw.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[String], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val parsed = batch.sparkSession.read.json(batch)
-          def run(): Unit = Retry.withBackoff(mergeAttempts) {
-            target.merge(batchId, heal(target, parsed))
-          }
-          breaker.fold(run())(_.protect(run()))
-        }
+      breaker: Option[CircuitBreaker] = None): StreamingQuery =
+    Sink.start(raw, checkpoint, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val parsed = batch.sparkSession.read.json(batch)
+        Sink.guarded(breaker)(target.merge(batchId, heal(target, parsed)))
       }
-      .start()
+    }
 }
 
 /** A merge destination whose schema can widen over the life of the

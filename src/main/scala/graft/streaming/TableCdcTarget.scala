@@ -33,11 +33,13 @@ import graft.sources.VersionedTable
   * Scale note: whole-table copy-on-write is the correct shape only
   * below ~table=O(batch) sizes — [[PartitionedTableCdcTarget]] is the
   * 100 TB form (rewrite only the key-hash partitions the batch
-  * touches, same contract/guard/manifest game; it migrates a table
-  * written by THIS class in place on its first merge). This class
-  * stays as the small-table fast path: below one partition's worth of
-  * data the partitioned form's extra distinct+manifest bookkeeping
-  * buys nothing.
+  * touches, same contract/guard/manifest game). This class stays for
+  * two reasons: it is the copy-on-write reference for the partitioned
+  * form (PartitionedTableCdcTargetSpec checks the partitioned
+  * snapshots against it; [[graft.LakehouseScale]] measures the bytes
+  * both rewrite per batch), and it writes the flat layout that
+  * [[PartitionedMerge]]'s `migrateFlat` reads, so a table it wrote
+  * migrates in place on the partitioned form's first merge.
   */
 class TableCdcTarget(spark: SparkSession, root: String) extends CdcTarget {
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Timer-driven managed work: Structured Streaming's rate source as
@@ -19,24 +19,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * harmless (the next one converges), which is why the rate source's
   * at-least-once delivery needs no further guard here.
   *
-  * Breaker/retry contract mirrors [[CdcStream.mergeInto]]: transient
-  * failures burn retry attempts inside one breaker observation; an
-  * exhausted retry counts as ONE breaker failure, and an open breaker
+  * Each tick runs under [[Sink.guarded]], as the merge pipelines do:
+  * a failing tick counts as one breaker failure, and an open breaker
   * fails ticks fast until the probe succeeds.
   */
 object TickStream {
 
   def ticks(spark: SparkSession, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
-      breaker: Option[CircuitBreaker] = None,
-      attempts: Int = 1)(work: () => Unit): StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (_: Dataset[Row], _: Long) =>
-        def run(): Unit = Retry.withBackoff(attempts)(work())
-        breaker.fold(run())(_.protect(run()))
-      }
-      .start()
+      breaker: Option[CircuitBreaker] = None)(work: () => Unit): StreamingQuery =
+    Sink.start(spark.readStream.format("rate").option("rowsPerSecond", "1").load(),
+      checkpoint, trigger) { (_, _) => Sink.guarded(breaker)(work()) }
 }

@@ -9,11 +9,13 @@ import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 
-/** The lakehouse targets against the in-memory reference, on random
-  * CDC histories: for every seeded case the snapshots of
-  * [[PartitionedTableCdcTarget]] and [[TableEvolvingCdcTarget]] (which
-  * reads touched partitions under its declared schema) equal
-  * [[InMemoryCdcTarget]]'s row for row. Each history is split into
+/** The lakehouse and warehouse targets against the in-memory
+  * reference, on random CDC histories: for every seeded case the
+  * snapshots of [[PartitionedTableCdcTarget]], [[TableEvolvingCdcTarget]]
+  * (which reads touched partitions under its declared schema),
+  * [[JdbcCdcTarget]] and [[JdbcEvolvingCdcTarget]] (both on embedded
+  * Derby, through [[Jdbc.mergeBatch]]) equal [[InMemoryCdcTarget]]'s
+  * row for row. Each history is split into
   * random micro-batches and carries duplicate (redelivered) events,
   * out-of-order sequences and deletes; one batch is also redelivered
   * whole under its batch id. */
@@ -92,6 +94,45 @@ class CdcTargetEquivalenceSpec extends SparkSpec {
       assert(rows(partitioned.snapshot) == want, s"$ctx: partitioned target diverged")
       assert(rows(evolving.snapshot.filter("not is_deleted")) == want,
         s"$ctx: evolving target diverged")
+    }
+  }
+
+  test(s"JDBC and evolving JDBC targets equal the in-memory target on $Cases random histories") {
+    val derby = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+    (1 to Cases).foreach { c =>
+      val seed = Seed(9000L + c)
+      val (events, cuts) = history(Gen.Parameters.default, seed)
+        .getOrElse(fail(s"case $c: generator gave no history"))
+      val batches = split(events, cuts).map(deduped)
+
+      val url = s"jdbc:derby:memory:graftequiv$c;create=true"
+      val reference = new InMemoryCdcTarget
+      val jdbc = new JdbcCdcTarget(url, "equiv_fixed", derby)
+      val evolving = new JdbcEvolvingCdcTarget(url, "equiv_evolving",
+        connOptions = derby)
+      evolving.addColumns(Seq(StructField("user_id", LongType),
+        StructField("event_id", LongType), StructField("ts", TimestampType),
+        StructField("value", DoubleType), StructField("is_deleted", BooleanType)))
+
+      val redeliver = c % batches.size
+      val deliveries = batches.zipWithIndex ++
+        Seq(batches(redeliver) -> redeliver)
+      deliveries.foreach { case (b, id) =>
+        val ds = b.toDS()
+        reference.merge(id, ds)
+        jdbc.merge(id, ds)
+        evolving.merge(id, ds.toDF())
+      }
+
+      val want = reference.snapshot.values.toSet
+      val ctx = s"case $c (${events.size} events, ${batches.size} batches)"
+      assert(jdbc.snapshot.values.toSet == want, s"$ctx: JDBC target diverged")
+      val evolved = evolving.snapshot.values.map(r => CdcApplied(
+        r("user_id").asInstanceOf[Long], r("event_id").asInstanceOf[Long],
+        r("ts").asInstanceOf[Timestamp], r("value").asInstanceOf[Double],
+        r("is_deleted").asInstanceOf[Boolean])).filterNot(_.is_deleted).toSet
+      assert(evolved == want, s"$ctx: evolving JDBC target diverged")
+      assert(jdbc.landingRows == 0, s"$ctx: landing table not purged")
     }
   }
 }
