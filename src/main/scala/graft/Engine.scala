@@ -8,9 +8,26 @@ import org.apache.spark.sql.SparkSession
   * splitting (the 100 TB story in SURVEY §5); shuffle partitions
   * default to the local core count (on a real cluster this would be
   * ~2-3× total executor cores, or left to AQE's coalesce).
+  *
+  * The local filesystem is swapped for [[NioLocalFileSystem]] (the
+  * `FileSystem` side) and [[NioLocalFs]] (the `FileContext` side).
+  * Without the native `libhadoop`, Hadoop's local filesystem forks a
+  * `chmod` for every file and directory it creates and a `readlink`
+  * for every `FileContext` rename. Counted with `PATH` wrappers on
+  * perfbench's `cdc_trickle` (4-core host), that was about 200
+  * `chmod` and 24 `readlink` processes per CDC micro-batch, which
+  * held each streaming offset/commit log write at 60–90 ms (2 ms
+  * without them). The swap sets the same mode bits through
+  * `java.nio`; the bytes and the checksum files on disk are
+  * unchanged.
   */
 object Engine {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** `fs.file.impl` and `fs.AbstractFileSystem.file.impl`: the
+    * fork-free local filesystem, see above. */
+  val LocalFileSystemImpl: String = classOf[NioLocalFileSystem].getName
+  val LocalFsImpl: String = classOf[NioLocalFs].getName
 
   def session(appName: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -33,6 +50,8 @@ object Engine {
       // events.parquet stores TIMESTAMP(NANOS) which the Spark parquet
       // reader rejects; read as long and convert in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.hadoop.fs.file.impl", LocalFileSystemImpl)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", LocalFsImpl)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -111,6 +111,53 @@ object VersionedTable {
         rebasing(race, maxAttempts - 1)(attempt)
     }
 
+  /** How long a writer's intent holds maintenance off (see
+    * [[asWriter]]); an older marker is a crashed writer's and is
+    * ignored. */
+  private val WriterIntentTtlMs = 30000L
+
+  private def intentsDir(root: String): Path = Paths.get(root, "_intents")
+
+  /** Markers this thread holds, so a writer's own maintenance call
+    * (e.g. from a merge's commit seam) never waits on itself. */
+  private val ownIntents = ThreadLocal.withInitial[Set[Path]](() => Set.empty)
+
+  /** Run a writer's stage → commit attempts under an intent marker in
+    * `<root>/_intents`. A rescale ([[rescalePartitions]]) does not
+    * START an attempt while another writer's marker is live, so once
+    * a rescale lands inside a writer's window, the writer's restage
+    * cannot lose to the next one: the writer restages at most once
+    * per rescale that was already running, instead of starving when
+    * rescales run back to back. */
+  private[graft] def asWriter[T](root: String)(body: => T): T = {
+    Files.createDirectories(intentsDir(root))
+    val marker = Files.createFile(intentsDir(root).resolve(UUID.randomUUID().toString))
+    ownIntents.set(ownIntents.get + marker)
+    try body
+    finally {
+      ownIntents.set(ownIntents.get - marker)
+      Files.deleteIfExists(marker)
+    }
+  }
+
+  /** Wait, at most [[WriterIntentTtlMs]], while another writer's
+    * intent under `root` is live; expired markers are removed. */
+  private def awaitWriters(root: String): Unit = {
+    val dir = intentsDir(root)
+    val deadline = System.currentTimeMillis() + WriterIntentTtlMs
+    def live(): Boolean = Files.isDirectory(dir) && {
+      val ls = Files.list(dir)
+      val markers = try ls.iterator.asScala.toSeq finally ls.close()
+      markers.filterNot(ownIntents.get.contains).exists { m =>
+        try {
+          val age = System.currentTimeMillis() - Files.getLastModifiedTime(m).toMillis
+          age < WriterIntentTtlMs || { Files.deleteIfExists(m); false }
+        } catch { case _: java.nio.file.NoSuchFileException => false }
+      }
+    }
+    while (live() && System.currentTimeMillis() < deadline) Thread.sleep(5)
+  }
+
   private def versionsDir(root: String): Path = Paths.get(root, "_versions")
 
   private def versionFile(root: String, v: Int): Path =
@@ -1602,7 +1649,10 @@ object VersionedTable {
     *    the OLD count; [[commitPartitionsOnce]]'s count guard throws
     *    [[PartitionCountChanged]] and the writer restages under the
     *    new stamp (`rebasing(layoutMoved)`) instead of merging
-    *    wrong-layout dirs.
+    *    wrong-layout dirs;
+    *  - each attempt starts only while no other writer's intent is
+    *    live ([[asWriter]]), so a writer restages at most once per
+    *    rescale already running when it started.
     *
     * The manifest schema rides the commit (evolving tables keep their
     * restart-reload contract), and downstream [[changes]] across the
@@ -1618,6 +1668,7 @@ object VersionedTable {
       pipeline: String = "default"): Int = {
     require(newP > 0, "newP must be positive")
     rebasing(headMoved, maxAttempts) {
+      awaitWriters(root)
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
       val pm = manifestParts(root, base)

@@ -1,10 +1,11 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.util.concurrent.{CompletionException, ExecutorService, Executors}
+import java.util.concurrent.{CompletableFuture, CompletionException, ExecutorService,
+  Executors}
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.util.Try
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{classic, Dataset}
 import org.apache.spark.sql.execution.SQLExecution
@@ -57,21 +58,15 @@ object CdcStream {
       }
   }
 
-  /** The micro-batch dedupe every CDC sink runs before its target
-    * merge: latest row per key on the (ts, event_id) order — the
-    * reference's landing-table dedupe. */
-  private[streaming] def dedupe(events: Dataset[CdcEvent]): Dataset[CdcApplied] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id).reduceGroups(newer _).map(_._2).map(applied)
-  }
-
   /** Micro-batched CDC merge into an arbitrary target (the
     * foreachBatch sink = the reference's scheduled landing→target
-    * MERGE task). The batch is deduped to latest-per-key before the
-    * target merge, exactly like the landing-table dedupe; the deduped
-    * rows stay a distributed Dataset — the target decides how to
-    * consume them (a warehouse target issues a distributed MERGE
-    * write; nothing funnels through the driver here).
+    * MERGE task). Every event of the batch reaches the target as an
+    * applied row, as every change lands in the reference's landing
+    * table; the target keeps the newest row per key (see
+    * [[CdcTarget]]). The rows stay a distributed Dataset — the target
+    * decides how to consume them (a warehouse target issues a
+    * distributed MERGE write; nothing funnels through the driver
+    * here).
     *
     * With a breaker, a failing target opens the circuit and the query
     * fails fast instead of hammering it; the checkpoint + the target's
@@ -87,6 +82,7 @@ object CdcStream {
       mergeAttempts: Int = 1,
       drift: Option[DriftGate] = None): StreamingQuery =
     Sink.start(events, checkpoint, trigger) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
       // drift gate first, OUTSIDE the breaker: its batchId guard
       // (+ durable store txn) makes redelivery exactly-once, and a
       // failed histogram commit fails the micro-batch BEFORE the
@@ -94,8 +90,7 @@ object CdcStream {
       // never observe a batch the target then didn't apply twice,
       // nor vice versa (each side is idempotent under its own guard)
       drift.foreach(_.observe(batch, batchId))
-      val deduped = dedupe(batch)
-      Sink.guarded(breaker, mergeAttempts)(target.merge(batchId, deduped))
+      Sink.guarded(breaker, mergeAttempts)(target.merge(batchId, batch.map(applied)))
     }
 
   /** [[mergeInto]] with trace propagation (tracing_context.rs's
@@ -122,8 +117,7 @@ object CdcStream {
     Sink.start(events, checkpoint, trigger) { (batch, batchId) =>
       import batch.sparkSession.implicits._
       val span = tracing.child(rootCtx, s"merge batch=$batchId")
-      val deduped = dedupe(batch.map(_.event))
-      try Sink.guarded(breaker)(target.merge(batchId, deduped))
+      try Sink.guarded(breaker)(target.merge(batchId, batch.map(r => applied(r.event))))
       catch { case e: Throwable =>
         val firstRec =
           try Option(batch.agg(
@@ -142,7 +136,9 @@ object CdcStream {
   * pipeline_manager.rs resolves relation ids to per-table buffers). */
 case class TableCdcEvent(
     table: String, event_id: Long, ts: Timestamp, user_id: Long,
-    event_type: String, value: Double)
+    event_type: String, value: Double) {
+  def event: CdcEvent = CdcEvent(event_id, ts, user_id, event_type, value)
+}
 
 /** [[TableCdcEvent]] carrying its wire correlation id (see
   * [[graft.sources.ChangeIngest.decodeTraced]]) — the per-record leg
@@ -170,10 +166,11 @@ object CdcDemux {
   /** Route one multiplexed CDC stream to per-table merge targets —
     * the reference's one-replication-slot → many-table-buffers shape.
     * Each micro-batch is cached once, then each REGISTERED table's
-    * slice is deduped to latest-per-key and merged into that table's
-    * target (same contract as [[CdcStream.mergeInto]]; the sequence
-    * guard makes redelivery idempotent per table). Events for tables
-    * with no registered target are counted through `onUnrouted` (the
+    * slice, one applied row per event, is merged into that table's
+    * target (same contract as [[CdcStream.mergeInto]]: the target
+    * keeps the newest row per key, and its sequence guard makes
+    * redelivery idempotent per table). Events for tables with no
+    * registered target are counted through `onUnrouted` (the
     * reference logs-and-skips unpublished relations) — they are NOT
     * an error: replication slots commonly carry more tables than one
     * pipeline consumes.
@@ -182,23 +179,24 @@ object CdcDemux {
     * thread each, so a batch costs its slowest table's merge instead
     * of the sum of all of them (each merge is a handful of small,
     * driver-bound Spark jobs that leave the executors mostly idle).
-    * Each thread carries the micro-batch thread's Spark thread-locals
+    * The unrouted count runs beside them on the same pool, as one
+    * narrow job (per-partition counts summed on the driver). Each
+    * thread carries the micro-batch thread's Spark thread-locals
     * (active session, job group, local properties), so cancelling the
     * query cancels every table's jobs. The batch waits for EVERY
-    * table before it finishes: if any merge failed, the first failure
-    * in table-name order is rethrown (inside the breaker), after the
-    * other tables' merges have returned. Only then is the cached
-    * batch unpersisted and the unrouted events counted — nothing
-    * unpersists the cache under a running merge. A table whose merge
-    * committed before a failure elsewhere is skipped on redelivery by
-    * its own txn/sequence guard. Targets are therefore called from
-    * several threads at once — one object registered under two table
-    * names must be thread-safe.
+    * table and the count before it finishes: if any merge failed, the
+    * first failure in table-name order is rethrown (inside the
+    * breaker), after the other jobs have returned. `onUnrouted` fires
+    * only once every merge has succeeded, and the cached batch is
+    * unpersisted last — nothing unpersists the cache under a running
+    * job. A table whose merge committed before a failure elsewhere is
+    * skipped on redelivery by its own txn/sequence guard. Targets are
+    * therefore called from several threads at once — one object
+    * registered under two table names must be thread-safe.
     *
     * Scale: the demux adds no shuffle — each table's slice is a
-    * filter over the cached batch, and the per-key dedupe shuffles
-    * only that slice. Targets merge a distributed Dataset, never a
-    * driver-side copy. */
+    * filter over the cached batch, and the count is narrow. Targets
+    * merge a distributed Dataset, never a driver-side copy. */
   def mergeInto(
       events: Dataset[TableCdcEvent],
       targets: Map[String, CdcTarget],
@@ -210,54 +208,62 @@ object CdcDemux {
       import batch.sparkSession.implicits._
       val known = targets.keySet // closure-capture the names only
       val cached = batch.persist()
+      val session = cached.sparkSession.asInstanceOf[classic.SparkSession]
+      def onPool[A](work: => A): CompletableFuture[A] =
+        SQLExecution.withThreadLocalCaptured(session, pool)(work)
+      // join() waits uninterruptibly: every job has returned before a
+      // failure surfaces or the cache is released
+      def await[A](f: CompletableFuture[A]): Try[A] = Try(f.join()).recoverWith {
+        case e: CompletionException if e.getCause != null => Failure(e.getCause)
+      }
       try {
         // the breaker wraps the whole routing pass (one slot = one
         // circuit, as in mergeInto): a failing table target fails
         // the batch, and redelivery is per-table idempotent via
         // each target's txn/sequence guard
-        Sink.guarded(breaker) {
-          val session = cached.sparkSession.asInstanceOf[classic.SparkSession]
+        val unrouted = Sink.guarded(breaker) {
           val merges = targets.toSeq.sortBy(_._1).map { case (tbl, target) =>
-            SQLExecution.withThreadLocalCaptured(session, pool) {
-              val slice = cached.filter(_.table == tbl)
-                .map(e => CdcEvent(e.event_id, e.ts, e.user_id,
-                  e.event_type, e.value))
-              target.merge(batchId, CdcStream.dedupe(slice))
-            }
+            onPool(target.merge(batchId,
+              cached.filter(_.table == tbl).map(e => CdcStream.applied(e.event))))
           }
-          // join() waits uninterruptibly: every merge has returned
-          // before a failure surfaces or the cache is released
-          val failures = merges.flatMap(f => Try(f.join()).failed.toOption)
-          failures.headOption.foreach {
-            case e: CompletionException if e.getCause != null => throw e.getCause
-            case e => throw e
-          }
-        }
-        val unrouted = cached.filter(e => !known.contains(e.table)).count()
+          val count = onPool(cached.mapPartitions(es =>
+            Iterator.single(es.count(e => !known.contains(e.table)).toLong))
+            .collect().sum)
+          val failed = merges.map(await).collectFirst { case Failure(e) => e }
+          val counted = await(count)
+          failed.foreach(throw _)
+          counted
+        }.get
         if (unrouted > 0) onUnrouted(unrouted)
       } finally cached.unpersist()
     }
 }
 
 /** Merge destination abstraction (Snowflake/BigQuery/Iceberg writer
-  * analog). `rows` is the micro-batch deduped to latest-per-key, as a
-  * distributed Dataset — implementations consume it with distributed
-  * writes (e.g. a temp-table load + MERGE), never by funnelling
-  * through the driver.
+  * analog). `rows` is the micro-batch, one applied row per event, as
+  * a distributed Dataset — implementations consume it with
+  * distributed writes (e.g. a temp-table load + MERGE), never by
+  * funnelling through the driver.
   *
   * Ordering contract: batches within one stream arrive with
-  * increasing `batchId`, and within a batch each key appears once,
-  * but a key's events may still arrive out of order ACROSS batches
-  * (late data) and a restarted query redelivers its last batch
-  * (at-least-once). Implementations MUST therefore guard on the
-  * sequence — apply a row only when `(ts, event_id)` exceeds the
-  * target's stored pair for that key, the `WHEN MATCHED AND
-  * source.seq > target.seq` MERGE predicate. That guard makes the
+  * increasing `batchId`. A batch may carry SEVERAL rows for one key,
+  * in any order; the target keeps the newest by `(ts, event_id)` — the
+  * reference's landing-table dedupe, done once, by the target. Rows
+  * with equal `(ts, event_id)` are the same event (a redelivered
+  * copy), so either may win. A key's events may also arrive out of
+  * order ACROSS batches (late data), and a restarted query redelivers
+  * its last batch (at-least-once). Implementations MUST therefore
+  * guard on the sequence — apply a row only when `(ts, event_id)`
+  * exceeds the target's stored pair for that key, the `WHEN MATCHED
+  * AND source.seq > target.seq` MERGE predicate. That guard makes the
   * merge both out-of-order-safe and redelivery-idempotent.
+  * [[PartitionedTableCdcTarget]] and [[TableCdcTarget]] keep the
+  * newest row with one `max_by`, [[Jdbc.mergeBatch]] with its staging
+  * anti-join and the MERGE guard, [[InMemoryCdcTarget]] with its
+  * guard.
   *
   * Every CDC sink calls a target the same way: [[Sink.start]] drives
-  * the micro-batches, [[CdcStream.dedupe]] reduces each to
-  * latest-per-key, and the merge runs under [[Sink.guarded]] (retry
+  * the micro-batches and the merge runs under [[Sink.guarded]] (retry
   * inside the circuit breaker). The JDBC targets share one warehouse
   * transaction, [[Jdbc.mergeBatch]]. */
 trait CdcTarget extends Serializable {

@@ -66,8 +66,9 @@ private[streaming] object PartitionedMerge {
     // check inside commitPartitions still guards the race window)
     if (VersionedTable.committedTxns(root).contains(batchId)) return
     // a rescale racing this merge: restage under the count now stamped
-    // on the manifest
-    VersionedTable.rebasing(VersionedTable.layoutMoved) {
+    // on the manifest; the writer intent keeps the next rescale from
+    // starting until this merge commits
+    VersionedTable.asWriter(root)(VersionedTable.rebasing(VersionedTable.layoutMoved) {
       val p = VersionedTable.partCount(root).getOrElse(configuredP)
       val parts = VersionedTable.parts(root)
       val flatLegacy = migrateFlat && parts.isEmpty &&
@@ -110,6 +111,6 @@ private[streaming] object PartitionedMerge {
           overwriteAll = flatLegacy, schemaDdl = schemaDdl,
           nParts = Some(p))
       } finally batch.unpersist()
-    }
+    })
   }
 }

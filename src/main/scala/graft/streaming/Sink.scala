@@ -32,9 +32,9 @@ private[streaming] object Sink {
     * as one breaker failure (the reference's per-write retry → breaker
     * order). An open breaker fails the batch fast; the checkpoint
     * redelivers it after recovery. */
-  def guarded(breaker: Option[CircuitBreaker], attempts: Int = 1)(
-      work: => Unit): Unit = {
-    def run(): Unit = Retry.withBackoff(attempts)(work)
+  def guarded[A](breaker: Option[CircuitBreaker], attempts: Int = 1)(
+      work: => A): A = {
+    def run(): A = Retry.withBackoff(attempts)(work)
     breaker.fold(run())(_.protect(run()))
   }
 }

@@ -5,6 +5,9 @@ import java.sql.Timestamp
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -178,5 +181,63 @@ class CdcDemuxSpec extends SparkSpec {
       .as[CdcApplied].collect().map(r => r.user_id -> r.event_id).toSeq == Seq(2L -> 3L))
     assert(new PartitionedTableCdcTarget(s, rootA).snapshot
       .as[CdcApplied].collect().map(r => r.user_id -> r.event_id).toSeq == Seq(1L -> 1L))
+  }
+
+  test("one micro-batch into two existing partitioned tables runs 7 jobs") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+
+    val sc = s.sparkContext
+    val roots = Seq("a", "b").map(t => t -> Files.createTempDirectory(s"graft_demux_jobs_$t").toString)
+    val targets: Map[String, CdcTarget] =
+      roots.map { case (t, r) => t -> new PartitionedTableCdcTarget(s, r, 4) }.toMap
+    // (query id, batch id) of every job, from the local properties a
+    // streaming query sets on its micro-batch thread and the demux
+    // pool threads inherit
+    val jobs = mutable.ArrayBuffer.empty[(String, String)]
+    val sentinel = s"graft.spec.demux.${java.util.UUID.randomUUID()}"
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          if (p.getProperty("graft.spec.tag") == sentinel) drained.countDown()
+          else jobs.synchronized(jobs += ((p.getProperty("sql.streaming.queryId"),
+            p.getProperty("streaming.sql.batchId"))))
+        }
+    }
+    val input = MemoryStream[TableCdcEvent]
+    val unrouted = new AtomicLong
+    val q = CdcDemux.mergeInto(input.toDS(), targets,
+      Files.createTempDirectory("graft_demux5").toString,
+      Trigger.ProcessingTime("50 milliseconds"), unrouted.addAndGet)
+    sc.addSparkListener(listener)
+    try {
+      // batch 0 creates both tables; batch 1 merges into them, with
+      // several rows per key and one unrouted event
+      input.addData((1L to 8L).flatMap(k => Seq(ev("a", k, 1000, k, "click", k.toDouble),
+        ev("b", 100 + k, 1000, k, "click", k.toDouble))): _*)
+      q.processAllAvailable()
+      input.addData(ev("a", 20, 2000, 1, "view", 1.5), ev("a", 21, 3000, 1, "view", 1.7),
+        ev("b", 22, 2500, 2, "error", 0.0), ev("b", 23, 2000, 2, "view", 2.5),
+        ev("b", 24, 2000, 9, "click", 9.0), ev("audit", 25, 2000, 1, "click", 0.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    try {
+      sc.setLocalProperty("graft.spec.tag", sentinel)
+      try s.range(1).collect() finally sc.setLocalProperty("graft.spec.tag", null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener events never drained")
+    } finally sc.removeSparkListener(listener)
+
+    val batch1 = jobs.synchronized(jobs.count(_ == (q.id.toString, "1")))
+    // per table: touched pids, the merge shuffle's map stage, the
+    // staged write; plus one narrow unrouted count
+    assert(batch1 == 7, s"micro-batch 1 ran $batch1 jobs")
+    assert(unrouted.get == 1)
+    def snap(t: String) = new PartitionedTableCdcTarget(s, roots.toMap.apply(t)).snapshot
+      .as[CdcApplied].collect().map(r => r.user_id -> r.event_id).toMap
+    assert(snap("a")(1L) == 21L && snap("a")(2L) == 2L)
+    assert(!snap("b").contains(2L), "the newer delete wins over the older view")
+    assert(snap("b")(9L) == 24L)
   }
 }

@@ -54,85 +54,95 @@ class CdcTargetEquivalenceSpec extends SparkSpec {
     (0 +: cuts.filter(_ < xs.size) :+ xs.size).sliding(2)
       .collect { case Seq(a, b) if b > a => xs.slice(a, b) }.toSeq
 
-  /** A batch as [[CdcDemux]] hands it to a target: latest row per key. */
+  /** A batch deduped to latest row per key, as the sinks handed it
+    * over before the targets owned the dedupe. */
   private def deduped(batch: Seq[CdcEvent]): Seq[CdcApplied] =
     batch.groupBy(_.user_id).values
       .map(es => CdcStream.applied(es.reduce(CdcStream.newer))).toSeq
+
+  /** A batch as every CDC sink hands it to a target: one applied row
+    * per event, several per key. */
+  private def raw(batch: Seq[CdcEvent]): Seq[CdcApplied] =
+    batch.map(CdcStream.applied)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[CdcApplied] =
     df.select("user_id", "event_id", "ts", "value", "is_deleted")
       .as[CdcApplied].collect().toSet
 
-  test(s"partitioned and evolving targets equal the in-memory target on $Cases random histories") {
-    (1 to Cases).foreach { c =>
-      val seed = Seed(9000L + c)
-      val (events, cuts) = history(Gen.Parameters.default, seed)
-        .getOrElse(fail(s"case $c: generator gave no history"))
-      val batches = split(events, cuts).map(deduped)
+  /** (test-name suffix, Derby database prefix, batch shape) */
+  private val shapes = Seq[(String, String, Seq[CdcEvent] => Seq[CdcApplied])](
+    ("random histories", "graftequiv", deduped),
+    ("raw (un-deduped) random histories", "graftequivraw", raw))
 
-      val reference = new InMemoryCdcTarget
-      val partitioned = new PartitionedTableCdcTarget(spark,
-        Files.createTempDirectory("graft-equiv-p").toString, P)
-      val evolving = new TableEvolvingCdcTarget(spark,
-        Files.createTempDirectory("graft-equiv-e").toString, numPartitions = P)
-      evolving.addColumns(Seq(StructField("user_id", LongType),
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("value", DoubleType), StructField("is_deleted", BooleanType)))
-
-      val redeliver = c % batches.size
-      val deliveries = batches.zipWithIndex ++
-        Seq(batches(redeliver) -> redeliver)
-      deliveries.foreach { case (b, id) =>
-        val ds = b.toDS()
-        reference.merge(id, ds)
-        partitioned.merge(id, ds)
-        evolving.merge(id, ds.toDF())
-      }
-
-      val want = reference.snapshot.values.toSet
-      val ctx = s"case $c (${events.size} events, ${batches.size} batches)"
-      assert(rows(partitioned.snapshot) == want, s"$ctx: partitioned target diverged")
-      assert(rows(evolving.snapshot.filter("not is_deleted")) == want,
-        s"$ctx: evolving target diverged")
-    }
+  /** Case `c`'s batches in `shape`, each delivered once in order, then
+    * one of them redelivered under its batch id. */
+  private def deliveries(c: Int, shape: Seq[CdcEvent] => Seq[CdcApplied])
+      : (String, Seq[(Seq[CdcApplied], Int)]) = {
+    val seed = Seed(9000L + c)
+    val (events, cuts) = history(Gen.Parameters.default, seed)
+      .getOrElse(fail(s"case $c: generator gave no history"))
+    val batches = split(events, cuts).map(shape)
+    val redeliver = c % batches.size
+    (s"case $c (${events.size} events, ${batches.size} batches)",
+      batches.zipWithIndex :+ (batches(redeliver) -> redeliver))
   }
 
-  test(s"JDBC and evolving JDBC targets equal the in-memory target on $Cases random histories") {
-    val derby = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    (1 to Cases).foreach { c =>
-      val seed = Seed(9000L + c)
-      val (events, cuts) = history(Gen.Parameters.default, seed)
-        .getOrElse(fail(s"case $c: generator gave no history"))
-      val batches = split(events, cuts).map(deduped)
+  shapes.foreach { case (name, db, shape) =>
+    test(s"partitioned and evolving targets equal the in-memory target on $Cases $name") {
+      (1 to Cases).foreach { c =>
+        val (ctx, batches) = deliveries(c, shape)
+        val reference = new InMemoryCdcTarget
+        val partitioned = new PartitionedTableCdcTarget(spark,
+          Files.createTempDirectory("graft-equiv-p").toString, P)
+        val evolving = new TableEvolvingCdcTarget(spark,
+          Files.createTempDirectory("graft-equiv-e").toString, numPartitions = P)
+        evolving.addColumns(Seq(StructField("user_id", LongType),
+          StructField("event_id", LongType), StructField("ts", TimestampType),
+          StructField("value", DoubleType), StructField("is_deleted", BooleanType)))
 
-      val url = s"jdbc:derby:memory:graftequiv$c;create=true"
-      val reference = new InMemoryCdcTarget
-      val jdbc = new JdbcCdcTarget(url, "equiv_fixed", derby)
-      val evolving = new JdbcEvolvingCdcTarget(url, "equiv_evolving",
-        connOptions = derby)
-      evolving.addColumns(Seq(StructField("user_id", LongType),
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("value", DoubleType), StructField("is_deleted", BooleanType)))
+        batches.foreach { case (b, id) =>
+          val ds = b.toDS()
+          reference.merge(id, ds)
+          partitioned.merge(id, ds)
+          evolving.merge(id, ds.toDF())
+        }
 
-      val redeliver = c % batches.size
-      val deliveries = batches.zipWithIndex ++
-        Seq(batches(redeliver) -> redeliver)
-      deliveries.foreach { case (b, id) =>
-        val ds = b.toDS()
-        reference.merge(id, ds)
-        jdbc.merge(id, ds)
-        evolving.merge(id, ds.toDF())
+        val want = reference.snapshot.values.toSet
+        assert(rows(partitioned.snapshot) == want, s"$ctx: partitioned target diverged")
+        assert(rows(evolving.snapshot.filter("not is_deleted")) == want,
+          s"$ctx: evolving target diverged")
       }
+    }
 
-      val want = reference.snapshot.values.toSet
-      val ctx = s"case $c (${events.size} events, ${batches.size} batches)"
-      assert(jdbc.snapshot.values.toSet == want, s"$ctx: JDBC target diverged")
-      val evolved = evolving.snapshot.values.map(r => CdcApplied(
-        r("user_id").asInstanceOf[Long], r("event_id").asInstanceOf[Long],
-        r("ts").asInstanceOf[Timestamp], r("value").asInstanceOf[Double],
-        r("is_deleted").asInstanceOf[Boolean])).filterNot(_.is_deleted).toSet
-      assert(evolved == want, s"$ctx: evolving JDBC target diverged")
-      assert(jdbc.landingRows == 0, s"$ctx: landing table not purged")
+    test(s"JDBC and evolving JDBC targets equal the in-memory target on $Cases $name") {
+      val derby = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+      (1 to Cases).foreach { c =>
+        val (ctx, batches) = deliveries(c, shape)
+        val url = s"jdbc:derby:memory:$db$c;create=true"
+        val reference = new InMemoryCdcTarget
+        val jdbc = new JdbcCdcTarget(url, "equiv_fixed", derby)
+        val evolving = new JdbcEvolvingCdcTarget(url, "equiv_evolving",
+          connOptions = derby)
+        evolving.addColumns(Seq(StructField("user_id", LongType),
+          StructField("event_id", LongType), StructField("ts", TimestampType),
+          StructField("value", DoubleType), StructField("is_deleted", BooleanType)))
+
+        batches.foreach { case (b, id) =>
+          val ds = b.toDS()
+          reference.merge(id, ds)
+          jdbc.merge(id, ds)
+          evolving.merge(id, ds.toDF())
+        }
+
+        val want = reference.snapshot.values.toSet
+        assert(jdbc.snapshot.values.toSet == want, s"$ctx: JDBC target diverged")
+        val evolved = evolving.snapshot.values.map(r => CdcApplied(
+          r("user_id").asInstanceOf[Long], r("event_id").asInstanceOf[Long],
+          r("ts").asInstanceOf[Timestamp], r("value").asInstanceOf[Double],
+          r("is_deleted").asInstanceOf[Boolean])).filterNot(_.is_deleted).toSet
+        assert(evolved == want, s"$ctx: evolving JDBC target diverged")
+        assert(jdbc.landingRows == 0, s"$ctx: landing table not purged")
+      }
     }
   }
 }

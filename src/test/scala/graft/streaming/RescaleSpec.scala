@@ -168,6 +168,32 @@ class RescaleSpec extends SparkSpec {
     assertLayout(root, VersionedTable.partCount(root).get)
   }
 
+  test("a rescale does not start inside another writer's window") {
+    val root = freshRoot()
+    new PartitionedTableCdcTarget(spark, root, 4)
+      .merge(0, (1L to 20L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
+    val inWindow = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val writer = new Thread(() => VersionedTable.asWriter(root) {
+      inWindow.countDown()
+      release.await()
+    })
+    writer.start()
+    inWindow.await()
+    val rescaler = new Thread(() => {
+      VersionedTable.rescalePartitions(spark, root, "user_id", 8); ()
+    })
+    rescaler.start()
+    rescaler.join(1500)
+    assert(VersionedTable.partCount(root).contains(4),
+      "the rescale committed inside the writer's window")
+    release.countDown()
+    writer.join()
+    rescaler.join()
+    assert(VersionedTable.partCount(root).contains(8))
+    assertLayout(root, 8)
+  }
+
   test("the byte-budget trigger fires over budget, derives a 2^k count") {
     val root = freshRoot()
     new PartitionedTableCdcTarget(spark, root, 4)
