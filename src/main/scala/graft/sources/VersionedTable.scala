@@ -15,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout:
   * {{{
   *   <root>/data/<uuid>/           parquet files of ONE commit (write-once)
-  *   <root>/_versions/v<%08d>.json manifest: op + live data dirs
+  *   <root>/_versions/v<%08d>.json manifest: one JSON record, fields
+  *                                 tabled on [[Manifest]]
   * }}}
   * The table state IS the highest version file; data dirs are never
   * mutated or deleted by commits (only [[vacuum]] removes unreferenced
@@ -180,59 +181,219 @@ object VersionedTable {
     finally s.close()
   }
 
-  /** Data dirs (relative to root) live in version `v`. Partitioned
-    * manifests (full or delta) resolve through the chain; flat
-    * manifests regex-scan their one file, and `.distinct` guards
-    * against a path appearing in two JSON fields ever double-reading. */
-  private def manifestDirs(root: String, v: Int): Seq[String] = {
-    val txt = mverGuard(root, v, Files.readString(versionFile(root, v)))
-    if (txt.contains("\"parts\":") || txt.contains("\"base\":"))
-      resolved(root, v, txt)._1.values.flatten.toSeq.distinct
-    else
-      // manifests are written by this object only; dir entries are
-      // uuid paths with an optional partition subdir — no escapes
-      flatDirsOf(txt)
+  /** A manifest's label content. A partitioned manifest's `parts`
+    * and `pstats` (and a flat one's `dirs`) are parsed on first use,
+    * so a scalar read of a 100k-label manifest (a txn scan, the
+    * partition count, the incarnation id) never builds the label map. */
+  private[sources] final class Content(val partitioned: Boolean,
+      dirs0: => Seq[String], parts0: => Map[String, Seq[String]],
+      pstats0: => Option[Map[String, (Long, Int)]]) {
+    lazy val dirs: Seq[String] = dirs0
+    lazy val parts: Map[String, Seq[String]] = parts0
+    lazy val pstats: Option[Map[String, (Long, Int)]] = pstats0
   }
 
-  // ---- single-file field extraction (one readString per manifest) --
-  private def partsOf(txt: String): Map[String, Seq[String]] =
-    "\"parts\":\\{(.*?)\\}".r.findFirstMatchIn(txt).map(_.group(1)) match {
-      case None => Map.empty
-      case Some(body) =>
-        "\"(\\d+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(body).map { m =>
-          m.group(1) -> "\"([^\"]+)\"".r.findAllMatchIn(m.group(2))
-            .map(_.group(1)).toSeq
-        }.toMap
+  private[sources] object Content {
+    def flat(dirs: Seq[String]): Content =
+      new Content(false, dirs, Map.empty, None)
+    def partitioned(parts: Map[String, Seq[String]],
+        pstats: Map[String, (Long, Int)]): Content =
+      new Content(true, Nil, parts, Some(pstats))
+  }
+
+  /** THE manifest record: the only code that knows the on-disk
+    * format. Every manifest read is [[Manifest.parse]] (through
+    * [[manifestAt]]), every write is [[render]] (through [[publish]]),
+    * and `render(parse(txt)) == txt` byte for byte. Fields appear on
+    * disk in the order below; an absent `Option` writes no key, which
+    * is how pre-stamp history reads back unchanged.
+    *
+    * {{{
+    * field       written by                           carried to the next commit
+    * ----------  -----------------------------------  --------------------------
+    * version     every commit (its own number)        -
+    * op          every commit: append, overwrite,     -
+    *             merge_parts, delta_parts,
+    *             overwrite_parts, restore
+    * mver        every commit (ManifestVersion)       -
+    * ts          every commit (epoch millis)          clamped above head's ts
+    * txn         commitBatch, commitPartitions        -
+    * schema      evolving writers, compaction,        -
+    *             rescale, restore (toV's), an
+    *             erasure that empties the table
+    * tableid     the first commit mints it            every commit
+    * followsrc   TableFollower                        every commit
+    * wkind       every commit (writer kind)           -
+    * kinds       every commit (head's set + wkind)    every commit
+    * base        delta commits (parent version)       -
+    * chain       delta commits (depth below the root) -
+    * drops       delta commits (labels removed)       -
+    * nparts      partitioned writers, rescale,        merge_parts, delta_parts
+    *             restore (toV's)
+    * pstats      partitioned commits                  resolved through the chain
+    * parts       partitioned commits                  resolved through the chain
+    * dirs        flat commits (every live dir)        -
+    * }}}
+    * `nparts`, `pstats` and `parts` appear only in partitioned
+    * manifests, `dirs` only in flat ones. The carry rules live in
+    * [[successor]]. */
+  private[sources] final case class Manifest(version: Int, op: String,
+      mver: Option[Int], ts: Option[Long], txn: Option[Long],
+      schema: Option[String], tableId: Option[String],
+      followSrc: Option[String], wkind: Option[String],
+      kinds: Option[Set[String]], base: Option[Int], chain: Int,
+      drops: Set[String], nParts: Option[Int], content: Content) {
+
+    /** From the manifest's shape (a label map or a delta pointer),
+      * never from whether its map is empty: a partitioned table whose
+      * every label was erased is still partitioned. */
+    def partitioned: Boolean = content.partitioned
+    def parts: Map[String, Seq[String]] = content.parts
+    def pstats: Map[String, (Long, Int)] = content.pstats.getOrElse(Map.empty)
+    def dirs: Seq[String] = content.dirs
+
+    /** The CUMULATIVE writer-kind set this manifest carries (every
+      * kind that ever committed in this incarnation, expiry-proof). A
+      * manifest from before the carry contributes its own stamped kind
+      * plus [[KindUnstamped]] — the history before it is unknowable,
+      * so the txn-shape fallback stays in force for such tables. */
+    def carriedKinds: Set[String] =
+      kinds.getOrElse(Set(wkind.getOrElse(KindUnstamped), KindUnstamped))
+
+    def render: String = {
+      def q(s: String) = "\"" + s + "\""
+      def byLabel[V](m: Map[String, V]) = m.toSeq.sortBy(_._1.toInt)
+      val b = new StringBuilder(s"""{"version":$version,"op":"$op",""")
+      mver.foreach(x => b ++= s""""mver":$x,""")
+      ts.foreach(x => b ++= s""""ts":$x,""")
+      txn.foreach(x => b ++= s""""txn":$x,""")
+      schema.foreach(d => b ++= s""""schema":${q(Manifest.jsonEsc(d))},""")
+      tableId.foreach(x => b ++= s""""tableid":${q(x)},""")
+      followSrc.foreach(x => b ++= s""""followsrc":${q(x)},""")
+      wkind.foreach(x => b ++= s""""wkind":${q(x)},""")
+      kinds.foreach(k => b ++= s""""kinds":${q(k.toSeq.sorted.mkString(","))},""")
+      base.foreach { x =>
+        b ++= s""""base":$x,"chain":$chain,"""
+        if (drops.nonEmpty)
+          b ++= drops.toSeq.sortBy(_.toInt).map(q).mkString("\"drops\":[", ",", "],")
+      }
+      if (partitioned) {
+        nParts.foreach(n => b ++= s""""nparts":$n,""")
+        content.pstats.foreach(m => b ++= byLabel(m).map {
+          case (k, (by, f)) => q(k) + ":[" + by + "," + f + "]"
+        }.mkString("\"pstats\":{", ",", "},"))
+        b ++= byLabel(parts).map { case (k, ds) =>
+          q(k) + ":" + ds.map(q).mkString("[", ",", "]")
+        }.mkString("\"parts\":{", ",", "}}")
+      } else b ++= dirs.map(q).mkString("\"dirs\":[", ",", "]}")
+      b.result()
     }
+  }
 
-  private def pStatsOf(txt: String): Map[String, (Long, Int)] =
-    "\"pstats\":\\{(.*?)\\}".r.findFirstMatchIn(txt).map(_.group(1)) match {
-      case None => Map.empty
-      case Some(body) =>
-        "\"(\\d+)\":\\[(\\d+),(\\d+)\\]".r.findAllMatchIn(body).map { m =>
-          m.group(1) -> ((m.group(2).toLong, m.group(3).toInt))
-        }.toMap
+  private[sources] object Manifest {
+
+    private def jsonEsc(s: String): String =
+      s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+    def parse(txt: String): Manifest = {
+      // every scalar key precedes the label body (pstats, parts or
+      // dirs), so scalar fields are searched in the header only: a
+      // key a manifest lacks costs a header scan, not a scan of a
+      // multi-MB label map
+      val pstatsAt = txt.indexOf("\"pstats\":{")
+      val partsAt = if (pstatsAt >= 0) pstatsAt else txt.indexOf("\"parts\":{")
+      val bodyAt =
+        if (partsAt >= 0) partsAt
+        else Some(txt.indexOf("\"dirs\":[")).filter(_ >= 0).getOrElse(txt.length)
+      val header = txt.substring(0, bodyAt)
+      def field(key: String, value: String): Option[String] =
+        ("\"" + key + "\":" + value).r.findFirstMatchIn(header).map(_.group(1))
+      val num = "(\\d+)"
+      val word = "\"([0-9a-zA-Z-]+)\""
+      val base = field("base", num).map(_.toInt)
+      val partitioned = partsAt >= 0 || base.isDefined
+      Manifest(
+        version = field("version", num).fold(0)(_.toInt),
+        op = field("op", "\"([a-z_]+)\"").getOrElse(""),
+        mver = field("mver", num).map(_.toInt),
+        ts = field("ts", num).map(_.toLong),
+        txn = field("txn", num).map(_.toLong),
+        schema = field("schema", "\"((?:[^\"\\\\]|\\\\.)*)\"")
+          .map(_.replace("\\\"", "\"").replace("\\\\", "\\")),
+        tableId = field("tableid", word),
+        followSrc = field("followsrc", word),
+        wkind = field("wkind", word),
+        kinds = field("kinds", "\"([0-9a-zA-Z,-]+)\"").map(_.split(",").toSet),
+        base = base,
+        chain = field("chain", num).fold(0)(_.toInt),
+        drops = field("drops", "\\[([^\\]]*)\\]").fold(Set.empty[String])(b =>
+          "\"(\\d+)\"".r.findAllMatchIn(b).map(_.group(1)).toSet),
+        nParts = field("nparts", num).map(_.toInt),
+        content = new Content(partitioned,
+          // manifests are written by this object only; dir entries
+          // are uuid paths with an optional partition subdir — no
+          // escapes, and `.distinct` guards a path ever double-reading
+          if (partitioned) Nil
+          else "\"(data/[0-9a-f-]+(?:/pid=\\d+)?)\"".r
+            .findAllMatchIn(txt).map(_.group(1)).toSeq.distinct,
+          "\"parts\":\\{(.*?)\\}".r.findFirstMatchIn(txt).map(_.group(1)) match {
+            case None => Map.empty
+            case Some(body) =>
+              "\"(\\d+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(body).map { m =>
+                m.group(1) -> "\"([^\"]+)\"".r.findAllMatchIn(m.group(2))
+                  .map(_.group(1)).toSeq
+              }.toMap
+          },
+          if (pstatsAt < 0) None
+          else "\"pstats\":\\{(.*?)\\}".r.findFirstMatchIn(txt).map(_.group(1))
+            .map(body => "\"(\\d+)\":\\[(\\d+),(\\d+)\\]".r.findAllMatchIn(body)
+              .map(m => m.group(1) -> ((m.group(2).toLong, m.group(3).toInt)))
+              .toMap)))
     }
+  }
 
-  private def baseOf(txt: String): Option[Int] =
-    "\"base\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+  /** Manifest FORMAT version this build writes and the newest it can
+    * read (Delta's minReaderVersion rule): 2 = delta chains +
+    * provenance stamps. A reader opening a manifest that declares a
+    * HIGHER version throws instead of silently misreading semantics
+    * it doesn't know (a pre-chain reader would have served a
+    * 32-label delta as the whole table); manifests with no `mver`
+    * are version-1 history, always readable. */
+  val ManifestVersion = 2
 
-  private def chainOf(txt: String): Int =
-    "\"chain\":(\\d+)".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).getOrElse(0)
+  /** THE manifest reader: version `v` of `root` (its condemned copy
+    * when `condemned`, see [[expire]]), refused when it declares a
+    * format newer than [[ManifestVersion]]. `anyFormat` lifts that
+    * refusal for the readers documented to tolerate newer formats
+    * ([[history]], [[commitTime]]), which read only stamps every
+    * format carries. */
+  private def manifestAt(root: String, v: Int, condemned: Boolean = false,
+      anyFormat: Boolean = false): Manifest = {
+    val m = Manifest.parse(Files.readString(
+      if (condemned) condemnFile(root, v) else versionFile(root, v)))
+    for (mv <- m.mver if mv > ManifestVersion && !anyFormat)
+      throw new IllegalStateException(
+        s"$root v$v declares manifest format $mv, newer than " +
+          s"this reader's $ManifestVersion — upgrade before reading")
+    m
+  }
 
-  /** The kind set a new commit carries forward: the parent's carried
-    * set when it has one; at the FORMAT BOUNDARY (a parent written
-    * before the carry existed) the full retained-history scan is
-    * folded in ONCE — without this, a pre-carry foreign commit older
-    * than the parent would vanish from the carry and the expiry-proof
-    * guarantee would not survive the migration. */
-  private def carryKinds(root: String, prevTxt: Option[String]): Set[String] =
-    prevTxt match {
-      case None => Set.empty
-      case Some(txt) if txt.contains("\"kinds\":") => kindsOf(txt)
-      case Some(_) => committedKinds(root)
-    }
+  /** The latest manifest of `root`, None for a nonexistent table. */
+  private def headManifest(root: String): Option[Manifest] =
+    versions(root).lastOption.map(manifestAt(root, _))
+
+  /** Whether the latest manifest is FLAT (unpartitioned): false for a
+    * partitioned table, even one whose every label was erased, and
+    * for a nonexistent root. */
+  private[graft] def isFlat(root: String): Boolean =
+    headManifest(root).exists(!_.partitioned)
+
+  /** Data dirs (relative to root) live in version `v`'s manifest `m`:
+    * partitioned manifests (full or delta) resolve through the chain,
+    * flat manifests list theirs. */
+  private def liveDirs(root: String, v: Int, m: Manifest): Seq[String] =
+    if (m.partitioned) resolved(root, v, m)._1.values.flatten.toSeq.distinct
+    else m.dirs
 
   /** Apply one delta manifest's parts on top of a resolved base —
     * THE delta-application semantic, shared by [[resolved]] and
@@ -240,35 +401,8 @@ object VersionedTable {
     * here makes vacuum compute a wrong live set, and a too-small
     * live set deletes live data). */
   private def applyDelta(base: Map[String, Seq[String]],
-      txt: String): Map[String, Seq[String]] =
-    (base -- dropsOf(txt)) ++ partsOf(txt)
-
-  /** Data-dir paths referenced directly by one FLAT manifest's text —
-    * the one definition of the path shape (see [[manifestDirs]]). */
-  private def flatDirsOf(txt: String): Seq[String] =
-    "\"(data/[0-9a-f-]+(?:/pid=\\d+)?)\"".r
-      .findAllMatchIn(txt).map(_.group(1)).toSeq.distinct
-
-  private def dropsOf(txt: String): Set[String] =
-    "\"drops\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt).map(_.group(1))
-      .map(b => "\"(\\d+)\"".r.findAllMatchIn(b).map(_.group(1)).toSet)
-      .getOrElse(Set.empty)
-
-  private def stringFieldOf(txt: String, field: String): Option[String] =
-    ("\"" + field + "\":\"([0-9a-zA-Z-]+)\"").r.findFirstMatchIn(txt)
-      .map(_.group(1))
-
-  /** The CUMULATIVE writer-kind set a manifest carries (every kind
-    * that ever committed in this incarnation, expiry-proof). A
-    * manifest from before the carry contributes its own stamped kind
-    * plus [[KindUnstamped]] — the history before it is unknowable, so
-    * the txn-shape fallback stays in force for such tables. */
-  private def kindsOf(txt: String): Set[String] =
-    "\"kinds\":\"([0-9a-zA-Z,-]+)\"".r.findFirstMatchIn(txt)
-      .map(_.group(1).split(",").toSet)
-      .getOrElse(
-        Set(stringFieldOf(txt, "wkind").getOrElse(KindUnstamped),
-          KindUnstamped))
+      m: Manifest): Map[String, Seq[String]] =
+    (base -- m.drops) ++ m.parts
 
   /** DELTA manifests (r14, the Delta-log shape): an incremental
     * partitioned commit writes ONLY its touched labels + dropped
@@ -285,53 +419,102 @@ object VersionedTable {
     * at the first retained version's chain root. */
   private val deltaCheckpointEvery = 16
 
-  /** Resolve version `v`'s full (parts, pstats) through its delta
-    * chain. The memo holds the last resolution per root keyed by
-    * (version, tableid): a commit resolving `head` applies one delta
-    * on top of the cached `head - 1` — O(touched) — and a recreated
-    * root's overlapping version numbers can't poison it because the
-    * incarnation id must match too (the [[committedTxns]] reset-guard
-    * lesson). Cache content is immutable-by-version, so hits never
-    * re-read expired ancestor files (cold readers — fresh JVMs — walk
-    * the ≤checkpoint-interval chain instead). */
-  private val resolveCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Int, String, Map[String, Seq[String]],
-      Map[String, (Long, Int)])]
+  /** The last resolution of one root: version `v`'s full (parts,
+    * pstats), keyed by (version, tableid). */
+  private final case class Resolution(version: Int, tableId: String,
+      parts: Map[String, Seq[String]], pstats: Map[String, (Long, Int)])
 
-  private def resolved(root: String, v: Int, txt: String)
+  /** THE per-root memo. Manifests are immutable and versions
+    * append-only, so:
+    *  - `scanned`/`txns`/`kinds`: each [[committedTxns]] or
+    *    [[committedKinds]] call reads only manifests NEWER than the
+    *    last scan — O(1) amortized instead of re-reading every
+    *    retained manifest per micro-batch (O(versions)/batch =
+    *    quadratic cumulative I/O over a stream's life). A manifest
+    *    expired between listing and read is skipped: its txns and
+    *    kinds stay remembered from the earlier scan (the conservative,
+    *    skip-the-duplicate direction), and its kinds also ride every
+    *    later manifest's carry.
+    *  - `resolution`: a commit resolving `head` applies one delta on
+    *    top of the cached `head - 1` — O(touched). A recreated root's
+    *    overlapping version numbers can't poison it because the
+    *    incarnation id must match too. Hits never re-read expired
+    *    ancestor files (cold readers — fresh JVMs — walk the
+    *    ≤checkpoint-interval chain instead). */
+  private final case class RootMemo(scanned: Int, txns: Set[Long],
+      kinds: Set[String], resolution: Option[Resolution])
+
+  private val NoMemo = RootMemo(0, Set.empty, Set.empty, None)
+
+  private val memos =
+    scala.collection.concurrent.TrieMap.empty[String, RootMemo]
+
+  /** Drop the memo for `root` — for callers that delete/recreate a
+    * table root through a path this object cannot observe. */
+  def invalidateTxns(root: String): Unit = { memos.remove(root); () }
+
+  /** The memo with every manifest up to the head scanned. History-reset
+    * guard (ADVICE r11): the memo assumes versions only ever GROW
+    * under a root. A deleted-and-recreated root (an expire() below the
+    * scanned watermark is fine — expire keeps the max) restarts its
+    * version numbering, and a stale txn set would make commitBatch
+    * silently DROP fresh batches whose ids collide with the old
+    * incarnation's. If the listing is empty or its max is below the
+    * scanned watermark, the history was reset: drop the memo and
+    * rescan from scratch. */
+  private def scanned(root: String): RootMemo = {
+    val vs = versions(root)
+    val known = memos.get(root) match {
+      case Some(m) if vs.isEmpty || vs.max < m.scanned =>
+        memos.remove(root); NoMemo
+      case Some(m) => m
+      case None => NoMemo
+    }
+    val newer = vs.filter(_ > known.scanned)
+    if (newer.isEmpty) known
+    else {
+      val read = newer.flatMap { v =>
+        try Some(manifestAt(root, v))
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      }
+      val next = known.copy(scanned = newer.max,
+        txns = known.txns ++ read.flatMap(_.txn),
+        kinds = known.kinds ++ read.flatMap(_.carriedKinds))
+      memos.updateWith(root)(cur =>
+        Some(next.copy(resolution = cur.flatMap(_.resolution))))
+      next
+    }
+  }
+
+  /** Resolve version `v`'s full (parts, pstats) from its manifest `m`
+    * through its delta chain, memoizing the newest resolution. */
+  private def resolved(root: String, v: Int, m: Manifest)
       : (Map[String, Seq[String]], Map[String, (Long, Int)]) = {
-    val id = stringFieldOf(txt, "tableid").getOrElse("")
-    val out = baseOf(txt) match {
-      case None => (partsOf(txt), pStatsOf(txt))
+    val id = m.tableId.getOrElse("")
+    val out = m.base match {
+      case None => (m.parts, m.pstats)
       case Some(b) =>
-        val (pParts, pStats) = resolveCache.get(root) match {
-          case Some((cv, cid, cp, cs)) if cv == b && cid == id => (cp, cs)
-          case _ => resolved(root, b,
-            mverGuard(root, b, Files.readString(versionFile(root, b))))
+        val (pParts, pStats) = memos.get(root).flatMap(_.resolution) match {
+          case Some(r) if r.version == b && r.tableId == id => (r.parts, r.pstats)
+          case _ => resolved(root, b, manifestAt(root, b))
         }
-        (applyDelta(pParts, txt),
-          (pStats -- dropsOf(txt)) ++ pStatsOf(txt))
+        (applyDelta(pParts, m), (pStats -- m.drops) ++ m.pstats)
     }
     // keep the newest resolution only — resolving an old version for
     // a change-feed read must not regress the head commit's memo
-    resolveCache.get(root) match {
-      case Some((cv, cid, _, _)) if cv > v && cid == id => ()
-      case _ => resolveCache.put(root, (v, id, out._1, out._2))
+    memos.updateWith(root) { cur =>
+      val known = cur.getOrElse(NoMemo)
+      if (known.resolution.exists(r => r.version > v && r.tableId == id)) cur
+      else Some(known.copy(resolution = Some(Resolution(v, id, out._1, out._2))))
     }
     out
   }
 
-  /** Partition label → live data dirs of version `v`, resolved
-    * through the delta chain; empty for flat (unpartitioned)
-    * manifests. */
-  private def manifestParts(root: String, v: Int): Map[String, Seq[String]] =
-    resolved(root, v, mverGuard(root, v, Files.readString(versionFile(root, v))))._1
-
-  /** Partition map of the LATEST version (empty for flat manifests or
-    * a nonexistent table). */
+  /** Partition map of the LATEST version, resolved through the delta
+    * chain (empty for flat manifests or a nonexistent table). */
   def parts(root: String): Map[String, Seq[String]] =
     versions(root).lastOption
-      .map(manifestParts(root, _)).getOrElse(Map.empty)
+      .map(v => resolved(root, v, manifestAt(root, v))._1).getOrElse(Map.empty)
 
   /** The reserved internal partition-column name writers attach while
     * staging. NOT a legal data column: a source row carrying it would
@@ -349,28 +532,6 @@ object VersionedTable {
     * the provenance stamp existed (pre-r14 history). */
   val KindUnstamped = "unstamped"
 
-  /** Manifest FORMAT version this build writes and the newest it can
-    * read (Delta's minReaderVersion rule): 2 = delta chains +
-    * provenance stamps. A reader opening a manifest that declares a
-    * HIGHER version throws instead of silently misreading semantics
-    * it doesn't know (a pre-chain reader would have served a
-    * 32-label delta as the whole table); manifests with no `mver`
-    * are version-1 history, always readable. */
-  val ManifestVersion = 2
-
-  private def mverGuard(root: String, v: Int, txt: String): String = {
-    for (m <- "\"mver\":(\\d+)".r.findFirstMatchIn(txt))
-      if (m.group(1).toInt > ManifestVersion)
-        throw new IllegalStateException(
-          s"$root v$v declares manifest format ${m.group(1)}, newer than " +
-            s"this reader's $ManifestVersion — upgrade before reading")
-    txt
-  }
-
-  private def partCountAt(root: String, v: Int): Option[Int] =
-    "\"nparts\":(\\d+)".r.findFirstMatchIn(
-      Files.readString(versionFile(root, v))).map(_.group(1).toInt)
-
   /** The key-hash partition COUNT recorded by the latest manifest —
     * table state, not process config: a writer/follower must hash
     * with the count the table was laid out under, or a restart with
@@ -378,7 +539,7 @@ object VersionedTable {
     * partitions (stale rows stop being replaced). None for flat
     * tables and manifests that predate the stamp. */
   def partCount(root: String): Option[Int] =
-    versions(root).lastOption.flatMap(partCountAt(root, _))
+    headManifest(root).flatMap(_.nParts)
 
   /** The canonical key→partition assignment every partitioned writer
     * uses — ONE definition so a merge, a follower, and a rescale all
@@ -402,13 +563,6 @@ object VersionedTable {
       .collect().iterator.flatten.toSet
   }
 
-  private def stringFieldAt(root: String, v: Int,
-      field: String): Option[String] =
-    stringFieldOf(Files.readString(versionFile(root, v)), field)
-
-  private def tableIdAt(root: String, v: Int): Option[String] =
-    stringFieldAt(root, v, "tableid")
-
   /** The table's incarnation identity: a UUID minted by the first
     * commit under a root and carried by every manifest after it. A
     * deleted-and-recreated root mints a NEW id, which is how a
@@ -417,24 +571,16 @@ object VersionedTable {
     * different table than the one now living at the path (ADVICE
     * r12). None only for manifests that predate the stamp. */
   def tableId(root: String): Option[String] =
-    versions(root).lastOption.flatMap(tableIdAt(root, _))
+    headManifest(root).flatMap(_.tableId)
 
-  private def followSrcAt(root: String, v: Int): Option[String] =
-    stringFieldAt(root, v, "followsrc")
-
-  /** Per-partition (live bytes, parquet file count) as of version
-    * `v`, resolved through the delta chain; empty for manifests
-    * predating the stamp. These are what let the maintenance triggers
-    * run on O(P) manifest metadata instead of stat-walking every live
-    * data file. */
-  private def manifestPStatsAt(root: String, v: Int)
-      : Map[String, (Long, Int)] =
-    resolved(root, v, mverGuard(root, v, Files.readString(versionFile(root, v))))._2
-
-  /** Latest stamped per-partition stats (label → (bytes, files)). */
+  /** Latest stamped per-partition stats (label → (bytes, files)),
+    * resolved through the delta chain; empty for manifests predating
+    * the stamp. These are what let the maintenance triggers run on
+    * O(P) manifest metadata instead of stat-walking every live data
+    * file. */
   def partStats(root: String): Map[String, (Long, Int)] =
     versions(root).lastOption
-      .map(manifestPStatsAt(root, _)).getOrElse(Map.empty)
+      .map(v => resolved(root, v, manifestAt(root, v))._2).getOrElse(Map.empty)
 
   /** (bytes, parquet files) physically under one relative dir. */
   private def dirStats(root: String, rel: String): (Long, Int) = {
@@ -453,18 +599,11 @@ object VersionedTable {
     (a._1 + b._1, a._2 + b._2)
 
   /** The upstream-table identity recorded by a follower's commits to
-    * this (destination) root — carried forward by maintenance commits
-    * like `nparts`, so compaction on a replica doesn't amnesia its
-    * provenance. None for tables never written by a follower. */
+    * this (destination) root — carried forward by every later commit,
+    * so compaction on a replica doesn't amnesia its provenance. None
+    * for tables never written by a follower. */
   def followSrc(root: String): Option[String] =
-    versions(root).lastOption.flatMap(followSrcAt(root, _))
-
-  /** The raw (unescaped) schema DDL one manifest's text carries, if
-    * any — the single extraction [[manifestSchema]] parses and
-    * [[restore]] re-stamps verbatim. */
-  private def schemaDdlOf(txt: String): Option[String] =
-    "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+    headManifest(root).flatMap(_.followSrc)
 
   /** Table schema carried by version `v`'s manifest (evolving tables
     * only — see [[commitPartitions]]' schemaDdl): the read schema that
@@ -472,189 +611,74 @@ object VersionedTable {
     * NULLs. None for manifests that never stored one. */
   def manifestSchema(spark: SparkSession, root: String, v: Int)
       : Option[org.apache.spark.sql.types.StructType] =
-    schemaDdlOf(Files.readString(versionFile(root, v)))
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+    schemaOf(manifestAt(root, v))
 
-  private def jsonEsc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
+  private def schemaOf(m: Manifest): Option[org.apache.spark.sql.types.StructType] =
+    m.schema.map(org.apache.spark.sql.types.StructType.fromDDL)
 
-  /** Commit stamp carried by a manifest text (absent in pre-ts
-    * manifests). */
-  private def tsOf(txt: String): Option[Long] =
-    "\"ts\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-
-  private def writeManifest(root: String, v: Int, op: String,
-      dirs: Seq[String], txn: Option[Long],
-      parts: Option[Map[String, Seq[String]]] = None,
-      schemaDdl: Option[String] = None,
-      nParts: Option[Int] = None,
-      tableId: Option[String] = None,
-      followSrc: Option[String] = None,
-      pStats: Option[Map[String, (Long, Int)]] = None,
-      writerKind: String = KindBatch,
-      base: Option[Int] = None,
-      chain: Int = 0,
-      drops: Set[String] = Set.empty,
-      kinds: Set[String] = Set.empty,
-      prevTs: Option[Long] = None): Path = {
-    val txnField = txn.fold("")(id => s""""txn":$id,""")
-    // format version: readers refuse manifests newer than they speak
-    // (Delta's minReaderVersion rule); 2 = delta chains + provenance
-    val mverField = s""""mver":$ManifestVersion,"""
-    // commit wall-clock (epoch millis) — what timestamp time travel
-    // resolves against. Monotonic non-decreasing per root: a commit at
-    // v+1 only links after v's link, and v's manifest text (this
-    // stamp included) was written before v linked — AND clamped to
-    // STRICTLY ABOVE the previous manifest's stamp (Delta's in-commit-
-    // timestamp rule is prev+1, ADVICE r15/r16): an NTP step-back or
-    // cross-host clock skew on a shared filesystem must not let
-    // versionAsOf resolve an older-numbered but later-stamped version,
-    // and equal stamps would make timestampAsOf/history ordering
-    // ambiguous between consecutive versions.
-    val tsField =
-      s""""ts":${math.max(System.currentTimeMillis(),
-        prevTs.fold(0L)(_ + 1))},"""
-    // the incarnation's CUMULATIVE writer-kind set, carried forward
-    // like tableid: retention can expire the manifest a foreign
-    // writer committed, but the kinds it contributed ride every later
-    // commit — a cold reader's foreign-writer check survives expiry
-    val kindsField =
-      s""""kinds":"${(kinds + writerKind).toSeq.sorted.mkString(",")}","""
-    val schemaField = schemaDdl.fold("")(d => s""""schema":"${jsonEsc(d)}",""")
-    val nPartsField = nParts.fold("")(n => s""""nparts":$n,""")
-    val idField = tableId.fold("")(i => s""""tableid":"$i",""")
-    val followField = followSrc.fold("")(i => s""""followsrc":"$i",""")
-    // delta-manifest pointers: base = the version this one's parts
-    // apply ON TOP OF (absent = full manifest), chain = distance to
-    // the chain's full root, drops = labels removed at this version
-    val baseField = base.fold("")(b =>
-      s""""base":$b,"chain":$chain,""" + (
-        if (drops.isEmpty) ""
-        else drops.toSeq.sortBy(_.toInt)
-          .map("\"" + _ + "\"").mkString("\"drops\":[", ",", "],")))
-    // per-commit writer provenance (VERDICT r13 item 1): the txn id
-    // says WHICH batch, wkind says WHO wrote it — what lets a
-    // follower refuse ANY foreign data commit on its destination
-    // instead of guessing from the id's shape
-    val kindField = s""""wkind":"$writerKind","""
-    // per-partition (bytes, parquet file count), stamped at commit
-    // time so the maintenance triggers read O(P) metadata instead of
-    // stat-walking every live data file (the Iceberg manifest-metrics
-    // idea): "pstats":{"<label>":[bytes,files],...}
-    val statsField = pStats.fold("") { m =>
-      m.toSeq.sortBy(_._1.toInt).map { case (k, (b, f)) =>
-        "\"" + k + "\":[" + b + "," + f + "]"
-      }.mkString("\"pstats\":{", ",", "},")
-    }
-    val common = s"$mverField$tsField$txnField$schemaField$idField" +
-      s"$followField$kindField$kindsField$baseField"
-    val body = parts match {
-      case None =>
-        dirs.map("\"" + _ + "\"").mkString(
-          s"""{"version":$v,"op":"$op",$common"dirs":[""",
-          ",", "]}")
-      case Some(pm) =>
-        pm.toSeq.sortBy(_._1.toInt).map { case (k, ds) =>
-          "\"" + k + "\":[" + ds.map("\"" + _ + "\"").mkString(",") + "]"
-        }.mkString(
-          s"""{"version":$v,"op":"$op",$common$nPartsField$statsField"parts":{""",
-          ",", "}}")
-    }
-    val tmp = versionsDir(root).resolve(s".tmp-${UUID.randomUUID()}")
-    Files.writeString(tmp, body)
-    tmp
-  }
-
-  /** Per-root memo of (highest manifest scanned, txns seen): commits
-    * are append-only and manifests immutable, so each commitBatch
-    * only reads manifests NEWER than the last scan — O(1) amortized
-    * instead of re-reading every retained manifest per micro-batch
-    * (O(versions)/batch = quadratic cumulative I/O over a stream's
-    * life). A manifest expired between listing and read is skipped —
-    * its txns stay remembered from the earlier scan, which is the
-    * conservative (skip-the-duplicate) direction. */
-  private val txnCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Set[Long])]
-
-  /** Drop the txn (and provenance-kind) memo for `root` — for callers
-    * that delete/recreate a table root through a path this object
-    * cannot observe. */
-  def invalidateTxns(root: String): Unit = {
-    txnCache.remove(root); kindCache.remove(root)
-    resolveCache.remove(root); ()
+  /** The manifest a commit publishes at `next` on top of the head
+    * manifest `head` (None for a table's first commit). The CARRY
+    * RULES live here and nowhere else:
+    *  - `ts`: commit wall-clock (epoch millis), what timestamp time
+    *    travel resolves against, clamped STRICTLY ABOVE the head's
+    *    stamp (Delta's in-commit-timestamp rule is prev+1, ADVICE
+    *    r15/r16): an NTP step-back or cross-host clock skew on a
+    *    shared filesystem must not let versionAsOf resolve an
+    *    older-numbered but later-stamped version, and equal stamps
+    *    would make timestampAsOf/history ordering ambiguous;
+    *  - `tableid`: INCARNATION state, minted once per root lifetime
+    *    and carried by every later commit (a truncate-load is still
+    *    the same table; only deleting the root retires the id);
+    *  - `followsrc`: follower provenance, carried so maintenance
+    *    commits on a replica don't erase it;
+    *  - `kinds`: the incarnation's CUMULATIVE writer-kind set: retention
+    *    can expire the manifest a foreign writer committed, but the
+    *    kind it contributed rides every later commit, so a cold
+    *    reader's foreign-writer check survives expiry. At the FORMAT
+    *    BOUNDARY (a head written before the carry existed) the full
+    *    retained-history scan is folded in ONCE — without it a
+    *    pre-carry foreign commit older than the head would vanish from
+    *    the carry;
+    *  - `nparts`: the partition count is table state, carried by the
+    *    incremental commits (merge_parts, delta_parts) that don't
+    *    supply one; a commit that defines the whole layout
+    *    (overwrite_parts, restore) stamps only its own. */
+  private def successor(root: String, head: Option[Manifest], next: Int,
+      op: String, content: Content, writerKind: String = KindBatch,
+      txn: Option[Long] = None, schemaDdl: Option[String] = None,
+      nParts: Option[Int] = None, followSrc: Option[String] = None,
+      base: Option[Int] = None, chain: Int = 0,
+      drops: Set[String] = Set.empty): Manifest = {
+    val carriedKinds =
+      head.fold(Set.empty[String])(_.kinds.getOrElse(committedKinds(root)))
+    val layoutCarries = op == "merge_parts" || op == "delta_parts"
+    Manifest(next, op, mver = Some(ManifestVersion),
+      ts = Some(math.max(System.currentTimeMillis(),
+        head.flatMap(_.ts).fold(0L)(_ + 1))),
+      txn = txn, schema = schemaDdl,
+      tableId = Some(head.flatMap(_.tableId)
+        .getOrElse(UUID.randomUUID().toString)),
+      followSrc = followSrc.orElse(head.flatMap(_.followSrc)),
+      wkind = Some(writerKind), kinds = Some(carriedKinds + writerKind),
+      base = base, chain = chain, drops = drops,
+      nParts = nParts.orElse(
+        if (layoutCarries) head.flatMap(_.nParts) else None),
+      content = content)
   }
 
   /** Transaction ids already committed (streaming sink bookkeeping). */
-  def committedTxns(root: String): Set[Long] = {
-    val vs = versions(root)
-    // History-reset guard (ADVICE r11): the memo assumes versions only
-    // ever GROW under a root. A deleted-and-recreated root (or an
-    // expire() below the scanned watermark is fine — expire keeps the
-    // max) restarts its version numbering, and the stale txn set would
-    // make commitBatch silently DROP fresh batches whose ids collide
-    // with the old incarnation's. If the listing is empty or its max
-    // is below the scanned watermark, the history was reset: drop the
-    // memo and rescan from scratch.
-    val (hi, known) = txnCache.get(root) match {
-      case Some((h, _)) if vs.isEmpty || vs.max < h =>
-        txnCache.remove(root); (0, Set.empty[Long])
-      case Some(pair) => pair
-      case None => (0, Set.empty[Long])
-    }
-    val newer = vs.filter(_ > hi)
-    if (newer.isEmpty) known
-    else {
-      val add = newer.flatMap { v =>
-        try "\"txn\":(\\d+)".r.findFirstMatchIn(
-          Files.readString(versionFile(root, v))).map(_.group(1).toLong)
-        catch { case _: java.nio.file.NoSuchFileException => None }
-      }
-      val merged = known ++ add
-      txnCache.put(root, (newer.max, merged))
-      merged
-    }
-  }
-
-  /** Same incremental-scan memo as [[committedTxns]], over the
-    * carried `kinds` provenance sets: manifests are immutable and
-    * versions append-only, so each call reads only manifests newer
-    * than the last scan. */
-  private val kindCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Set[String])]
+  def committedTxns(root: String): Set[Long] = scanned(root).txns
 
   /** EVERY writer kind that ever committed under this root's current
     * incarnation — what a follower scans to refuse a foreign writer
     * on its destination ([[KindUnstamped]] marks history whose
     * provenance only the txn-shape heuristic can guess at). Each
-    * manifest's CARRIED cumulative `kinds` set (stamped forward like
-    * tableid) is what makes the answer EXPIRY-PROOF: retention can
-    * drop the manifest a foreign writer committed before any cold
-    * reader scans it, but the kind it contributed rides every later
-    * commit, so a fresh JVM still sees it. The incremental memo and
-    * its history-reset guard mirror [[committedTxns]]; a manifest
-    * expired between listing and read is skipped — its kinds stay
-    * remembered from the earlier scan AND from every later manifest's
-    * carry. */
-  def committedKinds(root: String): Set[String] = {
-    val vs = versions(root)
-    val (hi, known) = kindCache.get(root) match {
-      case Some((h, _)) if vs.isEmpty || vs.max < h =>
-        kindCache.remove(root); (0, Set.empty[String])
-      case Some(pair) => pair
-      case None => (0, Set.empty[String])
-    }
-    val newer = vs.filter(_ > hi)
-    if (newer.isEmpty) known
-    else {
-      val add = newer.flatMap { v =>
-        try Some(kindsOf(Files.readString(versionFile(root, v))))
-        catch { case _: java.nio.file.NoSuchFileException => None }
-      }.flatten
-      val merged = known ++ add
-      kindCache.put(root, (newer.max, merged))
-      merged
-    }
-  }
+    * manifest's CARRIED cumulative `kinds` set is what makes the
+    * answer EXPIRY-PROOF: retention can drop the manifest a foreign
+    * writer committed before any cold reader scans it, but the kind
+    * it contributed rides every later commit, so a fresh JVM still
+    * sees it. */
+  def committedKinds(root: String): Set[String] = scanned(root).kinds
 
   /** Stage `df` as a new write-once data dir; returns its relative path. */
   private def stage(df: DataFrame, root: String): String = {
@@ -668,20 +692,16 @@ object VersionedTable {
     * a `pid=<k>` subdir of one fresh uuid dir, and each subdir is an
     * independent commit unit for [[commitPartitions]]). The frame is
     * hash-repartitioned on `partCol` first so a partition's rows
-    * co-locate into one task → one file per touched partition; at
-    * cluster scale raise `tasksPerWrite` so large batches spread over
-    * more writers (more, smaller files per partition — compact()
-    * owns the file-count budget either way). Returns partition label
-    * → relative dir, only for partitions the frame actually touched. */
+    * co-locate into one task → one file per touched partition.
+    * Returns partition label → relative dir, only for partitions the
+    * frame actually touched. */
   private[graft] def stagePartitioned(df: DataFrame, root: String,
-      partCol: String, tasksPerWrite: Int = 0): Map[String, String] = {
+      partCol: String): Map[String, String] = {
     import org.apache.spark.sql.functions.col
     val rel = s"data/${UUID.randomUUID()}"
     val out = Paths.get(root, rel)
-    val arranged =
-      if (tasksPerWrite > 0) df.repartition(tasksPerWrite, col(partCol))
-      else df.repartition(col(partCol))
-    arranged.write.partitionBy(partCol).parquet(out.toString)
+    df.repartition(col(partCol)).write.partitionBy(partCol)
+      .parquet(out.toString)
     val ls = Files.list(out)
     val subdirs =
       try ls.iterator.asScala.map(_.getFileName.toString)
@@ -689,7 +709,7 @@ object VersionedTable {
       finally ls.close()
     subdirs.map { d =>
       // manifest labels use the canonical pid= layout regardless of
-      // the caller's column name (manifestDirs' regex contract)
+      // the caller's column name (the manifest parser's dir contract)
       val k = d.substring(partCol.length + 1)
       if (partCol != "pid") {
         Files.move(out.resolve(d), out.resolve(s"pid=$k"))
@@ -710,10 +730,14 @@ object VersionedTable {
       case e: Exception if vanished(e) => throw new ConcurrentCommit(next)
     }
 
-  /** Publish manifest `tmp` as version `next`: the atomic hard link
-    * succeeds for exactly one writer; the loser drops its manifest and
-    * sees [[ConcurrentCommit]]. */
-  private def publish(root: String, next: Int, tmp: Path): Int = {
+  /** Publish manifest `m` as version `m.version`: its text is staged
+    * under a temp name, then the atomic hard link succeeds for exactly
+    * one writer; the loser drops its manifest and sees
+    * [[ConcurrentCommit]]. */
+  private def publish(root: String, m: Manifest): Int = {
+    val next = m.version
+    val tmp = versionsDir(root).resolve(s".tmp-${UUID.randomUUID()}")
+    Files.writeString(tmp, m.render)
     try Files.createLink(versionFile(root, next), tmp)
     catch { case _: java.nio.file.FileAlreadyExistsException =>
       Files.delete(tmp)
@@ -759,37 +783,30 @@ object VersionedTable {
     Files.createDirectories(versionsDir(root))
     val next = expected + 1
     // ONE read of the previous manifest: every carried field (count,
-    // identity, provenance, chain depth) extracts from this text, and
+    // identity, provenance, chain depth) comes from this record, and
     // the parts/stats resolve through it — the old five separate
     // readString calls were the measured commit-path constant at
     // P=100k (SCALE_MANIFEST probe)
-    val prevTxt: Option[String] =
+    val prev: Option[Manifest] =
       if (expected == 0) None
-      else Some(raceGuard(next)(mverGuard(root, expected,
-        Files.readString(versionFile(root, expected)))))
+      else Some(raceGuard(next)(manifestAt(root, expected)))
     // layout guard: an incremental commit whose dirs were hashed under
     // a count the table no longer has must restage, not merge (see
     // PartitionCountChanged). A full rewrite (overwriteAll) DEFINES
     // the new layout — that's rescale itself — so it is exempt.
     if (!overwriteAll)
-      for (txt <- prevTxt;
-           stamped <- "\"nparts\":(\\d+)".r.findFirstMatchIn(txt)
-             .map(_.group(1).toInt);
-           supplied <- nParts)
+      for (m <- prev; stamped <- m.nParts; supplied <- nParts)
         if (stamped != supplied)
           throw new PartitionCountChanged(stamped, supplied)
-    // partitioned parents are recognizable from their text alone (a
-    // delta or parts marker) — an incremental commit onto an
-    // UNPARTITIONED non-empty manifest must migrate, not merge
-    val prevPartitioned =
-      prevTxt.exists(t => t.contains("\"parts\":") || t.contains("\"base\":"))
+    // an incremental commit onto an UNPARTITIONED non-empty manifest
+    // must migrate, not merge
+    val prevPartitioned = prev.exists(_.partitioned)
     if (!overwriteAll)
-      for (txt <- prevTxt if !prevPartitioned)
-        if (raceGuard(next)(manifestDirs(root, expected)).nonEmpty)
-          throw new IllegalStateException(
-            s"$root v$expected is an unpartitioned manifest; migrate " +
-              "with a full rewrite (overwriteAll = true, staged map " +
-              "covering every live key)")
+      for (m <- prev if !m.partitioned && m.dirs.nonEmpty)
+        throw new IllegalStateException(
+          s"$root v$expected is an unpartitioned manifest; migrate " +
+            "with a full rewrite (overwriteAll = true, staged map " +
+            "covering every live key)")
     // delta or checkpoint? An incremental commit onto a partitioned
     // parent extends its chain unless the chain is due a full
     // checkpoint; overwriteAll and first commits are full by nature.
@@ -801,7 +818,7 @@ object VersionedTable {
     // OPTIMIZE pass is exactly when retention wants the chain cut —
     // expire right after a compaction can then drop every replaced
     // version, Delta's checkpoint-then-clean shape)
-    val parentChain = prevTxt.map(chainOf).getOrElse(0)
+    val parentChain = prev.fold(0)(_.chain)
     val asDelta = !overwriteAll && !forceCheckpoint && prevPartitioned &&
       parentChain + 1 < deltaCheckpointEvery
     // stamp per-partition stats: fresh walks ONLY over this commit's
@@ -818,13 +835,13 @@ object VersionedTable {
     val (mergedParts, mergedStats) =
       if (asDelta) (stagedParts.view.mapValues(Seq(_)).toMap, stagedStats)
       else {
-        val (prev, prevStats) =
-          if (overwriteAll || prevTxt.isEmpty)
+        val (prevParts, prevStats) =
+          if (overwriteAll || prev.isEmpty)
             (Map.empty[String, Seq[String]], Map.empty[String, (Long, Int)])
-          else raceGuard(next)(resolved(root, expected, prevTxt.get))
-        val parts = (prev -- dropParts) ++
+          else raceGuard(next)(resolved(root, expected, prev.get))
+        val parts = (prevParts -- dropParts) ++
           stagedParts.view.mapValues(Seq(_)).toMap
-        val stats = (prev -- dropParts).map { case (k, ds) =>
+        val stats = (prevParts -- dropParts).map { case (k, ds) =>
           k -> prevStats.getOrElse(k,
             raceGuard(next)(
               ds.map(dirStats(root, _)).foldLeft((0L, 0))(sumStats)))
@@ -834,36 +851,14 @@ object VersionedTable {
     meter.foreach(_.add(pipeline, root,
       if (txn.isDefined) "streaming" else "table_copy",
       stagedPartBytes(root, stagedParts)))
-    // the partition count is table state: carry the previous
-    // manifest's stamp forward whenever the caller doesn't supply one
-    // (compaction, metadata-only commits), so it survives every
-    // commit after the first writer records it
-    val carriedN = nParts.orElse(
-      if (overwriteAll) None
-      else prevTxt.flatMap(txt =>
-        "\"nparts\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)))
-    // identity is INCARNATION state: minted once per root lifetime,
-    // carried by every later commit (overwriteAll included — a
-    // truncate-load is still the same table; only deleting the root
-    // itself retires the id)
-    val id = prevTxt.flatMap(stringFieldOf(_, "tableid"))
-      .getOrElse(UUID.randomUUID().toString)
-    // follower provenance carries like nparts so maintenance commits
-    // (compaction) on a replica don't erase it
-    val carriedFollow = followSrc.orElse(
-      prevTxt.flatMap(stringFieldOf(_, "followsrc")))
-    val tmp = writeManifest(root, next,
+    publish(root, raceGuard(next)(successor(root, prev, next,
       if (overwriteAll) "overwrite_parts"
       else if (asDelta) "delta_parts" else "merge_parts",
-      Nil, txn, parts = Some(mergedParts), schemaDdl = schemaDdl,
-      nParts = carriedN, tableId = Some(id), followSrc = carriedFollow,
-      pStats = Some(mergedStats), writerKind = writerKind,
+      Content.partitioned(mergedParts, mergedStats), writerKind, txn,
+      schemaDdl, nParts, followSrc,
       base = if (asDelta) Some(expected) else None,
       chain = if (asDelta) parentChain + 1 else 0,
-      drops = if (asDelta) dropParts else Set.empty,
-      kinds = raceGuard(next)(carryKinds(root, prevTxt)),
-      prevTs = prevTxt.flatMap(tsOf))
-    publish(root, next, tmp)
+      drops = if (asDelta) dropParts else Set.empty)))
   }
 
   /** Exactly-once partition-scoped micro-batch merge: [[commitBatch]]'s
@@ -924,21 +919,15 @@ object VersionedTable {
     meter.foreach(_.add(pipeline, root,
       if (txn.isDefined) "streaming" else "table_copy",
       stagedBytes(root, staged)))
-    val dirs = (if (overwrite) Nil
-                else raceGuard(next)(versions(root).lastOption.toSeq
-                  .flatMap(manifestDirs(root, _)))) :+ staged
-    val prevTxt: Option[String] =
+    val prev: Option[Manifest] =
       if (expected == 0) None
-      else Some(raceGuard(next)(mverGuard(root, expected,
-        Files.readString(versionFile(root, expected)))))
-    val id = prevTxt.flatMap(stringFieldOf(_, "tableid"))
-      .getOrElse(UUID.randomUUID().toString)
-    val tmp = writeManifest(root, next,
-      if (overwrite) "overwrite" else "append", dirs, txn,
-      tableId = Some(id), writerKind = writerKind,
-      kinds = raceGuard(next)(carryKinds(root, prevTxt)),
-      prevTs = prevTxt.flatMap(tsOf))
-    publish(root, next, tmp)
+      else Some(raceGuard(next)(manifestAt(root, expected)))
+    val dirs = (if (overwrite) Nil
+                else raceGuard(next)(prev.toSeq
+                  .flatMap(liveDirs(root, expected, _)))) :+ staged
+    publish(root, raceGuard(next)(successor(root, prev, next,
+      if (overwrite) "overwrite" else "append", Content.flat(dirs),
+      writerKind, txn)))
   }
 
   /** Exactly-once micro-batch append: the Structured Streaming
@@ -983,9 +972,9 @@ object VersionedTable {
     * typed NULLs instead of the footer-sampled schema silently
     * dropping them. */
   def readAt(spark: SparkSession, root: String, v: Int): DataFrame = {
-    val paths = manifestDirs(root, v)
-      .map(rel => Paths.get(root, rel).toString)
-    manifestSchema(spark, root, v) match {
+    val m = manifestAt(root, v)
+    val paths = liveDirs(root, v, m).map(rel => Paths.get(root, rel).toString)
+    schemaOf(m) match {
       case Some(st) => spark.read.schema(st).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
@@ -997,17 +986,14 @@ object VersionedTable {
     * manifest's own stamp; pre-stamp history (r13 and earlier) falls
     * back to the manifest file's mtime, which the atomic-link publish
     * makes an honest commit time on a filesystem. */
-  def commitTime(root: String, v: Int): Long = {
-    val f = versionFile(root, v)
-    "\"ts\":(\\d+)".r.findFirstMatchIn(Files.readString(f))
-      .map(_.group(1).toLong)
-      .getOrElse(Files.getLastModifiedTime(f).toMillis)
-  }
+  def commitTime(root: String, v: Int): Long =
+    manifestAt(root, v, anyFormat = true).ts
+      .getOrElse(Files.getLastModifiedTime(versionFile(root, v)).toMillis)
 
   /** TIMESTAMP time travel (Delta's `timestampAsOf`): the newest
     * retained version committed at or before `tsMillis`, or None when
     * the table's oldest retained commit is already newer. Commit
-    * stamps are monotonic per root (see writeManifest), so the answer
+    * stamps are monotonic per root (see [[successor]]), so the answer
     * is well-defined. A manifest expired between the listing and its
     * read is skipped, like every other retention-racing reader here. */
   def versionAsOf(root: String, tsMillis: Long): Option[Int] =
@@ -1040,36 +1026,23 @@ object VersionedTable {
   def history(spark: SparkSession, root: String): DataFrame = {
     val rows = versions(root).flatMap { v =>
       try {
-        val f = versionFile(root, v)
-        val raw = Files.readString(f)
-        val ts = tsOf(raw)
-          .getOrElse(Files.getLastModifiedTime(f).toMillis)
+        val m = manifestAt(root, v, anyFormat = true)
+        val ts = new java.sql.Timestamp(m.ts.getOrElse(
+          Files.getLastModifiedTime(versionFile(root, v)).toMillis))
         // ADVICE r15: one newer-format manifest must not blank the
         // whole listing — history is the incident tool for exactly
-        // the mixed-version-writer situation mverGuard detects.
+        // the mixed-version-writer situation manifestAt refuses.
         // Surface the refused version as a row instead of throwing
         // (commitTime/versionAsOf already read such stamps fine).
-        val readable =
-          try { mverGuard(root, v, raw); true }
-          catch { case _: IllegalStateException => false }
-        if (!readable) {
-          val mv = "\"mver\":(\\d+)".r.findFirstMatchIn(raw)
-            .map(_.group(1)).getOrElse("?")
-          Some(CommitInfo(v, new java.sql.Timestamp(ts),
-            s"unreadable:mver=$mv", KindUnstamped, None, None, 0, 0,
-            is_delta = false))
-        } else {
-          val txt = raw
-          Some(CommitInfo(v, new java.sql.Timestamp(ts),
-            "\"op\":\"([a-z_]+)\"".r.findFirstMatchIn(txt)
-              .map(_.group(1)).getOrElse(""),
-            stringFieldOf(txt, "wkind").getOrElse(KindUnstamped),
-            "\"txn\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong),
-            "\"nparts\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt),
-            if (txt.contains("\"parts\":")) partsOf(txt).size
-            else flatDirsOf(txt).size,
-            dropsOf(txt).size,
-            baseOf(txt).isDefined))
+        m.mver.filter(_ > ManifestVersion) match {
+          case Some(mv) =>
+            Some(CommitInfo(v, ts, s"unreadable:mver=$mv", KindUnstamped,
+              None, None, 0, 0, is_delta = false))
+          case None =>
+            Some(CommitInfo(v, ts, m.op, m.wkind.getOrElse(KindUnstamped),
+              m.txn, m.nParts,
+              if (m.partitioned) m.parts.size else m.dirs.size,
+              m.drops.size, m.base.isDefined))
         }
       } catch { case _: java.nio.file.NoSuchFileException => None }
     }
@@ -1093,12 +1066,13 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     val head = versions(root).lastOption.getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
-    val pm = manifestParts(root, head)
-    val p = partCountAt(root, head).getOrElse(
+    val m = manifestAt(root, head)
+    val pm = resolved(root, head, m)._1
+    val p = m.nParts.getOrElse(
       throw new IllegalStateException(
         s"$root has no partition-count stamp — point lookups need the " +
           "key-hash layout (readAt + filter scans flat tables)"))
-    val schema = manifestSchema(spark, root, head)
+    val schema = schemaOf(m)
     val keyLit = schema.flatMap(_.fields.find(_.name == pk))
       .map(f => lit(value).cast(f.dataType)).getOrElse(lit(value))
     // one-row local projection: evaluates the SAME codegen'd hash the
@@ -1200,7 +1174,8 @@ object VersionedTable {
     raw.flatMap { case (name, txt) =>
       val v = "\"version\":(\\d+)".r.findFirstMatchIn(txt)
         .map(_.group(1).toInt)
-      val tid = stringFieldOf(txt, "tableid").getOrElse("")
+      val tid = "\"tableid\":\"([0-9a-zA-Z-]+)\"".r.findFirstMatchIn(txt)
+        .map(_.group(1)).getOrElse("")
       v.filter(_ => tid == id).map(name -> _)
     }.toMap
   }
@@ -1255,33 +1230,17 @@ object VersionedTable {
         s"$root has no retained version $toV (expired or never " +
           "committed) — restore targets must be retained (pin release " +
           "candidates with tag())")
-      val next = head + 1
-      val txt = mverGuard(root, toV,
-        Files.readString(versionFile(root, toV)))
-      val headTxt = mverGuard(root, head,
-        Files.readString(versionFile(root, head)))
+      val target = manifestAt(root, toV)
       // identity/provenance are INCARNATION state — carried from the
       // head like any commit; content/layout/schema come from toV
-      val id = stringFieldOf(headTxt, "tableid")
-      val follow = stringFieldOf(headTxt, "followsrc")
-      val kinds = carryKinds(root, Some(headTxt))
-      val tmp =
-        if (txt.contains("\"parts\":") || txt.contains("\"base\":")) {
-          val (pm, ps) = resolved(root, toV, txt)
-          writeManifest(root, next, "restore", Nil, None,
-            parts = Some(pm), schemaDdl = schemaDdlOf(txt),
-            // from the text already in hand — no second multi-MB
-            // manifest read on the restore path (review r14)
-            nParts = "\"nparts\":(\\d+)".r.findFirstMatchIn(txt)
-              .map(_.group(1).toInt),
-            tableId = id,
-            followSrc = follow, pStats = Some(ps), kinds = kinds,
-            prevTs = tsOf(headTxt))
-        } else
-          writeManifest(root, next, "restore", flatDirsOf(txt), None,
-            tableId = id, followSrc = follow, kinds = kinds,
-            prevTs = tsOf(headTxt))
-      publish(root, next, tmp)
+      val content =
+        if (target.partitioned) {
+          val (pm, ps) = resolved(root, toV, target)
+          Content.partitioned(pm, ps)
+        } else Content.flat(target.dirs)
+      publish(root, successor(root, Some(manifestAt(root, head)), head + 1,
+        "restore", content, schemaDdl = target.schema,
+        nParts = target.nParts))
     }
 
   /** [[restore]] to the version a tag pinned — the named form an
@@ -1312,7 +1271,7 @@ object VersionedTable {
     * changes on a followed replica are refused; erase at the SOURCE.
     * Returns (rows deleted, rewritten partition labels). */
   def deleteKeys(spark: SparkSession, root: String, pk: String,
-      keys: DataFrame, tasksPerWrite: Int = 0,
+      keys: DataFrame,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.col
@@ -1321,13 +1280,15 @@ object VersionedTable {
     rebasing(headMoved) {
       val head = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
-      val pm = manifestParts(root, head)
-      val p = partCountAt(root, head).getOrElse(
+      val m = manifestAt(root, head)
+      val p = m.nParts.getOrElse(
         throw new IllegalStateException(
           s"$root has no key-hash layout — delete on flat tables by " +
             "overwrite commit"))
-      require(pm.nonEmpty, s"$root v$head is unpartitioned")
-      val schema = manifestSchema(spark, root, head)
+      require(m.partitioned, s"$root v$head is unpartitioned")
+      val pm = resolved(root, head, m)._1
+      if (pm.isEmpty) return (0L, Nil)
+      val schema = schemaOf(m)
       // hash with the table's OWN pk type: Spark's hash is
       // type-sensitive (hash(1) != hash(1L)), so a caller's Int
       // keys against a BIGINT column would prune to the WRONG
@@ -1362,8 +1323,8 @@ object VersionedTable {
           val survivors = existing
             .filter(col(PidCol).isInCollection(hit.toSeq))
             .join(k.select(col(pk)), Seq(pk), "left_anti")
-          commitErasure(root, head, survivors, hit, Some(p),
-            schema.map(_.toDDL), tasksPerWrite, meter, pipeline)
+          commitErasure(root, head, m, pm, existing, survivors, hit,
+            meter, pipeline)
           (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
         } finally existing.unpersist()
       } finally k.unpersist()
@@ -1386,7 +1347,6 @@ object VersionedTable {
   def updateWhere(spark: SparkSession, root: String, pk: String,
       cond: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
-      tasksPerWrite: Int = 0,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
@@ -1398,7 +1358,7 @@ object VersionedTable {
     require(!set.contains(PidCol),
       s"'$PidCol' is the reserved internal partition column")
     withHeadScan(spark, root, "update") {
-      (head, _, schema, existing) =>
+      (head, m, pm, existing) =>
         // the layout-key guard above is only as good as the name the
         // caller passed — a typo'd pk would disarm it and let the
         // REAL key be rewritten (review r14)
@@ -1433,8 +1393,7 @@ object VersionedTable {
                 when(matched, e.cast(types(c))).otherwise(col(c)).as(c))
                 .getOrElse(col(c))
             }: _*)
-          commitErasure(root, head, rewritten, hit,
-            partCountAt(root, head), schema.map(_.toDDL), tasksPerWrite,
+          commitErasure(root, head, m, pm, existing, rewritten, hit,
             meter, pipeline)
           (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
         }
@@ -1447,20 +1406,19 @@ object VersionedTable {
     * whole attempt, body included, re-runs on a head race
     * ([[rebasing]]). */
   private def withHeadScan(spark: SparkSession, root: String, what: String)(
-      body: (Int, Map[String, Seq[String]],
-        Option[org.apache.spark.sql.types.StructType], DataFrame)
+      body: (Int, Manifest, Map[String, Seq[String]], DataFrame)
         => (Long, Seq[String])): (Long, Seq[String]) =
     rebasing(headMoved) {
       val head = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
-      val pm = manifestParts(root, head)
-      require(pm.nonEmpty,
+      val m = manifestAt(root, head)
+      require(m.partitioned,
         s"$root v$head is unpartitioned — $what flat tables by " +
           "overwrite commit")
-      val schema = manifestSchema(spark, root, head)
+      val pm = resolved(root, head, m)._1
       val existing = readWithPid(spark, root,
-        pm.values.flatten.toSeq.sorted, schema).persist()
-      try body(head, pm, schema, existing)
+        pm.values.flatten.toSeq.sorted, schemaOf(m)).persist()
+      try body(head, m, pm, existing)
       finally existing.unpersist()
     }
 
@@ -1486,17 +1444,26 @@ object VersionedTable {
     * retention can then drop every pre-delete manifest at the next
     * expire instead of keeping them as delta ancestry, so the erasure
     * completes on the retention cadence, not the checkpoint
-    * interval's (Delta's checkpoint-then-clean shape). */
-  private def commitErasure(root: String, head: Int,
-      survivors: DataFrame, hit: Set[Int], nParts: Option[Int],
-      schemaDdl: Option[String], tasksPerWrite: Int,
+    * interval's (Delta's checkpoint-then-clean shape).
+    *
+    * `m`/`pm` are the head manifest and its resolved labels, `existing`
+    * the pid-tagged read the survivors came from. An erasure that
+    * empties the table stamps the read schema: with no data file left
+    * to infer one from, [[read]] would otherwise fail instead of
+    * serving an empty typed frame. */
+  private def commitErasure(root: String, head: Int, m: Manifest,
+      pm: Map[String, Seq[String]], existing: DataFrame,
+      survivors: DataFrame, hit: Set[Int],
       meter: Option[graft.streaming.EgressMeter], pipeline: String): Unit = {
-    val staged = stagePartitioned(survivors, root, PidCol, tasksPerWrite)
+    val staged = stagePartitioned(survivors, root, PidCol)
     meter.foreach(_.add(pipeline, root, "table_copy",
       stagedPartBytes(root, staged)))
     val emptied = hit.map(_.toString) -- staged.keySet
+    val schemaDdl = m.schema.orElse(
+      Some(existing.drop(PidCol).schema.toDDL)
+        .filter(_ => (pm.keySet -- emptied).isEmpty))
     commitPartitionsOnce(staged, root, head, dropParts = emptied,
-      nParts = nParts, schemaDdl = schemaDdl, forceCheckpoint = true)
+      nParts = m.nParts, schemaDdl = schemaDdl, forceCheckpoint = true)
     ()
   }
 
@@ -1509,12 +1476,12 @@ object VersionedTable {
     * (pruned read, no full scan). Returns (rows deleted, rewritten
     * partition labels). */
   def deleteWhere(spark: SparkSession, root: String,
-      cond: org.apache.spark.sql.Column, tasksPerWrite: Int = 0,
+      cond: org.apache.spark.sql.Column,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     withHeadScan(spark, root, "delete on") {
-      (head, _, schema, existing) =>
+      (head, m, pm, existing) =>
         val matched = coalesce(cond, lit(false))
         // hit pids AND the doomed-row count from ONE aggregation
         val hitCounts = existing.filter(matched).groupBy(PidCol).count()
@@ -1525,8 +1492,7 @@ object VersionedTable {
           val survivors = existing
             .filter(col(PidCol).isInCollection(hit.toSeq))
             .filter(not(matched))
-          commitErasure(root, head, survivors, hit,
-            partCountAt(root, head), schema.map(_.toDDL), tasksPerWrite,
+          commitErasure(root, head, m, pm, existing, survivors, hit,
             meter, pipeline)
           (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
         }
@@ -1556,7 +1522,7 @@ object VersionedTable {
     rebasing(headMoved, maxAttempts) {
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
-      if (manifestParts(root, base).nonEmpty)
+      if (manifestAt(root, base).partitioned)
         throw new IllegalStateException(
           s"$root v$base is partitioned; compact() would flatten its " +
             "layout and drop its manifest schema — use compactPartitions()")
@@ -1581,7 +1547,7 @@ object VersionedTable {
     * rewritten partition labels (empty = nothing over budget, no
     * commit). */
   def compactPartitions(spark: SparkSession, root: String,
-      maxFilesPerPart: Int = 1, tasksPerWrite: Int = 0,
+      maxFilesPerPart: Int = 1,
       maxAttempts: Int = CommitAttempts,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Seq[String] = {
@@ -1597,36 +1563,35 @@ object VersionedTable {
     rebasing(headMoved, maxAttempts) {
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
-      val pm = manifestParts(root, base)
-      require(pm.nonEmpty,
+      val m = manifestAt(root, base)
+      require(m.partitioned,
         s"$root v$base is unpartitioned; use compact()")
       // budget check from stamped manifest stats when present —
       // O(P) metadata instead of an O(table files) stat walk;
       // unstamped labels (pre-stamp manifests) walk once
-      val stats = manifestPStatsAt(root, base)
+      val (pm, stats) = resolved(root, base, m)
       val over = pm.filter { case (k, ds) =>
         ds.size > 1 || stats.get(k).map(_._2)
           .getOrElse(ds.map(parquetFiles).sum) > maxFilesPerPart }
       if (over.isEmpty) return Nil
-      val schema = manifestSchema(spark, root, base)
       val dirs = over.values.flatten.toSeq.sorted
         .map(rel => Paths.get(root, rel).toString)
       import org.apache.spark.sql.functions.{col, regexp_extract}
-      val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
+      val reader = schemaOf(m).map(spark.read.schema(_)).getOrElse(spark.read)
       // recovery column uses the RESERVED name: a data column named
       // "pid" is legal and must not be clobbered by the path-derived
       // partition label
       val df = reader.parquet(dirs: _*)
         .withColumn(PidCol, regexp_extract(
           col("_metadata.file_path"), "/pid=(\\d+)/", 1).cast("int"))
-      val staged = stagePartitioned(df, root, PidCol, tasksPerWrite)
+      val staged = stagePartitioned(df, root, PidCol)
       // meter per attempt: a lost race's staged dirs are real bytes
       // physically written (vacuum reclaims files, not the bill) —
       // same accounting rule as commitOnce's table_copy path
       meter.foreach(_.add(pipeline, root, "table_copy",
         stagedPartBytes(root, staged)))
       commitPartitionsOnce(staged, root, base,
-        schemaDdl = schema.map(_.toDDL), writerKind = KindMaintenance,
+        schemaDdl = m.schema, writerKind = KindMaintenance,
         forceCheckpoint = true)
       over.keys.toSeq.sorted
     }
@@ -1663,7 +1628,7 @@ object VersionedTable {
     * @param pk the key column whose [[keyPid]] hash defines the
     *   layout — must be the same key every writer of this table uses */
   def rescalePartitions(spark: SparkSession, root: String, pk: String,
-      newP: Int, tasksPerWrite: Int = 0, maxAttempts: Int = CommitAttempts,
+      newP: Int, maxAttempts: Int = CommitAttempts,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Int = {
     require(newP > 0, "newP must be positive")
@@ -1671,26 +1636,25 @@ object VersionedTable {
       awaitWriters(root)
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
-      val pm = manifestParts(root, base)
-      require(pm.nonEmpty,
+      val m = manifestAt(root, base)
+      require(m.partitioned,
         s"$root v$base is unpartitioned; rescale applies to partitioned " +
           "tables (seed one with commitPartitions)")
-      val schema = manifestSchema(spark, root, base)
-      val dirs = pm.values.flatten.toSeq.sorted
+      val dirs = resolved(root, base, m)._1.values.flatten.toSeq.sorted
         .map(rel => Paths.get(root, rel).toString)
-      val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
+      val reader = schemaOf(m).map(spark.read.schema(_)).getOrElse(spark.read)
       val df = reader.parquet(dirs: _*)
       require(!df.columns.contains(PidCol),
         s"'$PidCol' is the reserved internal partition column")
       val staged = stagePartitioned(
-        df.withColumn(PidCol, keyPid(pk, newP)), root, PidCol, tasksPerWrite)
+        df.withColumn(PidCol, keyPid(pk, newP)), root, PidCol)
       // per attempt, like compactPartitions: a lost race's staged
       // dirs are bytes physically written (vacuum reclaims files,
       // not bills)
       meter.foreach(_.add(pipeline, root, "table_copy",
         stagedPartBytes(root, staged)))
       commitPartitionsOnce(staged, root, base,
-        overwriteAll = true, schemaDdl = schema.map(_.toDDL),
+        overwriteAll = true, schemaDdl = m.schema,
         nParts = Some(newP), writerKind = KindMaintenance)
     }
   }
@@ -1707,7 +1671,7 @@ object VersionedTable {
     * [[compactPartitions]] runs (the table-maintenance loop); returns
     * the (oldP, newP) transition or None when under budget. */
   def rescaleIfNeeded(spark: SparkSession, root: String, pk: String,
-      targetBytesPerPart: Long, tasksPerWrite: Int = 0,
+      targetBytesPerPart: Long,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Option[(Int, Int)] = {
     require(targetBytesPerPart > 0, "budget must be positive")
@@ -1719,13 +1683,12 @@ object VersionedTable {
     val grow: Option[(Int, Int)] =
       try rebasing(headMoved) {
         val head = versions(root).lastOption.getOrElse(return None)
-        val p = partCountAt(root, head).getOrElse(return None)
-        val pm = manifestParts(root, head)
-        if (pm.isEmpty) return None
+        val m = manifestAt(root, head)
+        val p = m.nParts.getOrElse(return None)
         // stamped stats make the trigger an O(P) manifest read; a
         // table whose manifests predate the stamp pays the walk until
         // its next commit re-stamps it
-        val stats = manifestPStatsAt(root, head)
+        val (pm, stats) = resolved(root, head, m)
         val total =
           if (pm.keySet.subsetOf(stats.keySet))
             pm.keysIterator.map(stats(_)._1).sum
@@ -1742,7 +1705,7 @@ object VersionedTable {
         Some((p, math.min(newP, 1L << 30).toInt))
       } catch { case e: Exception if headMoved(e) => None }
     grow.foreach { case (_, newP) =>
-      rescalePartitions(spark, root, pk, newP, tasksPerWrite,
+      rescalePartitions(spark, root, pk, newP,
         meter = meter, pipeline = pipeline)
     }
     grow
@@ -1777,15 +1740,15 @@ object VersionedTable {
     * leave it at the default when any writer may be live. */
   def maintain(spark: SparkSession, root: String, pk: String,
       targetBytesPerPart: Long = 1L << 30, maxFilesPerPart: Int = 1,
-      keepLast: Int = 1, tasksPerWrite: Int = 0,
+      keepLast: Int = 1,
       vacuumGraceMillis: Long = 20 * 60 * 1000L,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Maintenance = {
     val rescaled = rescaleIfNeeded(spark, root, pk, targetBytesPerPart,
-      tasksPerWrite, meter = meter, pipeline = pipeline)
+      meter = meter, pipeline = pipeline)
     val compacted =
       if (rescaled.isDefined) Nil
-      else compactPartitions(spark, root, maxFilesPerPart, tasksPerWrite,
+      else compactPartitions(spark, root, maxFilesPerPart,
         meter = meter, pipeline = pipeline)
     val expired = expire(root, keepLast)
     val vacuumed = vacuum(root, vacuumGraceMillis)
@@ -1825,9 +1788,9 @@ object VersionedTable {
       s"$root has no retained version $v (expired or never committed) — " +
         "re-bootstrap from a full snapshot (TableFollower does this " +
         "automatically)"))
-    val pmFrom = manifestParts(root, fromV)
-    val pmTo = manifestParts(root, toV)
-    val schema = manifestSchema(spark, root, toV)
+    val mFrom = manifestAt(root, fromV)
+    val mTo = manifestAt(root, toV)
+    val schema = schemaOf(mTo)
     def readDirs(rels: Seq[String]): Option[DataFrame] =
       if (rels.isEmpty) None
       else {
@@ -1836,9 +1799,11 @@ object VersionedTable {
           .parquet(paths: _*))
       }
     val (oldDf, newDf) =
-      if (pmFrom.nonEmpty && pmTo.nonEmpty) {
+      if (mFrom.partitioned && mTo.partitioned) {
         // prune: a label reads only if its dir set moved (covers
         // replaced, added, and removed partitions)
+        val pmFrom = resolved(root, fromV, mFrom)._1
+        val pmTo = resolved(root, toV, mTo)._1
         val labels = (pmFrom.keySet ++ pmTo.keySet)
           .filter(l => pmFrom.get(l) != pmTo.get(l)).toSeq.sorted
         (readDirs(labels.flatMap(pmFrom.getOrElse(_, Nil))),
@@ -1846,8 +1811,8 @@ object VersionedTable {
       } else
         // flat (or migration-boundary) fallback: full two-snapshot
         // diff, both sides still under toV's schema via readDirs
-        (readDirs(manifestDirs(root, fromV)),
-          readDirs(manifestDirs(root, toV)))
+        (readDirs(liveDirs(root, fromV, mFrom)),
+          readDirs(liveDirs(root, toV, mTo)))
     // "_change_type" is this feed's reserved output column (the Delta
     // CDF name): a table with a NATURAL column of that name would be
     // silently clobbered by the withColumn below and then dropped by
@@ -1919,16 +1884,6 @@ object VersionedTable {
   private def condemnFile(root: String, v: Int): Path =
     versionsDir(root).resolve(f".condemn-v$v%08d.json")
 
-  /** Manifest text of `v`, live or mid-condemnation — what lets the
-    * pin walk resolve a tag whose chain this very pass condemned. */
-  private def versionTxt(root: String, v: Int): String = {
-    val f = versionFile(root, v)
-    val txt =
-      if (Files.exists(f)) Files.readString(f)
-      else Files.readString(condemnFile(root, v))
-    mverGuard(root, v, txt)
-  }
-
   def expire(root: String, keepLast: Int = 1): Seq[Int] = {
     require(keepLast >= 1, "must retain at least the current version")
     // the walk and the deletes race other retention actors (a manual
@@ -1961,15 +1916,11 @@ object VersionedTable {
       val vs = versions(root)
       val nominal = vs.dropRight(keepLast)
       if (nominal.isEmpty) return Nil
-      def chainRoot(v: Int): Int = {
-        var f = v
-        var txt = versionTxt(root, f)
-        while (baseOf(txt).isDefined) {
-          f = baseOf(txt).get
-          txt = versionTxt(root, f)
-        }
-        f
-      }
+      // reads a manifest live or mid-condemnation, so the pin walk
+      // resolves a tag whose chain this very pass condemned
+      def chainRoot(v: Int): Int =
+        manifestAt(root, v, condemned = !Files.exists(versionFile(root, v)))
+          .base.fold(v)(chainRoot)
       val floor = chainRoot(vs(math.max(0, vs.size - keepLast)))
       // stale-incarnation tags pin nothing (tags() excludes them);
       // a tag of an already-expired version likewise
@@ -2056,9 +2007,9 @@ object VersionedTable {
         val walked = Set.newBuilder[Int]
         versions(root).foreach { v =>
           walked += v
-          val txt = mverGuard(root, v, Files.readString(versionFile(root, v)))
-          if (txt.contains("\"parts\":") || txt.contains("\"base\":")) {
-            (baseOf(txt), running) match {
+          val m = manifestAt(root, v)
+          if (m.partitioned) {
+            (m.base, running) match {
               case (Some(b), Some((rv, rm))) if rv == b =>
                 // the base's dirs are already in acc (it is itself a
                 // retained version the loop visited): only THIS
@@ -2066,16 +2017,16 @@ object VersionedTable {
                 // it drops stays live through the earlier versions
                 // that reference it, which is exactly the union the
                 // live set wants
-                running = Some((v, applyDelta(rm, txt)))
-                acc ++= partsOf(txt).values.flatten
+                running = Some((v, applyDelta(rm, m)))
+                acc ++= m.parts.values.flatten
               case _ =>
-                val pm = resolved(root, v, txt)._1
+                val pm = resolved(root, v, m)._1
                 running = Some((v, pm))
                 acc ++= pm.values.flatten
             }
           } else {
             running = None
-            acc ++= flatDirsOf(txt)
+            acc ++= m.dirs
           }
         }
         // CONDEMNED manifests count as live (review r14): an expire's
@@ -2096,10 +2047,9 @@ object VersionedTable {
             finally ls.close()
           condemned.foreach { p =>
             try {
-              val txt = Files.readString(p)
-              if (txt.contains("\"parts\":") || txt.contains("\"base\":"))
-                acc ++= partsOf(txt).values.flatten
-              else acc ++= flatDirsOf(txt)
+              val m = manifestAt(root,
+                p.getFileName.toString.substring(10, 18).toInt, condemned = true)
+              acc ++= (if (m.partitioned) m.parts.values.flatten else m.dirs)
             } catch { case _: java.nio.file.NoSuchFileException => () }
           }
         }
@@ -2112,10 +2062,7 @@ object VersionedTable {
         // bow-out, same as the first walk.
         val walkedSet = walked.result()
         versions(root).filterNot(walkedSet.contains).foreach { v =>
-          val txt = mverGuard(root, v, Files.readString(versionFile(root, v)))
-          if (txt.contains("\"parts\":") || txt.contains("\"base\":"))
-            acc ++= resolved(root, v, txt)._1.values.flatten
-          else acc ++= flatDirsOf(txt)
+          acc ++= liveDirs(root, v, manifestAt(root, v))
         }
         acc.result()
       } catch {

@@ -72,7 +72,7 @@ private[streaming] object PartitionedMerge {
       val p = VersionedTable.partCount(root).getOrElse(configuredP)
       val parts = VersionedTable.parts(root)
       val flatLegacy = migrateFlat && parts.isEmpty &&
-        VersionedTable.versions(root).nonEmpty
+        VersionedTable.isFlat(root)
       val batch = rows.withColumn(Pid, VersionedTable.keyPid(pk, p)).persist()
       try {
         val touched: Set[Int] =

@@ -77,6 +77,33 @@ class DeleteSpec extends SparkSpec {
       .filter(col("user_id").isin(10L, 11L)).count() == 0)
   }
 
+  test("erasing every key leaves a readable, mergeable, compactable table") {
+    // all labels gone writes "parts":{} — the table is still
+    // partitioned, and with no data file left the erasure's schema
+    // stamp is what lets read() serve an empty typed frame
+    val root = freshRoot("del-all")
+    val target = new PartitionedTableCdcTarget(spark, root, 4)
+    target.merge(0, (1L to 3L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
+    val (n, _) = VersionedTable.deleteKeys(spark, root, "user_id",
+      Seq(1L, 2L, 3L).toDF("user_id"))
+    assert(n == 3)
+    assert(VersionedTable.parts(root).isEmpty)
+    assert(target.snapshot.count() == 0)
+    assert(VersionedTable.read(spark, root).columns.contains("user_id"))
+
+    // the next merge takes the partitioned path, not flat migration
+    target.merge(1, Seq(ap(4L, 4L, 1004L, 4.0)).toDS())
+    assert(target.snapshot.as[CdcApplied].collect().map(_.user_id).toSeq
+      == Seq(4L))
+    assert(VersionedTable.partCount(root).contains(4))
+
+    // an emptied head is partitioned: compactPartitions applies to it
+    VersionedTable.deleteKeys(spark, root, "user_id", Seq(4L).toDF("user_id"))
+    assert(VersionedTable.compactPartitions(spark, root).isEmpty)
+    assert(VersionedTable.deleteKeys(spark, root, "user_id",
+      Seq(4L).toDF("user_id")) == ((0L, Nil)))
+  }
+
   test("the feed emits true deletes; a replica converges; retention finishes the erasure") {
     val src = freshRoot("del-src2"); val dst = freshRoot("del-dst2")
     val upstream = new PartitionedTableCdcTarget(spark, src, P)
