@@ -77,7 +77,7 @@ object ScaleStress {
     val marker = new java.io.File(s"$outDir/_GRAFT_SCALE_${factor}x")
     if (marker.exists()) { println(s"[scale] reuse $outDir (${factor}x)"); return }
     println(s"[scale] materializing ${factor}x into $outDir")
-    def read(t: String) = spark.read.parquet(s"$baseDir/$t.parquet")
+    def read(t: String) = sources.Tables.load(spark, baseDir, t)
     // 32 files per table: a real corpus is many files, and AQE's
     // skew split can only cut a reduce partition at MAP-output
     // boundaries — a single-file scan is one mapper, whose skewed
@@ -242,7 +242,7 @@ object ScaleStress {
     val marker = new java.io.File(s"$outDir/_GRAFT_SCALE_SKEW_${factor}x")
     if (marker.exists()) { println(s"[scale] reuse $outDir (skew ${factor}x)"); return }
     println(s"[scale] materializing skewed ${factor}x into $outDir")
-    def read(t: String) = spark.read.parquet(s"$baseDir/$t.parquet")
+    def read(t: String) = sources.Tables.load(spark, baseDir, t)
     // 32 files per table: a real corpus is many files, and AQE's
     // skew split can only cut a reduce partition at MAP-output
     // boundaries — a single-file scan is one mapper, whose skewed
@@ -307,7 +307,7 @@ object ScaleStress {
     val marker = new java.io.File(s"$outDir/_GRAFT_SCALE_TOK_${factor}x")
     if (marker.exists()) { println(s"[scale] reuse $outDir (tok ${factor}x)"); return }
     println(s"[scale] materializing token-iso ${factor}x into $outDir")
-    def read(t: String) = spark.read.parquet(s"$baseDir/$t.parquet")
+    def read(t: String) = sources.Tables.load(spark, baseDir, t)
     def write(t: String, df: DataFrame): Unit =
       df.repartition(32).write.mode("overwrite")
         .parquet(s"$outDir/$t.parquet")
@@ -423,7 +423,7 @@ object ScaleStress {
     val marker = new java.io.File(s"$outDir/_GRAFT_SCALE_BYTE_${factor}x")
     if (marker.exists()) { println(s"[scale] reuse $outDir (byte ${factor}x)"); return }
     println(s"[scale] materializing byte-iso ${factor}x into $outDir")
-    def read(t: String) = spark.read.parquet(s"$baseDir/$t.parquet")
+    def read(t: String) = sources.Tables.load(spark, baseDir, t)
     def write(t: String, df: DataFrame): Unit =
       df.repartition(32).write.mode("overwrite")
         .parquet(s"$outDir/$t.parquet")

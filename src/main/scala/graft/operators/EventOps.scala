@@ -1556,14 +1556,18 @@ object EventOps extends Suite {
   // and a channel's credit is its REMOVAL EFFECT — how much
   // conversion drops when the channel is knocked out (made absorbing
   // to NULL). All variants (full + one per channel) iterate
-  // TOGETHER: the value vector is keyed (variant, node), so 12
-  // fixed-point rounds are 12 tiny checkpointed jobs over an
-  // (alphabet+3)·variants frame — never one chain per channel.
+  // TOGETHER in ONE task: the staged transition counts
+  // ((alphabet+3)²·variants rows, constant in the corpus) go through
+  // coalesce(1) into one mapPartitions kernel (`markovRounds`) that
+  // runs the 12 fixed-point rounds over the value vector keyed
+  // (variant, node) in the task's memory — never one chain per
+  // channel, never one Spark job per round.
   // Exactness: transition weights stay integer COUNTS (never
   // pre-divided probabilities); each round's value update is the
-  // half-up micro quotient of Σcnt·v / Σcnt, so the oracle's 12
-  // unrolled CTE rounds replay the trajectory bit-for-bit — the
-  // hash gate verifies the whole fixed-point computation, the
+  // half-up micro quotient of Σcnt·v / Σcnt in exact Long arithmetic
+  // (overflow raises, as ANSI SQL does), so the oracle's 12 unrolled
+  // CTE rounds replay the trajectory bit-for-bit — the hash gate
+  // verifies the whole fixed-point computation, the
   // sim_kmeans/txt_quality_distill loop contract. Removal effects
   // clamp at 0 (quantization can wobble ±1µ around a no-op removal)
   // and the share denominator guards the all-zero case with the 0.0
@@ -1614,16 +1618,15 @@ object EventOps extends Suite {
     val channels = counts.select(col("s")).distinct()
       .filter(col("s") =!= "START")
     // everything below `counts` is alphabet-bounded ((alphabet+3) ×
-    // (channels+1) rows — constant in the corpus), so it runs
-    // SINGLE-PARTITION (r16): coalesce(1) reports SinglePartition,
-    // which satisfies every downstream join/agg distribution, and the
-    // 12 fixed-point rounds unroll LAZILY with ZERO exchanges into
-    // the one final action — the former per-round eager staging paid
-    // 12 jobs + an exchange pair per round for frames of a few
-    // hundred rows (76 jobs -> ~10 measured, r16). At any corpus
-    // scale this frame stays alphabet²-sized, so one partition is the
-    // right plan at 100 TB too; `counts` above remains the staged
-    // corpus-lineage truncation point.
+    // (channels+1) rows — constant in the corpus), so the staged
+    // transition frame runs SINGLE-PARTITION: coalesce(1) reports
+    // SinglePartition, which satisfies the START-filter aggs below,
+    // and the 12 rounds run inside the final action's one task:
+    // staging each round would add a broadcast collect and a
+    // localCheckpoint per round (36 jobs per query against 10). At any
+    // corpus scale this frame stays alphabet²-sized, so one partition
+    // is the right plan at 100 TB too; `counts` above remains the
+    // staged corpus-lineage truncation point.
     val trans = counts
       .select(lit("full").as("variant"), col("s"), col("d"), col("cnt"))
       .unionAll(counts
@@ -1633,35 +1636,7 @@ object EventOps extends Suite {
         .groupBy("variant", "s", "d").agg(sum(col("cnt")).as("cnt"))
         .select(col("variant"), col("s"), col("d"), col("cnt")))
       .transform(Ckpt.stage)
-      .coalesce(1)
-    var v = trans.select(col("variant"), col("d").as("node")).distinct()
-      .withColumn("v",
-        when(col("node") === "CONV", lit(1000000L)).otherwise(lit(0L)))
-      .transform(Ckpt.stage).coalesce(1)
-    // the absorbing rows are LOOP-INVARIANT (no transition ever has
-    // s = CONV/NULL — CONV is terminal by the pp truncation and NULL
-    // only ever appears as a destination — so the agg branch never
-    // rewrites them and every round's union re-emits v0's values
-    // unchanged), so they derive once from the staged v0.
-    val vAbs = v.filter(col("node").isin("CONV", "NULL"))
-    for (_ <- 1 to markovIters) {
-      // merge hint + SinglePartition staged leaves: the join of two
-      // coalesce(1) scans sorts in place (no exchange, no broadcast
-      // job) and the agg rides the same single partition, so each
-      // round's staging job is ONE task with ZERO exchanges — the
-      // r15 form paid a 2-exchange join + agg exchange + an AQE
-      // broadcast job per round (76 jobs total, measured; a fully
-      // lazy unroll was worse still: AQE re-plans ~3 shuffle stages
-      // per round sequentially, 42 jobs / 7.4 s warm).
-      v = trans
-        .join(broadcast(v.select(col("variant"), col("node").as("d"),
-          col("v"))), Seq("variant", "d"))
-        .groupBy(col("variant"), col("s").as("node"))
-        .agg(expr("cast((2 * sum(cnt * v) + sum(cnt)) " +
-          "div (2 * sum(cnt)) as bigint)").as("v"))
-        .unionAll(vAbs)
-        .transform(Ckpt.stage).coalesce(1)
-    }
+    val v = markovValues(trans)
     val conv = v.filter(col("node") === "START")
       .select(col("variant"), col("v"))
     val base = conv.filter(col("variant") === "full")
@@ -1679,6 +1654,50 @@ object EventOps extends Suite {
             .cast("double") / 1000000.0).otherwise(lit(0.0))
           .as("attribution"))
       .orderBy("channel")
+  }
+
+  /** The value vector after [[markovIters]] fixed-point rounds over a
+    * transition frame (variant, s, d, cnt), as (variant, node, v)
+    * rows: [[markovRounds]] in one task over the coalesced frame. */
+  private[operators] def markovValues(trans: DataFrame): DataFrame = {
+    import trans.sparkSession.implicits._
+    trans.select(col("variant"), col("s"), col("d"), col("cnt"))
+      .coalesce(1)
+      .as[(String, String, String, Long)]
+      .mapPartitions(rows => markovRounds(rows.toSeq, markovIters).iterator)
+      .toDF("variant", "node", "v")
+  }
+
+  /** `rounds` value iterations of the SQL round in
+    * [[evAttributionMarkovSql]], row for row: v0 is every distinct
+    * (variant, d) at 1e6 for CONV and 0 otherwise; each round inner-
+    * joins the transitions to the current values on (variant, d) —
+    * a transition whose destination has no value (or a NULL key) is
+    * dropped from both sums, and a source left with no transition has
+    * no value next round — sets (2·Σcnt·v + Σcnt) div (2·Σcnt) per
+    * (variant, s) and carries the CONV/NULL rows of v0 over (UNION
+    * ALL, so a value row is kept per union branch). Every product and
+    * sum is exact: an overflow raises [[ArithmeticException]] where
+    * ANSI SQL raises its arithmetic overflow error. */
+  private[operators] def markovRounds(trans: Seq[(String, String, String, Long)],
+      rounds: Int): Seq[(String, String, Long)] = {
+    val v0 = trans.map { case (variant, _, d, _) => (variant, d) }.distinct
+      .map { case (variant, d) => (variant, d, if (d == "CONV") 1000000L else 0L) }
+    val absorbing = v0.filter { case (_, node, _) => node == "CONV" || node == "NULL" }
+    (1 to rounds).foldLeft(v0) { (v, _) =>
+      val values = v.filter { case (variant, node, _) => variant != null && node != null }
+        .groupMap { case (variant, node, _) => (variant, node) }(_._3)
+      val sums = scala.collection.mutable.LinkedHashMap.empty[(String, String), (Long, Long)]
+      for ((variant, s, d, cnt) <- trans; x <- values.getOrElse((variant, d), Nil)) {
+        val (n, nv) = sums.getOrElse((variant, s), (0L, 0L))
+        sums((variant, s)) =
+          (Math.addExact(n, cnt), Math.addExact(nv, Math.multiplyExact(cnt, x)))
+      }
+      sums.toSeq.map { case ((variant, s), (n, nv)) =>
+        (variant, s, Math.addExact(Math.multiplyExact(2L, nv), n) /
+          Math.multiplyExact(2L, n))
+      } ++ absorbing
+    }
   }
 
   private val evAttributionMarkovSql = {

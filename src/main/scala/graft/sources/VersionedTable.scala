@@ -582,7 +582,12 @@ object VersionedTable {
     versions(root).lastOption
       .map(v => resolved(root, v, manifestAt(root, v))._2).getOrElse(Map.empty)
 
-  /** (bytes, parquet files) physically under one relative dir. */
+  /** (bytes, parquet files) physically under one relative dir. The
+    * bytes of a staged dir are the byte-accounting measure for
+    * [[graft.streaming.EgressMeter]] (etl_processed_bytes' billing
+    * analog): what a commit attempt physically wrote, including
+    * attempts later orphaned by a lost commit race (bytes moved are
+    * bytes moved; vacuum reclaims the files, not the bill). */
   private def dirStats(root: String, rel: String): (Long, Int) = {
     val w = Files.walk(Paths.get(root, rel))
     try {
@@ -749,7 +754,7 @@ object VersionedTable {
 
   /** Bytes under every dir of a staged partition map. */
   private def stagedPartBytes(root: String, parts: Map[String, String]): Long =
-    parts.values.map(stagedBytes(root, _)).sum
+    parts.values.map(dirStats(root, _)._1).sum
 
   /** One optimistic PARTITION-SCOPED commit attempt at `expected + 1`:
     * the new manifest carries the previous version's partition map
@@ -894,18 +899,6 @@ object VersionedTable {
     }
   }
 
-  /** Exact on-disk bytes of one staged data dir — the byte-accounting
-    * measure for [[graft.streaming.EgressMeter]] (etl_processed_bytes'
-    * billing analog): what this commit attempt physically wrote,
-    * including attempts later orphaned by a lost commit race (bytes
-    * moved are bytes moved; vacuum reclaims the files, not the bill). */
-  private def stagedBytes(root: String, rel: String): Long = {
-    val s = Files.walk(Paths.get(root, rel))
-    try s.iterator.asScala
-      .filter(Files.isRegularFile(_)).map(Files.size).sum
-    finally s.close()
-  }
-
   /** One optimistic commit attempt at exactly `expected + 1`.
     * @throws ConcurrentCommit if that version already landed */
   def commitOnce(df: DataFrame, root: String, overwrite: Boolean,
@@ -918,7 +911,7 @@ object VersionedTable {
     val staged = stage(df, root)
     meter.foreach(_.add(pipeline, root,
       if (txn.isDefined) "streaming" else "table_copy",
-      stagedBytes(root, staged)))
+      dirStats(root, staged)._1))
     val prev: Option[Manifest] =
       if (expected == 0) None
       else Some(raceGuard(next)(manifestAt(root, expected)))
@@ -1422,10 +1415,12 @@ object VersionedTable {
       finally existing.unpersist()
     }
 
-  /** Hit-partition reader shared by the erasure ops: the given
-    * relative dirs under the (optional) manifest schema, with the
-    * partition label recovered from the file path (the
-    * stagePartitioned layout invariant, as compactPartitions does). */
+  /** Partition reader shared by the erasure ops and
+    * [[compactPartitions]]: the given relative dirs under the
+    * (optional) manifest schema, with the partition label recovered
+    * from the file path (the stagePartitioned layout invariant) into
+    * the RESERVED [[PidCol]] — a data column named "pid" is legal and
+    * must not be clobbered by the path-derived label. */
   private def readWithPid(spark: SparkSession, root: String,
       dirs: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
@@ -1551,12 +1546,6 @@ object VersionedTable {
       maxAttempts: Int = CommitAttempts,
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): Seq[String] = {
-    def parquetFiles(rel: String): Int = {
-      val s = Files.walk(Paths.get(root, rel))
-      try s.iterator.asScala.count(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      finally s.close()
-    }
     // the WHOLE attempt rebases: the base's manifest (or its small
     // files) can be expired/vacuumed by a maintenance racer between
     // the versions() listing and any read below
@@ -1572,18 +1561,10 @@ object VersionedTable {
       val (pm, stats) = resolved(root, base, m)
       val over = pm.filter { case (k, ds) =>
         ds.size > 1 || stats.get(k).map(_._2)
-          .getOrElse(ds.map(parquetFiles).sum) > maxFilesPerPart }
+          .getOrElse(ds.map(dirStats(root, _)._2).sum) > maxFilesPerPart }
       if (over.isEmpty) return Nil
-      val dirs = over.values.flatten.toSeq.sorted
-        .map(rel => Paths.get(root, rel).toString)
-      import org.apache.spark.sql.functions.{col, regexp_extract}
-      val reader = schemaOf(m).map(spark.read.schema(_)).getOrElse(spark.read)
-      // recovery column uses the RESERVED name: a data column named
-      // "pid" is legal and must not be clobbered by the path-derived
-      // partition label
-      val df = reader.parquet(dirs: _*)
-        .withColumn(PidCol, regexp_extract(
-          col("_metadata.file_path"), "/pid=(\\d+)/", 1).cast("int"))
+      val df = readWithPid(spark, root, over.values.flatten.toSeq.sorted,
+        schemaOf(m))
       val staged = stagePartitioned(df, root, PidCol)
       // meter per attempt: a lost race's staged dirs are real bytes
       // physically written (vacuum reclaims files, not the bill) —
@@ -1692,7 +1673,7 @@ object VersionedTable {
         val total =
           if (pm.keySet.subsetOf(stats.keySet))
             pm.keysIterator.map(stats(_)._1).sum
-          else pm.values.flatten.map(stagedBytes(root, _)).sum
+          else pm.values.flatten.map(dirStats(root, _)._1).sum
         if (total <= targetBytesPerPart.toDouble * p) return None
         // Long arithmetic with a hard cap: a pathological
         // bytes/budget ratio above 2³¹ would wrap an Int doubling
