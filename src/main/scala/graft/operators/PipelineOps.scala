@@ -122,77 +122,74 @@ object PipelineOps extends Suite {
   // exact-dup and near-dup pairs form an undirected graph; a dup
   // CLUSTER is a connected component, and the keeper is the minimum
   // doc_id in the component (a→b→c chains collapse to one keeper even
-  // when (a,c) was never compared). Implemented as iterative min-label
-  // propagation — each round is one join + aggregate, labels converge
-  // in O(component diameter) rounds (components here are near-cliques,
-  // 2-3 rounds; at 100 TB you'd switch to pointer-jumping/large-star
-  // for O(log n) rounds, same join shape). The driver loop only
-  // checks a convergence COUNT per round — no row data ever collects.
-  // Four §H queries consume the converged labels (dup_clusters,
+  // when (a,c) was never compared). The graph is the pair set, not the
+  // corpus (sf0.01: 6 pairs touching 12 docs; sf0.1: 85 pairs, 163 of
+  // 5,000 docs; no cluster over 3 docs), so the pairs coalesce into ONE
+  // task running a union-find kernel ([[components]]) that labels every
+  // component in one pass, whatever its diameter. Its memory is one
+  // LongMap entry per touched doc; the map is broadcast to a lookup
+  // over documents (an untouched doc is its own cluster), and the
+  // result is staged once for the four §H consumers (dup_clusters,
   // curate_cc, split, funnel_report) through Memo.clusterLabels.
+  // A lookup, not a broadcast left join: the staged frame keeps its
+  // plan's size estimate, and a left outer join's is the product of its
+  // sides (70.8 TiB at sf0.001), which turns the consumers' joins into
+  // shuffle joins.
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     Memo(Memo.clusterLabels, spark, dir)(computeClusterLabels(spark, dir))
 
   private[graft] def invalidateClusterMemo(): Unit = Memo.clear(Memo.clusterLabels)
 
   private def computeClusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select("doc_id")
     val exactPairs = Tables.documents(spark, dir)
       .groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("a_id"), collect_set(col("doc_id")).as("ids"))
       .select(col("a_id"), explode(col("ids")).as("b_id"))
       .filter(col("a_id") < col("b_id"))
     val nearPairs = DedupOps.jaccardPairs(spark, dir).select("a_id", "b_id")
-    val edges = exactPairs.union(nearPairs)
-      .select(col("a_id").as("u"), col("b_id").as("v"))
-    // hash(v)-partitioned BEFORE the cache (r16): the per-round label
-    // join keys on v, so the loop-invariant edge side re-enters every
-    // round partition-aligned from the InMemoryRelation and only the
-    // (much smaller) label frame exchanges — unpartitioned, the edge
-    // frame re-exchanged every round (guide §2.4).
-    val undirected = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      .repartition(col("v"))
-      .persist()
-    // Only edge-touched doc_ids can ever change label: iterate over
-    // that (tiny) frame and union the untouched docs back as
-    // singleton clusters once at the end. At 100 TB the dup-pair
-    // graph is orders of magnitude smaller than the corpus, so the
-    // loop never carries corpus-sized rows.
-    // each round truncates lineage with an eager Ckpt.stage.
-    // Without truncation the final plan unrolls every iteration's
-    // joins (~100 exchanges after 3 rounds; the budget spec catches
-    // it). On a cluster where the loop must survive executor loss,
-    // spark.graft.checkpoint.reliable=true restores the
-    // directory-backed checkpoint form.
-    // checkpointed (not just derived): the final singleton anti-join
-    // reads `touched` AFTER the edge cache is unpersisted — without
-    // materialization it would replay the whole edge derivation
-    val touched = undirected.select(col("u").as("doc_id")).distinct()
-      .transform(Ckpt.stage)
-    var labels = touched.select(col("doc_id"), col("doc_id").as("lbl"))
-    var converged = false
-    while (!converged) {
-      val neighborMin = undirected
-        .join(labels.select(col("doc_id").as("v"), col("lbl").as("nlbl")), Seq("v"))
-        .groupBy(col("u").as("doc_id")).agg(min(col("nlbl")).as("nmin"))
-      // convergence rides the same materialization: `changed` is
-      // computed in the checkpointed frame, so the check below is a
-      // scan of already-materialized data, not a second plan execution
-      val next = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"),
-          (col("nmin") < col("lbl")).as("changed"))
-        .transform(Ckpt.stage)
-      converged = next.filter(col("changed")).limit(1).isEmpty
-      labels = next.drop("changed")
-    }
-    // the edge cache served only the loop — don't pin it for the
-    // session (the converged labels are checkpointed, not cached)
-    undirected.unpersist()
-    labels.select(col("doc_id"), col("lbl").as("cluster_id"))
-      .union(docs.join(touched, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("doc_id").as("cluster_id")))
+    labelClusters(Tables.documents(spark, dir).select("doc_id"),
+      exactPairs.union(nearPairs))
+  }
+
+  /** (doc_id, cluster_id, is_keeper) for every doc of `docs`, given the
+    * dup pairs (a_id, b_id): [[components]] in one task over the
+    * coalesced pairs (a pair with a NULL end is dropped), its labels
+    * broadcast to a lookup over the docs, staged. */
+  private[operators] def labelClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val labels = spark.sparkContext.broadcast(scala.collection.mutable.LongMap.from(
+      pairs.coalesce(1)
+        .as[(Option[Long], Option[Long])]
+        .mapPartitions(edges => components(edges.collect { case (Some(u), Some(v)) => (u, v) }))
+        .collect()))
+    val clusterOf = udf((doc: Long) => labels.value.getOrElse(doc, doc))
+    try docs.select(col("doc_id"), clusterOf(col("doc_id")).as("cluster_id"))
       .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
+      .transform(Ckpt.stage)
+    finally labels.destroy()
+  }
+
+  /** Every doc an edge touches, with the minimum doc_id of its
+    * connected component: union-find with path compression over a
+    * LongMap, where the smaller root always wins a union, so each root
+    * is its component's minimum. */
+  private[operators] def components(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    edges.foreach { case (u, v) =>
+      parent.getOrElseUpdate(u, u)
+      parent.getOrElseUpdate(v, v)
+      val (ru, rv) = (find(u), find(v))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    parent.keys.toArray.iterator.map(x => (x, find(x)))
   }
 
   private def pipeDupClusters(spark: SparkSession, dir: String): DataFrame =
@@ -232,8 +229,8 @@ object PipelineOps extends Suite {
   // that semantic (and subsumes the exact-dup keep: exact groups are
   // edges, so only each cluster's min doc_id survives) — so the
   // correct funnel is quality gate ∩ cluster keepers, composed from
-  // the two audited ops. Costs the same label-propagation loop plus
-  // one semi join on doc_id.
+  // the two audited ops. Costs the same cluster labels plus one semi
+  // join on doc_id.
   private def pipeCurateCc(spark: SparkSession, dir: String): DataFrame = {
     val scored = TextOps.qualityScored(spark, dir)
       .select("doc_id", "lang", "n_tokens", "quality")
@@ -261,7 +258,7 @@ object PipelineOps extends Suite {
   // cluster id (content-stable, engine-portable: md5 of the decimal
   // string is bit-identical in Spark and DuckDB; the byte decodes via
   // hex-nibble positions — no conv() on the DuckDB side). val =
-  // bucket < 26 (~10%). Cost = the cluster loop + a map-only pass.
+  // bucket < 26 (~10%). Cost = the cluster labels + a map-only pass.
   private val valBuckets = 26 // of 256 ≈ 10% eval slice
 
   private def pipeSplit(spark: SparkSession, dir: String): DataFrame =

@@ -48,13 +48,15 @@ class CdcStreamSpec extends SparkSpec {
     val input = MemoryStream[CdcEvent]
     val target = new InMemoryCdcTarget
     val checkpoint = Files.createTempDirectory("graft_ckpt").toString
-    val q = CdcStream.mergeInto(input.toDS(), target, checkpoint,
-      Trigger.AvailableNow())
-
+    // the data lands before the query starts: an AvailableNow query
+    // whose first trigger finds the stream empty ends having merged
+    // nothing
     input.addData(
       ev(1, 1000, 1, "click", 1.0), ev(2, 2000, 1, "view", 2.0),
       ev(3, 1500, 2, "signup", 5.0), ev(4, 2500, 3, "error", 0.0),
       ev(5, 1200, 3, "click", 7.0))
+    val q = CdcStream.mergeInto(input.toDS(), target, checkpoint,
+      Trigger.AvailableNow())
     q.processAllAvailable()
     q.awaitTermination(30000)
 
