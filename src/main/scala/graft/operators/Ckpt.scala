@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.storage.StorageLevel
 
 /** Eager lineage-truncation stage shared by every iterative / fan-out
@@ -49,6 +49,25 @@ object Ckpt {
     * bench/verify queries. */
   def cache(df: DataFrame): DataFrame =
     df.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** `kernel` over every row of `df`, in ONE task: the shape for a
+    * fixed point or greedy loop whose state is bounded by an op
+    * constant (alphabet², 2ⁿ channel subsets, queries·pool²) — the
+    * same size at sf0.001 and at 100 TB, so one task is the right plan
+    * at any scale. `coalesce(1)` adds no shuffle: it merges the
+    * producer's partitions into the consuming task, and reports
+    * SinglePartition to what follows. A per-round DataFrame loop over
+    * the same state must stage every round eagerly (a lazy unroll that
+    * reads the carried frame more than once per round plans the prefix
+    * as a tree), and needs workarounds because joins against a bare
+    * aggregate and anti joins re-exchange even SinglePartition inputs
+    * (OPTIMIZATION_r16.md findings 2 and 1): staging jobs and
+    * broadcasts every round, where the kernel runs one plain loop in
+    * the final action's task. The corpus-sized work that feeds `df`
+    * stays distributed. */
+  def small[I: Encoder, O: Encoder](df: DataFrame)(
+      kernel: Iterator[I] => Iterator[O]): Dataset[O] =
+    df.coalesce(1).as[I].mapPartitions(kernel)
 
   def stage(df: DataFrame): DataFrame = {
     val spark = df.sparkSession

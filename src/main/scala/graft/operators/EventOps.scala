@@ -1558,7 +1558,7 @@ object EventOps extends Suite {
   // to NULL). All variants (full + one per channel) iterate
   // TOGETHER in ONE task: the staged transition counts
   // ((alphabet+3)²·variants rows, constant in the corpus) go through
-  // coalesce(1) into one mapPartitions kernel (`markovRounds`) that
+  // Ckpt.small into one kernel (`markovRounds`) that
   // runs the 12 fixed-point rounds over the value vector keyed
   // (variant, node) in the task's memory — never one chain per
   // channel, never one Spark job per round.
@@ -1618,15 +1618,10 @@ object EventOps extends Suite {
     val channels = counts.select(col("s")).distinct()
       .filter(col("s") =!= "START")
     // everything below `counts` is alphabet-bounded ((alphabet+3) ×
-    // (channels+1) rows — constant in the corpus), so the staged
-    // transition frame runs SINGLE-PARTITION: coalesce(1) reports
-    // SinglePartition, which satisfies the START-filter aggs below,
-    // and the 12 rounds run inside the final action's one task:
-    // staging each round would add a broadcast collect and a
-    // localCheckpoint per round (36 jobs per query against 10). At any
-    // corpus scale this frame stays alphabet²-sized, so one partition
-    // is the right plan at 100 TB too; `counts` above remains the
-    // staged corpus-lineage truncation point.
+    // (channels+1) rows — constant in the corpus), so the 12 rounds run
+    // in one task (Ckpt.small; 36 jobs per query when each round was
+    // staged, against 10); `counts` above remains the staged
+    // corpus-lineage truncation point.
     val trans = counts
       .select(lit("full").as("variant"), col("s"), col("d"), col("cnt"))
       .unionAll(counts
@@ -1658,14 +1653,13 @@ object EventOps extends Suite {
 
   /** The value vector after [[markovIters]] fixed-point rounds over a
     * transition frame (variant, s, d, cnt), as (variant, node, v)
-    * rows: [[markovRounds]] in one task over the coalesced frame. */
+    * rows: [[markovRounds]] in one task ([[Ckpt.small]]). */
   private[operators] def markovValues(trans: DataFrame): DataFrame = {
     import trans.sparkSession.implicits._
-    trans.select(col("variant"), col("s"), col("d"), col("cnt"))
-      .coalesce(1)
-      .as[(String, String, String, Long)]
-      .mapPartitions(rows => markovRounds(rows.toSeq, markovIters).iterator)
-      .toDF("variant", "node", "v")
+    Ckpt.small(trans.select(col("variant"), col("s"), col("d"), col("cnt"))) {
+      rows: Iterator[(String, String, String, Long)] =>
+        markovRounds(rows.toSeq, markovIters).iterator
+    }.toDF("variant", "node", "v")
   }
 
   /** `rounds` value iterations of the SQL round in
@@ -1882,25 +1876,23 @@ object EventOps extends Suite {
   // ev_attribution_markov's removal effects; the one with the
   // axiomatic fairness story): sessions are coalitions — each
   // pre-first-purchase session contributes its SET of touched
-  // channels as a bitmask, v(S) = converted sessions whose touch set
-  // ⊆ S, and channel credit is the exact Shapley value
+  // channels, v(S) = converted sessions whose touch set ⊆ S, and
+  // channel credit is the exact Shapley value
   // φ_c = Σ_{S∌c} |S|!(n−1−|S|)!/n! · (v(S∪c) − v(S)).
-  // Everything is exact integer work: channel indexes come from a
-  // count-of-smaller self-join on the alphabet frame (txt_zipf's
-  // no-global-window rank trick), masks from SUM(DISTINCT 1<<idx)
-  // (order-independent), v(S) by a submask join of the ≤2ⁿ observed-
-  // mask counts against the 2ⁿ mask grid, weights via factorial() on
-  // both engines, and φ through the half-up micro contract with the
-  // n! division LAST (φ·n! stays integral throughout). Efficiency
-  // axiom Σφ = v(full) − v(∅) is the invariant spec's pin (v(∅) =
-  // sessions converting with zero prior touches — credit no channel
-  // can claim).
+  // Everything is exact integer work (`shapleyValues`): channel bits
+  // in name order, v(S) by a subset-sum over the 2ⁿ mask grid, φ·n!
+  // in Long arithmetic that raises on overflow, and φ through the
+  // half-up micro contract with the n! division LAST (φ·n! stays
+  // integral throughout). Efficiency axiom Σφ = v(full) − v(∅) is the
+  // invariant spec's pin (v(∅) = sessions converting with zero prior
+  // touches — credit no channel can claim).
   // Scale: ONE user_id shuffle (the shared 30-min sessionization +
-  // prior-purchase truncation windows) collapses the corpus to
-  // per-session masks; everything after is ≤2ⁿ-sized. Exact Shapley
-  // is inherently 2ⁿ in the CHANNEL alphabet (n ≤ ~20 practical;
-  // permutation-sampling is the documented wide-alphabet path) —
-  // never in the corpus.
+  // prior-purchase truncation windows) collapses the corpus to one
+  // sorted channel set per session, and one aggregate by set to ≤2ⁿ
+  // (set, converted, sessions) rows; the kernel runs on those in one
+  // task (Ckpt.small). Exact Shapley is inherently 2ⁿ in the CHANNEL
+  // alphabet (n ≤ 20, where n! fits a Long; permutation-sampling is
+  // the documented wide-alphabet path) — never in the corpus.
   private def evAttributionShapley(spark: SparkSession,
       dir: String): DataFrame =
     shapleyOf(Tables.events(spark, dir)
@@ -1912,15 +1904,12 @@ object EventOps extends Suite {
     * crafted two-channel log against the hand-computed exact Shapley
     * values (φ_click = 1.5, φ_view = 0.5 on the 3-session example). */
   private[graft] def shapleyOf(ev: DataFrame): DataFrame = {
-    val spark = ev.sparkSession
+    import ev.sparkSession.implicits._
     val byUser = Window.partitionBy("user_id")
       .orderBy(col("ts"), col("event_id"))
     val bySess = Window.partitionBy("user_id", "session_id")
       .orderBy(col("ts"), col("event_id"))
-    // staged once (r15): both the alphabet branch and the session
-    // masks consume `kept` — unstaged, the three session windows over
-    // the whole event corpus planned (and ran) under BOTH branches
-    val kept = ev
+    val sets = ev
       .withColumn("new_s",
         when(col("ts") <
           lag(col("ts"), 1).over(byUser) + expr("INTERVAL 30 MINUTE"), 0)
@@ -1932,67 +1921,60 @@ object EventOps extends Suite {
         sum(when(col("event_type") === "purchase", 1L)).over(
           bySess.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .filter(col("pp") === 0)
-      .select("user_id", "session_id", "event_type")
-      .transform(Ckpt.stage)
-    // alphabet/2^n-bounded frames below run SINGLE-PARTITION after
-    // their staging job (r16): coalesce(1) over the staged scan is
-    // SinglePartition, so the idx self-join, the contrib mask joins
-    // and the touched/total aggregates plan no exchanges — each
-    // staging job is one task over at most 2^n rows. The mask-grid
-    // submask join (masks x cbm) deliberately STAYS distributed: its
-    // work is O(4^n) pair tests, the one genuinely parallel step.
-    val alpha = kept.filter(col("event_type") =!= "purchase")
-      .select(col("event_type").as("ch")).distinct()
-      .transform(Ckpt.stage).coalesce(1)
-    val idx = alpha.as("a")
-      .join(alpha.as("b"), col("b.ch") < col("a.ch"), "left")
-      .groupBy(col("a.ch").as("ch"))
-      .agg(count(col("b.ch")).as("idx"))
-      .transform(Ckpt.stage).coalesce(1)
-    val sessions = kept
-      .join(broadcast(idx), col("event_type") === col("ch"), "left")
       .groupBy("user_id", "session_id")
-      .agg(coalesce(sum_distinct(
-          expr("shiftleft(1L, cast(idx as int))")), lit(0L)).as("smask"),
+      .agg(array_sort(collect_set(
+          when(col("event_type") =!= "purchase", col("event_type")))).as("set"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("conv"))
-    val cbm = sessions.groupBy("smask")
+      .groupBy("set")
       .agg(sum(col("conv")).as("nc"), count(lit(1)).as("ns"))
-      .transform(Ckpt.stage).coalesce(1)
-    val nDf = idx.agg(count(lit(1)).cast("int").as("n"))
-    val masks = nDf.select(explode(
-      sequence(lit(0L), expr("shiftleft(1L, n) - 1"))).as("s_mask"))
-    val v = masks
-      .join(cbm, expr("(smask & ~s_mask) = 0"), "left")
-      .groupBy("s_mask").agg(coalesce(sum(col("nc")), lit(0L)).as("v"))
-      .transform(Ckpt.stage)
-    val contrib = v
-      .crossJoin(broadcast(idx))
-      .filter(expr("(s_mask & shiftleft(1L, cast(idx as int))) = 0"))
-      .withColumn("s_with",
-        expr("s_mask | shiftleft(1L, cast(idx as int))"))
-      .join(v.select(col("s_mask").as("s_with"), col("v").as("v_with")),
-        Seq("s_with"))
-      .crossJoin(broadcast(nDf))
-      .withColumn("wnum", expr(
-        "factorial(bit_count(s_mask)) * factorial(n - 1 - bit_count(s_mask))"))
-      .groupBy("ch")
-      .agg(sum(col("wnum") * (col("v_with") - col("v"))).as("num"),
-        max(col("n")).as("n"))
-      .transform(Ckpt.stage).coalesce(1)
-    val touched = idx
-      .join(cbm, expr("((smask >> cast(idx as int)) & 1) = 1"), "left")
-      .groupBy("ch").agg(coalesce(sum(col("ns")), lit(0L)).as("n_sessions"))
-    val tot = contrib.agg(sum(col("num")).as("t"))
-    contrib.join(touched, Seq("ch")).crossJoin(broadcast(tot))
-      .select(col("ch").as("channel"), col("n_sessions"),
-        expr("""(2 * num * 1000000 + factorial(n)) div
-          | (2 * factorial(n))""".stripMargin)
-          .cast("double").divide(lit(1000000.0)).as("shapley"),
-        expr("""case when t > 0 then
-          |  cast((2 * num * 1000000 + t) div (2 * t) as double) / 1000000.0
-          |else 0.0 end""".stripMargin).as("share"))
+    Ckpt.small(sets) { rows: Iterator[(Seq[String], Long, Long)] =>
+      shapleyValues(rows.toSeq).iterator
+    }.toDF("channel", "n_sessions", "shapley", "share")
       .orderBy("channel")
+  }
+
+  /** (channel, n_sessions, shapley, share) per channel, row for row
+    * what [[evAttributionShapleySql]] gives, from (set, nc, ns) rows:
+    * a session channel set, its converted and its total sessions. The
+    * channels are those of the sets; v(S) = Σ nc over sets ⊆ S;
+    * φ·n! = Σ_{S∌c} |S|!(n−1−|S|)!·(v(S∪c) − v(S)), reported as the
+    * half-up micro quotient by n!, and share as the half-up micro
+    * quotient by t = Σ φ·n! (0.0 when t ≤ 0). Every sum and product
+    * is exact: an overflow raises [[ArithmeticException]] where ANSI
+    * SQL raises its arithmetic overflow error. */
+  private[operators] def shapleyValues(
+      sets: Seq[(Seq[String], Long, Long)]): Seq[(String, Long, Double, Double)] = {
+    import Math.{addExact, multiplyExact, subtractExact}
+    val channels = sets.flatMap(_._1).distinct.sorted.toIndexedSeq
+    val n = channels.size
+    require(n <= 20, s"exact Shapley over $n channels needs n! in a Long (n ≤ 20)")
+    val bit = channels.zipWithIndex.map { case (c, i) => c -> (1 << i) }.toMap
+    val v = new Array[Long](1 << n)
+    val sessions = new Array[Long](n)
+    for ((set, nc, ns) <- sets) {
+      val m = set.foldLeft(0)(_ | bit(_))
+      v(m) = addExact(v(m), nc)
+      for (i <- 0 until n if (m >> i & 1) == 1) sessions(i) = addExact(sessions(i), ns)
+    }
+    for (i <- 0 until n; m <- v.indices if (m >> i & 1) == 1)
+      v(m) = addExact(v(m), v(m ^ 1 << i))
+    val fact = (1 to n).scanLeft(1L)(_ * _)
+    val num = (0 until n).map { i =>
+      v.indices.filter(m => (m >> i & 1) == 0).foldLeft(0L) { (acc, m) =>
+        val s = Integer.bitCount(m)
+        addExact(acc, multiplyExact(multiplyExact(fact(s), fact(n - 1 - s)),
+          subtractExact(v(m | 1 << i), v(m))))
+      }
+    }
+    val t = num.foldLeft(0L)(addExact)
+    def micro(x: Long, d: Long): Double =
+      (addExact(multiplyExact(multiplyExact(2L, x), 1000000L), d) /
+        multiplyExact(2L, d)).toDouble / 1000000.0
+    (0 until n).map { i =>
+      (channels(i), sessions(i), micro(num(i), fact(n)),
+        if (t > 0) micro(num(i), t) else 0.0)
+    }
   }
 
   private val evAttributionShapleySql =

@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    the producer, while consumers time against the materialization
   *    (warm-vs-warm across Bench's warm-up and timed rounds) — the
   *    reuse a real pipeline gets.
-  *  - [[clearAll]] (JobCount, ScaleStress): every sample runs cold. A
+  *  - [[clearAll]] (SparkJobs, ScaleStress): every sample runs cold. A
   *    warm-up over one dir populates entries for that dir only, so a
   *    warm consumer would compare a memoized 1× run against a cold N×
   *    one — r12's tail sweep flagged pipe_curate_cc at 83× from exactly

@@ -152,17 +152,16 @@ object PipelineOps extends Suite {
   }
 
   /** (doc_id, cluster_id, is_keeper) for every doc of `docs`, given the
-    * dup pairs (a_id, b_id): [[components]] in one task over the
-    * coalesced pairs (a pair with a NULL end is dropped), its labels
+    * dup pairs (a_id, b_id): [[components]] in one task over the pairs
+    * ([[Ckpt.small]]; a pair with a NULL end is dropped), its labels
     * broadcast to a lookup over the docs, staged. */
   private[operators] def labelClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val labels = spark.sparkContext.broadcast(scala.collection.mutable.LongMap.from(
-      pairs.coalesce(1)
-        .as[(Option[Long], Option[Long])]
-        .mapPartitions(edges => components(edges.collect { case (Some(u), Some(v)) => (u, v) }))
-        .collect()))
+      Ckpt.small(pairs) { edges: Iterator[(Option[Long], Option[Long])] =>
+        components(edges.collect { case (Some(u), Some(v)) => (u, v) })
+      }.collect()))
     val clusterOf = udf((doc: Long) => labels.value.getOrElse(doc, doc))
     try docs.select(col("doc_id"), clusterOf(col("doc_id")).as("cluster_id"))
       .withColumn("is_keeper", col("doc_id") === col("cluster_id"))

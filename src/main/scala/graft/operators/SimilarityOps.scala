@@ -1062,11 +1062,11 @@ object SimilarityOps extends Suite {
   // deterministic given the quantized-dot cosine contract; ties break
   // on cand_id.
   // Scale: relevance is ONE broadcast-query pass over the corpus
-  // (sim_topk_exact's plan); the greedy loop never touches the
-  // corpus again — it runs on the checkpointed top-`mmrPool`
-  // candidate frame and its pool²-sized pair-similarity frame, both
-  // CONSTANT-sized at any corpus scale. k driver rounds of
-  // pool-sized argmax jobs (sim_kmeans' loop posture). The oracle
+  // (sim_topk_exact's plan), staged as the top-`mmrPool` candidate
+  // frame; the pool²-sized pair similarities join it to its own
+  // broadcast. Both are CONSTANT-sized at any corpus scale, so the
+  // k greedy rounds run as one kernel in one task (`mmrRounds`
+  // through Ckpt.small) — never one Spark job per round. The oracle
   // unrolls all k rounds as CTEs, so the hash gate verifies the
   // whole greedy trajectory.
   private val mmrQueries = 3
@@ -1080,79 +1080,78 @@ object SimilarityOps extends Suite {
     val q = e.filter(col("vec_id") < mmrQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("norm").as("qn"))
-    val byQ = Window.partitionBy("q_id")
     val cand = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("rel", cosineQ(col("qv"), col("v"), col("qn"), col("norm")))
-      .withColumn("rk", row_number().over(
-        byQ.orderBy(desc("rel"), col("vec_id"))))
+      .withColumn("rk", row_number().over(Window.partitionBy("q_id")
+        .orderBy(desc("rel"), col("vec_id"))))
       .filter(col("rk") <= mmrPool)
       .select(col("q_id"), col("vec_id").as("cand_id"), col("v"),
         col("norm"), col("rel"))
       .transform(Ckpt.stage)
     val psim = cand.select(col("q_id"), col("cand_id").as("a_id"),
         col("v").as("av"), col("norm").as("an"))
-      .join(cand.select(col("q_id"), col("cand_id").as("b_id"),
-        col("v").as("bv"), col("norm").as("bn")), Seq("q_id"))
+      .join(broadcast(cand.select(col("q_id"), col("cand_id").as("b_id"),
+        col("v").as("bv"), col("norm").as("bn"))), Seq("q_id"))
       .filter(col("a_id") =!= col("b_id"))
-      .withColumn("sim", cosineQ(col("av"), col("bv"), col("an"), col("bn")))
-      .select(col("q_id"), col("a_id"), col("b_id"), col("sim"))
-      .transform(Ckpt.stage).coalesce(1)
-    // everything below `cand`/`psim` is pool-bounded (≤ queries·pool²
-    // rows — CONSTANT in the corpus), so the greedy loop runs
-    // SINGLE-PARTITION (r16, the ev_attribution_markov pattern):
-    // coalesce(1) reports SinglePartition, which satisfies every
-    // downstream join/agg/window distribution, and with merge-hinted
-    // joins each of the k−1 rounds is ONE task with ZERO exchanges —
-    // the former per-round form paid 2 join exchanges + an agg
-    // exchange + a window exchange per round on ≤50-row frames
-    // (81 jobs / 165 tasks / 1.01 MB shuffle → measured drop below).
-    // At any corpus scale these frames stay pool²-sized, so one
-    // partition is the right plan at 100 TB too; `cand` above remains
-    // the staged corpus-lineage truncation point.
-    val pool = cand.select(col("q_id"), col("cand_id"), col("rel"))
-      .coalesce(1)
-    var selected = pool
-      .withColumn("rn", row_number().over(
-        byQ.orderBy(desc("rel"), col("cand_id"))))
-      .filter(col("rn") === 1)
-      .select(col("q_id"), col("cand_id"), col("rel"),
-        lit(0.0).as("pen"), (lit(0.5) * col("rel")).as("mmr"),
-        lit(1).as("rank"))
-      .transform(Ckpt.stage).coalesce(1)
-    for (k <- 2 to mmrK) {
-      // coalesce(1) after the agg: a join against a bare aggregate
-      // output re-exchanges BOTH sides even when everything upstream
-      // is single-partition (measured: EnsureRequirements does not
-      // accept the agg's propagated partitioning), while a join
-      // against a Coalesce(1) node plans exchange-free
-      val pen = psim
-        .join(broadcast(selected.select(col("q_id"),
-          col("cand_id").as("b_id"))), Seq("q_id", "b_id"))
-        .groupBy(col("q_id"), col("a_id").as("cand_id"))
-        .agg(max(col("sim")).as("pen"))
-        .coalesce(1)
-      // NOT-IN as left-outer + isNull on a constant marker: a LEFT
-      // ANTI join re-exchanges both single-partition sides (measured,
-      // same probe), a left-outer join does not; only unmatched rows
-      // survive the filter, so the two forms are row-identical
-      val pick = pool
-        .join(broadcast(selected.select(col("q_id"), col("cand_id"),
-          lit(1).as("sel_f"))), Seq("q_id", "cand_id"), "left")
-        .filter(col("sel_f").isNull)
-        .join(broadcast(pen), Seq("q_id", "cand_id"))
-        .withColumn("mmr", lit(0.5) * col("rel") - lit(0.5) * col("pen"))
-        .withColumn("rn", row_number().over(
-          byQ.orderBy(desc("mmr"), col("cand_id"))))
-        .filter(col("rn") === 1)
-        .select(col("q_id"), col("cand_id"), col("rel"), col("pen"),
-          col("mmr"), lit(k).as("rank"))
-      selected = selected.union(pick).transform(Ckpt.stage).coalesce(1)
-    }
-    selected.select(col("q_id"), col("rank"), col("cand_id"),
+      .select(col("q_id"), col("a_id"), col("b_id"),
+        cosineQ(col("av"), col("bv"), col("an"), col("bn")).as("sim"))
+    mmrRanks(cand.select(col("q_id"), col("cand_id"), col("rel")), psim)
+      .select(col("q_id"), col("rank"), col("cand_id"),
         round(col("rel"), 6).as("rel"),
         round(col("pen"), 6).as("penalty"),
         round(col("mmr"), 6).as("mmr"))
       .orderBy("q_id", "rank")
+  }
+
+  /** The greedy selection over a candidate pool (q_id, cand_id, rel)
+    * and its pair similarities (q_id, a_id, b_id, sim), as (q_id, rank,
+    * cand_id, rel, pen, mmr) rows: [[mmrRounds]] in one task
+    * ([[Ckpt.small]]) over both frames, a pool row carrying no b_id. */
+  private[operators] def mmrRanks(pool: DataFrame, psim: DataFrame): DataFrame = {
+    import pool.sparkSession.implicits._
+    val rows = pool.select(col("q_id"), col("cand_id").as("a_id"),
+        lit(null).cast("long").as("b_id"), col("rel").as("x"))
+      .unionAll(psim.select(col("q_id"), col("a_id"), col("b_id"),
+        col("sim").as("x")))
+    Ckpt.small(rows) { it: Iterator[(Long, Long, Option[Long], Double)] =>
+      mmrRounds(it, mmrK)
+    }.toDF("q_id", "rank", "cand_id", "rel", "pen", "mmr")
+  }
+
+  /** Up to `k` greedy rounds per q_id, row for row what the SQL rounds
+    * in [[simMmrSql]] pick: rank 1 is the top rel (pen 0, mmr 0.5·rel);
+    * each later round gives every unpicked candidate that has a pair
+    * row to a picked one pen = the max of those sims, and picks the
+    * top mmr = 0.5·rel − 0.5·pen. Ties go to the lower cand_id; a
+    * query stops when no candidate is left. Doubles compare as Spark
+    * orders them (NaN largest, −0.0 = 0.0). Input rows are
+    * (q_id, cand_id, None, rel) and (q_id, a_id, Some(b_id), sim). */
+  private[operators] def mmrRounds(rows: Iterator[(Long, Long, Option[Long], Double)],
+      k: Int): Iterator[(Long, Int, Long, Double, Double, Double)] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val (pool, pairs) = rows.toSeq.partition(_._3.isEmpty)
+    // (q_id, b_id) -> (a_id, sim): the sims a pick of b adds to
+    val simsTo = pairs.groupMap(r => (r._1, r._3.get))(r => (r._2, r._4))
+    pool.groupMap(_._1)(r => (r._2, r._4)).iterator.flatMap { case (q, cands) =>
+      val pen = scala.collection.mutable.LongMap.empty[Double]
+      var left = cands
+      Iterator.from(1).take(k).map { rank =>
+        // (cand_id, rel, pen, mmr, the value ranked on)
+        val scored = left.flatMap { case (c, rel) =>
+          if (rank == 1) Some((c, rel, 0.0, 0.5 * rel, rel))
+          else pen.get(c).map { p => val mmr = 0.5 * rel - 0.5 * p; (c, rel, p, mmr, mmr) }
+        }
+        scored.reduceOption { (a, b) =>
+          val byKey = compareDoubles(a._5, b._5)
+          if (byKey > 0 || (byKey == 0 && a._1 < b._1)) a else b
+        }.map { case (c, rel, p, mmr, _) =>
+          left = left.filter(_._1 != c)
+          for ((a, sim) <- simsTo.getOrElse((q, c), Nil))
+            if (pen.get(a).forall(compareDoubles(sim, _) > 0)) pen(a) = sim
+          (q, rank, c, rel, p, mmr)
+        }
+      }.takeWhile(_.isDefined).flatten
+    }
   }
 
   private val simMmrSql = {

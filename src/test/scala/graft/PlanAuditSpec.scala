@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression,
+  PlanExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
 
 /** Plan-shape regression gate: the scale-killers caught in earlier
   * explain-audits must not be able to return silently. Asserts over
@@ -21,8 +26,16 @@ class PlanAuditSpec extends SparkSpec {
   private def physical(name: String): SparkPlan =
     SparkEntry.queries(name)(spark, sf).queryExecution.sparkPlan
 
+  // a subquery in sparkPlan may still be logical (PlanSubqueries runs
+  // with the executed plan's preparations; a runtime bloom filter's
+  // ScalarSubquery is one): plan it and walk its physical tree
   private def collectAll(p: SparkPlan): Seq[SparkPlan] =
-    (p +: p.children.flatMap(collectAll)) ++ p.subqueries.flatMap(collectAll)
+    (p +: p.children.flatMap(collectAll)) ++ p.expressions
+      .flatMap(_.collect { case s: PlanExpression[_] => s.plan })
+      .flatMap {
+        case sp: SparkPlan => collectAll(sp)
+        case lp: LogicalPlan => collectAll(spark.sessionState.executePlan(lp).sparkPlan)
+      }
 
   test("no query plans a CartesianProduct") {
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
@@ -41,6 +54,32 @@ class PlanAuditSpec extends SparkSpec {
       assert(bad.isEmpty,
         s"$name plans a Window with no PARTITION BY — single-task sort")
     }
+  }
+
+  test("the audits walk a runtime bloom filter's subquery") {
+    // the filter's ScalarSubquery is still logical in sparkPlan (it is
+    // planned with the executed plan's subqueries); force one onto a
+    // shuffle join through lowered thresholds, scoped to this test
+    val scoped = Seq(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    val nodes = try collectAll(sources.Tables.lineitem(spark, sf)
+        .join(sources.Tables.orders(spark, sf)
+          .filter(col("o_orderstatus") === "F"), col("l_orderkey") === col("o_orderkey"))
+        .queryExecution.sparkPlan)
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    def has(p: Expression => Boolean) = nodes.exists(_.expressions.exists(_.exists(p)))
+    assert(has(_.isInstanceOf[BloomFilterMightContain]), "no runtime bloom filter planned")
+    // the subquery's own tree was walked: its bloom filter aggregate
+    assert(has(_.isInstanceOf[BloomFilterAggregate]), "the bloom filter subquery was not walked")
+    assert(!nodes.exists {
+      case _: CartesianProductExec => true
+      case w: WindowExec => w.partitionSpec.isEmpty
+      case _ => false
+    })
   }
 
   test("q1/q6 filters are pushed down to the parquet scan") {
@@ -161,11 +200,12 @@ class PlanAuditSpec extends SparkSpec {
       // the rank self-join broadcasts, the 1 exchange is the
       // rank-frame agg's SinglePartition (constant-sized input)
       "txt_zipf" -> 1,
-      // final plan reads the checkpointed greedy-selection frames
-      // (producer: one broadcast-query corpus pass + pool²-sized
-      // pair frame, all checkpointed); the 1 exchange is the 24-row
-      // output sort
-      "sim_mmr" -> 1,
+      // final plan reads the staged candidates (producer: one
+      // broadcast-query corpus pass + the ranking window), joins the
+      // pool²-sized pairs to a broadcast of them and runs the greedy
+      // kernel in one task (Ckpt.small); the 24-row output sort reads
+      // that SinglePartition task, so nothing exchanges
+      "sim_mmr" -> 0,
       // r16 re-audit: the whole census now plans as ONE action over
       // lazily-CACHED edges/deg/adj (no eager staging jobs), so the
       // audit finally sees the edge-build exchanges that formerly ran
@@ -173,13 +213,13 @@ class PlanAuditSpec extends SparkSpec {
       // pa repartition (the distinct rides it) + deg union-agg + adj
       // collect agg (each counted ONCE however many scans reference
       // the cache) + the closure join/agg tail. Executed shuffle
-      // BYTES dropped 82 MB -> 29 MB at sf0.1 (JobCount)
+      // BYTES dropped 82 MB -> 29 MB at sf0.1 (SparkJobs main)
       "ft_graph_triangles" -> 14,
       // r16: same one-action shape as triangles — the cached edgesD
       // keeps hash(src), so the 3 lazily-unrolled rank rounds
       // re-exchange only the k-row rank side; count covers the whole
       // query (edge build formerly hid in staging jobs); shuffle
-      // bytes 78 MB -> 48 MB at sf0.1 (JobCount)
+      // bytes 78 MB -> 48 MB at sf0.1 (SparkJobs main)
       "ft_item_pagerank" -> 14,
       // label block inherits ft_time_to_event's ONE user_id shuffle;
       // day-cell agg + constant triangle joins (broadcast) + the
@@ -513,9 +553,11 @@ class PlanAuditSpec extends SparkSpec {
       // carries their aggregate/sort exchanges over 64-row staged-w
       // scans — bounded by dim count at any corpus scale
       "sim_pca_power" -> 4,
-      // one user_id shuffle (shared sessionize+truncation windows) +
-      // the session agg + the mask-sized tail reading checkpoints
-      "ev_attribution_shapley" -> 4,
+      // one user_id shuffle (shared sessionize+truncation windows;
+      // the per-session agg rides it) + the ≤2ⁿ-row agg by channel
+      // set; the kernel runs in one task (Ckpt.small), so the output
+      // sort reads a SinglePartition and does not exchange
+      "ev_attribution_shapley" -> 2,
       // composition of the two audited pair frames + pair-keyed join
       // + band agg + sort
       "dedup_minhash_recall" -> 5,

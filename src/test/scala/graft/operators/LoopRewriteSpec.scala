@@ -1,48 +1,24 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the r16 loop rewrites to reference implementations at
-  * sf0.001 — the two rewrites that changed JOIN SEMANTICS rather
-  * than just staging, so a structural regression would silently
-  * change rows, not plans.
+  * sf0.001 — rewrites that changed JOIN SEMANTICS rather than just
+  * staging, so a structural regression would silently change rows,
+  * not plans.
   *
-  * 1. sim_mmr replaced the greedy loop's LEFT ANTI exclusion with a
-  *    left-outer join + isNull filter on a constant marker (the anti
-  *    join re-exchanges single-partition sides — measured r16). The
-  *    two forms must be row-identical: only unmatched left rows
-  *    survive, exactly once, regardless of duplicate right keys.
-  * 2. pipe_dedup_report replaced 3 persisted pair frames + 6
+  * 1. pipe_dedup_report replaced 3 persisted pair frames + 6
   *    per-cell join/agg actions with ONE power-of-two mask
   *    aggregation. The mask form is exact only while every method
   *    emits an unordered pair AT MOST ONCE — this spec pins that
   *    precondition against each generator directly, so a future
   *    generator change that duplicates pairs fails here instead of
   *    silently double-counting a matrix cell.
+  * 2. sim_mmr's output must stay a valid greedy trajectory (its kernel
+  *    is checked against the former loop in MmrKernelSpec).
   */
 class LoopRewriteSpec extends SparkSpec {
-
-  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
-  test("left-outer + isNull marker is row-identical to left_anti") {
-    import spark.implicits._
-    // duplicate right keys + null-free columns, the mmr loop's shape
-    val left = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L))
-      .toDF("q_id", "cand_id")
-    val right = Seq((1L, 10L), (1L, 10L), (9L, 99L))
-      .toDF("q_id", "cand_id")
-    val anti = left.join(right, Seq("q_id", "cand_id"), "left_anti")
-    val outer = left
-      .join(right.withColumn("sel_f", lit(1)).distinct(),
-        Seq("q_id", "cand_id"), "left")
-      .filter(col("sel_f").isNull)
-      .drop("sel_f")
-    assertSameRows(anti, outer)
-  }
 
   test("every dedup-report pair generator emits unordered pairs at most once") {
     // the mask-agg rewrite's load-bearing precondition
@@ -67,8 +43,7 @@ class LoopRewriteSpec extends SparkSpec {
 
   test("sim_mmr ranks are a valid greedy trajectory per query") {
     // rank 1..k unique per q_id, mmr = 0.5*rel - 0.5*pen, and rank-1
-    // rows carry zero penalty — the loop's invariants survive the
-    // broadcast/left-outer restaging
+    // rows carry zero penalty
     val out = graft.SparkEntry.queries("sim_mmr")(spark, sf)
     val perQ = out.groupBy("q_id").agg(
       count(lit(1)).as("n"),
