@@ -476,7 +476,93 @@ object LakehouseScale {
     Files.write(Paths.get(out), (json + "\n").getBytes("UTF-8"))
   }
 
+  /** Merge-on-read leg: the cost of a fixed 200-row merge as the
+    * table grows, on the log path (one log file per batch) and on the
+    * fold path (the copy-on-write body over the logs and the batch),
+    * plus the snapshot read at the fold bound against a plain scan.
+    * P stays 32 (the CDC benchmark's count), so a 200-key batch
+    * touches nearly every partition: the fold rewrites ~the table,
+    * the log append writes the batch.
+    * Usage: runMain graft.LakehouseScale merge [out.json] [rows,...] */
+  private def mergeLeg(spark: org.apache.spark.sql.SparkSession, out: String,
+      sizes: Seq[Long]): Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.sources.VersionedTable
+    import graft.streaming.PartitionedMerge
+    val p = 32
+    val batchRows = 200
+    val rng = new scala.util.Random(11)
+    def secs(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    }
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    val rows = Seq.newBuilder[String]
+    for (n <- sizes) {
+      val root = Files.createTempDirectory(s"lh_merge_$n").toString
+      val target = new PartitionedTableCdcTarget(spark, root, p)
+      val seedS = secs(target.merge(0, spark.range(1, n + 1).select(
+        col("id").as("user_id"), col("id").as("event_id"),
+        (col("id") + 1000L).cast("timestamp").as("ts"),
+        col("id").cast("double").as("value"), lit(false).as("is_deleted"))
+        .as[CdcApplied]))
+      def read(): Double = median((1 to 3).map(_ => secs(
+        VersionedTable.read(spark, root).write.format("noop").mode("overwrite").save())))
+      val plainS = read()
+      var b = 0L
+      def merge(): Double = {
+        b += 1
+        val keys = Seq.fill(batchRows)(rng.nextLong().abs % n + 1L)
+        val batch = keys.map(k => ap(k, n + b * batchRows + k % batchRows,
+          10000000000000L + b, -k.toDouble))
+        secs(target.merge(b, batch.toDS()))
+      }
+      // log appends up to one below the count bound, then the fold;
+      // the resolved read every 4 logs traces the read-cost curve
+      val curve = Seq.newBuilder[String]
+      curve += f""""0":$plainS%.3f"""
+      val logS = (1 until PartitionedMerge.MaxLogFiles).map { i =>
+        val t = merge()
+        if (i % 4 == 0) curve += f""""$i":${read()}%.3f"""
+        t
+      }
+      val logs = VersionedTable.partStats(root).get(VersionedTable.LogsLabel)
+      require(logs.exists(_._2 == PartitionedMerge.MaxLogFiles - 1),
+        s"expected ${PartitionedMerge.MaxLogFiles - 1} logs, got $logs")
+      val boundS = read()
+      val foldS = merge()
+      require(!VersionedTable.partStats(root).contains(VersionedTable.LogsLabel),
+        "the merge at the count bound must fold")
+      val count = VersionedTable.read(spark, root).count()
+      require(count == n, s"table holds $count rows, want $n")
+      println(f"[merge-scale] rows=$n P=$p seed=$seedS%.1f s " +
+        f"log_merge=${median(logS)}%.3f s fold_merge=$foldS%.3f s " +
+        f"plain_read=$plainS%.3f s read_at_bound=$boundS%.3f s")
+      rows += f"""{"table_rows":$n,"partitions":$p,"seed_s":$seedS%.2f,""" +
+        f""""log_merge_s":${median(logS)}%.3f,"log_merge_max_s":${logS.max}%.3f,""" +
+        f""""fold_merge_s":$foldS%.3f,"plain_read_s":$plainS%.3f,""" +
+        f""""snapshot_read_s_at_bound":$boundS%.3f,""" +
+        s""""read_s_by_logs":{${curve.result().mkString(",")}},""" +
+        f""""logs_at_bound":${PartitionedMerge.MaxLogFiles - 1}}"""
+    }
+    val json = s"""{"metric":"merge_on_read_cost","unit":"s","batch_rows":$batchRows,""" +
+      s""""rows":[${rows.result().mkString(",")}]}"""
+    println(json)
+    Files.write(Paths.get(out), (json + "\n").getBytes("UTF-8"))
+  }
+
   def main(args: Array[String]): Unit = {
+    if (args.headOption.contains("merge")) {
+      val out = args.drop(1).headOption.getOrElse(
+        Paths.get(System.getProperty("java.io.tmpdir"), "graft_merge_scale.json").toString)
+      val sizes = args.drop(2).headOption
+        .map(_.split(",").toSeq.map(_.trim.toLong))
+        .getOrElse(Seq(1000000L, 10000000L))
+      val spark = Engine.session("graft-merge-scale")
+      mergeLeg(spark, out, sizes)
+      spark.stop()
+      return
+    }
     if (args.headOption.contains("erase")) {
       val out = args.drop(1).headOption.getOrElse("SCALE_ERASE_r14.json")
       val spark = Engine.session("graft-erase-scale")

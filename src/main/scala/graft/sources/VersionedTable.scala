@@ -141,6 +141,12 @@ object VersionedTable {
     }
   }
 
+  /** Test seam: the hook of a root runs once per [[awaitWriters]]
+    * call that finds another writer's intent live, before it waits,
+    * so specs order maintenance against a writer without sleeping. */
+  private[graft] val onWriterWait =
+    scala.collection.concurrent.TrieMap.empty[String, () => Unit]
+
   /** Wait, at most [[WriterIntentTtlMs]], while another writer's
     * intent under `root` is live; expired markers are removed. */
   private def awaitWriters(root: String): Unit = {
@@ -156,7 +162,10 @@ object VersionedTable {
         } catch { case _: java.nio.file.NoSuchFileException => false }
       }
     }
-    while (live() && System.currentTimeMillis() < deadline) Thread.sleep(5)
+    if (live()) {
+      onWriterWait.get(root).foreach(_())
+      while (live() && System.currentTimeMillis() < deadline) Thread.sleep(5)
+    }
   }
 
   private def versionsDir(root: String): Path = Paths.get(root, "_versions")
@@ -201,6 +210,16 @@ object VersionedTable {
       new Content(true, Nil, parts, Some(pstats))
   }
 
+  /** The key a merge-on-read table resolves under: the newest row per
+    * `pk` under the lexicographic `seqCols` order wins. Stamped by
+    * [[graft.streaming.PartitionedMerge]] on every commit it makes. */
+  final case class TableKey(pk: String, seqCols: Seq[String])
+
+  /** One merge-on-read log: a write-once `data/<uuid>` dir holding one
+    * parquet file of a micro-batch's newest row per key (tombstones
+    * included), and its bytes, which the fold rule sums. */
+  final case class LogFile(dir: String, bytes: Long)
+
   /** THE manifest record: the only code that knows the on-disk
     * format. Every manifest read is [[Manifest.parse]] (through
     * [[manifestAt]]), every write is [[render]] (through [[publish]]),
@@ -215,7 +234,7 @@ object VersionedTable {
     * op          every commit: append, overwrite,     -
     *             merge_parts, delta_parts,
     *             overwrite_parts, restore
-    * mver        every commit (ManifestVersion)       -
+    * mver        every commit (3 with logs, else 2)   -
     * ts          every commit (epoch millis)          clamped above head's ts
     * txn         commitBatch, commitPartitions        -
     * schema      evolving writers, compaction,        -
@@ -225,6 +244,10 @@ object VersionedTable {
     * followsrc   TableFollower                        every commit
     * wkind       every commit (writer kind)           -
     * kinds       every commit (head's set + wkind)    every commit
+    * key         PartitionedMerge (pk, then seqCols)  partitioned commits
+    * logs        log appends (one file each)          incremental partitioned
+    *                                                  commits, less the logs a
+    *                                                  fold or compaction folded
     * base        delta commits (parent version)       -
     * chain       delta commits (depth below the root) -
     * drops       delta commits (labels removed)       -
@@ -235,13 +258,17 @@ object VersionedTable {
     * dirs        flat commits (every live dir)        -
     * }}}
     * `nparts`, `pstats` and `parts` appear only in partitioned
-    * manifests, `dirs` only in flat ones. The carry rules live in
+    * manifests, `dirs` only in flat ones. `logs` is the table-level
+    * merge-on-read list ([[LogFile]]), carried whole by every manifest
+    * (never through the delta chain) and bounded by the fold rule of
+    * [[graft.streaming.PartitionedMerge]]. The carry rules live in
     * [[successor]]. */
   private[sources] final case class Manifest(version: Int, op: String,
       mver: Option[Int], ts: Option[Long], txn: Option[Long],
       schema: Option[String], tableId: Option[String],
       followSrc: Option[String], wkind: Option[String],
-      kinds: Option[Set[String]], base: Option[Int], chain: Int,
+      kinds: Option[Set[String]], key: Option[TableKey],
+      logs: Seq[LogFile], base: Option[Int], chain: Int,
       drops: Set[String], nParts: Option[Int], content: Content) {
 
     /** From the manifest's shape (a label map or a delta pointer),
@@ -272,6 +299,11 @@ object VersionedTable {
       followSrc.foreach(x => b ++= s""""followsrc":${q(x)},""")
       wkind.foreach(x => b ++= s""""wkind":${q(x)},""")
       kinds.foreach(k => b ++= s""""kinds":${q(k.toSeq.sorted.mkString(","))},""")
+      key.foreach(k => b ++= (k.pk +: k.seqCols).map(c => q(Manifest.jsonEsc(c)))
+        .mkString("\"key\":[", ",", "],"))
+      if (logs.nonEmpty)
+        b ++= logs.map(l => "[" + q(l.dir) + "," + l.bytes + "]")
+          .mkString("\"logs\":[", ",", "],")
       base.foreach { x =>
         b ++= s""""base":$x,"chain":$chain,"""
         if (drops.nonEmpty)
@@ -294,6 +326,11 @@ object VersionedTable {
 
     private def jsonEsc(s: String): String =
       s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+    private def jsonUnesc(s: String): String =
+      s.replace("\\\"", "\"").replace("\\\\", "\\")
+
+    private val JsonStr = "\"((?:[^\"\\\\]|\\\\.)*)\""
 
     def parse(txt: String): Manifest = {
       // every scalar key precedes the label body (pstats, parts or
@@ -318,12 +355,18 @@ object VersionedTable {
         mver = field("mver", num).map(_.toInt),
         ts = field("ts", num).map(_.toLong),
         txn = field("txn", num).map(_.toLong),
-        schema = field("schema", "\"((?:[^\"\\\\]|\\\\.)*)\"")
-          .map(_.replace("\\\"", "\"").replace("\\\\", "\\")),
+        schema = field("schema", JsonStr).map(jsonUnesc),
         tableId = field("tableid", word),
         followSrc = field("followsrc", word),
         wkind = field("wkind", word),
         kinds = field("kinds", "\"([0-9a-zA-Z,-]+)\"").map(_.split(",").toSet),
+        key = field("key", s"\\[((?:$JsonStr,?)+)\\]").map { body =>
+          val cs = JsonStr.r.findAllMatchIn(body).map(m => jsonUnesc(m.group(1))).toSeq
+          TableKey(cs.head, cs.tail)
+        },
+        logs = field("logs", "\\[((?:\\[\"data/[0-9a-f-]+\",\\d+\\],?)*)\\]").fold(Seq.empty[LogFile])(
+          body => "\\[\"(data/[0-9a-f-]+)\",(\\d+)\\]".r.findAllMatchIn(body)
+            .map(m => LogFile(m.group(1), m.group(2).toLong)).toSeq),
         base = base,
         chain = field("chain", num).fold(0)(_.toInt),
         drops = field("drops", "\\[([^\\]]*)\\]").fold(Set.empty[String])(b =>
@@ -352,14 +395,21 @@ object VersionedTable {
     }
   }
 
-  /** Manifest FORMAT version this build writes and the newest it can
-    * read (Delta's minReaderVersion rule): 2 = delta chains +
-    * provenance stamps. A reader opening a manifest that declares a
-    * HIGHER version throws instead of silently misreading semantics
-    * it doesn't know (a pre-chain reader would have served a
-    * 32-label delta as the whole table); manifests with no `mver`
-    * are version-1 history, always readable. */
-  val ManifestVersion = 2
+  /** Manifest FORMAT version: the newest this build reads (Delta's
+    * minReaderVersion rule). 2 = delta chains + provenance stamps;
+    * 3 = merge-on-read `logs`. A manifest declares the lowest version
+    * that reads it right: 3 only while it carries logs (a version-2
+    * reader would serve the base without the logs' newer rows), 2
+    * otherwise. A reader opening a manifest that declares a HIGHER
+    * version throws instead of silently misreading semantics it
+    * doesn't know (a pre-chain reader would have served a 32-label
+    * delta as the whole table); manifests with no `mver` are
+    * version-1 history, always readable. */
+  val ManifestVersion = 3
+
+  /** The format a manifest without logs declares (see
+    * [[ManifestVersion]]). */
+  private val BaseManifestVersion = 2
 
   /** THE manifest reader: version `v` of `root` (its condemned copy
     * when `condemned`, see [[expire]]), refused when it declares a
@@ -382,17 +432,12 @@ object VersionedTable {
   private def headManifest(root: String): Option[Manifest] =
     versions(root).lastOption.map(manifestAt(root, _))
 
-  /** Whether the latest manifest is FLAT (unpartitioned): false for a
-    * partitioned table, even one whose every label was erased, and
-    * for a nonexistent root. */
-  private[graft] def isFlat(root: String): Boolean =
-    headManifest(root).exists(!_.partitioned)
-
   /** Data dirs (relative to root) live in version `v`'s manifest `m`:
-    * partitioned manifests (full or delta) resolve through the chain,
-    * flat manifests list theirs. */
+    * partitioned manifests (full or delta) resolve through the chain
+    * and add their logs, flat manifests list theirs. */
   private def liveDirs(root: String, v: Int, m: Manifest): Seq[String] =
-    if (m.partitioned) resolved(root, v, m)._1.values.flatten.toSeq.distinct
+    if (m.partitioned)
+      (resolved(root, v, m)._1.values.flatten ++ m.logs.map(_.dir)).toSeq.distinct
     else m.dirs
 
   /** Apply one delta manifest's parts on top of a resolved base —
@@ -579,8 +624,17 @@ object VersionedTable {
     * O(P) manifest metadata instead of stat-walking every live data
     * file. */
   def partStats(root: String): Map[String, (Long, Int)] =
-    versions(root).lastOption
-      .map(v => resolved(root, v, manifestAt(root, v))._2).getOrElse(Map.empty)
+    versions(root).lastOption.map { v =>
+      val m = manifestAt(root, v)
+      val stats = resolved(root, v, m)._2
+      if (m.logs.isEmpty) stats
+      else stats + (LogsLabel -> ((m.logs.map(_.bytes).sum, m.logs.size)))
+    }.getOrElse(Map.empty)
+
+  /** The [[partStats]] entry of a merge-on-read table's logs (bytes,
+    * files): they belong to no partition label, and a label map
+    * holds only numeric labels, so the name cannot collide. */
+  val LogsLabel = "logs"
 
   /** (bytes, parquet files) physically under one relative dir. The
     * bytes of a staged dir are the byte-accounting measure for
@@ -645,19 +699,26 @@ object VersionedTable {
     *    pre-carry foreign commit older than the head would vanish from
     *    the carry;
     *  - `nparts`: the partition count is table state, carried by the
-    *    incremental commits (merge_parts, delta_parts) that don't
-    *    supply one; a commit that defines the whole layout
-    *    (overwrite_parts, restore) stamps only its own. */
+    *    incremental commits (merge_parts, delta_parts, append_log)
+    *    that don't supply one; a commit that defines the whole layout
+    *    (overwrite_parts, restore) stamps only its own;
+    *  - `key`: the merge-on-read key is table state, carried by every
+    *    partitioned commit that does not stamp its own;
+    *  - `logs` is NOT carried here: each partitioned commit states
+    *    its list ([[commitPartitionsOnce]], [[restore]]). */
   private def successor(root: String, head: Option[Manifest], next: Int,
       op: String, content: Content, writerKind: String = KindBatch,
       txn: Option[Long] = None, schemaDdl: Option[String] = None,
       nParts: Option[Int] = None, followSrc: Option[String] = None,
       base: Option[Int] = None, chain: Int = 0,
-      drops: Set[String] = Set.empty): Manifest = {
+      drops: Set[String] = Set.empty, key: Option[TableKey] = None,
+      logs: Seq[LogFile] = Nil): Manifest = {
     val carriedKinds =
       head.fold(Set.empty[String])(_.kinds.getOrElse(committedKinds(root)))
-    val layoutCarries = op == "merge_parts" || op == "delta_parts"
-    Manifest(next, op, mver = Some(ManifestVersion),
+    val layoutCarries =
+      op == "merge_parts" || op == "delta_parts" || op == "append_log"
+    Manifest(next, op,
+      mver = Some(if (logs.nonEmpty) ManifestVersion else BaseManifestVersion),
       ts = Some(math.max(System.currentTimeMillis(),
         head.flatMap(_.ts).fold(0L)(_ + 1))),
       txn = txn, schema = schemaDdl,
@@ -665,7 +726,8 @@ object VersionedTable {
         .getOrElse(UUID.randomUUID().toString)),
       followSrc = followSrc.orElse(head.flatMap(_.followSrc)),
       wkind = Some(writerKind), kinds = Some(carriedKinds + writerKind),
-      base = base, chain = chain, drops = drops,
+      key = if (content.partitioned) key.orElse(head.flatMap(_.key)) else None,
+      logs = logs, base = base, chain = chain, drops = drops,
       nParts = nParts.orElse(
         if (layoutCarries) head.flatMap(_.nParts) else None),
       content = content)
@@ -692,12 +754,23 @@ object VersionedTable {
     rel
   }
 
+  /** Tasks a staged partitioned write spreads over: the session's
+    * parallelism. A `repartition(col)` without a count lets AQE
+    * coalesce a small frame's shuffle into ONE task that writes every
+    * `pid=` dir serially; a count pins the shuffle (AQE never
+    * coalesces a repartition by number), and a producer that already
+    * hash-partitions on the pid with this same count (the merge
+    * aggregation) satisfies it, so no second exchange is planned. */
+  private[graft] def stageTasks(spark: SparkSession): Int =
+    spark.sparkContext.defaultParallelism
+
   /** Stage `df` partitioned by integer column `partCol` — ONE Spark
     * job for however many partitions the frame touches (each becomes
     * a `pid=<k>` subdir of one fresh uuid dir, and each subdir is an
     * independent commit unit for [[commitPartitions]]). The frame is
-    * hash-repartitioned on `partCol` first so a partition's rows
-    * co-locate into one task → one file per touched partition.
+    * hash-repartitioned on `partCol` into [[stageTasks]] tasks first,
+    * so a partition's rows co-locate into one task → one file per
+    * touched partition, and the partitions are written in parallel.
     * Returns partition label → relative dir, only for partitions the
     * frame actually touched. */
   private[graft] def stagePartitioned(df: DataFrame, root: String,
@@ -705,8 +778,8 @@ object VersionedTable {
     import org.apache.spark.sql.functions.col
     val rel = s"data/${UUID.randomUUID()}"
     val out = Paths.get(root, rel)
-    df.repartition(col(partCol)).write.partitionBy(partCol)
-      .parquet(out.toString)
+    df.repartition(stageTasks(df.sparkSession), col(partCol))
+      .write.partitionBy(partCol).parquet(out.toString)
     val ls = Files.list(out)
     val subdirs =
       try ls.iterator.asScala.map(_.getFileName.toString)
@@ -721,6 +794,34 @@ object VersionedTable {
       }
       k -> s"$rel/pid=$k"
     }.toMap
+  }
+
+  /** Stage a one-partition frame as ONE merge-on-read log file under a
+    * fresh write-once dir: one task, one file, no shuffle. None when
+    * the frame had no rows (its footer says so; the dir is removed),
+    * so an empty batch commits nothing. */
+  private[graft] def stageLog(df: DataFrame, root: String): Option[LogFile] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val rel = s"data/${UUID.randomUUID()}"
+    val out = Paths.get(root, rel)
+    df.write.parquet(out.toString)
+    val ls = Files.list(out)
+    val files = try ls.iterator.asScala.filter(_.getFileName.toString
+      .endsWith(".parquet")).toSeq finally ls.close()
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val rows = files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    if (rows > 0) Some(LogFile(rel, dirStats(root, rel)._1))
+    else {
+      val w = Files.walk(out)
+      try w.iterator.asScala.toSeq.reverse.foreach(Files.delete)
+      finally w.close()
+      None
+    }
   }
 
   /** Reads of a commit attempt's base (`next - 1` and its ancestry)
@@ -774,7 +875,14 @@ object VersionedTable {
     * @param schemaDdl evolving tables store their CURRENT logical
     *   schema in every manifest so (a) readers serve pre-widen files
     *   with the added columns as NULLs and (b) a restarted writer
-    *   reloads the evolved schema from the table itself. */
+    *   reloads the evolved schema from the table itself.
+    * @param addLog a merge-on-read log this commit appends to the
+    *   head's `logs` (an `append_log` commit stages no labels)
+    * @param foldLogs dirs of the head's logs this commit folded into
+    *   its staged labels; they leave the list. Every other log rides
+    *   an incremental commit; a full rewrite (`overwriteAll`) defines
+    *   the whole content and carries none.
+    * @param key the merge-on-read key to stamp (else carried) */
   def commitPartitionsOnce(stagedParts: Map[String, String], root: String,
       expected: Int, overwriteAll: Boolean = false,
       txn: Option[Long] = None, schemaDdl: Option[String] = None,
@@ -784,7 +892,10 @@ object VersionedTable {
       nParts: Option[Int] = None,
       followSrc: Option[String] = None,
       writerKind: String = KindBatch,
-      forceCheckpoint: Boolean = false): Int = {
+      forceCheckpoint: Boolean = false,
+      addLog: Option[LogFile] = None,
+      foldLogs: Set[String] = Set.empty,
+      key: Option[TableKey] = None): Int = {
     Files.createDirectories(versionsDir(root))
     val next = expected + 1
     // ONE read of the previous manifest: every carried field (count,
@@ -855,15 +966,21 @@ object VersionedTable {
       }
     meter.foreach(_.add(pipeline, root,
       if (txn.isDefined) "streaming" else "table_copy",
-      stagedPartBytes(root, stagedParts)))
+      stagedPartBytes(root, stagedParts) + addLog.fold(0L)(_.bytes)))
+    val logs =
+      if (overwriteAll) Nil
+      else prev.fold(Seq.empty[LogFile])(_.logs)
+        .filterNot(l => foldLogs.contains(l.dir)) ++ addLog
     publish(root, raceGuard(next)(successor(root, prev, next,
       if (overwriteAll) "overwrite_parts"
+      else if (addLog.isDefined) "append_log"
       else if (asDelta) "delta_parts" else "merge_parts",
       Content.partitioned(mergedParts, mergedStats), writerKind, txn,
       schemaDdl, nParts, followSrc,
       base = if (asDelta) Some(expected) else None,
       chain = if (asDelta) parentChain + 1 else 0,
-      drops = if (asDelta) dropParts else Set.empty)))
+      drops = if (asDelta) dropParts else Set.empty,
+      key = key, logs = logs)))
   }
 
   /** Exactly-once partition-scoped micro-batch merge: [[commitBatch]]'s
@@ -880,13 +997,16 @@ object VersionedTable {
       dropParts: Set[String] = Set.empty,
       nParts: Option[Int] = None,
       followSrc: Option[String] = None,
-      writerKind: String = KindBatch): Option[Int] = {
+      writerKind: String = KindBatch,
+      addLog: Option[LogFile] = None,
+      foldLogs: Set[String] = Set.empty,
+      key: Option[TableKey] = None): Option[Int] = {
     // meter ONCE, outside the retry loop: the staged dirs are written
     // exactly once by the caller — a retried commit relinks the same
     // bytes and must not bill them again (commitOnce meters per
     // attempt because it also STAGES per attempt)
     meter.foreach(_.add(pipeline, root, "streaming",
-      stagedPartBytes(root, stagedParts)))
+      stagedPartBytes(root, stagedParts) + addLog.fold(0L)(_.bytes)))
     // only the head race retries here: the same staged dirs can land
     // on a new head, but not under a new layout — PartitionCountChanged
     // passes to the caller, which restages
@@ -895,7 +1015,8 @@ object VersionedTable {
       else Some(commitPartitionsOnce(stagedParts, root,
         versions(root).lastOption.getOrElse(0), overwriteAll,
         txn = Some(batchId), schemaDdl = schemaDdl, dropParts = dropParts,
-        nParts = nParts, followSrc = followSrc, writerKind = writerKind))
+        nParts = nParts, followSrc = followSrc, writerKind = writerKind,
+        addLog = addLog, foldLogs = foldLogs, key = key))
     }
   }
 
@@ -966,12 +1087,144 @@ object VersionedTable {
     * dropping them. */
   def readAt(spark: SparkSession, root: String, v: Int): DataFrame = {
     val m = manifestAt(root, v)
-    val paths = liveDirs(root, v, m).map(rel => Paths.get(root, rel).toString)
-    schemaOf(m) match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
+    val dirs =
+      if (m.partitioned) resolved(root, v, m)._1.values.flatten.toSeq.distinct
+      else m.dirs
+    readResolved(spark, root, m, dirs, schemaOf(m))
+  }
+
+  /** The state a version holds that a writer needs: one manifest read
+    * gives the partition map, the base's stamped bytes, the logs, the
+    * key, the count and the schema. None for a nonexistent table. */
+  private[graft] final case class Head(version: Int, partitioned: Boolean,
+      parts: Map[String, Seq[String]], baseBytes: Long, logs: Seq[LogFile],
+      key: Option[TableKey], nParts: Option[Int],
+      schema: Option[org.apache.spark.sql.types.StructType])
+
+  private[graft] def head(root: String): Option[Head] =
+    versions(root).lastOption.map { v =>
+      val m = manifestAt(root, v)
+      val (pm, stats) =
+        if (m.partitioned) resolved(root, v, m)
+        else (Map.empty[String, Seq[String]], Map.empty[String, (Long, Int)])
+      Head(v, m.partitioned, pm, stats.valuesIterator.map(_._1).sum, m.logs,
+        m.key, m.nParts, schemaOf(m))
+    }
+
+  /** Column a log row carries while it is resolved: its log's 1-based
+    * position in the manifest's list. It breaks a `seqCols` tie after
+    * the sequence itself: a later log wins, the base ranks 0. */
+  private[graft] val LogCol = "__graft_log"
+
+  private def reader(spark: SparkSession,
+      schema: Option[org.apache.spark.sql.types.StructType]) =
+    schema.map(spark.read.schema(_)).getOrElse(spark.read)
+
+  /** Every row of `logs`, tagged with its log's position ([[LogCol]]). */
+  private[graft] def readLogRows(spark: SparkSession, root: String,
+      logs: Seq[LogFile],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, regexp_extract, typedLit}
+    val position = typedLit(logs.zipWithIndex
+      .map { case (l, i) => l.dir.stripPrefix("data/") -> (i + 1) }.toMap)
+    reader(spark, schema).parquet(logs.map(l => Paths.get(root, l.dir).toString): _*)
+      .withColumn(LogCol, position(regexp_extract(
+        col("_metadata.file_path"), "/data/([0-9a-f-]+)/", 1)))
+  }
+
+  /** THE merge-on-read resolution: the newest row per `key.pk` over
+    * `base` (at most one row per key, the merge's invariant) and the
+    * position-tagged `logs`, under the `seqCols` order; on a sequence
+    * tie the log wins. The logs are bounded small (the fold rule), so
+    * they are reduced to their newest row per key in ONE task
+    * (`coalesce(1)` satisfies the aggregate's clustering, no
+    * exchange) and BROADCAST against the base scan: the base is never
+    * shuffled. One scan keeps each base row that no log row beats;
+    * a second, pruned to the key and sequence columns, finds the log
+    * rows a base row beats. */
+  private def resolve(base: Option[DataFrame], logs: DataFrame,
+      key: TableKey): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, max_by, struct}
+    val cols = logs.columns.toSeq.filterNot(_ == LogCol)
+    def seqOf(cs: Seq[String]) = struct(cs.map(col): _*)
+    val newest = logs.coalesce(1).groupBy(col(key.pk))
+      .agg(max_by(seqOf(cols), seqOf(key.seqCols :+ LogCol)).as("r"))
+      .select(cols.map(c => col("r").getField(c).as(c)): _*)
+    base match {
+      case None => newest
+      case Some(b) =>
+        val (lk, ls, bk, bs) =
+          ("__graft_log_key", "__graft_log_seq", "__graft_base_key", "__graft_base_seq")
+        val logSeq = broadcast(newest.select(col(key.pk).as(lk),
+          seqOf(key.seqCols).as(ls)))
+        val baseWins = b.join(logSeq, col(key.pk) === col(lk), "left_outer")
+          .filter(col(ls).isNull || seqOf(key.seqCols) > col(ls))
+          .select(cols.map(col): _*)
+        val baseSeq = b.select(col(key.pk).as(bk), seqOf(key.seqCols).as(bs))
+          .join(logSeq, col(bk) === col(lk), "left_semi")
+        val logWins = newest.join(broadcast(baseSeq), col(key.pk) === col(bk), "left_outer")
+          .filter(col(bs).isNull || seqOf(key.seqCols) >= col(bs))
+          .select(cols.map(col): _*)
+        baseWins.unionByName(logWins)
     }
   }
+
+  /** Base `dirs` of manifest `m` resolved against its logs (see
+    * [[resolve]]); `logFilter` keeps only the log rows a caller's base
+    * subset can hold. A manifest without logs reads as the plain scan
+    * it always was: no extra job. */
+  private def readResolved(spark: SparkSession, root: String, m: Manifest,
+      dirs: Seq[String], schema: Option[org.apache.spark.sql.types.StructType],
+      logFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    def base(st: Option[org.apache.spark.sql.types.StructType]) =
+      reader(spark, st).parquet(dirs.map(rel => Paths.get(root, rel).toString): _*)
+    if (m.logs.isEmpty) base(schema)
+    else {
+      val key = m.key.getOrElse(throw new IllegalStateException(
+        s"$root v${m.version} carries logs but no key to resolve them under"))
+      val logs = readLogRows(spark, root, m.logs, schema)
+      // a table without a stamped schema reads its base under the
+      // logs' footer schema: the writer's full column set, one
+      // inference for both
+      val st = schema.getOrElse(logs.drop(LogCol).schema)
+      resolve(if (dirs.isEmpty) None else Some(base(Some(st))),
+        logFilter.fold(logs)(logs.filter), key)
+    }
+  }
+
+  /** The head's rows of partition `labels`, resolved against its logs,
+    * under `schema` (the table's own when None); None when none of the
+    * labels holds a base dir and the table has no logs. */
+  private[graft] def readPartitions(spark: SparkSession, root: String,
+      labels: Set[Int],
+      schema: Option[org.apache.spark.sql.types.StructType]): Option[DataFrame] =
+    versions(root).lastOption.flatMap { v =>
+      val m = manifestAt(root, v)
+      val pm = if (m.partitioned) resolved(root, v, m)._1 else Map.empty[String, Seq[String]]
+      val dirs = labels.toSeq.sorted.flatMap(l => pm.getOrElse(l.toString, Nil))
+      if (dirs.isEmpty && m.logs.isEmpty) None
+      else Some(readResolved(spark, root, m, dirs, schema.orElse(schemaOf(m)),
+        logPidFilter(m, labels)))
+    }
+
+  /** Keeps the log rows whose key hashes into `labels`. */
+  private def logPidFilter(m: Manifest,
+      labels: Set[Int]): Option[org.apache.spark.sql.Column] =
+    for (k <- m.key; p <- m.nParts if m.logs.nonEmpty)
+      yield keyPid(k.pk, p).isInCollection(labels.toSeq)
+
+  /** The partition labels the keys of `m`'s logs hash into, from one
+    * narrow job over the (bounded, small) logs; empty without logs. */
+  private def logPids(spark: SparkSession, root: String, m: Manifest): Set[Int] =
+    if (m.logs.isEmpty) Set.empty
+    else {
+      val k = m.key.getOrElse(throw new IllegalStateException(
+        s"$root v${m.version} carries logs but no key"))
+      val p = m.nParts.getOrElse(throw new IllegalStateException(
+        s"$root v${m.version} carries logs but no partition count"))
+      touchedPids(readLogRows(spark, root, m.logs, schemaOf(m))
+        .select(keyPid(k.pk, p).as(PidCol)))
+    }
 
   // ==== snapshot management: timestamps, tags, restore (r14) =======
 
@@ -1073,12 +1326,11 @@ object VersionedTable {
     val label = spark.range(1)
       .select(pmod(hash(keyLit), lit(p)).cast("int")).head().getInt(0)
     pm.get(label.toString) match {
-      case None => readAt(spark, root, head).limit(0)
-      case Some(dirs) =>
-        val paths = dirs.map(rel => Paths.get(root, rel).toString)
-        schema.map(spark.read.schema(_)).getOrElse(spark.read)
-          .parquet(paths: _*)
-          .filter(col(pk) === keyLit)
+      case None if m.logs.isEmpty => readAt(spark, root, head).limit(0)
+      case dirs =>
+        // the key's base partition and the logs' rows of the key
+        readResolved(spark, root, m, dirs.getOrElse(Nil), schema,
+          Some(col(pk) === keyLit)).filter(col(pk) === keyLit)
     }
   }
 
@@ -1233,7 +1485,7 @@ object VersionedTable {
         } else Content.flat(target.dirs)
       publish(root, successor(root, Some(manifestAt(root, head)), head + 1,
         "restore", content, schemaDdl = target.schema,
-        nParts = target.nParts))
+        nParts = target.nParts, key = target.key, logs = target.logs))
     }
 
   /** [[restore]] to the version a tag pinned — the named form an
@@ -1280,7 +1532,7 @@ object VersionedTable {
             "overwrite commit"))
       require(m.partitioned, s"$root v$head is unpartitioned")
       val pm = resolved(root, head, m)._1
-      if (pm.isEmpty) return (0L, Nil)
+      if (pm.isEmpty && m.logs.isEmpty) return (0L, Nil)
       val schema = schemaOf(m)
       // hash with the table's OWN pk type: Spark's hash is
       // type-sensitive (hash(1) != hash(1L)), so a caller's Int
@@ -1291,7 +1543,8 @@ object VersionedTable {
       // footer read, not a table listing (review r14).
       val pkType = schema.flatMap(_.fields.find(_.name == pk)
         .map(_.dataType)).getOrElse {
-        val sample = Paths.get(root, pm.values.flatten.head).toString
+        val sample = Paths.get(root,
+          pm.values.flatten.headOption.getOrElse(m.logs.head.dir)).toString
         spark.read.parquet(sample).schema.fields.find(_.name == pk)
           .map(_.dataType).getOrElse(throw new IllegalArgumentException(
             s"$root has no column '$pk'"))
@@ -1299,11 +1552,16 @@ object VersionedTable {
       val k = keys.select(col(pk).cast(pkType).as(pk)).distinct()
         .withColumn(PidCol, keyPid(pk, p)).persist()
       try {
-        val candidates = touchedPids(k).toSeq
-          .map(_.toString).filter(pm.contains).sorted
+        // a key living only in a log has no base label yet; the logs
+        // fold into the rewrite, so their labels are read too
+        val fromLogs = logPids(spark, root, m)
+        val candidates = touchedPids(k)
+          .filter(l => pm.contains(l.toString) || fromLogs.contains(l))
         if (candidates.isEmpty) return (0L, Nil)
-        val dirs = candidates.flatMap(pm(_))
-        val existing = readWithPid(spark, root, dirs, schema).persist()
+        val read = candidates ++ fromLogs
+        val existing = readWithPid(spark, root, m,
+          read.toSeq.sorted.flatMap(l => pm.getOrElse(l.toString, Nil)),
+          Some(read)).persist()
         try {
           // hit pids AND the doomed-row count from ONE aggregation
           // over the semi-join (review r14)
@@ -1313,10 +1571,11 @@ object VersionedTable {
             .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
           if (hitCounts.isEmpty) return (0L, Nil)
           val hit = hitCounts.keySet
+          val rewrite = hit ++ fromLogs
           val survivors = existing
-            .filter(col(PidCol).isInCollection(hit.toSeq))
+            .filter(col(PidCol).isInCollection(rewrite.toSeq))
             .join(k.select(col(pk)), Seq(pk), "left_anti")
-          commitErasure(root, head, m, pm, existing, survivors, hit,
+          commitErasure(root, head, m, pm, existing, survivors, rewrite,
             meter, pipeline)
           (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
         } finally existing.unpersist()
@@ -1351,7 +1610,7 @@ object VersionedTable {
     require(!set.contains(PidCol),
       s"'$PidCol' is the reserved internal partition column")
     withHeadScan(spark, root, "update") {
-      (head, m, pm, existing) =>
+      (head, m, pm, existing, fromLogs) =>
         // the layout-key guard above is only as good as the name the
         // caller passed — a typo'd pk would disarm it and let the
         // REAL key be rewritten (review r14)
@@ -1368,6 +1627,7 @@ object VersionedTable {
         if (hitCounts.isEmpty) (0L, Nil)
         else {
           val hit = hitCounts.keySet
+          val rewrite = hit ++ fromLogs
           // ONE select so every set expression evaluates against the
           // OLD row (the SQL UPDATE rule) — a fold of withColumn
           // would let a later assignment read an earlier one's
@@ -1380,13 +1640,13 @@ object VersionedTable {
           val types = existing.schema.fields.map(f => f.name -> f.dataType)
             .toMap
           val rewritten = existing
-            .filter(col(PidCol).isInCollection(hit.toSeq))
+            .filter(col(PidCol).isInCollection(rewrite.toSeq))
             .select(existing.columns.toSeq.map { c =>
               set.get(c).map(e =>
                 when(matched, e.cast(types(c))).otherwise(col(c)).as(c))
                 .getOrElse(col(c))
             }: _*)
-          commitErasure(root, head, m, pm, existing, rewritten, hit,
+          commitErasure(root, head, m, pm, existing, rewritten, rewrite,
             meter, pipeline)
           (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
         }
@@ -1394,12 +1654,14 @@ object VersionedTable {
   }
 
   /** Shared shell for the predicate DML ops: resolve the head,
-    * require a partitioned manifest, full-scan-read it with pid
-    * recovery, and persist it for the body's multiple passes. The
-    * whole attempt, body included, re-runs on a head race
+    * require a partitioned manifest, full-scan-read it (logs resolved)
+    * with pid recovery, and persist it for the body's multiple passes.
+    * The body also gets the labels the logs' keys hash into: an op
+    * that commits folds the logs, so it rewrites those labels too.
+    * The whole attempt, body included, re-runs on a head race
     * ([[rebasing]]). */
   private def withHeadScan(spark: SparkSession, root: String, what: String)(
-      body: (Int, Manifest, Map[String, Seq[String]], DataFrame)
+      body: (Int, Manifest, Map[String, Seq[String]], DataFrame, Set[Int])
         => (Long, Seq[String])): (Long, Seq[String]) =
     rebasing(headMoved) {
       val head = versions(root).lastOption.getOrElse(
@@ -1409,33 +1671,44 @@ object VersionedTable {
         s"$root v$head is unpartitioned — $what flat tables by " +
           "overwrite commit")
       val pm = resolved(root, head, m)._1
-      val existing = readWithPid(spark, root,
-        pm.values.flatten.toSeq.sorted, schemaOf(m)).persist()
-      try body(head, m, pm, existing)
+      val existing = readWithPid(spark, root, m,
+        pm.values.flatten.toSeq.sorted, None).persist()
+      try body(head, m, pm, existing, logPids(spark, root, m))
       finally existing.unpersist()
     }
 
   /** Partition reader shared by the erasure ops and
-    * [[compactPartitions]]: the given relative dirs under the
-    * (optional) manifest schema, with the partition label recovered
-    * from the file path (the stagePartitioned layout invariant) into
+    * [[compactPartitions]]: the given relative dirs of `m` under its
+    * (optional) schema, resolved against its logs (restricted to the
+    * keys of `labels` when given), with each row's partition label in
     * the RESERVED [[PidCol]] — a data column named "pid" is legal and
-    * must not be clobbered by the path-derived label. */
-  private def readWithPid(spark: SparkSession, root: String,
-      dirs: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    * must not be clobbered. A table with a stamped key derives the
+    * label from the key ([[keyPid]]), as its writers do; a log row has
+    * no partition path. Tables without the stamp (no logs either)
+    * recover it from the file path, the stagePartitioned layout
+    * invariant. */
+  private def readWithPid(spark: SparkSession, root: String, m: Manifest,
+      dirs: Seq[String], labels: Option[Set[Int]]): DataFrame = {
     import org.apache.spark.sql.functions.{col, regexp_extract}
-    val paths = dirs.map(rel => Paths.get(root, rel).toString)
-    schema.map(spark.read.schema(_)).getOrElse(spark.read)
-      .parquet(paths: _*)
-      .withColumn(PidCol, regexp_extract(
-        col("_metadata.file_path"), "/pid=(\\d+)/", 1).cast("int"))
+    (m.key, m.nParts) match {
+      case (Some(k), Some(p)) =>
+        readResolved(spark, root, m, dirs, schemaOf(m),
+          labels.flatMap(logPidFilter(m, _)))
+          .withColumn(PidCol, keyPid(k.pk, p))
+      case _ =>
+        require(m.logs.isEmpty, s"$root v${m.version} carries logs but no key")
+        readResolved(spark, root, m, dirs, schemaOf(m))
+          .withColumn(PidCol, regexp_extract(
+            col("_metadata.file_path"), "/pid=(\\d+)/", 1).cast("int"))
+    }
   }
 
   /** Shared erasure tail (review r14 — one body so the metering,
     * emptied-label, and checkpoint rules can never drift between the
-    * two delete ops): stage the surviving rows of the hit partitions,
-    * drop labels left empty, and publish as a CHECKPOINT commit —
+    * two delete ops): stage the surviving rows of the `rewrite`
+    * partitions (the hit ones plus every label a log key hashes into:
+    * the commit folds the logs, or a log row would bring an erased key
+    * back), drop labels left empty, and publish as a CHECKPOINT commit —
     * retention can then drop every pre-delete manifest at the next
     * expire instead of keeping them as delta ancestry, so the erasure
     * completes on the retention cadence, not the checkpoint
@@ -1448,17 +1721,18 @@ object VersionedTable {
     * serving an empty typed frame. */
   private def commitErasure(root: String, head: Int, m: Manifest,
       pm: Map[String, Seq[String]], existing: DataFrame,
-      survivors: DataFrame, hit: Set[Int],
+      survivors: DataFrame, rewrite: Set[Int],
       meter: Option[graft.streaming.EgressMeter], pipeline: String): Unit = {
     val staged = stagePartitioned(survivors, root, PidCol)
     meter.foreach(_.add(pipeline, root, "table_copy",
       stagedPartBytes(root, staged)))
-    val emptied = hit.map(_.toString) -- staged.keySet
+    val emptied = rewrite.map(_.toString) -- staged.keySet
     val schemaDdl = m.schema.orElse(
       Some(existing.drop(PidCol).schema.toDDL)
-        .filter(_ => (pm.keySet -- emptied).isEmpty))
+        .filter(_ => (pm.keySet -- emptied).isEmpty && staged.isEmpty))
     commitPartitionsOnce(staged, root, head, dropParts = emptied,
-      nParts = m.nParts, schemaDdl = schemaDdl, forceCheckpoint = true)
+      nParts = m.nParts, schemaDdl = schemaDdl, forceCheckpoint = true,
+      foldLogs = m.logs.map(_.dir).toSet)
     ()
   }
 
@@ -1476,7 +1750,7 @@ object VersionedTable {
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     withHeadScan(spark, root, "delete on") {
-      (head, m, pm, existing) =>
+      (head, m, pm, existing, fromLogs) =>
         val matched = coalesce(cond, lit(false))
         // hit pids AND the doomed-row count from ONE aggregation
         val hitCounts = existing.filter(matched).groupBy(PidCol).count()
@@ -1484,10 +1758,11 @@ object VersionedTable {
         if (hitCounts.isEmpty) (0L, Nil)
         else {
           val hit = hitCounts.keySet
+          val rewrite = hit ++ fromLogs
           val survivors = existing
-            .filter(col(PidCol).isInCollection(hit.toSeq))
+            .filter(col(PidCol).isInCollection(rewrite.toSeq))
             .filter(not(matched))
-          commitErasure(root, head, m, pm, existing, survivors, hit,
+          commitErasure(root, head, m, pm, existing, survivors, rewrite,
             meter, pipeline)
           (hitCounts.values.sum, hit.toSeq.map(_.toString).sorted)
         }
@@ -1535,12 +1810,17 @@ object VersionedTable {
     * maintenance. One Spark job regardless of how many partitions are
     * over budget: each row's partition is recovered from its file
     * path (`pid=` is the on-disk layout invariant of
-    * [[stagePartitioned]]), so no knowledge of the writer's key→pid
-    * hash is needed. Each attempt re-resolves the head manifest and
-    * restages from it; [[rebasing]] re-runs it on a head race (the
-    * lost attempt's staged dirs become vacuum debris). Returns the
-    * rewritten partition labels (empty = nothing over budget, no
-    * commit). */
+    * [[stagePartitioned]]) or, on a table with a stamped key, from
+    * the key's hash. It also FOLDS a merge-on-read table's logs: every
+    * label a log key hashes into is rewritten with its resolved rows
+    * and the logs leave the manifest. Compaction is maintenance, so
+    * each attempt first waits out live writer intents ([[asWriter]]),
+    * as [[rescalePartitions]] does: a pending compaction never makes a
+    * merge lose its commit race. Each attempt re-resolves the head
+    * manifest and restages from it; [[rebasing]] re-runs it on a head
+    * race (the lost attempt's staged dirs become vacuum debris).
+    * Returns the rewritten partition labels (empty = nothing over
+    * budget and no logs, no commit). */
   def compactPartitions(spark: SparkSession, root: String,
       maxFilesPerPart: Int = 1,
       maxAttempts: Int = CommitAttempts,
@@ -1550,6 +1830,7 @@ object VersionedTable {
     // files) can be expired/vacuumed by a maintenance racer between
     // the versions() listing and any read below
     rebasing(headMoved, maxAttempts) {
+      awaitWriters(root)
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
       val m = manifestAt(root, base)
@@ -1562,9 +1843,14 @@ object VersionedTable {
       val over = pm.filter { case (k, ds) =>
         ds.size > 1 || stats.get(k).map(_._2)
           .getOrElse(ds.map(dirStats(root, _)._2).sum) > maxFilesPerPart }
-      if (over.isEmpty) return Nil
-      val df = readWithPid(spark, root, over.values.flatten.toSeq.sorted,
-        schemaOf(m))
+      // the logs fold when there are more of them than the per-label
+      // file budget: each is one more file every reader opens
+      val rewrite = over.keySet.map(_.toInt) ++
+        (if (m.logs.size > maxFilesPerPart) logPids(spark, root, m) else Set.empty[Int])
+      if (rewrite.isEmpty) return Nil
+      val df = readWithPid(spark, root, m,
+        rewrite.toSeq.sorted.flatMap(l => pm.getOrElse(l.toString, Nil)),
+        Some(rewrite))
       val staged = stagePartitioned(df, root, PidCol)
       // meter per attempt: a lost race's staged dirs are real bytes
       // physically written (vacuum reclaims files, not the bill) —
@@ -1573,8 +1859,9 @@ object VersionedTable {
         stagedPartBytes(root, staged)))
       commitPartitionsOnce(staged, root, base,
         schemaDdl = m.schema, writerKind = KindMaintenance,
-        forceCheckpoint = true)
-      over.keys.toSeq.sorted
+        forceCheckpoint = true,
+        foldLogs = if (m.logs.size > maxFilesPerPart) m.logs.map(_.dir).toSet else Set.empty)
+      rewrite.map(_.toString).toSeq.sorted
     }
   }
 
@@ -1621,10 +1908,12 @@ object VersionedTable {
       require(m.partitioned,
         s"$root v$base is unpartitioned; rescale applies to partitioned " +
           "tables (seed one with commitPartitions)")
-      val dirs = resolved(root, base, m)._1.values.flatten.toSeq.sorted
-        .map(rel => Paths.get(root, rel).toString)
-      val reader = schemaOf(m).map(spark.read.schema(_)).getOrElse(spark.read)
-      val df = reader.parquet(dirs: _*)
+      require(m.key.forall(_.pk == pk),
+        s"$root is keyed on '${m.key.map(_.pk).getOrElse("")}', not '$pk'")
+      // the logs' rows resolve into the new layout; the full rewrite
+      // carries no log
+      val df = readResolved(spark, root, m,
+        resolved(root, base, m)._1.values.flatten.toSeq.sorted, schemaOf(m))
       require(!df.columns.contains(PidCol),
         s"'$PidCol' is the reserved internal partition column")
       val staged = stagePartitioned(
@@ -1670,10 +1959,10 @@ object VersionedTable {
         // table whose manifests predate the stamp pays the walk until
         // its next commit re-stamps it
         val (pm, stats) = resolved(root, head, m)
-        val total =
+        val total = m.logs.map(_.bytes).sum + (
           if (pm.keySet.subsetOf(stats.keySet))
             pm.keysIterator.map(stats(_)._1).sum
-          else pm.values.flatten.map(dirStats(root, _)._1).sum
+          else pm.values.flatten.map(dirStats(root, _)._1).sum)
         if (total <= targetBytesPerPart.toDouble * p) return None
         // Long arithmetic with a hard cap: a pathological
         // bytes/budget ratio above 2³¹ would wrap an Int doubling
@@ -1744,9 +2033,13 @@ object VersionedTable {
     * PARTITION-PRUNED: for partitioned manifests only the partitions
     * whose dir set CHANGED between the two versions are read (an
     * untouched partition cannot contain a changed row — its files are
-    * write-once), so the scan is O(changed partitions), table-size
-    * independent — the property that makes a change feed usable at
-    * 100 TB. Flat manifests fall back to a full two-snapshot diff.
+    * write-once), plus the partitions the keys of the LOGS one side
+    * holds and the other does not hash into (a log appended or folded
+    * away between the versions). Each side resolves those partitions'
+    * base against all of its own logs, so the scan is O(changed
+    * partitions), table-size independent — the property that makes a
+    * change feed usable at 100 TB. Flat manifests fall back to a full
+    * two-snapshot diff.
     *
     * Both sides are read under `toV`'s manifest schema when one is
     * stored (evolving tables): pre-widen rows serve the added columns
@@ -1772,28 +2065,37 @@ object VersionedTable {
     val mFrom = manifestAt(root, fromV)
     val mTo = manifestAt(root, toV)
     val schema = schemaOf(mTo)
-    def readDirs(rels: Seq[String]): Option[DataFrame] =
-      if (rels.isEmpty) None
-      else {
-        val paths = rels.map(rel => Paths.get(root, rel).toString)
-        Some(schema.map(spark.read.schema(_)).getOrElse(spark.read)
-          .parquet(paths: _*))
-      }
+    // one side: base `rels` of `m` resolved against its logs (only the
+    // log rows `labels` can hold), under toV's schema
+    def readSide(m: Manifest, rels: Seq[String],
+        labels: Option[Set[Int]]): Option[DataFrame] =
+      if (rels.isEmpty && m.logs.isEmpty) None
+      else Some(readResolved(spark, root, m, rels, schema,
+        labels.flatMap(logPidFilter(m, _))))
     val (oldDf, newDf) =
       if (mFrom.partitioned && mTo.partitioned) {
         // prune: a label reads only if its dir set moved (covers
-        // replaced, added, and removed partitions)
+        // replaced, added, and removed partitions) or a key of a log
+        // only one side holds hashes into it
         val pmFrom = resolved(root, fromV, mFrom)._1
         val pmTo = resolved(root, toV, mTo)._1
-        val labels = (pmFrom.keySet ++ pmTo.keySet)
-          .filter(l => pmFrom.get(l) != pmTo.get(l)).toSeq.sorted
-        (readDirs(labels.flatMap(pmFrom.getOrElse(_, Nil))),
-          readDirs(labels.flatMap(pmTo.getOrElse(_, Nil))))
+        val moved = (pmFrom.keySet ++ pmTo.keySet)
+          .filter(l => pmFrom.get(l) != pmTo.get(l)).map(_.toInt)
+        val (fromLogs, toLogs) = (mFrom.logs.toSet, mTo.logs.toSet)
+        val labels = moved ++ Seq(
+          mFrom.copy(logs = (fromLogs -- toLogs).toSeq),
+          mTo.copy(logs = (toLogs -- fromLogs).toSeq))
+          .flatMap(logPids(spark, root, _))
+        def side(m: Manifest, pm: Map[String, Seq[String]]) =
+          readSide(if (labels.nonEmpty) m else m.copy(logs = Nil),
+            labels.toSeq.sorted.flatMap(l => pm.getOrElse(l.toString, Nil)),
+            Some(labels))
+        (side(mFrom, pmFrom), side(mTo, pmTo))
       } else
         // flat (or migration-boundary) fallback: full two-snapshot
-        // diff, both sides still under toV's schema via readDirs
-        (readDirs(liveDirs(root, fromV, mFrom)),
-          readDirs(liveDirs(root, toV, mTo)))
+        // diff, both sides still under toV's schema
+        (readSide(mFrom, liveDirs(root, fromV, mFrom.copy(logs = Nil)), None),
+          readSide(mTo, liveDirs(root, toV, mTo.copy(logs = Nil)), None))
     // "_change_type" is this feed's reserved output column (the Delta
     // CDF name): a table with a NATURAL column of that name would be
     // silently clobbered by the withColumn below and then dropped by
@@ -2005,6 +2307,8 @@ object VersionedTable {
                 running = Some((v, pm))
                 acc ++= pm.values.flatten
             }
+            // every manifest carries its whole log list
+            acc ++= m.logs.map(_.dir)
           } else {
             running = None
             acc ++= m.dirs
@@ -2030,7 +2334,8 @@ object VersionedTable {
             try {
               val m = manifestAt(root,
                 p.getFileName.toString.substring(10, 18).toInt, condemned = true)
-              acc ++= (if (m.partitioned) m.parts.values.flatten else m.dirs)
+              acc ++= (if (m.partitioned) m.parts.values.flatten ++ m.logs.map(_.dir)
+                else m.dirs)
             } catch { case _: java.nio.file.NoSuchFileException => () }
           }
         }

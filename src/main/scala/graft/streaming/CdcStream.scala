@@ -297,6 +297,11 @@ class InMemoryCdcTarget extends CdcTarget {
   def snapshot: Map[Long, CdcApplied] =
     state.toMap.filter { case (_, r) => !r.is_deleted }
 
+  /** The model of a physical erasure ([[graft.sources.VersionedTable
+    * .deleteKeys]]): the keys' state goes, tombstones included, so a
+    * later stale row for one of them is fresh again. */
+  def erase(keys: Iterable[Long]): Unit = keys.foreach(state.remove)
+
   /** batchIds merged, in arrival order — lets specs assert resume
     * behavior (no re-merge of committed batches after a restart). */
   def batchesMerged: Seq[Long] = {

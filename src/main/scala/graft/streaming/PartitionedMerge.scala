@@ -15,47 +15,81 @@ import graft.sources.VersionedTable
   * same merge; the fixed-schema path is now a parametrization
   * (pk/seqCols/cols/readSchema) of this core, not a second copy.
   *
+  * MERGE-ON-READ (Hudi's merge-on-read table, Iceberg v2's row-level
+  * deletes): a micro-batch into an existing partitioned table writes
+  * O(batch), not O(touched partitions). It appends ONE log file — the
+  * batch's newest row per key, tombstones included, from one task —
+  * and commits a manifest that adds it to the table-level `logs` list
+  * and stamps the key (`pk`, `seqCols`). Every reader resolves the
+  * newest row per key over base + logs ([[VersionedTable.readAt]]).
+  * When the logs reach a bound ([[MaxLogFiles]], or their bytes reach
+  * the base's or [[MaxLogBytes]]), the merge FOLDS them instead: the
+  * copy-on-write body below with the logs ∪ the batch as its input,
+  * committing new bases and clearing the logs.
+  *
   * Semantics (unchanged from both callers):
   *  1. redelivery fast-path before any staging (manifest txn guard);
-  *  2. partition count resolved from TABLE state ([[VersionedTable
-  *     .partCount]]), the constructor count only seeding fresh tables;
-  *  3. touched pids from ONE narrow job over the micro-batch
-  *     ([[VersionedTable.touchedPids]] — no shuffle; the result is
-  *     bounded by the partition count, a control-plane frame);
-  *  4. read ONLY the touched partitions under an explicit schema
-  *     (`readSchema`, else the rows' schema restricted to `cols` — no
-  *     schema-inference job), union the batch, keep latest-per-key
-  *     under the lexicographic `seqCols` order;
-  *  5. stage in one partitioned write, publish via
-  *     [[VersionedTable.commitPartitions]] — untouched dirs carried
-  *     verbatim, write amplification O(touched), not O(table).
+  *  2. partition count resolved from TABLE state (the head manifest),
+  *     the constructor count only seeding fresh tables;
+  *  3. the first commit and a flat-legacy migration take the
+  *     copy-on-write body, as a fold does.
   *
-  * Steps 4–5 run as ONE shuffle: the union is hash-partitioned on the
-  * pid and aggregated per (pid, pk). Since the pid is a function of
-  * the key, that grouping equals the per-key one, and because the
-  * output keeps the grouping pid column itself, its partitioning
-  * already satisfies the staged write's `repartition(pid)` — Spark's
-  * EnsureRequirements drops that second exchange. The merge runs
-  * three jobs of its own: the touched-pid job, the shuffle's map
-  * stage, the write.
+  * The copy-on-write body: touched pids from ONE narrow job over the
+  * input ([[VersionedTable.touchedPids]]); read ONLY the touched
+  * partitions under an explicit schema (`readSchema`, else the rows'
+  * schema restricted to `cols` — no schema-inference job), union the
+  * input, keep latest-per-key under the lexicographic `seqCols` order;
+  * stage in one partitioned write and publish via
+  * [[VersionedTable.commitPartitions]] — untouched dirs carried
+  * verbatim. The union is hash-partitioned on the pid into
+  * [[VersionedTable.stageTasks]] partitions and aggregated per (pid,
+  * pk). Since the pid is a function of the key, that grouping equals
+  * the per-key one, and because the output keeps the grouping pid
+  * column itself, its partitioning already satisfies the staged
+  * write's repartition — Spark's EnsureRequirements drops that second
+  * exchange, and the write runs in parallel tasks. The body runs three
+  * jobs of its own: the touched-pid job, the shuffle's map stage, the
+  * write. A log append runs one.
   *
   * Rescale safety (r13): a [[VersionedTable.rescalePartitions]]
-  * landing between step 2's layout read and step 5's commit means the
-  * staged dirs were hashed under a DEAD count — the commit throws
+  * landing between the layout read and a copy-on-write commit means
+  * the staged dirs were hashed under a DEAD count — the commit throws
   * [[VersionedTable.PartitionCountChanged]] and the merge re-runs
-  * from step 2 inside `VersionedTable.rebasing(layoutMoved)`,
-  * restaging under the count now stamped on the manifest (the
-  * orphaned dirs are vacuum debris). Without the restage the writer
-  * would either corrupt the layout (unguarded) or wedge (guard with
-  * no retry).
+  * inside `VersionedTable.rebasing(layoutMoved)`, restaging under the
+  * count now stamped on the manifest (the orphaned dirs are vacuum
+  * debris). A log holds no layout, so its commit never restages.
   *
   * @param beforeCommit test seam: runs between staging and commit so
-  *   specs can interleave a rescale deterministically into the race
-  *   window; production callers leave the no-op default
+  *   specs can interleave a rescale or compaction deterministically
+  *   into the race window; production callers leave the no-op default
   */
-private[streaming] object PartitionedMerge {
+private[graft] object PartitionedMerge {
 
   private val Pid = VersionedTable.PidCol
+
+  /** Fold bound, file count: the merge that would bring the table to
+    * this many logs folds them with its batch instead. Measured with
+    * `LakehouseScale merge` (4 cores, P = 32, 200-row logs), the
+    * resolved snapshot read of a 1M-row table took 0.22 s with no
+    * log, 0.63–0.67 s with 8 to 32 logs (the broadcast resolution's
+    * fixed cost), then 0.90 s at 40 and 1.01 s at 48: the curve bends
+    * past 32. */
+  private[graft] val MaxLogFiles = 32
+
+  /** Fold bound, bytes: the logs' bytes reach the base's (a resolved
+    * read would scan at least twice the base), or this cap, which keeps
+    * the logs' newest rows a frame every reader can broadcast. */
+  private[graft] val MaxLogBytes = 64L << 20
+
+  /** Whether `logs` must fold instead of being committed on top of
+    * `h`: so every committed version holds fewer than [[MaxLogFiles]]
+    * logs, of fewer bytes than its base and than [[MaxLogBytes]]. */
+  private def foldDue(h: VersionedTable.Head, logs: Seq[VersionedTable.LogFile],
+      key: VersionedTable.TableKey): Boolean = {
+    val bytes = logs.iterator.map(_.bytes).sum
+    logs.size >= MaxLogFiles || bytes >= h.baseBytes || bytes >= MaxLogBytes ||
+      h.key.exists(_ != key)
+  }
 
   def merge(spark: SparkSession, root: String, batchId: Long,
       rows: DataFrame, pk: String, seqCols: Seq[String], cols: Seq[String],
@@ -65,52 +99,126 @@ private[streaming] object PartitionedMerge {
     // redelivery fast-path: skip BEFORE staging any data (the txn
     // check inside commitPartitions still guards the race window)
     if (VersionedTable.committedTxns(root).contains(batchId)) return
-    // a rescale racing this merge: restage under the count now stamped
-    // on the manifest; the writer intent keeps the next rescale from
-    // starting until this merge commits
+    val key = VersionedTable.TableKey(pk, seqCols)
+    val schema = readSchema.getOrElse(StructType(cols.map(rows.schema(_))))
+    // a rescale racing a fold: restage under the count now stamped on
+    // the manifest; the writer intent keeps the next rescale (and
+    // compaction) from starting until this merge commits
     VersionedTable.asWriter(root)(VersionedTable.rebasing(VersionedTable.layoutMoved) {
-      val p = VersionedTable.partCount(root).getOrElse(configuredP)
-      val parts = VersionedTable.parts(root)
-      val flatLegacy = migrateFlat && parts.isEmpty &&
-        VersionedTable.isFlat(root)
-      val batch = rows.withColumn(Pid, VersionedTable.keyPid(pk, p)).persist()
-      try {
-        val touched: Set[Int] =
-          if (flatLegacy) (0 until p).toSet
-          else VersionedTable.touchedPids(batch)
-        if (touched.isEmpty) return // empty batch: merging nothing is a no-op
-        val existing: DataFrame =
-          if (flatLegacy)
-            // migration: read the whole flat snapshot once; the commit
-            // below is a full partitioned rewrite (overwriteAll)
-            VersionedTable.read(spark, root)
-              .withColumn(Pid, VersionedTable.keyPid(pk, p))
-          else {
-            // partition files live under pid= dirs (the column is the
-            // dir, not a parquet column) — recompute it on read; it is
-            // a pure function of the key, so the recomputation is exact
-            val dirs = touched.toSeq.sorted
-              .flatMap(k => parts.getOrElse(k.toString, Nil))
-              .map(rel => Paths.get(root, rel).toString)
-            if (dirs.isEmpty) batch.limit(0)
-            else spark.read
-              .schema(readSchema.getOrElse(StructType(cols.map(rows.schema(_)))))
-              .parquet(dirs: _*)
-              .withColumn(Pid, VersionedTable.keyPid(pk, p))
+      VersionedTable.head(root) match {
+        case Some(h) if h.partitioned && h.logs.size + 1 >= MaxLogFiles =>
+          // the count bound is known before any write: fold the logs
+          // with the batch
+          copyOnWrite(spark, root, batchId, Some(rows), h.logs, key, cols,
+            schema, schemaDdl, Some(h), configuredP, migrateFlat, beforeCommit)
+        case Some(h) if h.partitioned =>
+          // the log path: the batch's newest row per key, from ONE
+          // task, one parquet file sorted by key (which also compresses
+          // it). No base read, no touched-pid job, no per-pid write,
+          // nothing that requires a distribution (an aggregate would
+          // plan the cached batch as an adaptive stage of its own):
+          // one job. A log is independent of the partition count, so
+          // its commit carries no count and never restages.
+          val applied = newestPerKey(rows.select(cols.map(c =>
+            col(c).cast(schema(c).dataType)): _*).coalesce(1), key)
+          // an empty batch stages an empty file and commits nothing;
+          // the byte bound is known once the log is written: past it,
+          // the log folds with the others instead of being committed
+          VersionedTable.stageLog(applied, root).foreach { log =>
+            if (foldDue(h, h.logs :+ log, key))
+              copyOnWrite(spark, root, batchId, None, h.logs :+ log, key,
+                cols, schema, schemaDdl, Some(h), configuredP, migrateFlat,
+                beforeCommit)
+            else {
+              beforeCommit()
+              VersionedTable.commitPartitions(Map.empty, root, batchId,
+                schemaDdl = schemaDdl, addLog = Some(log), key = Some(key))
+            }
           }
-        val merged = existing.unionByName(batch)
-          .repartition(col(Pid))
-          .groupBy(col(Pid), col(pk))
-          .agg(max_by(
-            struct(cols.map(col): _*),
-            struct(seqCols.map(col): _*)).as("r"))
-          .select(col(Pid) +: cols.map(c => col("r").getField(c).as(c)): _*)
-        val staged = VersionedTable.stagePartitioned(merged, root, Pid)
-        beforeCommit()
-        VersionedTable.commitPartitions(staged, root, batchId,
-          overwriteAll = flatLegacy, schemaDdl = schemaDdl,
-          nParts = Some(p))
-      } finally batch.unpersist()
+        case h =>
+          copyOnWrite(spark, root, batchId, Some(rows), Nil, key, cols,
+            schema, schemaDdl, h, configuredP, migrateFlat, beforeCommit)
+      }
     })
+  }
+
+  /** The newest row per key of a one-partition frame, in the same
+    * task: sorted by (pk, seqCols descending), the first row of each
+    * run of equal keys. */
+  private def newestPerKey(df: DataFrame, key: VersionedTable.TableKey): DataFrame = {
+    val at = df.schema.fieldIndex(key.pk)
+    df.sortWithinPartitions(col(key.pk) +: key.seqCols.map(col(_).desc): _*)
+      .mapPartitions { rows =>
+        var last: Option[Any] = None
+        rows.filter { r =>
+          val k = r.get(at)
+          val first = !last.contains(k)
+          last = Some(k)
+          first
+        }
+      }(org.apache.spark.sql.Encoders.row(df.schema))
+  }
+
+  /** The copy-on-write body: the first commit and a flat-legacy
+    * migration merge `rows`; the FOLD merges `logs` ∪ `rows` (the
+    * head's logs and the batch, or the head's logs plus the log this
+    * merge just wrote, which is never committed itself). Touched pids
+    * of the input from one narrow job; only the touched partitions'
+    * base is read; newest per key under (seqCols, log position) with
+    * the base at position 0 and the batch after the logs, so the later
+    * input wins a sequence tie; one partitioned write; the commit
+    * replaces the touched labels and clears the head's logs. */
+  private def copyOnWrite(spark: SparkSession, root: String, batchId: Long,
+      rows: Option[DataFrame], logs: Seq[VersionedTable.LogFile],
+      key: VersionedTable.TableKey, cols: Seq[String],
+      schema: StructType, schemaDdl: Option[String],
+      head: Option[VersionedTable.Head], configuredP: Int,
+      migrateFlat: Boolean, beforeCommit: () => Unit): Unit = {
+    val Log = VersionedTable.LogCol
+    val p = head.flatMap(_.nParts).getOrElse(configuredP)
+    val parts = head.fold(Map.empty[String, Seq[String]])(_.parts)
+    val flatLegacy = migrateFlat && head.exists(!_.partitioned)
+    val fresh = rows.map(_.select(cols.map(col): _*).withColumn(Log, lit(logs.size + 1)))
+    val folded = Option.when(logs.nonEmpty)(
+      VersionedTable.readLogRows(spark, root, logs, Some(schema))
+        .select((cols :+ Log).map(col): _*))
+    val input = (folded ++ fresh).reduce(_ unionByName _)
+    val batch = input.withColumn(Pid, VersionedTable.keyPid(key.pk, p)).persist()
+    try {
+      val touched: Set[Int] =
+        if (flatLegacy) (0 until p).toSet
+        else VersionedTable.touchedPids(batch)
+      if (touched.isEmpty) return // empty batch: merging nothing is a no-op
+      val existing: DataFrame =
+        if (flatLegacy)
+          // migration: read the whole flat snapshot once; the commit
+          // below is a full partitioned rewrite (overwriteAll)
+          VersionedTable.read(spark, root)
+        else {
+          // partition files live under pid= dirs (the column is the
+          // dir, not a parquet column) — recompute it on read; it is
+          // a pure function of the key, so the recomputation is exact
+          val dirs = touched.toSeq.sorted
+            .flatMap(k => parts.getOrElse(k.toString, Nil))
+            .map(rel => Paths.get(root, rel).toString)
+          if (dirs.isEmpty) batch.drop(Pid, Log).limit(0)
+          else spark.read.schema(schema).parquet(dirs: _*)
+        }
+      val merged = existing.withColumn(Log, lit(0))
+        .withColumn(Pid, VersionedTable.keyPid(key.pk, p))
+        .unionByName(batch)
+        .repartition(VersionedTable.stageTasks(spark), col(Pid))
+        .groupBy(col(Pid), col(key.pk))
+        .agg(max_by(
+          struct(cols.map(col): _*),
+          struct((key.seqCols :+ Log).map(col): _*)).as("r"))
+        .select(col(Pid) +: cols.map(c => col("r").getField(c).as(c)): _*)
+      val staged = VersionedTable.stagePartitioned(merged, root, Pid)
+      beforeCommit()
+      VersionedTable.commitPartitions(staged, root, batchId,
+        overwriteAll = flatLegacy, schemaDdl = schemaDdl,
+        nParts = Some(p), foldLogs = head.fold(Set.empty[String])(_.logs.map(_.dir).toSet),
+        key = Some(key))
+    } finally batch.unpersist()
   }
 }

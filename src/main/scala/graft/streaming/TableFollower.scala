@@ -312,23 +312,13 @@ class TableFollower(spark: SparkSession, srcRoot: String, dstRoot: String,
             val upserts = withPid(derived(
               delta.filter(col("_change_type") =!= "delete")
                 .drop("_change_type")), pNow)
-            val parts = VersionedTable.parts(dstRoot)
-            val existing: DataFrame = {
-              val dirs = touched.toSeq.sorted
-                .flatMap(k => parts.getOrElse(k.toString, Nil))
-                .map(rel => java.nio.file.Paths.get(dstRoot, rel).toString)
-              if (dirs.isEmpty) upserts.limit(0)
-              else {
-                // destination rows read under the DESTINATION schema
-                // (= source schema for plain replication, transform
-                // output schema for derived tables)
-                val reader = schemaDdl
-                  .map(d => spark.read.schema(
-                    org.apache.spark.sql.types.StructType.fromDDL(d)))
-                  .getOrElse(spark.read)
-                withPid(reader.parquet(dirs: _*), pNow)
-              }
-            }
+            // destination rows of the touched partitions, read under
+            // the DESTINATION schema (= source schema for plain
+            // replication, transform output schema for derived tables)
+            val existing: DataFrame = VersionedTable.readPartitions(spark,
+              dstRoot, touched, schemaDdl.map(
+                org.apache.spark.sql.types.StructType.fromDDL))
+              .fold(upserts.limit(0))(withPid(_, pNow))
             // replace-or-drop by pk: every changed key's old rows
             // leave, surviving (transformed) post-images come back in
             val merged = existing

@@ -228,11 +228,10 @@ class PlanAuditSpec extends SparkSpec {
       // ONE doc_id exchange feeds the lag window; the per-doc agg
       // rides the same partitioning; + the output sort
       "mm_shot_boundary" -> 2,
-      // final plan reads the 12th checkpointed value frame (producer:
-      // ONE user_id shuffle for the session/truncation windows, then
-      // alphabet-sized rounds); remaining: the START-filter aggs +
-      // the 4-row sort
-      "ev_attribution_markov" -> 2,
+      // final plan reads the fixed point's values, staged by ONE
+      // kernel task (Ckpt.small, EventOps.markovRounds); what follows
+      // rides that single partition: no exchange
+      "ev_attribution_markov" -> 0,
       // map-side shard/key assignment; ONE (epoch, shard) exchange
       // feeds the within-shard rank window (the writer's local
       // sort); + the output sort
@@ -254,8 +253,9 @@ class PlanAuditSpec extends SparkSpec {
       // agg, ONE corpus pass); totals ride broadcast self-joins, the
       // 1 exchange is the 10-row sort
       "ev_audience_overlap" -> 1,
-      // final plan reads the loop's checkpointed labels: sort only
-      "pipe_dup_clusters" -> 2,
+      // final plan reads the union-find kernel's staged labels (ONE
+      // task, Ckpt.small, PipelineOps.components); one exchange
+      "pipe_dup_clusters" -> 1,
       // keeper semi-join broadcasts; the one exchange is the final sort
       "pipe_curate_cc" -> 1,
       "q1_pricing_summary" -> 2,

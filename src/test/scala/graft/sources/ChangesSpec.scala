@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.streaming.{CdcApplied, PartitionedTableCdcTarget, TableEvolvingCdcTarget}
+import graft.streaming.{CdcApplied, PartitionedMerge, PartitionedTableCdcTarget,
+  TableEvolvingCdcTarget}
 
 /** The incremental change feed (Delta CDF / Iceberg incremental-scan
   * analog) over the versioned table:
@@ -36,6 +37,10 @@ class ChangesSpec extends SparkSpec {
   private def pidOf(uid: Long): Int =
     s.range(1).select(pmod(hash(lit(uid)), lit(P))).first().getInt(0)
 
+  private def logsOf(root: String, v: Int): Seq[VersionedTable.LogFile] =
+    VersionedTable.Manifest.parse(Files.readString(
+      Paths.get(root, "_versions", f"v$v%08d.json"))).logs
+
   test("classification + partition pruning") {
     val root = freshRoot()
     val target = new PartitionedTableCdcTarget(spark, root, P)
@@ -58,8 +63,11 @@ class ChangesSpec extends SparkSpec {
       "tombstone must surface as an update of the full row image")
 
     // pruning witness: every file the diff plan scans sits under one
-    // of the two moved partitions' pid dirs (old or new side)
-    val moved = Set(pidOf(7L), pidOf(8L)).map(k => s"/pid=$k/")
+    // of the partitions the two keys hash into, or is the log the
+    // merge appended (the only log either version holds)
+    val added = logsOf(root, v2).map(l => s"/${l.dir}/")
+    assert(added.size == 1 && logsOf(root, v1).isEmpty)
+    val moved = Set(pidOf(7L), pidOf(8L)).map(k => s"/pid=$k/") ++ added
     val badFiles = ch.inputFiles.toSeq
       .filterNot(f => moved.exists(f.contains))
     assert(badFiles.isEmpty,
@@ -72,6 +80,46 @@ class ChangesSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("user_id") ->
         r.getAs[String]("_change_type")).toMap
     assert(ins == Map(41L -> "insert"))
+  }
+
+  test("changes across log appends and across a fold emit no phantom rows") {
+    val root = freshRoot()
+    val target = new PartitionedTableCdcTarget(spark, root, P)
+    // a base big enough that the logs fold on their count, not bytes
+    target.merge(0, (1L to 4000L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
+    val v1 = VersionedTable.versions(root).last
+    // a stale row (older than the base's), a re-delivered copy of the
+    // base row and one real update: only the update is a change
+    target.merge(1, Seq(ap(3, 1, 10, -1.0), ap(4, 4, 1004, 4.0),
+      ap(5, 200, 99000, 5.5)).toDS())
+    val v2 = VersionedTable.versions(root).last
+    assert(logsOf(root, v2).size == 1)
+    def feed(a: Int, b: Int) = VersionedTable.changes(spark, root, a, b, "user_id")
+      .collect().map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[String]("_change_type"), r.getAs[Double]("value"))).toMap
+    assert(feed(v1, v2) == Map(5L -> (("update", 5.5))))
+    // more log appends, each with one new key and one stale row
+    (2 to PartitionedMerge.MaxLogFiles).foreach { b =>
+      target.merge(b.toLong, Seq(ap(10000L + b, b, 99000L + b, b.toDouble),
+        ap(6, 0, 1, -6.0)).toDS())
+    }
+    val vFold = VersionedTable.versions(root).last
+    assert(logsOf(root, vFold).isEmpty, "the last merge must have folded the logs")
+    val vBeforeFold = vFold - 1
+    assert(logsOf(root, vBeforeFold).size == PartitionedMerge.MaxLogFiles - 1)
+    // the fold itself: only the folding batch's key changes
+    val lastKey = 10000L + PartitionedMerge.MaxLogFiles
+    assert(feed(vBeforeFold, vFold) == Map(lastKey ->
+      (("insert", PartitionedMerge.MaxLogFiles.toDouble))))
+    // across appends and the fold: exactly the inserted keys and the
+    // update, no phantom from the stale rows or the rewritten bases
+    val want = (2 to PartitionedMerge.MaxLogFiles)
+      .map(b => (10000L + b) -> (("insert", b.toDouble))).toMap +
+      (5L -> (("update", 5.5)))
+    assert(feed(v1, vFold) == want)
+    // a compaction of the folded table is data-identical
+    assert(VersionedTable.compactPartitions(spark, root, maxFilesPerPart = 0).nonEmpty)
+    assert(feed(vFold, VersionedTable.versions(root).last).isEmpty)
   }
 
   test("true row removal classifies as delete with the pre-image") {

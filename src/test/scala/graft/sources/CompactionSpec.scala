@@ -88,11 +88,18 @@ class CompactionSpec extends SparkSpec {
   test("compactPartitions rewrites only over-budget partitions, losslessly") {
     val root = freshRoot()
     val target = multiFileTable(root)
-    // a follow-up single-key merge leaves that pid at ONE file — the
+    // a follow-up rewrite of one key's pid (the copy-on-write form a
+    // merge's fold takes) leaves that pid at ONE file — the
     // under-budget partition the compaction must NOT touch
     val quietKey = 7L
     val quietPid = pidOf(quietKey).toString
-    target.merge(1, Seq(ap(quietKey, 500, 99999, 7.7)).toDS())
+    val quietRows = target.snapshot
+      .filter(pmod(hash(col("user_id")), lit(P)) === pidOf(quietKey) &&
+        col("user_id") =!= quietKey)
+      .unionByName(Seq(ap(quietKey, 500, 99999, 7.7)).toDS().toDF())
+    VersionedTable.commitPartitions(VersionedTable.stagePartitioned(
+      quietRows.withColumn(VersionedTable.PidCol, VersionedTable.keyPid("user_id", P)),
+      root, VersionedTable.PidCol), root, batchId = 1, nParts = Some(P))
 
     val parts = VersionedTable.parts(root)
     assert(parts.keySet.exists(k =>

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import graft.SparkSpec
-import graft.streaming.{CdcApplied, PartitionedTableCdcTarget}
+import graft.streaming.{CdcApplied, PartitionedMerge, PartitionedTableCdcTarget}
 
 /** Delta manifests (r14 — the Delta-log shape for this format): an
   * incremental partitioned commit serializes ONLY its touched labels
@@ -54,9 +54,14 @@ class DeltaManifestSpec extends SparkSpec {
     for (b <- 1 to 10)
       target.merge(b.toLong, Seq(ap(b.toLong, 1000L + b, 90000L + b,
         -b.toDouble)).toDS())
-    val deltaSizes = (2 to 11).map(manifestBytes(root, _))
+    // each carries the whole merge-on-read log list too, which the
+    // fold rule bounds by a constant, not by the label count
+    val logList = "\"logs\":\\[(\\[[^\\]]*\\],?)*\\],"
+    val deltaSizes = (2 to 11).map(manifestTxt(root, _).replaceAll(logList, "").length)
     assert(deltaSizes.forall(_ < fullBytes / 2),
       s"deltas must be O(touched): $deltaSizes vs full $fullBytes")
+    assert((2 to 11).forall(v => VersionedTable.Manifest.parse(manifestTxt(root, v))
+      .logs.size < PartitionedMerge.MaxLogFiles), "the log list is unbounded")
     assert((2 to 11).forall(v => manifestTxt(root, v).contains("\"base\":")))
 
     // resolution is exact: every key's latest value
@@ -85,7 +90,7 @@ class DeltaManifestSpec extends SparkSpec {
     VersionedTable.invalidateTxns(root)
     assert(VersionedTable.parts(root) == warm,
       "cold chain walk diverged from the incremental memo")
-    assert(VersionedTable.partStats(root).keySet == warm.keySet,
+    assert(VersionedTable.partStats(root).keySet - VersionedTable.LogsLabel == warm.keySet,
       "stats resolution lost labels")
   }
 
@@ -94,12 +99,13 @@ class DeltaManifestSpec extends SparkSpec {
     val target = new PartitionedTableCdcTarget(spark, root, P)
     target.merge(0, Seq(ap(1, 1, 1000, 1.0)).toDS())
     val key1Labels = VersionedTable.parts(root).keySet
-    // a second key hashing to a DIFFERENT partition becomes the victim
-    val key2 = (2L to 50L).find { k =>
+    // merge keys until one hashing to a DIFFERENT partition lands in
+    // the base (a fold of the logs): that partition becomes the victim
+    assert((2L to 50L).exists { k =>
       val t = new PartitionedTableCdcTarget(spark, root, P)
       t.merge(k, Seq(ap(k, k, 1000 + k, k.toDouble)).toDS())
       VersionedTable.parts(root).keySet != key1Labels
-    }.get
+    })
     val victim = (VersionedTable.parts(root).keySet -- key1Labels).head
     // drop it through the commit API (the dropParts seam the merge
     // uses for fully-emptied partitions) — the drop rides a DELTA
@@ -118,8 +124,8 @@ class DeltaManifestSpec extends SparkSpec {
     VersionedTable.invalidateTxns(root)
     assert(!VersionedTable.parts(root).contains(victim),
       "a cold walk resurrected the dropped label")
-    assert(target.snapshot.as[CdcApplied].collect()
-      .forall(_.user_id != key2), "dropped partition rows resurrected")
+    assert(target.snapshot.filter(VersionedTable.keyPid("user_id", P) ===
+      victim.toInt).isEmpty, "dropped partition rows resurrected")
   }
 
   test("retention floors at the chain root; a checkpoint releases it") {

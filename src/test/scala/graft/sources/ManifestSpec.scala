@@ -91,11 +91,21 @@ class ManifestSpec extends SparkSpec {
         .withColumn(VersionedTable.PidCol, VersionedTable.keyPid("user_id", P)),
       src, VersionedTable.PidCol), src, batchId = 3, schemaDdl = Some(ddl),
       nParts = Some(P))
-    assert(assertRoundTrips(src) == Seq("merge_parts", "delta_parts",
+    assert(assertRoundTrips(src) == Seq("merge_parts", "append_log",
       "delta_parts", "merge_parts", "merge_parts", "overwrite_parts",
       "restore", "delta_parts"))
     assert(Files.readString(manifests(src)(2))
       .contains(s""""drops":["$label"]"""))
+    // the merge-on-read shape: a log append stamps the key and lists
+    // its log, declares format 3, and the raw delta after it carries
+    // the log; the compaction folds it and declares format 2 again
+    val txt = manifests(src).map(Files.readString(_))
+    assert(txt(1).contains(""""mver":3,""") &&
+      txt(1).contains(""""key":["user_id","ts","event_id"],"logs":[["data/"""))
+    assert(txt(2).contains(""""logs":[["data/"""))
+    assert(txt(3).contains(""""mver":2,""") && !txt(3).contains(""""logs":"""))
+    // the restore of v2 brings its log back
+    assert(txt(6).contains(""""logs":[["data/"""))
     assert(VersionedTable.manifestSchema(spark, src,
       VersionedTable.versions(src).last).map(_.toDDL).contains(ddl))
   }
@@ -123,7 +133,7 @@ class ManifestSpec extends SparkSpec {
     assert(VersionedTable.read(spark, root).count() == 12)
     val h = VersionedTable.history(spark, root).filter(col("version") === 2)
       .select("op", "writer", "nparts", "is_delta").collect().head
-    assert(h.getString(0) == "delta_parts" && h.getString(1) == "batch" &&
+    assert(h.getString(0) == "append_log" && h.getString(1) == "batch" &&
       h.isNullAt(2) && h.getBoolean(3))
   }
 }

@@ -39,7 +39,7 @@ class TableOpsSpec extends SparkSpec {
       .orderBy("version").collect()
     assert(h.map(_.getAs[Int]("version")).toSeq == Seq(1, 2, 3, 4))
     assert(h.map(_.getAs[String]("op")).toSeq ==
-      Seq("merge_parts", "delta_parts", "overwrite_parts", "restore"))
+      Seq("merge_parts", "append_log", "overwrite_parts", "restore"))
     assert(h.map(_.getAs[String]("writer")).toSeq ==
       Seq("batch", "batch", "maintenance", "batch"))
     // txn rides the streaming merges only
@@ -49,11 +49,11 @@ class TableOpsSpec extends SparkSpec {
     // the rescale re-stamped the count; the restore stamped it BACK
     assert(h.map(_.getAs[Int]("nparts")).toSeq == Seq(P, P, P * 2, P))
     assert(h.forall(r => r.getAs[Timestamp]("ts").getTime > 0))
-    // the delta serialized ONE touched label; the restore checkpoint
-    // re-serializes its target's full label set
+    // the log append (a delta) serialized no label; the restore
+    // checkpoint re-serializes its target's full label set
     val labels = h.map(r =>
       r.getAs[Int]("version") -> r.getAs[Int]("labels")).toMap
-    assert(labels(2) == 1)
+    assert(labels(2) == 0)
     assert(labels(1) > 1 && labels(4) == labels(1))
     assert(h.map(_.getAs[Boolean]("is_delta")).toSeq ==
       Seq(false, true, false, false))

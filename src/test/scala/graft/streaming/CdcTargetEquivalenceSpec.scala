@@ -8,9 +8,12 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
+import graft.sources.VersionedTable
 
 /** The lakehouse and warehouse targets against the in-memory
-  * reference, on random CDC histories: for every seeded case the
+  * reference. A law: a merge-on-read table read after any random
+  * sequence of log appends, folds, compactions, rescales and erasures
+  * equals the reference. And on random CDC histories: for every seeded case the
   * snapshots of [[PartitionedTableCdcTarget]], [[TableEvolvingCdcTarget]]
   * (which reads touched partitions under its declared schema),
   * [[JdbcCdcTarget]] and [[JdbcEvolvingCdcTarget]] (both on embedded
@@ -20,6 +23,7 @@ import graft.SparkSpec
   * out-of-order sequences and deletes; one batch is also redelivered
   * whole under its batch id. */
 class CdcTargetEquivalenceSpec extends SparkSpec {
+  import CdcTargetEquivalenceSpec._
 
   private lazy val s = spark
   import s.implicits._
@@ -87,6 +91,60 @@ class CdcTargetEquivalenceSpec extends SparkSpec {
       batches.zipWithIndex :+ (batches(redeliver) -> redeliver))
   }
 
+  private val event: Gen[(Long, Long, String, Double)] = for {
+    uid <- Gen.choose(1L, 10L)
+    t <- Gen.choose(0L, 50L)
+    tpe <- Gen.frequency(5 -> "click", 3 -> "view", 2 -> "error")
+    v <- Gen.choose(-100, 100)
+  } yield (uid, t, tpe, v.toDouble)
+
+  /** A first merge, then merges (several rows per key: duplicates,
+    * out-of-order sequences, tombstones) mixed with compactions,
+    * rescales and erasures. Small bases make the byte bound fold the
+    * logs every few merges. */
+  private val life: Gen[Seq[Step]] = for {
+    n <- Gen.choose(2, 7)
+    steps <- Gen.listOfN(n, Gen.frequency(
+      6 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, event)).map(es =>
+        Merge(es.map { case (u, t, tpe, v) => CdcEvent(0, new Timestamp(1000L * t), u, tpe, v) })),
+      1 -> Gen.choose(0, 2).map(Compact),
+      1 -> Gen.oneOf(2, 4, 8).map(Rescale),
+      1 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.choose(1L, 10L))).map(Erase)))
+    first <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, event))
+  } yield Merge(first.map { case (u, t, tpe, v) =>
+    CdcEvent(0, new Timestamp(1000L * t), u, tpe, v) }) +: steps
+
+  test("reading after log appends, folds, compactions, rescales and erasures " +
+      "equals the in-memory target on 100 random lives") {
+    var folds = 0
+    (1 to 100).foreach { c =>
+      val steps = life(Gen.Parameters.default, Seed(7000L + c))
+        .getOrElse(fail(s"life $c: generator gave nothing"))
+      val root = Files.createTempDirectory("graft-equiv-mor").toString
+      val reference = new InMemoryCdcTarget
+      val table = new PartitionedTableCdcTarget(spark, root, P)
+      var nextId = 0L
+      steps.zipWithIndex.foreach {
+        case (Merge(es), b) =>
+          // event ids are unique per life: a sequence tie is a redelivery
+          val batch = es.map { e => nextId += 1; CdcStream.applied(e.copy(event_id = nextId)) }
+          reference.merge(b, batch.toDS())
+          val logs = VersionedTable.partStats(root).get(VersionedTable.LogsLabel)
+          table.merge(b, batch.toDS())
+          if (logs.nonEmpty && !VersionedTable.partStats(root).contains(VersionedTable.LogsLabel))
+            folds += 1
+        case (Compact(m), _) => VersionedTable.compactPartitions(spark, root, maxFilesPerPart = m)
+        case (Rescale(p), _) => VersionedTable.rescalePartitions(spark, root, "user_id", p)
+        case (Erase(keys), _) =>
+          VersionedTable.deleteKeys(spark, root, "user_id", keys.toDF("user_id"))
+          reference.erase(keys)
+      }
+      assert(rows(table.snapshot) == reference.snapshot.values.toSet,
+        s"life $c (${steps.mkString(", ")}) diverged")
+    }
+    assert(folds > 10, s"only $folds merges folded logs: the law barely ran the fold")
+  }
+
   shapes.foreach { case (name, db, shape) =>
     test(s"partitioned and evolving targets equal the in-memory target on $Cases $name") {
       (1 to Cases).foreach { c =>
@@ -145,4 +203,13 @@ class CdcTargetEquivalenceSpec extends SparkSpec {
       }
     }
   }
+}
+
+object CdcTargetEquivalenceSpec {
+  /** One step of a merge-on-read table's life. */
+  private sealed trait Step
+  private final case class Merge(events: Seq[CdcEvent]) extends Step
+  private final case class Compact(maxFilesPerPart: Int) extends Step
+  private final case class Rescale(p: Int) extends Step
+  private final case class Erase(keys: Seq[Long]) extends Step
 }

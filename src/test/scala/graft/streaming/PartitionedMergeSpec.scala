@@ -16,10 +16,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.{ShuffleCount, SparkSpec}
 import graft.sources.VersionedTable
 
-/** The execution shape of one partition-scoped merge into an existing
-  * table: the touched pids come from one narrow job, the touched dirs
-  * are read under an explicit schema (no inference job), and the merge
-  * aggregation shares its exchange with the staged write. */
+/** The execution shape of a merge into an existing table. A log
+  * append is one job writing one file with no shuffle. A fold takes
+  * the touched pids from one narrow job, reads the touched dirs under
+  * an explicit schema (no inference job), and shares the merge
+  * aggregation's exchange with the staged write. */
 class PartitionedMergeSpec extends SparkSpec {
 
   private lazy val s = spark
@@ -76,36 +77,75 @@ class PartitionedMergeSpec extends SparkSpec {
     }
   }
 
-  /** One non-empty merge into an existing 8-partition table: its job
-    * count and per-write shuffles, checked below, after the snapshot
-    * is checked here. */
-  private lazy val shape: (Int, Seq[Int]) = {
+  /** A table of `n` keys in 8 partitions, and a batch of updates to
+    * existing keys plus new keys, spread over several pids. */
+  private def seeded(n: Long): (String, PartitionedTableCdcTarget) = {
     val root = Files.createTempDirectory("graft-pmerge").toString
     val target = new PartitionedTableCdcTarget(spark, root, 8)
-    target.merge(0, (1L to 40L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
-    val before = VersionedTable.parts(root)
-    // updates to existing keys plus new keys, spread over several pids
-    val batch = ((1L to 40L by 5).map(k => ap(k, 100 + k, 5000 + k, -k.toDouble)) ++
-      (41L to 45L).map(k => ap(k, k, 5000 + k, k.toDouble))).toDS()
+    target.merge(0, (1L to n).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
+    (root, target)
+  }
 
-    val measured = shapeOf(root)(target.merge(1, batch))
+  private def batch(b: Long, n: Long) =
+    ((1L to 40L by 5).map(k => ap(k, 100000 * b + k, 500000 * b + k, -k.toDouble)) ++
+      (n + 1 to n + 5).map(k => ap(k, k, 500000 * b + k, k.toDouble))).toDS()
 
-    val after = VersionedTable.parts(root)
-    assert(after.keySet.exists(k => before.get(k) != after.get(k)),
-      "the merge must have rewritten at least one partition")
+  private def assertSnapshot(target: PartitionedTableCdcTarget, b: Long,
+      n: Long): Unit = {
     val snap = target.snapshot.as[CdcApplied].collect().map(r => r.user_id -> r).toMap
-    assert(snap.keySet == (1L to 45L).toSet)
-    assert((1L to 40L by 5).forall(k => snap(k).event_id == 100 + k))
+    assert(snap.keySet == (1L to n + 5).toSet)
+    assert((1L to 40L by 5).forall(k => snap(k).event_id == 100000 * b + k))
     assert(snap(2L).event_id == 2L, "untouched keys keep their rows")
+  }
+
+  /** One log append into an existing table: its job count and
+    * per-write shuffles, checked below, after the layout and the
+    * snapshot are checked here. */
+  private lazy val logShape: (Int, Seq[Int]) = {
+    val (root, target) = seeded(40)
+    val before = VersionedTable.parts(root)
+    val measured = shapeOf(root)(target.merge(1, batch(1, 40)))
+    assert(VersionedTable.parts(root) == before,
+      "a log append must rewrite no partition")
+    assert(VersionedTable.partStats(root).get(VersionedTable.LogsLabel).map(_._2)
+      .contains(1), "a log append must add one log file")
+    assertSnapshot(target, 1, 40)
     measured
   }
 
-  test("a merge into an existing partitioned table runs 3 jobs of its own") {
+  /** One fold: the merge that reaches the log-count bound folds the
+    * logs with its batch through the copy-on-write body (the base is
+    * big enough that the byte bound does not fold first). */
+  private lazy val foldShape: (Int, Seq[Int]) = {
+    val n = 4000L
+    val (root, target) = seeded(n)
+    (1 until PartitionedMerge.MaxLogFiles).foreach(b => target.merge(b, batch(b, n)))
+    assert(VersionedTable.partStats(root).get(VersionedTable.LogsLabel).map(_._2)
+      .contains(PartitionedMerge.MaxLogFiles - 1))
+    val before = VersionedTable.parts(root)
+    val b = PartitionedMerge.MaxLogFiles.toLong
+    val measured = shapeOf(root)(target.merge(b, batch(b, n)))
+    val after = VersionedTable.parts(root)
+    assert(after.keySet.exists(k => before.get(k) != after.get(k)),
+      "the fold must have rewritten at least one partition")
+    assert(!VersionedTable.partStats(root).contains(VersionedTable.LogsLabel),
+      "the fold must clear the logs")
+    assertSnapshot(target, b, n)
+    measured
+  }
+
+  test("a log append into an existing partitioned table runs 1 job of its own") {
+    // the one-task newest-per-key write, no shuffle
+    assert(logShape._1 == 1, s"PartitionedMerge ran ${logShape._1} jobs")
+    assert(logShape._2 == Seq(0), s"executed shuffles per write: ${logShape._2}")
+  }
+
+  test("a fold runs 3 jobs of its own") {
     // touched pids (one narrow job) + the shuffle's map stage + the write
-    assert(shape._1 == 3, s"PartitionedMerge ran ${shape._1} jobs")
+    assert(foldShape._1 == 3, s"PartitionedMerge ran ${foldShape._1} jobs")
   }
 
   test("the merge aggregation and the staged write share one shuffle") {
-    assert(shape._2 == Seq(1), s"executed shuffles per staged write: ${shape._2}")
+    assert(foldShape._2 == Seq(1), s"executed shuffles per staged write: ${foldShape._2}")
   }
 }

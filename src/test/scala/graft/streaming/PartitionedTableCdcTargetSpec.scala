@@ -69,7 +69,17 @@ class PartitionedTableCdcTargetSpec extends SparkSpec {
     val untouched1 = parts1 - touchedPid
     val before = fileState(root, untouched1)
 
+    // a log append carries every partition's dirs
     target.merge(1, Seq(ap(touchKey, 100, 99999, 7.7)).toDS())
+    assert(VersionedTable.parts(root) == parts1,
+      "a log append must keep every partition's exact dirs")
+    assert(byKey(target.snapshot)(touchKey).value == 7.7)
+
+    // merges of the same key until the logs fold: the fold rewrites
+    // the one partition its logs touch and carries the rest
+    (2 to PartitionedMerge.MaxLogFiles).foreach { b =>
+      target.merge(b, Seq(ap(touchKey, 100 + b, 99999 + b, 7.7 + b)).toDS())
+    }
     val parts2 = VersionedTable.parts(root)
     assert(parts2 - touchedPid == untouched1,
       "untouched partitions must keep their exact dirs across a commit")
@@ -79,8 +89,8 @@ class PartitionedTableCdcTargetSpec extends SparkSpec {
       "untouched partition files changed bytes across a commit")
 
     val snap = byKey(target.snapshot)
-    assert(snap(touchKey).value == 7.7 && snap(1L).value == 1.0 &&
-      snap.size == 40)
+    assert(snap(touchKey).value == 7.7 + PartitionedMerge.MaxLogFiles &&
+      snap(1L).value == 1.0 && snap.size == 40)
   }
 
   test("contract: out-of-order, redelivery no-op, stale pre-delete") {
