@@ -1093,13 +1093,12 @@ object VersionedTable {
     readResolved(spark, root, m, dirs, schemaOf(m))
   }
 
-  /** The state a version holds that a writer needs: one manifest read
-    * gives the partition map, the base's stamped bytes, the logs, the
-    * key, the count and the schema. None for a nonexistent table. */
-  private[graft] final case class Head(version: Int, partitioned: Boolean,
+  /** The head state a merge needs, from one manifest read: the
+    * partition map, the base's stamped bytes, the logs, the key and the
+    * count. None for a nonexistent table. */
+  private[graft] final case class Head(partitioned: Boolean,
       parts: Map[String, Seq[String]], baseBytes: Long, logs: Seq[LogFile],
-      key: Option[TableKey], nParts: Option[Int],
-      schema: Option[org.apache.spark.sql.types.StructType])
+      key: Option[TableKey], nParts: Option[Int])
 
   private[graft] def head(root: String): Option[Head] =
     versions(root).lastOption.map { v =>
@@ -1107,8 +1106,8 @@ object VersionedTable {
       val (pm, stats) =
         if (m.partitioned) resolved(root, v, m)
         else (Map.empty[String, Seq[String]], Map.empty[String, (Long, Int)])
-      Head(v, m.partitioned, pm, stats.valuesIterator.map(_._1).sum, m.logs,
-        m.key, m.nParts, schemaOf(m))
+      Head(m.partitioned, pm, stats.valuesIterator.map(_._1).sum, m.logs,
+        m.key, m.nParts)
     }
 
   /** Column a log row carries while it is resolved: its log's 1-based
