@@ -1034,10 +1034,10 @@ object EventOps extends Suite {
     tagged.filter(col("b") =!= lit(""))
       .select(col("a").as("type_a"), col("b").as("type_b"),
         col("n").as("n_both"))
-      .join(broadcast(singles.select(col("a").as("type_a"),
-        col("n").as("n_a"))), Seq("type_a"))
-      .join(broadcast(singles.select(col("a").as("type_b"),
-        col("n").as("n_b"))), Seq("type_b"))
+      .join(singles.select(col("a").as("type_a"),
+        col("n").as("n_a")), Seq("type_a"))
+      .join(singles.select(col("a").as("type_b"),
+        col("n").as("n_b")), Seq("type_b"))
       .withColumn("n_union", col("n_a") + col("n_b") - col("n_both"))
       .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
         col("n_both"), col("n_union"),

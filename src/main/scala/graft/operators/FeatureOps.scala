@@ -488,9 +488,8 @@ object FeatureOps extends Suite {
     // Ckpt.cache, not Ckpt.stage (r16): the loop-invariant edge frame
     // re-enters every round as an InMemoryRelation that KEEPS its
     // hash(src) partitioning, so the per-round rank join and the
-    // final deg distinct+join run without re-exchanging the edges —
-    // a staged ExistingRDD is UnknownPartitioning(0) and paid a fresh
-    // edge-sized exchange per round (guide §2.4; VERDICT r15 item 1).
+    // final deg distinct+join run without re-exchanging the edges
+    // (guide §2.4), and no staging job runs.
     val edgesD = edges
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .transform(Ckpt.cache)
@@ -952,11 +951,11 @@ object FeatureOps extends Suite {
     tagged.filter(col("a") =!= lit("#") && col("b") =!= lit(""))
       .select(col("a").as("brand_a"), col("b").as("brand_b"),
         col("n").as("n_both"))
-      .join(broadcast(singles.select(col("a").as("brand_a"),
-        col("n").as("n_a"))), Seq("brand_a"))
-      .join(broadcast(singles.select(col("a").as("brand_b"),
-        col("n").as("n_b"))), Seq("brand_b"))
-      .crossJoin(broadcast(baskets))
+      .join(singles.select(col("a").as("brand_a"),
+        col("n").as("n_a")), Seq("brand_a"))
+      .join(singles.select(col("a").as("brand_b"),
+        col("n").as("n_b")), Seq("brand_b"))
+      .crossJoin(baskets)
       .select(col("brand_a"), col("brand_b"), col("n_a"), col("n_b"),
         col("n_both"),
         (expr("(2 * n_both * 1000000 + n_orders) div (2 * n_orders)")
@@ -1154,15 +1153,15 @@ object FeatureOps extends Suite {
       .transform(Ckpt.stage)
     val total = cells.agg(sum(col("d") + col("c")).as("total"))
     val risk = cells.crossJoin(broadcast(total))
-      .join(broadcast(cells.select(col("t").as("bt"),
-        (col("d") + col("c")).as("bdc"))), col("bt") < col("t"), "left")
+      .join(cells.select(col("t").as("bt"),
+        (col("d") + col("c")).as("bdc")), col("bt") < col("t"), "left")
       .groupBy("t", "d", "c", "total")
       .agg(coalesce(sum(col("bdc")), lit(0L)).as("prior"))
       .withColumn("n_risk", col("total") - col("prior"))
       .transform(Ckpt.stage)
     risk
-      .join(broadcast(risk.select(col("t").as("bt"),
-        col("n_risk").as("bn"), col("d").as("bd"))), col("bt") <= col("t"))
+      .join(risk.select(col("t").as("bt"),
+        col("n_risk").as("bn"), col("d").as("bd")), col("bt") <= col("t"))
       .groupBy(col("t"), col("d"), col("c"), col("n_risk"))
       .agg(
         sum(when(col("bn") > col("bd"),

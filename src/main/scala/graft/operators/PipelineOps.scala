@@ -127,14 +127,10 @@ object PipelineOps extends Suite {
   // 5,000 docs; no cluster over 3 docs), so the pairs coalesce into ONE
   // task running a union-find kernel ([[components]]) that labels every
   // component in one pass, whatever its diameter. Its memory is one
-  // LongMap entry per touched doc; the map is broadcast to a lookup
-  // over documents (an untouched doc is its own cluster), and the
+  // LongMap entry per touched doc; its labels broadcast into a left
+  // join over documents (an untouched doc is its own cluster), and the
   // result is staged once for the four §H consumers (dup_clusters,
   // curate_cc, split, funnel_report) through Memo.clusterLabels.
-  // A lookup, not a broadcast left join: the staged frame keeps its
-  // plan's size estimate, and a left outer join's is the product of its
-  // sides (70.8 TiB at sf0.001), which turns the consumers' joins into
-  // shuffle joins.
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     Memo(Memo.clusterLabels, spark, dir)(computeClusterLabels(spark, dir))
 
@@ -154,19 +150,17 @@ object PipelineOps extends Suite {
   /** (doc_id, cluster_id, is_keeper) for every doc of `docs`, given the
     * dup pairs (a_id, b_id): [[components]] in one task over the pairs
     * ([[Ckpt.small]]; a pair with a NULL end is dropped), its labels
-    * broadcast to a lookup over the docs, staged. */
+    * broadcast into a left join over the docs, staged. */
   private[operators] def labelClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val labels = spark.sparkContext.broadcast(scala.collection.mutable.LongMap.from(
-      Ckpt.small(pairs) { edges: Iterator[(Option[Long], Option[Long])] =>
-        components(edges.collect { case (Some(u), Some(v)) => (u, v) })
-      }.collect()))
-    val clusterOf = udf((doc: Long) => labels.value.getOrElse(doc, doc))
-    try docs.select(col("doc_id"), clusterOf(col("doc_id")).as("cluster_id"))
+    val labels = Ckpt.small(pairs) { edges: Iterator[(Option[Long], Option[Long])] =>
+      components(edges.collect { case (Some(u), Some(v)) => (u, v) })
+    }.toDF("doc_id", "label")
+    docs.join(broadcast(labels), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
       .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
       .transform(Ckpt.stage)
-    finally labels.destroy()
   }
 
   /** Every doc an edge touches, with the minimum doc_id of its

@@ -664,7 +664,7 @@ object SimilarityOps extends Suite {
     val withNorm = assign.select(col("vec_id"), col("dq"), col("cluster"))
       .withColumn("norm", call_function("dec_dot", col("dq"), col("dq")))
     val probed = withNorm.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(trained))
+      .crossJoin(trained)
       .withColumn("b", expr("km_assign(dq, cs)"))
       .select(col("vec_id").as("q_id"), col("dq").as("qdq"),
         col("norm").as("qn"), col("b.cluster").as("probe_cluster"))
@@ -747,7 +747,7 @@ object SimilarityOps extends Suite {
       .select(col("vec_id").as("q_id"), col("sub").as("q_sub"),
         col("c_label").as("q_code"), col("dist_sq"))
     val probed = assign.filter(col("vec_id") < nQueries)
-      .crossJoin(broadcast(trained))
+      .crossJoin(trained)
       .withColumn("b", expr("km_assign(dq, cs)"))
       .select(col("vec_id").as("q_id"), col("b.cluster").as("probe_cluster"))
     // candidate pairs = probed list members only (~N/k per query);
@@ -837,30 +837,18 @@ object SimilarityOps extends Suite {
   // recall ∈ [0,1], per-method row presence, and a recall floor for
   // the LSH path.
   private def simRecallReport(spark: SparkSession, dir: String): DataFrame = {
-    // staged ONCE (r16): the three method legs all derive their truth
-    // sets from this frame, and un-staged the whole brute-force N×Q
-    // cosine subtree planned (and ran) under every leg — the single
-    // most expensive subtree in the query, paid 3× (guide §2.4). The
-    // staged frame is queries×k rows, so the per-leg truth derivations
-    // ride a coalesce(1) single partition with zero exchanges.
+    // staged ONCE (r16): un-staged, the brute-force N×Q cosine subtree
+    // planned (and ran) under each of the three legs (guide §2.4). The
+    // queries×k truth rows broadcast into each leg's semi join.
     val exact = simTopkExact(spark, dir)
       .select(col("q_id"), col("rank"), col("cand_id"))
-      .transform(Ckpt.stage).coalesce(1)
+      .transform(Ckpt.stage)
     def row(method: String, frame: DataFrame, k: Int): DataFrame = {
       val truth = exact.filter(col("rank") <= k).select("q_id", "cand_id")
-      // explicit hint: truth is queries×k rows (always broadcastable —
-      // both are op constants) but rides a staged scan with no size
-      // stats, which would otherwise plan as a sort-merge join and
-      // re-exchange the corpus-scale method frame
-      // coalesce(1) after each agg: joins against bare agg outputs
-      // re-exchange both sides (the sim_mmr probe), and these frames
-      // are queries-sized
       val hits = frame.select("q_id", "cand_id")
-        .join(broadcast(truth), Seq("q_id", "cand_id"), "left_semi")
+        .join(truth, Seq("q_id", "cand_id"), "left_semi")
         .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
-        .coalesce(1)
       truth.groupBy("q_id").agg(count(lit(1)).as("n_truth"))
-        .coalesce(1).hint("merge")
         .join(hits, Seq("q_id"), "left")
         .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
         .agg(count(lit(1)).as("n_queries"),
@@ -1001,7 +989,7 @@ object SimilarityOps extends Suite {
     val trained = nestCentroids(centroidSums(assign)).transform(Ckpt.stage)
     val scored = assign.select(col("vec_id"), col("dq"),
         col("cluster").as("own_c"))
-      .crossJoin(broadcast(trained))
+      .crossJoin(trained)
       .withColumn("a_sq",
         expr("km_assign(dq, filter(cs, c -> c.cluster = own_c)).dist_sq"))
       .withColumn("b_sq",
@@ -1090,8 +1078,8 @@ object SimilarityOps extends Suite {
       .transform(Ckpt.stage)
     val psim = cand.select(col("q_id"), col("cand_id").as("a_id"),
         col("v").as("av"), col("norm").as("an"))
-      .join(broadcast(cand.select(col("q_id"), col("cand_id").as("b_id"),
-        col("v").as("bv"), col("norm").as("bn"))), Seq("q_id"))
+      .join(cand.select(col("q_id"), col("cand_id").as("b_id"),
+        col("v").as("bv"), col("norm").as("bn")), Seq("q_id"))
       .filter(col("a_id") =!= col("b_id"))
       .select(col("q_id"), col("a_id"), col("b_id"),
         cosineQ(col("av"), col("bv"), col("an"), col("bn")).as("sim"))
@@ -1424,9 +1412,7 @@ object SimilarityOps extends Suite {
     // lazy cache (r16, guide §2.4) — the InMemoryRelation keeps the
     // partitioning, so BOTH per-round corpus aggs/joins (the score
     // groupBy(vec_id) and the back-projection join on vec_id) run
-    // exchange-free every round; the former eager stage re-entered as
-    // UnknownPartitioning and re-exchanged ~2 corpus-sized frames per
-    // round × 6 rounds. One repartition at build replaces all of them.
+    // exchange-free every round, and the cache adds no staging job.
     val terms = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         posexplode(quantized(col("embedding"))).as(Seq("d", "e")))
@@ -1437,9 +1423,7 @@ object SimilarityOps extends Suite {
     var mxPrev: DataFrame = null
     var mxCur: DataFrame = null
     for (_ <- 1 to pcaRounds) {
-      // v is 64 rows at ANY scale (dim-bounded) but rides a staged
-      // scan with no stats — broadcast explicitly
-      val s = terms.join(broadcast(v), Seq("d"))
+      val s = terms.join(v, Seq("d"))
         .groupBy("vec_id").agg(sum(col("e") * col("v")).as("sc"))
         .select(col("vec_id"), expr(
           """case when sc >= 0 then (2 * sc + 100000000L) div 200000000L

@@ -1782,8 +1782,8 @@ object TextOps extends Suite {
     val top = vocab.orderBy(col("freq").desc, col("tok").asc)
       .limit(zipfRanks).transform(Ckpt.stage)
     val ranked = top
-      .join(broadcast(top.select(col("tok").as("btok"),
-          col("freq").as("bfreq"))),
+      .join(top.select(col("tok").as("btok"),
+          col("freq").as("bfreq")),
         col("bfreq") > col("freq") ||
           (col("bfreq") === col("freq") && col("btok") < col("tok")),
         "left")

@@ -32,12 +32,12 @@ import graft.sources.VersionedTable
   *
   * Scale note: whole-table copy-on-write is the correct shape only
   * below ~table=O(batch) sizes — [[PartitionedTableCdcTarget]] is the
-  * 100 TB form (rewrite only the key-hash partitions the batch
-  * touches, same contract/guard/manifest game). This class stays for
-  * two reasons: it is the copy-on-write reference for the partitioned
-  * form (PartitionedTableCdcTargetSpec checks the partitioned
-  * snapshots against it; [[graft.LakehouseScale]] measures the bytes
-  * both rewrite per batch), and it writes the flat layout that
+  * 100 TB form (a batch appends one log; only a fold rewrites the
+  * partitions the logs touch). This class stays for two reasons: it is
+  * the copy-on-write reference for the partitioned form
+  * (PartitionedTableCdcTargetSpec checks the partitioned snapshots
+  * against it; [[graft.LakehouseScale]] measures the bytes each writes
+  * per batch), and it writes the flat layout that
   * [[PartitionedMerge]]'s `migrateFlat` reads, so a table it wrote
   * migrates in place on the partitioned form's first merge.
   */

@@ -60,17 +60,15 @@ class PlanAuditSpec extends SparkSpec {
     // the filter's ScalarSubquery is still logical in sparkPlan (it is
     // planned with the executed plan's subqueries); force one onto a
     // shuffle join through lowered thresholds, scoped to this test
-    val scoped = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    val nodes = try collectAll(sources.Tables.lineitem(spark, sf)
+    val nodes = withConf(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      collectAll(sources.Tables.lineitem(spark, sf)
         .join(sources.Tables.orders(spark, sf)
           .filter(col("o_orderstatus") === "F"), col("l_orderkey") === col("o_orderkey"))
         .queryExecution.sparkPlan)
-      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
     def has(p: Expression => Boolean) = nodes.exists(_.expressions.exists(_.exists(p)))
     assert(has(_.isInstanceOf[BloomFilterMightContain]), "no runtime bloom filter planned")
     // the subquery's own tree was walked: its bloom filter aggregate
@@ -98,7 +96,11 @@ class PlanAuditSpec extends SparkSpec {
     // exceeding its pin means a new exchange snuck into the plan and
     // must be re-audited, not silently absorbed. Counts are stable
     // because the sf0.001 testdata (and so broadcast decisions) is
-    // fixed.
+    // fixed. A `Ckpt.stage`d frame that holds one partition reports
+    // SinglePartition, so at sf0.001 the aggregates, windows, joins and
+    // sorts over a staged frame plan no exchange: a comment below names
+    // the operators that exchange once the staged frame holds more
+    // partitions, and the pin is what sf0.001 runs.
     val budget = Map(
       "cdc_apply_snapshot" -> 2, "cdc_changelog_stats" -> 3,
       "cdc_dedupe_latest" -> 2, "cdc_merge_batch" -> 4, "cdc_scd2" -> 2,
@@ -125,9 +127,10 @@ class PlanAuditSpec extends SparkSpec {
       "pipe_pack_sequences" -> 2,
       // B-row bucket agg (map-side combined, constant-size result) +
       // 1-row totals agg + the doc_id score agg off the broadcast
-      // log-ratio join + the docs⋈scores doc_id join (2 exchanges) +
-      // the final sort — nothing post-agg outgrows B or the doc count
-      "pipe_dsir" -> 6,
+      // log-ratio join + the docs⋈scores doc_id join + the final sort
+      // — nothing post-agg outgrows B or the doc count; the bucket
+      // and totals aggs read the one-partition staged frame
+      "pipe_dsir" -> 3,
       // session agg (user_id) + one bucket-join exchange (the
       // session-replica side broadcasts at spec SF; at scale AQE
       // promotes it to the second bucket exchange) + event_id count
@@ -137,7 +140,7 @@ class PlanAuditSpec extends SparkSpec {
       // final plan reads kmeansTrain's checkpointed assignment: the
       // k-row cluster agg (map-side combined) + the 8-row sort; the
       // codebook rides one broadcast and scoring is map-only
-      "sim_silhouette" -> 2,
+      "sim_silhouette" -> 0,
       // per-order detail agg + full-outer join on the same orderkey
       // (orphans on both sides fall out free) + statuses-sized final
       // agg + the 4-row sort
@@ -146,12 +149,12 @@ class PlanAuditSpec extends SparkSpec {
       // (producer: (user,type) agg + argmax window + per-user agg +
       // cell agg + 1-row totals, ONE corpus pass); remaining: the
       // TOTAL row's SinglePartition agg + the 6-row sort
-      "ft_woe_iv" -> 2,
+      "ft_woe_iv" -> 0,
       // final plan reads the checkpointed histogram twice (producer:
       // (type,user) agg + histogram agg, ONE corpus pass); the
-      // histogram-sized pair join broadcasts, the per-type agg and the
-      // 5-row sort are the two exchanges
-      "ev_engagement_gini" -> 2,
+      // histogram-sized pair join broadcasts; the per-type agg and the
+      // 5-row sort read the one-partition staged frame
+      "ev_engagement_gini" -> 0,
       // inherits dedup_embedding's blocked pair plan (its 2 audited
       // exchanges) + the symmetrize explode's vec_id window exchange
       // + the output sort
@@ -164,21 +167,21 @@ class PlanAuditSpec extends SparkSpec {
       // (producer: ONE corpus pass); per marginal a (type,k) agg +
       // a type-window exchange (all alphabet-sized), the hod⋈dow
       // join broadcasts, + the output sort
-      "ev_seasonality" -> 5,
+      "ev_seasonality" -> 0,
       // hourly (type,hr) agg + the type-keyed series window exchange
       // (series-sized: corpus-lifetime hours) + the output sort
       "ev_changepoint" -> 3,
       // final plan reads the checkpointed centered series (producer:
       // hourly agg + type window, ONE corpus pass); den agg + the
       // two lag-join exchanges ride (type, hr); + the 5-row sort
-      "ev_autocorrelation" -> 4,
+      "ev_autocorrelation" -> 3,
       // ONE user_id exchange feeds the lag window; the moment agg
       // rides the same partitioning; + the output sort
       "ev_bot_detect" -> 2,
       // final plan reads the checkpointed alphabet²-sized rule counts
       // (producer: ONE orderkey shuffle + pair explode); totals ride
-      // broadcast self-joins, the 1 exchange is the 300-row sort
-      "ft_assoc_rules" -> 1,
+      // broadcast self-joins, the 300-row sort reads the staged frame
+      "ft_assoc_rules" -> 0,
       // ONE event_type exchange feeds the NTILE sort; the (type,bin)
       // agg rides the same partitioning (subset-key clustering);
       // + the output sort
@@ -197,9 +200,9 @@ class PlanAuditSpec extends SparkSpec {
       "cdc_log_compact" -> 3,
       // final plan reads the checkpointed vocab + constant top-1000
       // frames (producer: ONE corpus token agg + a TakeOrdered cut);
-      // the rank self-join broadcasts, the 1 exchange is the
-      // rank-frame agg's SinglePartition (constant-sized input)
-      "txt_zipf" -> 1,
+      // the rank self-join broadcasts, and the rank-frame agg reads
+      // the one-partition staged frames (constant-sized input)
+      "txt_zipf" -> 0,
       // final plan reads the staged candidates (producer: one
       // broadcast-query corpus pass + the ranking window), joins the
       // pool²-sized pairs to a broadcast of them and runs the greedy
@@ -224,7 +227,7 @@ class PlanAuditSpec extends SparkSpec {
       // label block inherits ft_time_to_event's ONE user_id shuffle;
       // day-cell agg + constant triangle joins (broadcast) + the
       // ≤31-row sort
-      "ft_kaplan_meier" -> 2,
+      "ft_kaplan_meier" -> 0,
       // ONE doc_id exchange feeds the lag window; the per-doc agg
       // rides the same partitioning; + the output sort
       "mm_shot_boundary" -> 2,
@@ -247,15 +250,16 @@ class PlanAuditSpec extends SparkSpec {
       // pass); remaining: vocab word-stats agg, phrase-count agg,
       // score agg + the 20-row sort — the top-20 is a TakeOrdered,
       // not a global window
-      "txt_keyphrases" -> 4,
+      "txt_keyphrases" -> 0,
       // final plan reads the checkpointed alphabet²-sized tagged
       // counts (producer: (user,type) agg + per-user set agg + pair
       // agg, ONE corpus pass); totals ride broadcast self-joins, the
-      // 1 exchange is the 10-row sort
-      "ev_audience_overlap" -> 1,
+      // 10-row sort reads the one-partition staged frame
+      "ev_audience_overlap" -> 0,
       // final plan reads the union-find kernel's staged labels (ONE
-      // task, Ckpt.small, PipelineOps.components); one exchange
-      "pipe_dup_clusters" -> 1,
+      // task, Ckpt.small, PipelineOps.components); the output sort
+      // reads the one-partition staged frame
+      "pipe_dup_clusters" -> 0,
       // keeper semi-join broadcasts; the one exchange is the final sort
       "pipe_curate_cc" -> 1,
       "q1_pricing_summary" -> 2,
@@ -290,7 +294,7 @@ class PlanAuditSpec extends SparkSpec {
       // shared by the encode and ADC branches (it used to plan — and
       // run — under both); remaining: codes agg + partials agg +
       // window + sort
-      "sim_pq_topk" -> 4,
+      "sim_pq_topk" -> 0,
       // bigram count agg + bucketed-window + final-window + sort
       "txt_ngram_topk" -> 4,
       "pipe_decontaminate" -> 2,
@@ -383,7 +387,7 @@ class PlanAuditSpec extends SparkSpec {
       // plan is just stats-agg + sort; the per-round centroid-update
       // exchanges (k×d rows after map-side combine) run inside the
       // loop's materializations — the corpus is never re-shuffled
-      "sim_kmeans" -> 2,
+      "sim_kmeans" -> 0,
       // suppkey agg appears under the max branch and the main branch
       // (ReuseExchange collapses them at runtime, q11-style) + the
       // 1-row max's SinglePartition + sort; winners broadcast
@@ -392,12 +396,13 @@ class PlanAuditSpec extends SparkSpec {
       // window; the one exchange is the output sort
       "sim_range_search" -> 1,
       // cluster labels come checkpointed from the loop; bucket/split
-      // are map-only over them, so only the sort exchanges
-      "pipe_split" -> 1,
+      // are map-only over them, and the sort reads the one-partition
+      // staged labels
+      "pipe_split" -> 0,
       // training is checkpointed (see sim_kmeans); probe is map-only
       // against the broadcast trained codebook, so the final plan is
       // the ranking window + sort
-      "sim_ivf_kmeans" -> 2,
+      "sim_ivf_kmeans" -> 0,
       // ONE aggregate pass: Expand(×6 distinct cols) + two-phase
       // distinct agg (hash exchange + SinglePartition final) + the
       // 6-row explode's sort
@@ -422,7 +427,7 @@ class PlanAuditSpec extends SparkSpec {
       // final plan is the codes agg (reused under candidate join),
       // the cand_id join, ADC pivot agg, ranking window + sort —
       // the ADC table and probe list broadcast
-      "sim_ivfpq" -> 5,
+      "sim_ivfpq" -> 0,
       // chunk census agg on the md5 digest + flag join-back + doc
       // reconstruction agg + the outer join and sort
       "txt_line_dedup" -> 6,
@@ -434,7 +439,7 @@ class PlanAuditSpec extends SparkSpec {
       // agg) runs once into the daily checkpoint; the final plan is
       // calendar-sized — year window, year-total agg, broadcast
       // triangle offsets, sort
-      "q_orders_backlog" -> 4,
+      "q_orders_backlog" -> 0,
       // r10 DataFrame-native grid: the d×w counter agg (map-side
       // combined to grid size), the exact (user) agg — the probe
       // rides it via the broadcast grid join with no re-exchange —
@@ -481,10 +486,10 @@ class PlanAuditSpec extends SparkSpec {
       // Expand pair + the cohort windows' shared tiny-frame exchange
       // (sort rides it)
       "ev_cohort_ltv" -> 4,
-      // the final plan reads 8 checkpointed 1-row merge frames: the
-      // one exchange is the output sort (per-round pair aggs run
-      // inside the training loop's checkpoint jobs)
-      "txt_bpe_train" -> 1,
+      // the final plan reads 8 checkpointed 1-row merge frames, and
+      // the output sort reads them (per-round pair aggs run inside the
+      // training loop's checkpoint jobs)
+      "txt_bpe_train" -> 0,
       // symtab broadcasts onto the corpus explode: doc_id agg + sort
       "txt_bpe_apply" -> 2,
       // 9 SinglePartition finals of the per-round accuracy aggregates
@@ -493,7 +498,7 @@ class PlanAuditSpec extends SparkSpec {
       // task, so each exchange moves ~task-count rows at any corpus
       // size) + the 9-row output sort; the gradient aggs run inside
       // the training loop's checkpoint jobs like txt_bpe_train's
-      "txt_quality_distill" -> 10,
+      "txt_quality_distill" -> 0,
       // 3 × (map-side-combined key-count agg + 1-row moment agg) —
       // each leg's post-agg frames are keys-sized then single-row —
       // + the 3-row stack's sort
@@ -523,8 +528,9 @@ class PlanAuditSpec extends SparkSpec {
       // a composite that EMBEDS four full query plans (exact + three
       // ANN paths, each audited on its own) plus three query-set-sized
       // semi-join/agg blocks; the count is the sum of its parts, not a
-      // new shuffle introduced by the report itself
-      "sim_recall_report" -> 25,
+      // new shuffle introduced by the report itself — the truth sets
+      // and their aggs read the one-partition staged exact top-k
+      "sim_recall_report" -> 10,
       // r9 additions, audited: lifecycle/MI read eager checkpoints
       // (one corpus pass each; the final plans are day-/alphabet-
       // sized); inter_event = user gap window + type rank window +
@@ -540,7 +546,7 @@ class PlanAuditSpec extends SparkSpec {
       "ev_ab_srm" -> 4, "ft_correlation" -> 3,
       // map-only scoring over the checkpointed feature frame + the
       // ≤10-row bucket agg + sort (training runs in the producer)
-      "txt_distill_calibration" -> 2,
+      "txt_distill_calibration" -> 0,
       // corpus explode + broadcast vocab join + countDistinct expand
       // into the language-sized agg + sort (training in the producer)
       "txt_bpe_fertility" -> 3,
@@ -552,7 +558,7 @@ class PlanAuditSpec extends SparkSpec {
       // (1 row) and v (64 rows) derive in the final plan, so it
       // carries their aggregate/sort exchanges over 64-row staged-w
       // scans — bounded by dim count at any corpus scale
-      "sim_pca_power" -> 4,
+      "sim_pca_power" -> 0,
       // one user_id shuffle (shared sessionize+truncation windows;
       // the per-session agg rides it) + the ≤2ⁿ-row agg by channel
       // set; the kernel runs in one task (Ckpt.small), so the output
@@ -563,13 +569,13 @@ class PlanAuditSpec extends SparkSpec {
       "dedup_minhash_recall" -> 5,
       // distinct-score agg + decile windows + offset triangle + the
       // 1-row report (training in the producer)
-      "txt_distill_auc" -> 4,
+      "txt_distill_auc" -> 0,
       // distinct-point agg runs in the checkpointed producer; banded
       // window + bands triangle + the point-key join back + sort
-      "q_skyline" -> 4,
-      "ev_lifecycle" -> 3, "ev_inter_event" -> 3,
+      "q_skyline" -> 0,
+      "ev_lifecycle" -> 0, "ev_inter_event" -> 3,
       "cdc_redelivery_audit" -> 5, "ft_graph_jaccard" -> 7,
-      "ft_mutual_info" -> 3, "txt_ngram_novelty" -> 5,
+      "ft_mutual_info" -> 0, "txt_ngram_novelty" -> 5,
       "sim_knn_graph" -> 3)
     // counted by ShuffleCount.executedShuffles (r16): exchanges the
     // query EXECUTES — the former regex over executedPlan.toString

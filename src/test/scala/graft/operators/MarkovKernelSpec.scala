@@ -110,7 +110,7 @@ class MarkovKernelSpec extends SparkSpec {
       transOf(cases(2)), 12))
   }
 
-  test("ev_attribution_markov runs 10 Spark jobs") {
+  test("ev_attribution_markov runs 8 Spark jobs") {
     spark.catalog.clearCache()
     Memo.clearAll()
     val (_, jobs) = SparkJobs.count(spark) {
@@ -118,7 +118,9 @@ class MarkovKernelSpec extends SparkSpec {
         .write.format("noop").mode("overwrite").save()
     }
     // two staged frames (counts, trans) and their broadcasts, plus the
-    // final action; 36 when every round was staged
-    assert(jobs == 10, s"ev_attribution_markov ran $jobs jobs")
+    // final action; 10 while a staged frame re-entered unpartitioned
+    // (the exchanges over the one-partition counts frame ran as jobs),
+    // 36 when every round was staged
+    assert(jobs == 8, s"ev_attribution_markov ran $jobs jobs")
   }
 }
