@@ -5,25 +5,37 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.{CdcApplied, PartitionedTableCdcTarget, TableCdcTarget}
+import graft.streaming.{CdcApplied, PartitionedTableCdcTarget}
 
-/** Scale evidence for the partition-scoped lakehouse merge (VERDICT
-  * r11 item 1's "rewrite bytes ∝ batch size, not table size"):
-  * replays the SAME constant-size update batches against the
-  * copy-on-write target and the partitioned target at growing table
-  * sizes, measuring bytes physically written per commit (the write-
-  * once data layout makes that an exact walk of `data/`).
-  *
-  * Partition count scales with the table (the 100 TB sizing rule in
-  * PartitionedTableCdcTarget's scaladoc: hold per-partition bytes
-  * near a constant budget, here ~800 keys/partition standing in for
-  * ~1 GB) — under that rule the partitioned rewrite cost per batch is
-  * touched-partitions × constant, i.e. ∝ batch, while copy-on-write
-  * is ∝ table by construction.
-  *
-  * Usage: runMain graft.LakehouseScale [out.json]
+/** Scale probes for the keyed lakehouse table: each leg replays a
+  * constant-size workload against a table (or a manifest) that grows,
+  * so a cost that tracks the table instead of the work shows up as a
+  * trend. The legs, each run as `runMain graft.LakehouseScale <leg>
+  * [out.json] ...` (a run without a leg prints their names):
+  *  - `follower`: bytes a [[graft.streaming.TableFollower]] tick writes
+  *    and files its change feed scans, per 32-key batch, as the source
+  *    grows 30×;
+  *  - `rescale`: bytes per update batch on ONE table grown 30× in
+  *    place while the byte-budget rescale trigger fires;
+  *  - `cycle`: wall time per merge → compaction check → change feed →
+  *    follower tick, at 30× growth;
+  *  - `chain`: wall time and bytes per tick at each hop of a
+  *    src → mid → leaf replica chain (one size per JVM);
+  *  - `manifest`: milliseconds per 32-label incremental commit and the
+  *    manifest bytes at P = 1k/10k/100k labels (no data I/O);
+  *  - `snapshot`: restore, tag and expire cost at the same label
+  *    counts (no data I/O);
+  *  - `erase`: bytes and seconds per 32-key [[graft.sources
+  *    .VersionedTable.deleteKeys]] as the table grows 10×;
+  *  - `merge`: a 200-row merge on the log path and the fold path, and
+  *    the snapshot read at the fold bound, at 1M/10M rows.
+  * The bytes are what the write-once layout puts under `data/`, an
+  * exact walk.
   */
 object LakehouseScale {
+
+  private val Legs =
+    Seq("follower", "rescale", "cycle", "chain", "manifest", "snapshot", "erase", "merge")
 
   private def ap(uid: Long, id: Long, t: Long, v: Double) =
     CdcApplied(uid, id, new Timestamp(t), v, is_deleted = false)
@@ -298,7 +310,7 @@ object LakehouseScale {
     * empty staged dirs (no data I/O, no Spark job: the probe isolates
     * manifest serialize+parse+link). Reports per-commit milliseconds
     * for a 32-label incremental merge and the manifest size on disk —
-    * the number that decides whether the flat manifest needs the
+    * the number that decides whether the single-file manifest needs the
     * Iceberg manifest-list split before the design point.
     * Usage: runMain graft.LakehouseScale manifest [out.json] */
   private def manifestLeg(out: String): Unit = {
@@ -616,62 +628,7 @@ object LakehouseScale {
       spark.stop()
       return
     }
-    val out = args.headOption.getOrElse("SCALE_LAKEHOUSE_r12.json")
-    val spark = Engine.session("graft-lakehouse-scale")
-    import spark.implicits._
-
-    val updateKeys = 32 // constant CDC batch size across every table
-    val updateBatches = 5
-    val rng = new scala.util.Random(42)
-
-    val rows = Seq.newBuilder[String]
-    // 30× across the legs: COW must grow ∝ table while the
-    // partitioned rewrite converges to touched-partitions × the
-    // constant per-partition budget (≈ flat once P ≫ batch keys —
-    // the first leg has P < batch, i.e. every partition touched,
-    // deliberately included as the degenerate floor)
-    for (tableKeys <- Seq(10000, 30000, 100000, 300000)) {
-      val p = math.max(16, tableKeys / 800) // constant per-partition budget
-      val cowRoot = Files.createTempDirectory(s"lh_cow_$tableKeys").toString
-      val partRoot = Files.createTempDirectory(s"lh_part_$tableKeys").toString
-      val cow = new TableCdcTarget(spark, cowRoot)
-      val part = new PartitionedTableCdcTarget(spark, partRoot, p)
-
-      val load = (1L to tableKeys.toLong)
-        .map(k => ap(k, k, 1000L + k, k.toDouble))
-      cow.merge(0, load.toDS()); part.merge(0, load.toDS())
-
-      var cowTotal = 0L; var partTotal = 0L
-      for (b <- 1 to updateBatches) {
-        val batch = Seq.fill(updateKeys)(
-          rng.nextInt(tableKeys).toLong + 1L)
-          .distinct
-          .map(k => ap(k, 1000000L * b + k, 10000000L * b + k, -k.toDouble))
-        val cow0 = dataBytes(cowRoot); val part0 = dataBytes(partRoot)
-        cow.merge(b.toLong, batch.toDS())
-        part.merge(b.toLong, batch.toDS())
-        cowTotal += dataBytes(cowRoot) - cow0
-        partTotal += dataBytes(partRoot) - part0
-      }
-      val cowAvg = cowTotal / updateBatches
-      val partAvg = partTotal / updateBatches
-      println(s"[lakehouse-scale] rows=$tableKeys P=$p " +
-        s"cow=$cowAvg B/batch part=$partAvg B/batch " +
-        f"ratio=${cowAvg.toDouble / partAvg}%.1f")
-      rows += s"""{"table_rows":$tableKeys,"partitions":$p,""" +
-        s""""batch_keys":$updateKeys,"cow_bytes_per_batch":$cowAvg,""" +
-        s""""part_bytes_per_batch":$partAvg,""" +
-        f""""cow_over_part":${cowAvg.toDouble / partAvg}%.2f}"""
-
-      // equality witness: the two forms must agree after every replay
-      val a = cow.snapshot.orderBy("user_id").collect().toSeq
-      val b = part.snapshot.orderBy("user_id").collect().toSeq
-      require(a == b, s"COW and partitioned snapshots diverged at $tableKeys")
-    }
-    val json =
-      s"""{"metric":"lakehouse_rewrite_bytes","unit":"bytes_per_batch","update_keys":$updateKeys,"tables":[${rows.result().mkString(",")}]}"""
-    println(json)
-    Files.write(Paths.get(out), (json + "\n").getBytes("UTF-8"))
-    spark.stop()
+    println("usage: runMain graft.LakehouseScale <leg> [out.json] ...; legs: " +
+      Legs.mkString(", "))
   }
 }

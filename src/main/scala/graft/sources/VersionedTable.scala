@@ -12,9 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * analog: the iceberg catalog destination,
   * /root/reference/etl-destination/src/iceberg/catalog.rs).
   *
-  * Layout:
+  * Layout (one layout: a table is keyed, its rows hashed into
+  * partitions by [[keyPid]]):
   * {{{
-  *   <root>/data/<uuid>/           parquet files of ONE commit (write-once)
+  *   <root>/data/<uuid>/pid=<k>/   parquet files of ONE staged write,
+  *                                 one subdir per partition label
+  *   <root>/data/<uuid>/           a merge-on-read log (one file)
   *   <root>/_versions/v<%08d>.json manifest: one JSON record, fields
   *                                 tabled on [[Manifest]]
   * }}}
@@ -41,8 +44,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    removed mid-attempt; the attempt re-reads the new head and
   *    retries on top of it — and [[layoutMoved]] — a rescale changed
   *    the partition count under staged dirs; the caller restages.
-  *    The single-attempt forms ([[commitOnce]],
-  *    [[commitPartitionsOnce]]) surface the race instead.
+  *    The single-attempt form, [[commitPartitionsOnce]], surfaces
+  *    the race instead.
   *  - '''Time travel.''' [[readAt]] opens any retained version.
   *
   * On an object store without atomic metadata ops this manifest game
@@ -190,24 +193,20 @@ object VersionedTable {
     finally s.close()
   }
 
-  /** A manifest's label content. A partitioned manifest's `parts`
-    * and `pstats` (and a flat one's `dirs`) are parsed on first use,
-    * so a scalar read of a 100k-label manifest (a txn scan, the
-    * partition count, the incarnation id) never builds the label map. */
-  private[sources] final class Content(val partitioned: Boolean,
-      dirs0: => Seq[String], parts0: => Map[String, Seq[String]],
+  /** A manifest's label content. Its `parts` and `pstats` are parsed
+    * on first use, so a scalar read of a 100k-label manifest (a txn
+    * scan, the partition count, the incarnation id) never builds the
+    * label map. */
+  private[sources] final class Content(parts0: => Map[String, Seq[String]],
       pstats0: => Option[Map[String, (Long, Int)]]) {
-    lazy val dirs: Seq[String] = dirs0
     lazy val parts: Map[String, Seq[String]] = parts0
     lazy val pstats: Option[Map[String, (Long, Int)]] = pstats0
   }
 
   private[sources] object Content {
-    def flat(dirs: Seq[String]): Content =
-      new Content(false, dirs, Map.empty, None)
-    def partitioned(parts: Map[String, Seq[String]],
+    def apply(parts: Map[String, Seq[String]],
         pstats: Map[String, (Long, Int)]): Content =
-      new Content(true, Nil, parts, Some(pstats))
+      new Content(parts, Some(pstats))
   }
 
   /** The key a merge-on-read table resolves under: the newest row per
@@ -231,12 +230,12 @@ object VersionedTable {
     * field       written by                           carried to the next commit
     * ----------  -----------------------------------  --------------------------
     * version     every commit (its own number)        -
-    * op          every commit: append, overwrite,     -
-    *             merge_parts, delta_parts,
+    * op          every commit: merge_parts,           -
+    *             delta_parts, append_log,
     *             overwrite_parts, restore
     * mver        every commit (3 with logs, else 2)   -
     * ts          every commit (epoch millis)          clamped above head's ts
-    * txn         commitBatch, commitPartitions        -
+    * txn         commitPartitions                     -
     * schema      evolving writers, compaction,        -
     *             rescale, restore (toV's), an
     *             erasure that empties the table
@@ -244,25 +243,26 @@ object VersionedTable {
     * followsrc   TableFollower                        every commit
     * wkind       every commit (writer kind)           -
     * kinds       every commit (head's set + wkind)    every commit
-    * key         PartitionedMerge (pk, then seqCols)  partitioned commits
-    * logs        log appends (one file each)          incremental partitioned
-    *                                                  commits, less the logs a
-    *                                                  fold or compaction folded
+    * key         PartitionedMerge (pk, then seqCols)  every commit
+    * logs        log appends (one file each)          incremental commits, less
+    *                                                  the logs a fold or
+    *                                                  compaction folded
     * base        delta commits (parent version)       -
     * chain       delta commits (depth below the root) -
     * drops       delta commits (labels removed)       -
-    * nparts      partitioned writers, rescale,        merge_parts, delta_parts
-    *             restore (toV's)
-    * pstats      partitioned commits                  resolved through the chain
-    * parts       partitioned commits                  resolved through the chain
-    * dirs        flat commits (every live dir)        -
+    * nparts      staging writers, rescale, restore    merge_parts, delta_parts,
+    *             (toV's)                              append_log
+    * pstats      every commit                         resolved through the chain
+    * parts       every commit                         resolved through the chain
     * }}}
-    * `nparts`, `pstats` and `parts` appear only in partitioned
-    * manifests, `dirs` only in flat ones. `logs` is the table-level
-    * merge-on-read list ([[LogFile]]), carried whole by every manifest
-    * (never through the delta chain) and bounded by the fold rule of
-    * [[graft.streaming.PartitionedMerge]]. The carry rules live in
-    * [[successor]]. */
+    * `pstats` and `parts` are the label body: a full manifest lists
+    * every live label, a delta (`base`) only the labels it touched.
+    * `logs` is the table-level merge-on-read list ([[LogFile]]),
+    * carried whole by every manifest (never through the delta chain)
+    * and bounded by the fold rule of
+    * [[graft.streaming.PartitionedMerge]]. A manifest with neither a
+    * label body nor a `base` is a flat table an older build wrote;
+    * [[manifestAt]] refuses it. The carry rules live in [[successor]]. */
   private[sources] final case class Manifest(version: Int, op: String,
       mver: Option[Int], ts: Option[Long], txn: Option[Long],
       schema: Option[String], tableId: Option[String],
@@ -271,13 +271,8 @@ object VersionedTable {
       logs: Seq[LogFile], base: Option[Int], chain: Int,
       drops: Set[String], nParts: Option[Int], content: Content) {
 
-    /** From the manifest's shape (a label map or a delta pointer),
-      * never from whether its map is empty: a partitioned table whose
-      * every label was erased is still partitioned. */
-    def partitioned: Boolean = content.partitioned
     def parts: Map[String, Seq[String]] = content.parts
     def pstats: Map[String, (Long, Int)] = content.pstats.getOrElse(Map.empty)
-    def dirs: Seq[String] = content.dirs
 
     /** The CUMULATIVE writer-kind set this manifest carries (every
       * kind that ever committed in this incarnation, expiry-proof). A
@@ -309,15 +304,13 @@ object VersionedTable {
         if (drops.nonEmpty)
           b ++= drops.toSeq.sortBy(_.toInt).map(q).mkString("\"drops\":[", ",", "],")
       }
-      if (partitioned) {
-        nParts.foreach(n => b ++= s""""nparts":$n,""")
-        content.pstats.foreach(m => b ++= byLabel(m).map {
-          case (k, (by, f)) => q(k) + ":[" + by + "," + f + "]"
-        }.mkString("\"pstats\":{", ",", "},"))
-        b ++= byLabel(parts).map { case (k, ds) =>
-          q(k) + ":" + ds.map(q).mkString("[", ",", "]")
-        }.mkString("\"parts\":{", ",", "}}")
-      } else b ++= dirs.map(q).mkString("\"dirs\":[", ",", "]}")
+      nParts.foreach(n => b ++= s""""nparts":$n,""")
+      content.pstats.foreach(m => b ++= byLabel(m).map {
+        case (k, (by, f)) => q(k) + ":[" + by + "," + f + "]"
+      }.mkString("\"pstats\":{", ",", "},"))
+      b ++= byLabel(parts).map { case (k, ds) =>
+        q(k) + ":" + ds.map(q).mkString("[", ",", "]")
+      }.mkString("\"parts\":{", ",", "}}")
       b.result()
     }
   }
@@ -332,23 +325,25 @@ object VersionedTable {
 
     private val JsonStr = "\"((?:[^\"\\\\]|\\\\.)*)\""
 
-    def parse(txt: String): Manifest = {
-      // every scalar key precedes the label body (pstats, parts or
-      // dirs), so scalar fields are searched in the header only: a
-      // key a manifest lacks costs a header scan, not a scan of a
-      // multi-MB label map
+    /** Where the label body (`pstats`, else `parts`) starts in `txt`;
+      * -1 when it has none. Every current writer stamps `pstats`, so
+      * this finds the body right after the header. */
+    def bodyAt(txt: String): Int = {
       val pstatsAt = txt.indexOf("\"pstats\":{")
-      val partsAt = if (pstatsAt >= 0) pstatsAt else txt.indexOf("\"parts\":{")
-      val bodyAt =
-        if (partsAt >= 0) partsAt
-        else Some(txt.indexOf("\"dirs\":[")).filter(_ >= 0).getOrElse(txt.length)
-      val header = txt.substring(0, bodyAt)
+      if (pstatsAt >= 0) pstatsAt else txt.indexOf("\"parts\":{")
+    }
+
+    def parse(txt: String): Manifest = {
+      // every scalar key precedes the label body, so scalar fields are
+      // searched in the header only: a key a manifest lacks costs a
+      // header scan, not a scan of a multi-MB label map
+      val partsAt = bodyAt(txt)
+      val hasPstats = partsAt >= 0 && txt.startsWith("\"pstats\":{", partsAt)
+      val header = txt.substring(0, if (partsAt >= 0) partsAt else txt.length)
       def field(key: String, value: String): Option[String] =
         ("\"" + key + "\":" + value).r.findFirstMatchIn(header).map(_.group(1))
       val num = "(\\d+)"
       val word = "\"([0-9a-zA-Z-]+)\""
-      val base = field("base", num).map(_.toInt)
-      val partitioned = partsAt >= 0 || base.isDefined
       Manifest(
         version = field("version", num).fold(0)(_.toInt),
         op = field("op", "\"([a-z_]+)\"").getOrElse(""),
@@ -367,18 +362,12 @@ object VersionedTable {
         logs = field("logs", "\\[((?:\\[\"data/[0-9a-f-]+\",\\d+\\],?)*)\\]").fold(Seq.empty[LogFile])(
           body => "\\[\"(data/[0-9a-f-]+)\",(\\d+)\\]".r.findAllMatchIn(body)
             .map(m => LogFile(m.group(1), m.group(2).toLong)).toSeq),
-        base = base,
+        base = field("base", num).map(_.toInt),
         chain = field("chain", num).fold(0)(_.toInt),
         drops = field("drops", "\\[([^\\]]*)\\]").fold(Set.empty[String])(b =>
           "\"(\\d+)\"".r.findAllMatchIn(b).map(_.group(1)).toSet),
         nParts = field("nparts", num).map(_.toInt),
-        content = new Content(partitioned,
-          // manifests are written by this object only; dir entries
-          // are uuid paths with an optional partition subdir — no
-          // escapes, and `.distinct` guards a path ever double-reading
-          if (partitioned) Nil
-          else "\"(data/[0-9a-f-]+(?:/pid=\\d+)?)\"".r
-            .findAllMatchIn(txt).map(_.group(1)).toSeq.distinct,
+        content = new Content(
           "\"parts\":\\{(.*?)\\}".r.findFirstMatchIn(txt).map(_.group(1)) match {
             case None => Map.empty
             case Some(body) =>
@@ -387,7 +376,7 @@ object VersionedTable {
                   .map(_.group(1)).toSeq
               }.toMap
           },
-          if (pstatsAt < 0) None
+          if (!hasPstats) None
           else "\"pstats\":\\{(.*?)\\}".r.findFirstMatchIn(txt).map(_.group(1))
             .map(body => "\"(\\d+)\":\\[(\\d+),(\\d+)\\]".r.findAllMatchIn(body)
               .map(m => m.group(1) -> ((m.group(2).toLong, m.group(3).toInt)))
@@ -413,18 +402,28 @@ object VersionedTable {
 
   /** THE manifest reader: version `v` of `root` (its condemned copy
     * when `condemned`, see [[expire]]), refused when it declares a
-    * format newer than [[ManifestVersion]]. `anyFormat` lifts that
-    * refusal for the readers documented to tolerate newer formats
-    * ([[history]], [[commitTime]]), which read only stamps every
-    * format carries. */
+    * format newer than [[ManifestVersion]], or when it is a flat table
+    * an older build wrote (neither a label body nor a `base`): read as
+    * a keyed manifest it would be an empty table. `anyFormat` lifts
+    * both refusals for the readers documented to tolerate other
+    * formats ([[history]], [[commitTime]]), which read only stamps
+    * every format carries. */
   private def manifestAt(root: String, v: Int, condemned: Boolean = false,
       anyFormat: Boolean = false): Manifest = {
-    val m = Manifest.parse(Files.readString(
-      if (condemned) condemnFile(root, v) else versionFile(root, v)))
-    for (mv <- m.mver if mv > ManifestVersion && !anyFormat)
-      throw new IllegalStateException(
-        s"$root v$v declares manifest format $mv, newer than " +
-          s"this reader's $ManifestVersion — upgrade before reading")
+    val txt = Files.readString(
+      if (condemned) condemnFile(root, v) else versionFile(root, v))
+    val m = Manifest.parse(txt)
+    if (!anyFormat) {
+      for (mv <- m.mver if mv > ManifestVersion)
+        throw new IllegalStateException(
+          s"$root v$v declares manifest format $mv, newer than " +
+            s"this reader's $ManifestVersion — upgrade before reading")
+      if (m.base.isEmpty && Manifest.bodyAt(txt) < 0)
+        throw new IllegalStateException(
+          s"$root v$v is a flat (unkeyed) manifest written by an older " +
+            "build — this reader reads keyed tables only; reload its rows " +
+            "into a keyed table")
+    }
     m
   }
 
@@ -433,12 +432,9 @@ object VersionedTable {
     versions(root).lastOption.map(manifestAt(root, _))
 
   /** Data dirs (relative to root) live in version `v`'s manifest `m`:
-    * partitioned manifests (full or delta) resolve through the chain
-    * and add their logs, flat manifests list theirs. */
+    * its labels resolved through the chain, and its logs. */
   private def liveDirs(root: String, v: Int, m: Manifest): Seq[String] =
-    if (m.partitioned)
-      (resolved(root, v, m)._1.values.flatten ++ m.logs.map(_.dir)).toSeq.distinct
-    else m.dirs
+    (resolved(root, v, m)._1.values.flatten ++ m.logs.map(_.dir)).toSeq.distinct
 
   /** Apply one delta manifest's parts on top of a resolved base —
     * THE delta-application semantic, shared by [[resolved]] and
@@ -502,7 +498,7 @@ object VersionedTable {
     * guard (ADVICE r11): the memo assumes versions only ever GROW
     * under a root. A deleted-and-recreated root (an expire() below the
     * scanned watermark is fine — expire keeps the max) restarts its
-    * version numbering, and a stale txn set would make commitBatch
+    * version numbering, and a stale txn set would make commitPartitions
     * silently DROP fresh batches whose ids collide with the old
     * incarnation's. If the listing is empty or its max is below the
     * scanned watermark, the history was reset: drop the memo and
@@ -556,7 +552,7 @@ object VersionedTable {
   }
 
   /** Partition map of the LATEST version, resolved through the delta
-    * chain (empty for flat manifests or a nonexistent table). */
+    * chain (empty for a nonexistent table). */
   def parts(root: String): Map[String, Seq[String]] =
     versions(root).lastOption
       .map(v => resolved(root, v, manifestAt(root, v))._1).getOrElse(Map.empty)
@@ -581,8 +577,8 @@ object VersionedTable {
     * table state, not process config: a writer/follower must hash
     * with the count the table was laid out under, or a restart with
     * a different configured count silently splits keys across
-    * partitions (stale rows stop being replaced). None for flat
-    * tables and manifests that predate the stamp. */
+    * partitions (stale rows stop being replaced). None for manifests
+    * that predate the stamp. */
   def partCount(root: String): Option[Int] =
     headManifest(root).flatMap(_.nParts)
 
@@ -703,9 +699,9 @@ object VersionedTable {
     *    that don't supply one; a commit that defines the whole layout
     *    (overwrite_parts, restore) stamps only its own;
     *  - `key`: the merge-on-read key is table state, carried by every
-    *    partitioned commit that does not stamp its own;
-    *  - `logs` is NOT carried here: each partitioned commit states
-    *    its list ([[commitPartitionsOnce]], [[restore]]). */
+    *    commit that does not stamp its own;
+    *  - `logs` is NOT carried here: each commit states its list
+    *    ([[commitPartitionsOnce]], [[restore]]). */
   private def successor(root: String, head: Option[Manifest], next: Int,
       op: String, content: Content, writerKind: String = KindBatch,
       txn: Option[Long] = None, schemaDdl: Option[String] = None,
@@ -726,7 +722,7 @@ object VersionedTable {
         .getOrElse(UUID.randomUUID().toString)),
       followSrc = followSrc.orElse(head.flatMap(_.followSrc)),
       wkind = Some(writerKind), kinds = Some(carriedKinds + writerKind),
-      key = if (content.partitioned) key.orElse(head.flatMap(_.key)) else None,
+      key = key.orElse(head.flatMap(_.key)),
       logs = logs, base = base, chain = chain, drops = drops,
       nParts = nParts.orElse(
         if (layoutCarries) head.flatMap(_.nParts) else None),
@@ -746,13 +742,6 @@ object VersionedTable {
     * it contributed rides every later commit, so a fresh JVM still
     * sees it. */
   def committedKinds(root: String): Set[String] = scanned(root).kinds
-
-  /** Stage `df` as a new write-once data dir; returns its relative path. */
-  private def stage(df: DataFrame, root: String): String = {
-    val rel = s"data/${UUID.randomUUID()}"
-    df.write.parquet(Paths.get(root, rel).toString)
-    rel
-  }
 
   /** Tasks a staged partitioned write spreads over: the session's
     * parallelism. A `repartition(col)` without a count lets AQE
@@ -862,15 +851,13 @@ object VersionedTable {
     * with ONLY the staged labels replaced — untouched partitions keep
     * their existing dirs verbatim (never rewritten, never copied),
     * which is what turns the copy-on-write merge's O(table)/batch
-    * write amplification into O(touched partitions). The atomic-link
-    * publish, crash, and concurrency arguments are [[commitOnce]]'s
-    * unchanged.
-    *
-    * A previous FLAT manifest (no partition map) cannot be merged
-    * into incrementally — pass `overwriteAll = true` with a staged
-    * map covering the whole keyspace to migrate (or to truncate-load
-    * a partitioned table); otherwise this throws rather than silently
-    * dropping the flat dirs.
+    * write amplification into O(touched partitions). The manifest is
+    * published by the atomic link ([[publish]]): a crash before it
+    * leaves the staged dirs as orphans, a lost race throws
+    * [[ConcurrentCommit]].
+    * `overwriteAll = true` with a staged map covering the whole
+    * keyspace replaces the table's content instead (a truncate-load,
+    * a rescale).
     *
     * @param schemaDdl evolving tables store their CURRENT logical
     *   schema in every manifest so (a) readers serve pre-widen files
@@ -914,18 +901,9 @@ object VersionedTable {
       for (m <- prev; stamped <- m.nParts; supplied <- nParts)
         if (stamped != supplied)
           throw new PartitionCountChanged(stamped, supplied)
-    // an incremental commit onto an UNPARTITIONED non-empty manifest
-    // must migrate, not merge
-    val prevPartitioned = prev.exists(_.partitioned)
-    if (!overwriteAll)
-      for (m <- prev if !m.partitioned && m.dirs.nonEmpty)
-        throw new IllegalStateException(
-          s"$root v$expected is an unpartitioned manifest; migrate " +
-            "with a full rewrite (overwriteAll = true, staged map " +
-            "covering every live key)")
-    // delta or checkpoint? An incremental commit onto a partitioned
-    // parent extends its chain unless the chain is due a full
-    // checkpoint; overwriteAll and first commits are full by nature.
+    // delta or checkpoint? An incremental commit extends its parent's
+    // chain unless the chain is due a full checkpoint; overwriteAll
+    // and first commits are full by nature.
     // The DELTA path never resolves, walks, or re-serializes the
     // untouched labels — its cost is O(touched), which is the whole
     // point (the measured 865 ms / 7.8 MB per 32-label merge at
@@ -935,7 +913,7 @@ object VersionedTable {
     // expire right after a compaction can then drop every replaced
     // version, Delta's checkpoint-then-clean shape)
     val parentChain = prev.fold(0)(_.chain)
-    val asDelta = !overwriteAll && !forceCheckpoint && prevPartitioned &&
+    val asDelta = !overwriteAll && !forceCheckpoint && prev.isDefined &&
       parentChain + 1 < deltaCheckpointEvery
     // stamp per-partition stats: fresh walks ONLY over this commit's
     // staged dirs; untouched labels carry resolved stats forward
@@ -975,7 +953,7 @@ object VersionedTable {
       if (overwriteAll) "overwrite_parts"
       else if (addLog.isDefined) "append_log"
       else if (asDelta) "delta_parts" else "merge_parts",
-      Content.partitioned(mergedParts, mergedStats), writerKind, txn,
+      Content(mergedParts, mergedStats), writerKind, txn,
       schemaDdl, nParts, followSrc,
       base = if (asDelta) Some(expected) else None,
       chain = if (asDelta) parentChain + 1 else 0,
@@ -983,12 +961,19 @@ object VersionedTable {
       key = key, logs = logs)))
   }
 
-  /** Exactly-once partition-scoped micro-batch merge: [[commitBatch]]'s
-    * txn-guarded retry loop over [[commitPartitionsOnce]]. The staged
-    * dirs are write-once, so a lost race retries with the SAME staged
-    * data against the re-read partition map — no restaging, and a
-    * duplicate batch id skips whole (its staged dirs become vacuum
-    * debris, bytes already metered as moved). */
+  /** Exactly-once partition-scoped micro-batch merge: the Structured
+    * Streaming foreachBatch sink form, a txn-guarded retry loop over
+    * [[commitPartitionsOnce]]. The batch id rides the manifest as a
+    * transaction id; a redelivered batch (a restart replays the last
+    * batch not yet in the CHECKPOINT, which may already be in the
+    * TABLE) is recognized and skipped, so at-least-once delivery from
+    * the checkpoint becomes exactly-once in the table — the txn check
+    * and the data publish are the same atomic manifest link. The
+    * staged dirs are write-once, so a lost race retries with the SAME
+    * staged data against the re-read partition map — no restaging,
+    * and a duplicate batch id skips whole (its staged dirs become
+    * vacuum debris, bytes already metered as moved). Returns None for
+    * a skipped duplicate. */
   def commitPartitions(stagedParts: Map[String, String], root: String,
       batchId: Long, overwriteAll: Boolean = false,
       schemaDdl: Option[String] = None,
@@ -1003,8 +988,7 @@ object VersionedTable {
       key: Option[TableKey] = None): Option[Int] = {
     // meter ONCE, outside the retry loop: the staged dirs are written
     // exactly once by the caller — a retried commit relinks the same
-    // bytes and must not bill them again (commitOnce meters per
-    // attempt because it also STAGES per attempt)
+    // bytes and must not bill them again
     meter.foreach(_.add(pipeline, root, "streaming",
       stagedPartBytes(root, stagedParts) + addLog.fold(0L)(_.bytes)))
     // only the head race retries here: the same staged dirs can land
@@ -1020,61 +1004,6 @@ object VersionedTable {
     }
   }
 
-  /** One optimistic commit attempt at exactly `expected + 1`.
-    * @throws ConcurrentCommit if that version already landed */
-  def commitOnce(df: DataFrame, root: String, overwrite: Boolean,
-      expected: Int, txn: Option[Long] = None,
-      meter: Option[graft.streaming.EgressMeter] = None,
-      pipeline: String = "default",
-      writerKind: String = KindBatch): Int = {
-    Files.createDirectories(versionsDir(root))
-    val next = expected + 1
-    val staged = stage(df, root)
-    meter.foreach(_.add(pipeline, root,
-      if (txn.isDefined) "streaming" else "table_copy",
-      dirStats(root, staged)._1))
-    val prev: Option[Manifest] =
-      if (expected == 0) None
-      else Some(raceGuard(next)(manifestAt(root, expected)))
-    val dirs = (if (overwrite) Nil
-                else raceGuard(next)(prev.toSeq
-                  .flatMap(liveDirs(root, expected, _)))) :+ staged
-    publish(root, raceGuard(next)(successor(root, prev, next,
-      if (overwrite) "overwrite" else "append", Content.flat(dirs),
-      writerKind, txn)))
-  }
-
-  /** Exactly-once micro-batch append: the Structured Streaming
-    * foreachBatch sink form. The batch id rides the manifest as a
-    * transaction id; a redelivered batch (restart replays the last
-    * uncommitted-to-the-CHECKPOINT batch, which may already be
-    * committed to the TABLE) is recognized and skipped, so
-    * at-least-once delivery from the checkpoint becomes exactly-once
-    * in the table — the txn check and the data publish are the same
-    * atomic manifest link. Returns None for a skipped duplicate. */
-  def commitBatch(df: DataFrame, root: String, batchId: Long,
-      overwrite: Boolean = false,
-      meter: Option[graft.streaming.EgressMeter] = None,
-      pipeline: String = "default"): Option[Int] =
-    rebasing(headMoved) {
-      if (committedTxns(root).contains(batchId)) None
-      else Some(commitOnce(df, root, overwrite,
-        versions(root).lastOption.getOrElse(0), txn = Some(batchId),
-        meter = meter, pipeline = pipeline))
-    }
-
-  /** Commit with optimistic retry: on a lost race the staged data of
-    * the losing attempt is orphaned (vacuum reclaims it) and the
-    * commit replays against the new table state. */
-  def commit(df: DataFrame, root: String, overwrite: Boolean = false,
-      maxAttempts: Int = CommitAttempts,
-      meter: Option[graft.streaming.EgressMeter] = None,
-      pipeline: String = "default"): Int =
-    rebasing(headMoved, maxAttempts) {
-      commitOnce(df, root, overwrite, versions(root).lastOption.getOrElse(0),
-        meter = meter, pipeline = pipeline)
-    }
-
   /** Latest committed snapshot. */
   def read(spark: SparkSession, root: String): DataFrame =
     readAt(spark, root, versions(root).lastOption.getOrElse(
@@ -1087,27 +1016,22 @@ object VersionedTable {
     * dropping them. */
   def readAt(spark: SparkSession, root: String, v: Int): DataFrame = {
     val m = manifestAt(root, v)
-    val dirs =
-      if (m.partitioned) resolved(root, v, m)._1.values.flatten.toSeq.distinct
-      else m.dirs
-    readResolved(spark, root, m, dirs, schemaOf(m))
+    readResolved(spark, root, m,
+      resolved(root, v, m)._1.values.flatten.toSeq.distinct, schemaOf(m))
   }
 
   /** The head state a merge needs, from one manifest read: the
     * partition map, the base's stamped bytes, the logs, the key and the
     * count. None for a nonexistent table. */
-  private[graft] final case class Head(partitioned: Boolean,
-      parts: Map[String, Seq[String]], baseBytes: Long, logs: Seq[LogFile],
-      key: Option[TableKey], nParts: Option[Int])
+  private[graft] final case class Head(parts: Map[String, Seq[String]],
+      baseBytes: Long, logs: Seq[LogFile], key: Option[TableKey],
+      nParts: Option[Int])
 
   private[graft] def head(root: String): Option[Head] =
     versions(root).lastOption.map { v =>
       val m = manifestAt(root, v)
-      val (pm, stats) =
-        if (m.partitioned) resolved(root, v, m)
-        else (Map.empty[String, Seq[String]], Map.empty[String, (Long, Int)])
-      Head(m.partitioned, pm, stats.valuesIterator.map(_._1).sum, m.logs,
-        m.key, m.nParts)
+      val (pm, stats) = resolved(root, v, m)
+      Head(pm, stats.valuesIterator.map(_._1).sum, m.logs, m.key, m.nParts)
     }
 
   /** Column a log row carries while it is resolved: its log's 1-based
@@ -1199,7 +1123,7 @@ object VersionedTable {
       schema: Option[org.apache.spark.sql.types.StructType]): Option[DataFrame] =
     versions(root).lastOption.flatMap { v =>
       val m = manifestAt(root, v)
-      val pm = if (m.partitioned) resolved(root, v, m)._1 else Map.empty[String, Seq[String]]
+      val pm = resolved(root, v, m)._1
       val dirs = labels.toSeq.sorted.flatMap(l => pm.getOrElse(l.toString, Nil))
       if (dirs.isEmpty && m.logs.isEmpty) None
       else Some(readResolved(spark, root, m, dirs, schema.orElse(schemaOf(m)),
@@ -1285,9 +1209,7 @@ object VersionedTable {
               None, None, 0, 0, is_delta = false))
           case None =>
             Some(CommitInfo(v, ts, m.op, m.wkind.getOrElse(KindUnstamped),
-              m.txn, m.nParts,
-              if (m.partitioned) m.parts.size else m.dirs.size,
-              m.drops.size, m.base.isDefined))
+              m.txn, m.nParts, m.parts.size, m.drops.size, m.base.isDefined))
         }
       } catch { case _: java.nio.file.NoSuchFileException => None }
     }
@@ -1304,8 +1226,9 @@ object VersionedTable {
     * `value` must be the pk column's VALUE; when the manifest stores
     * a schema it is cast to the column's exact type first (Spark's
     * hash is type-sensitive: hash(1) != hash(1L)). For schema-less
-    * manifests pass the exact runtime type the writer used. Flat
-    * tables have no key layout — this refuses; use readAt + filter. */
+    * manifests pass the exact runtime type the writer used. A head
+    * without a partition-count stamp (history written before it)
+    * refuses; use readAt + filter. */
   def readKey(spark: SparkSession, root: String, pk: String,
       value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
@@ -1315,8 +1238,8 @@ object VersionedTable {
     val pm = resolved(root, head, m)._1
     val p = m.nParts.getOrElse(
       throw new IllegalStateException(
-        s"$root has no partition-count stamp — point lookups need the " +
-          "key-hash layout (readAt + filter scans flat tables)"))
+        s"$root v$head has no partition-count stamp (nparts) — a point " +
+          "lookup hashes the key with it; readAt + filter scans instead"))
     val schema = schemaOf(m)
     val keyLit = schema.flatMap(_.fields.find(_.name == pk))
       .map(f => lit(value).cast(f.dataType)).getOrElse(lit(value))
@@ -1477,13 +1400,9 @@ object VersionedTable {
       val target = manifestAt(root, toV)
       // identity/provenance are INCARNATION state — carried from the
       // head like any commit; content/layout/schema come from toV
-      val content =
-        if (target.partitioned) {
-          val (pm, ps) = resolved(root, toV, target)
-          Content.partitioned(pm, ps)
-        } else Content.flat(target.dirs)
+      val (pm, ps) = resolved(root, toV, target)
       publish(root, successor(root, Some(manifestAt(root, head)), head + 1,
-        "restore", content, schemaDdl = target.schema,
+        "restore", Content(pm, ps), schemaDdl = target.schema,
         nParts = target.nParts, key = target.key, logs = target.logs))
     }
 
@@ -1527,9 +1446,8 @@ object VersionedTable {
       val m = manifestAt(root, head)
       val p = m.nParts.getOrElse(
         throw new IllegalStateException(
-          s"$root has no key-hash layout — delete on flat tables by " +
-            "overwrite commit"))
-      require(m.partitioned, s"$root v$head is unpartitioned")
+          s"$root v$head has no partition-count stamp (nparts) — a " +
+            "key erasure hashes the keys with it; use deleteWhere"))
       val pm = resolved(root, head, m)._1
       if (pm.isEmpty && m.logs.isEmpty) return (0L, Nil)
       val schema = schemaOf(m)
@@ -1608,7 +1526,7 @@ object VersionedTable {
         "in-place update")
     require(!set.contains(PidCol),
       s"'$PidCol' is the reserved internal partition column")
-    withHeadScan(spark, root, "update") {
+    withHeadScan(spark, root) {
       (head, m, pm, existing, fromLogs) =>
         // the layout-key guard above is only as good as the name the
         // caller passed — a typo'd pk would disarm it and let the
@@ -1653,22 +1571,18 @@ object VersionedTable {
   }
 
   /** Shared shell for the predicate DML ops: resolve the head,
-    * require a partitioned manifest, full-scan-read it (logs resolved)
-    * with pid recovery, and persist it for the body's multiple passes.
-    * The body also gets the labels the logs' keys hash into: an op
-    * that commits folds the logs, so it rewrites those labels too.
-    * The whole attempt, body included, re-runs on a head race
-    * ([[rebasing]]). */
-  private def withHeadScan(spark: SparkSession, root: String, what: String)(
+    * full-scan-read it (logs resolved) with pid recovery, and persist
+    * it for the body's multiple passes. The body also gets the labels
+    * the logs' keys hash into: an op that commits folds the logs, so
+    * it rewrites those labels too. The whole attempt, body included,
+    * re-runs on a head race ([[rebasing]]). */
+  private def withHeadScan(spark: SparkSession, root: String)(
       body: (Int, Manifest, Map[String, Seq[String]], DataFrame, Set[Int])
         => (Long, Seq[String])): (Long, Seq[String]) =
     rebasing(headMoved) {
       val head = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
       val m = manifestAt(root, head)
-      require(m.partitioned,
-        s"$root v$head is unpartitioned — $what flat tables by " +
-          "overwrite commit")
       val pm = resolved(root, head, m)._1
       val existing = readWithPid(spark, root, m,
         pm.values.flatten.toSeq.sorted, None).persist()
@@ -1748,7 +1662,7 @@ object VersionedTable {
       meter: Option[graft.streaming.EgressMeter] = None,
       pipeline: String = "default"): (Long, Seq[String]) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    withHeadScan(spark, root, "delete on") {
+    withHeadScan(spark, root) {
       (head, m, pm, existing, fromLogs) =>
         val matched = coalesce(cond, lit(false))
         // hit pids AND the doomed-row count from ONE aggregation
@@ -1767,38 +1681,6 @@ object VersionedTable {
         }
     }
   }
-
-  /** Compaction (the OPTIMIZE analog): rewrite the current snapshot's
-    * accumulated append dirs into one dir of `numFiles` files and
-    * publish it as a normal commit — data-identical, so readers are
-    * indifferent to when it runs. At scale the FILE COUNT from
-    * micro-batch appends, not bytes, is what kills
-    * listing/open/task-launch — compaction is the sink-side
-    * maintenance loop. Old versions still reference the small files
-    * until [[vacuum]] after their retention lapses.
-    *
-    * Race semantics: a compaction must publish a snapshot that is
-    * data-identical to SOME committed version — so on a lost commit
-    * race it cannot simply retry at the new head (the staged rewrite
-    * predates the racer's commit; overwriting with it would DROP the
-    * racer's rows from latest). Instead each attempt re-resolves the
-    * current version and restages from it: the racer always wins,
-    * compaction rebases. Partitioned tables refuse here — their
-    * layout and manifest schema must survive compaction, which is
-    * [[compactPartitions]]' job. */
-  def compact(spark: SparkSession, root: String, numFiles: Int = 1,
-      maxAttempts: Int = CommitAttempts): Int =
-    rebasing(headMoved, maxAttempts) {
-      val base = versions(root).lastOption.getOrElse(
-        throw new IllegalStateException(s"no committed version under $root"))
-      if (manifestAt(root, base).partitioned)
-        throw new IllegalStateException(
-          s"$root v$base is partitioned; compact() would flatten its " +
-            "layout and drop its manifest schema — use compactPartitions()")
-      val df = readAt(spark, root, base).coalesce(numFiles)
-      commitOnce(df, root, overwrite = true, expected = base,
-        writerKind = KindMaintenance)
-    }
 
   /** Partition-scoped OPTIMIZE — the maintenance loop for tables
     * written by [[commitPartitions]]: rewrite ONLY partitions whose
@@ -1833,8 +1715,6 @@ object VersionedTable {
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
       val m = manifestAt(root, base)
-      require(m.partitioned,
-        s"$root v$base is unpartitioned; use compact()")
       // budget check from stamped manifest stats when present —
       // O(P) metadata instead of an O(table files) stat walk;
       // unstamped labels (pre-stamp manifests) walk once
@@ -1852,8 +1732,7 @@ object VersionedTable {
         Some(rewrite))
       val staged = stagePartitioned(df, root, PidCol)
       // meter per attempt: a lost race's staged dirs are real bytes
-      // physically written (vacuum reclaims files, not the bill) —
-      // same accounting rule as commitOnce's table_copy path
+      // physically written (vacuum reclaims files, not the bill)
       meter.foreach(_.add(pipeline, root, "table_copy",
         stagedPartBytes(root, staged)))
       commitPartitionsOnce(staged, root, base,
@@ -1904,9 +1783,6 @@ object VersionedTable {
       val base = versions(root).lastOption.getOrElse(
         throw new IllegalStateException(s"no committed version under $root"))
       val m = manifestAt(root, base)
-      require(m.partitioned,
-        s"$root v$base is unpartitioned; rescale applies to partitioned " +
-          "tables (seed one with commitPartitions)")
       require(m.key.forall(_.pk == pk),
         s"$root is keyed on '${m.key.map(_.pk).getOrElse("")}', not '$pk'")
       // the logs' rows resolve into the new layout; the full rewrite
@@ -2029,16 +1905,15 @@ object VersionedTable {
     * complement of the partition-scoped merge: downstream consumers
     * get the keyed delta without snapshot-diffing the table.
     *
-    * PARTITION-PRUNED: for partitioned manifests only the partitions
-    * whose dir set CHANGED between the two versions are read (an
-    * untouched partition cannot contain a changed row — its files are
-    * write-once), plus the partitions the keys of the LOGS one side
-    * holds and the other does not hash into (a log appended or folded
-    * away between the versions). Each side resolves those partitions'
-    * base against all of its own logs, so the scan is O(changed
-    * partitions), table-size independent — the property that makes a
-    * change feed usable at 100 TB. Flat manifests fall back to a full
-    * two-snapshot diff.
+    * PARTITION-PRUNED: only the partitions whose dir set CHANGED
+    * between the two versions are read (an untouched partition cannot
+    * contain a changed row — its files are write-once), plus the
+    * partitions the keys of the LOGS one side holds and the other does
+    * not hash into (a log appended or folded away between the
+    * versions). Each side resolves those partitions' base against all
+    * of its own logs, so the scan is O(changed partitions), table-size
+    * independent — the property that makes a change feed usable at
+    * 100 TB.
     *
     * Both sides are read under `toV`'s manifest schema when one is
     * stored (evolving tables): pre-widen rows serve the added columns
@@ -2051,7 +1926,7 @@ object VersionedTable {
     *    data-identical rewrite produces ZERO phantom changes.
     * (CDC-target tables tombstone via their own is_deleted flag, so
     * their deletes surface as updates; the `delete` class covers
-    * true row removal by overwrite commits.) */
+    * true row removal: erasures, truncate-loads, a restore.) */
   def changes(spark: SparkSession, root: String, fromV: Int, toV: Int,
       pk: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, struct, when}
@@ -2071,30 +1946,23 @@ object VersionedTable {
       if (rels.isEmpty && m.logs.isEmpty) None
       else Some(readResolved(spark, root, m, rels, schema,
         labels.flatMap(logPidFilter(m, _))))
-    val (oldDf, newDf) =
-      if (mFrom.partitioned && mTo.partitioned) {
-        // prune: a label reads only if its dir set moved (covers
-        // replaced, added, and removed partitions) or a key of a log
-        // only one side holds hashes into it
-        val pmFrom = resolved(root, fromV, mFrom)._1
-        val pmTo = resolved(root, toV, mTo)._1
-        val moved = (pmFrom.keySet ++ pmTo.keySet)
-          .filter(l => pmFrom.get(l) != pmTo.get(l)).map(_.toInt)
-        val (fromLogs, toLogs) = (mFrom.logs.toSet, mTo.logs.toSet)
-        val labels = moved ++ Seq(
-          mFrom.copy(logs = (fromLogs -- toLogs).toSeq),
-          mTo.copy(logs = (toLogs -- fromLogs).toSeq))
-          .flatMap(logPids(spark, root, _))
-        def side(m: Manifest, pm: Map[String, Seq[String]]) =
-          readSide(if (labels.nonEmpty) m else m.copy(logs = Nil),
-            labels.toSeq.sorted.flatMap(l => pm.getOrElse(l.toString, Nil)),
-            Some(labels))
-        (side(mFrom, pmFrom), side(mTo, pmTo))
-      } else
-        // flat (or migration-boundary) fallback: full two-snapshot
-        // diff, both sides still under toV's schema
-        (readSide(mFrom, liveDirs(root, fromV, mFrom.copy(logs = Nil)), None),
-          readSide(mTo, liveDirs(root, toV, mTo.copy(logs = Nil)), None))
+    // prune: a label reads only if its dir set moved (covers replaced,
+    // added, and removed partitions) or a key of a log only one side
+    // holds hashes into it
+    val pmFrom = resolved(root, fromV, mFrom)._1
+    val pmTo = resolved(root, toV, mTo)._1
+    val moved = (pmFrom.keySet ++ pmTo.keySet)
+      .filter(l => pmFrom.get(l) != pmTo.get(l)).map(_.toInt)
+    val (fromLogs, toLogs) = (mFrom.logs.toSet, mTo.logs.toSet)
+    val labels = moved ++ Seq(
+      mFrom.copy(logs = (fromLogs -- toLogs).toSeq),
+      mTo.copy(logs = (toLogs -- fromLogs).toSeq))
+      .flatMap(logPids(spark, root, _))
+    def side(m: Manifest, pm: Map[String, Seq[String]]) =
+      readSide(if (labels.nonEmpty) m else m.copy(logs = Nil),
+        labels.toSeq.sorted.flatMap(l => pm.getOrElse(l.toString, Nil)),
+        Some(labels))
+    val (oldDf, newDf) = (side(mFrom, pmFrom), side(mTo, pmTo))
     // "_change_type" is this feed's reserved output column (the Delta
     // CDF name): a table with a NATURAL column of that name would be
     // silently clobbered by the withColumn below and then dropped by
@@ -2280,8 +2148,8 @@ object VersionedTable {
     // one file read and O(touched) work per version, instead of an
     // independent O(P) chain resolution per retained version
     // (keepLast × P map builds at the 100k-partition design point).
-    // Flat manifests and chain roots fall back to their own full
-    // parse, exactly what resolution would do.
+    // Chain roots fall back to their own full parse, exactly what
+    // resolution would do.
     val live: Set[String] =
       try {
         val acc = Set.newBuilder[String]
@@ -2290,28 +2158,22 @@ object VersionedTable {
         versions(root).foreach { v =>
           walked += v
           val m = manifestAt(root, v)
-          if (m.partitioned) {
-            (m.base, running) match {
-              case (Some(b), Some((rv, rm))) if rv == b =>
-                // the base's dirs are already in acc (it is itself a
-                // retained version the loop visited): only THIS
-                // delta's own labels add — truly O(touched); a label
-                // it drops stays live through the earlier versions
-                // that reference it, which is exactly the union the
-                // live set wants
-                running = Some((v, applyDelta(rm, m)))
-                acc ++= m.parts.values.flatten
-              case _ =>
-                val pm = resolved(root, v, m)._1
-                running = Some((v, pm))
-                acc ++= pm.values.flatten
-            }
-            // every manifest carries its whole log list
-            acc ++= m.logs.map(_.dir)
-          } else {
-            running = None
-            acc ++= m.dirs
+          (m.base, running) match {
+            case (Some(b), Some((rv, rm))) if rv == b =>
+              // the base's dirs are already in acc (it is itself a
+              // retained version the loop visited): only THIS delta's
+              // own labels add — truly O(touched); a label it drops
+              // stays live through the earlier versions that reference
+              // it, which is exactly the union the live set wants
+              running = Some((v, applyDelta(rm, m)))
+              acc ++= m.parts.values.flatten
+            case _ =>
+              val pm = resolved(root, v, m)._1
+              running = Some((v, pm))
+              acc ++= pm.values.flatten
           }
+          // every manifest carries its whole log list
+          acc ++= m.logs.map(_.dir)
         }
         // CONDEMNED manifests count as live (review r14): an expire's
         // two-phase drop may restore one a racing tag pinned, and a
@@ -2333,8 +2195,7 @@ object VersionedTable {
             try {
               val m = manifestAt(root,
                 p.getFileName.toString.substring(10, 18).toInt, condemned = true)
-              acc ++= (if (m.partitioned) m.parts.values.flatten ++ m.logs.map(_.dir)
-                else m.dirs)
+              acc ++= m.parts.values.flatten ++ m.logs.map(_.dir)
             } catch { case _: java.nio.file.NoSuchFileException => () }
           }
         }
@@ -2360,7 +2221,7 @@ object VersionedTable {
     val dataDir = Paths.get(root, "data")
     if (!Files.isDirectory(dataDir)) return Nil
     val ls = Files.list(dataDir)
-    // a partitioned manifest references pid= SUBDIRS of a uuid dir —
+    // a manifest references pid= SUBDIRS of a uuid dir —
     // the top-level dir is live iff any referenced path sits under it
     // (matching the bare name alone would vacuum live partitions)
     val orphans =

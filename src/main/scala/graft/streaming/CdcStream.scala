@@ -257,10 +257,10 @@ object CdcDemux {
   * exceeds the target's stored pair for that key, the `WHEN MATCHED
   * AND source.seq > target.seq` MERGE predicate. That guard makes the
   * merge both out-of-order-safe and redelivery-idempotent.
-  * [[PartitionedTableCdcTarget]] and [[TableCdcTarget]] keep the
-  * newest row with one `max_by`, [[Jdbc.mergeBatch]] with its staging
-  * anti-join and the MERGE guard, [[InMemoryCdcTarget]] with its
-  * guard.
+  * [[PartitionedTableCdcTarget]] keeps the newest row with one
+  * `max_by` (a log append: one sort), [[Jdbc.mergeBatch]] with its
+  * staging anti-join and the MERGE guard, [[InMemoryCdcTarget]] with
+  * its guard.
   *
   * Every CDC sink calls a target the same way: [[Sink.start]] drives
   * the micro-batches and the merge runs under [[Sink.guarded]] (retry

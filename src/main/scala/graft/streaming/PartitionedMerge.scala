@@ -31,8 +31,8 @@ import graft.sources.VersionedTable
   *  1. redelivery fast-path before any staging (manifest txn guard);
   *  2. partition count resolved from TABLE state (the head manifest),
   *     the constructor count only seeding fresh tables;
-  *  3. the first commit and a flat-legacy migration take the
-  *     copy-on-write body, as a fold does.
+  *  3. the first commit takes the copy-on-write body, as a fold
+  *     does.
   *
   * The copy-on-write body: touched pids from ONE narrow job over the
   * input ([[VersionedTable.touchedPids]]); read ONLY the touched
@@ -94,7 +94,7 @@ private[graft] object PartitionedMerge {
   def merge(spark: SparkSession, root: String, batchId: Long,
       rows: DataFrame, pk: String, seqCols: Seq[String], cols: Seq[String],
       configuredP: Int, readSchema: Option[StructType] = None,
-      schemaDdl: Option[String] = None, migrateFlat: Boolean = false,
+      schemaDdl: Option[String] = None,
       beforeCommit: () => Unit = () => ()): Unit = {
     // redelivery fast-path: skip BEFORE staging any data (the txn
     // check inside commitPartitions still guards the race window)
@@ -106,12 +106,12 @@ private[graft] object PartitionedMerge {
     // compaction) from starting until this merge commits
     VersionedTable.asWriter(root)(VersionedTable.rebasing(VersionedTable.layoutMoved) {
       VersionedTable.head(root) match {
-        case Some(h) if h.partitioned && h.logs.size + 1 >= MaxLogFiles =>
+        case Some(h) if h.logs.size + 1 >= MaxLogFiles =>
           // the count bound is known before any write: fold the logs
           // with the batch
           copyOnWrite(spark, root, batchId, Some(rows), h.logs, key, cols,
-            schema, schemaDdl, Some(h), configuredP, migrateFlat, beforeCommit)
-        case Some(h) if h.partitioned =>
+            schema, schemaDdl, Some(h), configuredP, beforeCommit)
+        case Some(h) =>
           // the log path: the batch's newest row per key, from ONE
           // task, one parquet file sorted by key (which also compresses
           // it). No base read, no touched-pid job, no per-pid write,
@@ -127,17 +127,16 @@ private[graft] object PartitionedMerge {
           VersionedTable.stageLog(applied, root).foreach { log =>
             if (foldDue(h, h.logs :+ log, key))
               copyOnWrite(spark, root, batchId, None, h.logs :+ log, key,
-                cols, schema, schemaDdl, Some(h), configuredP, migrateFlat,
-                beforeCommit)
+                cols, schema, schemaDdl, Some(h), configuredP, beforeCommit)
             else {
               beforeCommit()
               VersionedTable.commitPartitions(Map.empty, root, batchId,
                 schemaDdl = schemaDdl, addLog = Some(log), key = Some(key))
             }
           }
-        case h =>
+        case None =>
           copyOnWrite(spark, root, batchId, Some(rows), Nil, key, cols,
-            schema, schemaDdl, h, configuredP, migrateFlat, beforeCommit)
+            schema, schemaDdl, None, configuredP, beforeCommit)
       }
     })
   }
@@ -159,10 +158,10 @@ private[graft] object PartitionedMerge {
       }(org.apache.spark.sql.Encoders.row(df.schema))
   }
 
-  /** The copy-on-write body: the first commit and a flat-legacy
-    * migration merge `rows`; the FOLD merges `logs` ∪ `rows` (the
-    * head's logs and the batch, or the head's logs plus the log this
-    * merge just wrote, which is never committed itself). Touched pids
+  /** The copy-on-write body: the first commit merges `rows`; the FOLD
+    * merges `logs` ∪ `rows` (the head's logs and the batch, or the
+    * head's logs plus the log this merge just wrote, which is never
+    * committed itself). Touched pids
     * of the input from one narrow job; only the touched partitions'
     * base is read; newest per key under (seqCols, log position) with
     * the base at position 0 and the batch after the logs, so the later
@@ -173,11 +172,10 @@ private[graft] object PartitionedMerge {
       key: VersionedTable.TableKey, cols: Seq[String],
       schema: StructType, schemaDdl: Option[String],
       head: Option[VersionedTable.Head], configuredP: Int,
-      migrateFlat: Boolean, beforeCommit: () => Unit): Unit = {
+      beforeCommit: () => Unit): Unit = {
     val Log = VersionedTable.LogCol
     val p = head.flatMap(_.nParts).getOrElse(configuredP)
     val parts = head.fold(Map.empty[String, Seq[String]])(_.parts)
-    val flatLegacy = migrateFlat && head.exists(!_.partitioned)
     val fresh = rows.map(_.select(cols.map(col): _*).withColumn(Log, lit(logs.size + 1)))
     val folded = Option.when(logs.nonEmpty)(
       VersionedTable.readLogRows(spark, root, logs, Some(schema))
@@ -185,25 +183,17 @@ private[graft] object PartitionedMerge {
     val input = (folded ++ fresh).reduce(_ unionByName _)
     val batch = input.withColumn(Pid, VersionedTable.keyPid(key.pk, p)).persist()
     try {
-      val touched: Set[Int] =
-        if (flatLegacy) (0 until p).toSet
-        else VersionedTable.touchedPids(batch)
+      val touched = VersionedTable.touchedPids(batch)
       if (touched.isEmpty) return // empty batch: merging nothing is a no-op
-      val existing: DataFrame =
-        if (flatLegacy)
-          // migration: read the whole flat snapshot once; the commit
-          // below is a full partitioned rewrite (overwriteAll)
-          VersionedTable.read(spark, root)
-        else {
-          // partition files live under pid= dirs (the column is the
-          // dir, not a parquet column) — recompute it on read; it is
-          // a pure function of the key, so the recomputation is exact
-          val dirs = touched.toSeq.sorted
-            .flatMap(k => parts.getOrElse(k.toString, Nil))
-            .map(rel => Paths.get(root, rel).toString)
-          if (dirs.isEmpty) batch.drop(Pid, Log).limit(0)
-          else spark.read.schema(schema).parquet(dirs: _*)
-        }
+      // partition files live under pid= dirs (the column is the dir,
+      // not a parquet column) — recompute it on read; it is a pure
+      // function of the key, so the recomputation is exact
+      val dirs = touched.toSeq.sorted
+        .flatMap(k => parts.getOrElse(k.toString, Nil))
+        .map(rel => Paths.get(root, rel).toString)
+      val existing =
+        if (dirs.isEmpty) batch.drop(Pid, Log).limit(0)
+        else spark.read.schema(schema).parquet(dirs: _*)
       val merged = existing.withColumn(Log, lit(0))
         .withColumn(Pid, VersionedTable.keyPid(key.pk, p))
         .unionByName(batch)
@@ -216,7 +206,7 @@ private[graft] object PartitionedMerge {
       val staged = VersionedTable.stagePartitioned(merged, root, Pid)
       beforeCommit()
       VersionedTable.commitPartitions(staged, root, batchId,
-        overwriteAll = flatLegacy, schemaDdl = schemaDdl,
+        schemaDdl = schemaDdl,
         nParts = Some(p), foldLogs = head.fold(Set.empty[String])(_.logs.map(_.dir).toSet),
         key = Some(key))
     } finally batch.unpersist()

@@ -11,15 +11,15 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.streaming.{CdcApplied, PartitionedTableCdcTarget, TableEvolvingCdcTarget}
 
-/** Partition-scoped compaction and the compact() safety guards:
-  *  (a) compact() REFUSES a partitioned table instead of silently
-  *      flattening its layout and dropping its manifest schema;
-  *  (b) compactPartitions rewrites ONLY over-budget partitions (the
+/** Partition-scoped compaction:
+  *  (a) compactPartitions rewrites ONLY over-budget partitions (the
   *      rest are byte-identical across the commit), is data-lossless,
   *      and is a no-op (no commit) when nothing is over budget;
-  *  (c) an evolving table's manifest schema SURVIVES its own
+  *  (b) an evolving table's manifest schema SURVIVES its own
   *      compaction — a restarted writer still reloads every widened
   *      column;
+  *  (c) a compaction racing a merge rebases: the merged state
+  *      survives;
   *  (d) expire + vacuum reclaim the pre-compaction small-file dirs
   *      without touching live data.
   */
@@ -72,17 +72,6 @@ class CompactionSpec extends SparkSpec {
       (1L to 120L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
     finally spark.conf.set("spark.sql.files.maxRecordsPerFile", 0L)
     target
-  }
-
-  test("compact refuses a partitioned table") {
-    val root = freshRoot()
-    val target = new PartitionedTableCdcTarget(spark, root, P)
-    target.merge(0, (1L to 10L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
-    val e = intercept[IllegalStateException] {
-      VersionedTable.compact(spark, root)
-    }
-    assert(e.getMessage.contains("compactPartitions"),
-      s"refusal must point at the partition-scoped form: ${e.getMessage}")
   }
 
   test("compactPartitions rewrites only over-budget partitions, losslessly") {
@@ -194,38 +183,6 @@ class CompactionSpec extends SparkSpec {
         finally w.close()
       }.sum
     assert(billed == newBytes, s"billed $billed != staged $newBytes")
-  }
-
-  test("compact rebases on a racing append: the racer's rows survive") {
-    // The r12 fix under test: the old compact retried its OVERWRITE at
-    // the new head with the pre-race snapshot, dropping a concurrent
-    // append's rows from latest. Here a writer thread appends rows
-    // while the main thread compacts in a loop — every append must be
-    // in the final snapshot no matter how the commits interleave.
-    // (Compaction attempts take ~0.5s between version-read and link;
-    // appends land inside that window nearly every time.)
-    val root = freshRoot()
-    VersionedTable.commit(
-      s.range(0, 50).toDF("id"), root, overwrite = true)
-    val appended = 8
-    val writer = new Thread(() => {
-      for (i <- 1 to appended) {
-        VersionedTable.commit(
-          Seq(1000L + i).toDF("id"), root, maxAttempts = 50)
-      }
-    })
-    writer.start()
-    try {
-      while (writer.isAlive) {
-        VersionedTable.compact(spark, root, maxAttempts = 50)
-      }
-    } finally writer.join()
-    VersionedTable.compact(spark, root, maxAttempts = 50)
-    val ids = VersionedTable.read(spark, root)
-      .collect().map(_.getLong(0)).toSet
-    val want = (0L until 50L).toSet ++ (1L to appended.toLong).map(1000L + _)
-    assert(ids == want,
-      s"lost rows: ${want -- ids}; phantom rows: ${ids -- want}")
   }
 
   test("compactPartitions rebases on a racing merge: merged state survives") {

@@ -78,9 +78,10 @@ class DeleteSpec extends SparkSpec {
   }
 
   test("erasing every key leaves a readable, mergeable, compactable table") {
-    // all labels gone writes "parts":{} — the table is still
-    // partitioned, and with no data file left the erasure's schema
-    // stamp is what lets read() serve an empty typed frame
+    // all labels gone writes "parts":{} — an empty label body, not a
+    // missing one (which readers refuse as a flat manifest), and with
+    // no data file left the erasure's schema stamp is what lets read()
+    // serve an empty typed frame
     val root = freshRoot("del-all")
     val target = new PartitionedTableCdcTarget(spark, root, 4)
     target.merge(0, (1L to 3L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
@@ -91,13 +92,13 @@ class DeleteSpec extends SparkSpec {
     assert(target.snapshot.count() == 0)
     assert(VersionedTable.read(spark, root).columns.contains("user_id"))
 
-    // the next merge takes the partitioned path, not flat migration
+    // the next merge lands on the emptied table like on any other
     target.merge(1, Seq(ap(4L, 4L, 1004L, 4.0)).toDS())
     assert(target.snapshot.as[CdcApplied].collect().map(_.user_id).toSeq
       == Seq(4L))
     assert(VersionedTable.partCount(root).contains(4))
 
-    // an emptied head is partitioned: compactPartitions applies to it
+    // compaction and erasure apply to an emptied head
     VersionedTable.deleteKeys(spark, root, "user_id", Seq(4L).toDF("user_id"))
     assert(VersionedTable.compactPartitions(spark, root).isEmpty)
     assert(VersionedTable.deleteKeys(spark, root, "user_id",

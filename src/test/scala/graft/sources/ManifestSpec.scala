@@ -13,14 +13,16 @@ import graft.streaming.{CdcApplied, PartitionedTableCdcTarget, TableFollower}
 /** The manifest record ([[VersionedTable.Manifest]]) is the only code
   * that knows the on-disk format. Pinned:
   *  (a) every manifest shape the public APIs write parses and renders
-  *      back to the same bytes — flat append/overwrite/compaction,
-  *      full and delta partitioned commits (drops included), forced
-  *      checkpoints, a rescale's overwrite_parts, flat and partitioned
-  *      restores, a follower's followsrc stamp and an evolving
-  *      table's schema;
+  *      back to the same bytes — full and delta commits (drops
+  *      included), log appends, forced checkpoints, a rescale's
+  *      overwrite_parts, a restore, a follower's followsrc stamp and
+  *      an evolving table's schema;
   *  (b) manifests with hand-stripped stamps (history written before
   *      a field existed) read back through the public accessors with
-  *      the answers their documented fallbacks give. */
+  *      the answers their documented fallbacks give;
+  *  (c) a flat manifest an older build wrote (a `dirs` list, no label
+  *      body) is refused by every data reader, loudly, and still
+  *      listed by history. */
 class ManifestSpec extends SparkSpec {
 
   private lazy val s = spark
@@ -50,15 +52,6 @@ class ManifestSpec extends SparkSpec {
     }
 
   test("every manifest shape renders back to its bytes") {
-    val flat = freshRoot()
-    VersionedTable.commit(Seq(1, 2).toDF("x"), flat)
-    VersionedTable.commit(Seq(3).toDF("x"), flat)
-    VersionedTable.commit(Seq(4).toDF("x"), flat, overwrite = true)
-    VersionedTable.compact(spark, flat)
-    VersionedTable.restore(spark, flat, 2)
-    assert(assertRoundTrips(flat) ==
-      Seq("append", "append", "overwrite", "overwrite", "restore"))
-
     val src = freshRoot()
     val target = new PartitionedTableCdcTarget(spark, src, P)
     target.merge(0, (1L to 40L).map(k => ap(k, k.toDouble)).toDS())
@@ -135,5 +128,37 @@ class ManifestSpec extends SparkSpec {
       .select("op", "writer", "nparts", "is_delta").collect().head
     assert(h.getString(0) == "append_log" && h.getString(1) == "batch" &&
       h.isNullAt(2) && h.getBoolean(3))
+    // the key-hash ops need the count: each refuses, naming the stamp
+    Seq(intercept[IllegalStateException](
+        VersionedTable.readKey(spark, root, "user_id", 1L)),
+      intercept[IllegalStateException](VersionedTable.deleteKeys(spark, root,
+        "user_id", Seq(1L).toDF("user_id"))))
+      .foreach(e => assert(e.getMessage.contains("partition-count stamp"), e.getMessage))
+  }
+
+  test("a flat manifest from an older build is refused, never read as empty") {
+    val root = freshRoot()
+    // a real data dir, so a reader that accepted the manifest would
+    // serve its row
+    Seq(1).toDF("x").write.parquet(
+      Paths.get(root, "data", "0f0f0f0f-0000-0000-0000-000000000000").toString)
+    Files.createDirectories(Paths.get(root, "_versions"))
+    val v1 = Paths.get(root, "_versions", "v00000001.json")
+    Files.writeString(v1, """{"version":1,"op":"append","mver":2,"ts":1700000000000,""" +
+      """"txn":7,"wkind":"batch","kinds":"batch",""" +
+      """"dirs":["data/0f0f0f0f-0000-0000-0000-000000000000"]}""")
+    def refused(read: => Any): Unit = {
+      val e = intercept[IllegalStateException](read)
+      assert(e.getMessage.contains(root) && e.getMessage.contains("v1"),
+        s"the refusal must name the root and the version: ${e.getMessage}")
+    }
+    refused(VersionedTable.read(spark, root))
+    refused(VersionedTable.readAt(spark, root, 1))
+    refused(VersionedTable.committedTxns(root))
+    // history and commitTime read only stamps: the version stays listed
+    val h = VersionedTable.history(spark, root)
+      .select("version", "op").as[(Int, String)].collect()
+    assert(h.toSeq == Seq(1 -> "append"))
+    assert(VersionedTable.commitTime(root, 1) == 1700000000000L)
   }
 }

@@ -23,11 +23,13 @@ import graft.streaming.{CdcApplied, PartitionedTableCdcTarget}
   *      dropTag releases the pin; stale-incarnation tags pin nothing
   *      and read loudly;
   *  (e) versionAsOf/readAsOf resolve the newest commit at-or-before a
-  *      wall-clock instant. */
+  *      wall-clock instant.
+  * The `x` tables are [[KeyedFixture]]'s. */
 class SnapshotSpec extends SparkSpec {
 
   private lazy val s = spark
   import s.implicits._
+  import KeyedFixture.{append, overwrite}
 
   private val P = 4
 
@@ -51,8 +53,8 @@ class SnapshotSpec extends SparkSpec {
 
   test("restore republishes an old snapshot without moving a byte") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1, 2, 3).toDF("x"), root)
-    VersionedTable.commit(Seq(99).toDF("x"), root, overwrite = true)
+    overwrite(Seq(1, 2, 3).toDF("x"), root)
+    overwrite(Seq(99).toDF("x"), root)
     val before = dataDirs(root)
     val v3 = VersionedTable.restore(spark, root, 1)
     assert(v3 == 3, "restore must move history FORWARD")
@@ -135,8 +137,8 @@ class SnapshotSpec extends SparkSpec {
 
   test("retention after a restore keeps re-referenced dirs, reclaims the abandoned head") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1, 2).toDF("x"), root)
-    VersionedTable.commit(Seq(99, 100).toDF("x"), root, overwrite = true)
+    overwrite(Seq(1, 2).toDF("x"), root)
+    overwrite(Seq(99, 100).toDF("x"), root)
     VersionedTable.restore(spark, root, 1)
     VersionedTable.expire(root, keepLast = 1)
     assert(VersionedTable.versions(root) == Seq(3))
@@ -206,10 +208,10 @@ class SnapshotSpec extends SparkSpec {
 
   test("restoreTag recovers a pinned release by name") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1, 2).toDF("x"), root)
+    overwrite(Seq(1, 2).toDF("x"), root)
     VersionedTable.tag(root, "golden")
-    VersionedTable.commit(Seq(3).toDF("x"), root)
-    VersionedTable.commit(Seq(4).toDF("x"), root, overwrite = true)
+    append(Seq(3).toDF("x"), root)
+    overwrite(Seq(4).toDF("x"), root)
     VersionedTable.restoreTag(spark, root, "golden")
     assert(VersionedTable.read(spark, root).as[Int].collect().sorted
       === Array(1, 2))
@@ -220,7 +222,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("a stale tag from a previous incarnation pins nothing and reads loudly") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     VersionedTable.tag(root, "v1")
     // delete-and-recreate the table DATA but keep the _tags dir (the
     // operator nuked the table, the tag registry survived)
@@ -231,7 +233,7 @@ class SnapshotSpec extends SparkSpec {
     }
     wipe(Paths.get(root, "_versions")); wipe(Paths.get(root, "data"))
     VersionedTable.invalidateTxns(root)
-    VersionedTable.commit(Seq(100, 200).toDF("x"), root)
+    overwrite(Seq(100, 200).toDF("x"), root)
 
     // the stale tag is excluded from the incarnation's tag set and
     // must not resolve against the new table's version numbers
@@ -240,7 +242,7 @@ class SnapshotSpec extends SparkSpec {
       VersionedTable.readAtTag(spark, root, "v1")
     }
     // and it pins nothing: retention proceeds as if untagged
-    VersionedTable.commit(Seq(300).toDF("x"), root)
+    overwrite(Seq(300).toDF("x"), root)
     VersionedTable.expire(root, keepLast = 1)
     assert(VersionedTable.versions(root).size == 1)
   }
@@ -318,7 +320,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("tag-name and identity guards refuse the silent-dead-pin shapes") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     // a leading-dot name would be skipped by tags() (dotfiles are
     // temp space) — created-but-pinning-nothing must be refused
     intercept[IllegalArgumentException] {
@@ -338,9 +340,9 @@ class SnapshotSpec extends SparkSpec {
 
   test("expire's condemn protocol: crash recovery resurrects, vacuum keeps condemned dirs") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1, 2).toDF("x"), root)
-    VersionedTable.commit(Seq(3, 4).toDF("x"), root, overwrite = true)
-    VersionedTable.commit(Seq(5).toDF("x"), root, overwrite = true)
+    overwrite(Seq(1, 2).toDF("x"), root)
+    overwrite(Seq(3, 4).toDF("x"), root)
+    overwrite(Seq(5).toDF("x"), root)
 
     // simulate a pass that died between condemn and verdict
     val live = Paths.get(root, "_versions", f"v${1}%08d.json")
@@ -368,10 +370,10 @@ class SnapshotSpec extends SparkSpec {
 
   test("timestamp time travel resolves the newest commit at-or-before") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     val t1 = VersionedTable.commitTime(root, 1)
     Thread.sleep(5)
-    VersionedTable.commit(Seq(2).toDF("x"), root)
+    append(Seq(2).toDF("x"), root)
     val t2 = VersionedTable.commitTime(root, 2)
     assert(t1 <= t2, "commit stamps must be monotonic")
 
@@ -394,12 +396,12 @@ class SnapshotSpec extends SparkSpec {
     // v2 with the (older) real clock. The clamp keeps versionAsOf
     // resolving the NEWEST version at-or-before any instant.
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     val f = Paths.get(root, "_versions", "v00000001.json")
     val future = System.currentTimeMillis() + 3600L * 1000
     Files.writeString(f, Files.readString(f)
       .replaceAll("\"ts\":\\d+", s""""ts":$future"""))
-    VersionedTable.commit(Seq(2).toDF("x"), root)
+    append(Seq(2).toDF("x"), root)
     val t1 = VersionedTable.commitTime(root, 1)
     val t2 = VersionedTable.commitTime(root, 2)
     assert(t1 === future)
@@ -412,14 +414,14 @@ class SnapshotSpec extends SparkSpec {
     // exactly the mixed-version-writer incident mverGuard detects —
     // forge a future-format manifest as the head and list.
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     val v2 = Paths.get(root, "_versions", "v00000002.json")
     Files.writeString(v2,
-      s"""{"version":2,"op":"append","mver":99,"ts":${System
-        .currentTimeMillis()},"wkind":"batch","kinds":"batch","dirs":[]}""")
+      s"""{"version":2,"op":"append_log","mver":99,"ts":${System
+        .currentTimeMillis()},"wkind":"batch","kinds":"batch","parts":{}}""")
     val rows = VersionedTable.history(spark, root)
       .select("version", "op").as[(Int, String)].collect().toMap
-    assert(rows(1) === "append")
+    assert(rows(1) === "overwrite_parts")
     assert(rows(2) === "unreadable:mver=99")
     // the data readers still refuse the future format loudly
     intercept[IllegalStateException] {

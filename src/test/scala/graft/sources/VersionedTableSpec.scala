@@ -6,20 +6,30 @@ import graft.SparkSpec
 
 /** Transactional guarantees of the versioned-manifest table format:
   * atomic publish, snapshot isolation, optimistic concurrency, time
-  * travel, vacuum of failed-commit debris. */
+  * travel, vacuum of failed-commit debris. The tables are
+  * [[KeyedFixture]]'s. */
 class VersionedTableSpec extends SparkSpec {
 
   private lazy val s = spark
   import s.implicits._
+  import KeyedFixture.{append, overwrite}
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft-vtable").toString
 
+  /** Every file under `data/`: relative path → bytes. */
+  private def dataFiles(root: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val w = Files.walk(Paths.get(root, "data"))
+    try w.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(f => Paths.get(root).relativize(f).toString -> Files.size(f)).toMap
+    finally w.close()
+  }
+
   test("overwrite commits are atomic versions with time travel") {
     val root = freshRoot()
-    val v1 = VersionedTable.commit(Seq(1, 2, 3).toDF("x"), root)
-    val v2 = VersionedTable.commit(Seq(10, 20).toDF("x"), root,
-      overwrite = true)
+    val v1 = overwrite(Seq(1, 2, 3).toDF("x"), root)
+    val v2 = overwrite(Seq(10, 20).toDF("x"), root)
     assert(v1 == 1 && v2 == 2)
     assert(VersionedTable.read(spark, root).as[Int].collect().sorted
       === Array(10, 20))
@@ -30,17 +40,23 @@ class VersionedTableSpec extends SparkSpec {
 
   test("append accumulates data dirs without rewriting old ones") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
-    VersionedTable.commit(Seq(2).toDF("x"), root)
-    VersionedTable.commit(Seq(3).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
+    val seeded = dataFiles(root)
+    append(Seq(2).toDF("x"), root)
+    append(Seq(3).toDF("x"), root)
     assert(VersionedTable.read(spark, root).as[Int].collect().sorted
       === Array(1, 2, 3))
     assert(VersionedTable.versions(root) == Seq(1, 2, 3))
+    // each append added one log dir; the seed's files are untouched
+    val after = dataFiles(root)
+    assert(seeded.forall { case (f, n) => after.get(f).contains(n) },
+      "an append rewrote or removed an existing data file")
+    assert(Files.list(Paths.get(root, "data")).count() == 3)
   }
 
   test("a crashed commit is invisible and vacuum reclaims its debris") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     // simulate a writer dying after staging data but before the
     // manifest link: orphan parquet under data/, no version file
     Seq(99).toDF("x").write.parquet(
@@ -98,7 +114,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("vacuum's age grace protects in-flight staging") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     // an unreferenced dir that is BEING STAGED right now looks exactly
     // like commit debris — only its file age tells them apart (the
     // r13 managed-maintenance race: immediate vacuum deleted a
@@ -115,30 +131,36 @@ class VersionedTableSpec extends SparkSpec {
 
   test("a lost commit race throws ConcurrentCommit; retry lands on top") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
+    overwrite(Seq(1).toDF("x"), root)
     // squat version 2 (the concurrent winner)
-    VersionedTable.commitOnce(Seq(2).toDF("x"), root,
-      overwrite = false, expected = 1)
+    KeyedFixture.appendAt(Seq(2).toDF("x"), root, expected = 1)
     // a writer that still believes the table is at v1 must lose...
+    val log = KeyedFixture.stageLog(Seq(3).toDF("x"), root)
     intercept[VersionedTable.ConcurrentCommit] {
-      VersionedTable.commitOnce(Seq(3).toDF("x"), root,
-        overwrite = false, expected = 1)
+      VersionedTable.commitPartitionsOnce(Map.empty, root, expected = 1,
+        addLog = log, key = Some(KeyedFixture.Key))
     }
-    // ...and the retrying commit() replays cleanly on the new state
-    val v = VersionedTable.commit(Seq(3).toDF("x"), root)
-    assert(v == 3)
+    // ...and the retrying commit replays the same staged log cleanly
+    // on the new state
+    val v = VersionedTable.commitPartitions(Map.empty, root, batchId = 0,
+      addLog = log, key = Some(KeyedFixture.Key))
+    assert(v.contains(3))
     assert(VersionedTable.read(spark, root).as[Int].collect().sorted
       === Array(1, 2, 3))
   }
 
-  test("commitBatch is an exactly-once streaming sink under redelivery") {
+  test("commitPartitions is an exactly-once streaming sink under redelivery") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val root = freshRoot()
+    // one micro-batch, one log appended under the batch id's txn
+    def commitBatch(df: org.apache.spark.sql.DataFrame, id: Long): Option[Int] =
+      VersionedTable.commitPartitions(Map.empty, root, id,
+        addLog = KeyedFixture.stageLog(df, root), key = Some(KeyedFixture.Key))
     val input = MemoryStream[Int]
     val q = input.toDS().toDF("x").writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-        VersionedTable.commitBatch(df, root, id); ()
+        commitBatch(df, id); ()
       }
       .outputMode("append").start()
     try {
@@ -148,29 +170,33 @@ class VersionedTableSpec extends SparkSpec {
         === Array(1, 2, 3))
       // a restart redelivers the last batch: same batch id, same data —
       // the txn in the manifest makes the re-commit a no-op
-      val again = VersionedTable.commitBatch(Seq(3).toDF("x"), root, 1L)
+      val again = commitBatch(Seq(3).toDF("x"), 1L)
       assert(again.isEmpty, "redelivered batch must be skipped")
       assert(VersionedTable.read(spark, root).as[Int].collect().sorted
         === Array(1, 2, 3))
       // a genuinely new batch id still lands
-      assert(VersionedTable.commitBatch(Seq(4).toDF("x"), root, 2L).nonEmpty)
+      assert(commitBatch(Seq(4).toDF("x"), 2L).nonEmpty)
       assert(VersionedTable.read(spark, root).count() == 4)
     } finally q.stop()
   }
 
   test("compact + expire + vacuum collapse append debris losslessly") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1).toDF("x"), root)
-    VersionedTable.commit(Seq(2).toDF("x"), root)
-    VersionedTable.commit(Seq(3).toDF("x"), root)
-    val v = VersionedTable.compact(spark, root)
-    assert(v == 4)
+    overwrite(Seq(1).toDF("x"), root)
+    append(Seq(2).toDF("x"), root)
+    append(Seq(3).toDF("x"), root)
+    // every populated label is over a zero-file budget, and the two
+    // logs fold: one rewrite of the whole table
+    assert(VersionedTable.compactPartitions(spark, root, maxFilesPerPart = 0)
+      .nonEmpty)
+    assert(VersionedTable.versions(root).last == 4)
     assert(VersionedTable.read(spark, root).as[Int].collect().sorted
       === Array(1, 2, 3), "compaction changed data")
     // retention: keep only the compacted version, then reclaim
     assert(VersionedTable.expire(root, keepLast = 1) == Seq(1, 2, 3))
     val removed = VersionedTable.vacuum(root, graceMillis = 0)
-    assert(removed.size == 3, s"3 append dirs should be reclaimed: $removed")
+    assert(removed.size == 3,
+      s"the seed dir and 2 log dirs should be reclaimed: $removed")
     assert(VersionedTable.read(spark, root).as[Int].collect().sorted
       === Array(1, 2, 3))
     val dataDirs = Files.list(Paths.get(root, "data")).count()
@@ -179,9 +205,9 @@ class VersionedTableSpec extends SparkSpec {
 
   test("a resolved snapshot keeps reading its own files across commits") {
     val root = freshRoot()
-    VersionedTable.commit(Seq(1, 2).toDF("x"), root)
+    overwrite(Seq(1, 2).toDF("x"), root)
     val snap = VersionedTable.read(spark, root) // resolves v1's manifest
-    VersionedTable.commit(Seq(100).toDF("x"), root, overwrite = true)
+    overwrite(Seq(100).toDF("x"), root)
     VersionedTable.vacuum(root, graceMillis = 0) // must not touch v1 refs
     assert(snap.as[Int].collect().sorted === Array(1, 2),
       "in-flight reader saw a concurrent overwrite")

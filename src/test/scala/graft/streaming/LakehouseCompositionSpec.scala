@@ -11,7 +11,8 @@ import graft.sources.{ChangeIngest, VersionedTable}
   * point and replays at the merge/commit point proven whole-batch
   * no-ops by the manifest txn guard. Composes only public surfaces:
   * [[PipelineRegistry.reconcileDemux]], [[PipelineManager.startDemux]],
-  * [[CdcDemux.mergeInto]], [[TableCdcTarget]], [[VersionedTable]]. */
+  * [[CdcDemux.mergeInto]], [[PartitionedTableCdcTarget]],
+  * [[VersionedTable]]. */
 class LakehouseCompositionSpec extends SparkSpec {
 
   private def rec(tbl: String, id: Long, ts: String, uid: Long,
@@ -44,17 +45,17 @@ class LakehouseCompositionSpec extends SparkSpec {
     def build(p: PipelineSpec) = (
       ChangeIngest.readJsonFiles(s, p.source),
       Map[String, CdcTarget](
-        "events" -> new TableCdcTarget(s, rootEvents),
-        "users" -> new TableCdcTarget(s, rootUsers)))
+        "events" -> new PartitionedTableCdcTarget(s, rootEvents),
+        "users" -> new PartitionedTableCdcTarget(s, rootUsers)))
 
     // --- first driver: provision from the table, land batch 0 -------
     val mgr1 = new PipelineManager(s)
     val r1 = reg.reconcileDemux(mgr1)(build)
     assert(r1.started == Seq("lh_demux"), r1.toString)
     mgr1.get("lh_demux").get.query.processAllAvailable()
-    val evT = new TableCdcTarget(s, rootEvents)
-    val usT = new TableCdcTarget(s, rootUsers)
-    def snap(t: TableCdcTarget): Map[Long, Double] =
+    val evT = new PartitionedTableCdcTarget(s, rootEvents)
+    val usT = new PartitionedTableCdcTarget(s, rootUsers)
+    def snap(t: PartitionedTableCdcTarget): Map[Long, Double] =
       t.snapshot.as[CdcApplied].collect().map(r => r.user_id -> r.value).toMap
     assert(snap(evT) == Map(1L -> 2.5), s"events table: ${snap(evT)}")
     assert(snap(usT) == Map(7L -> 0.5), s"users table: ${snap(usT)}")
@@ -86,7 +87,7 @@ class LakehouseCompositionSpec extends SparkSpec {
       // commit produces) — the manifest txn id makes it a WHOLE-BATCH
       // no-op: state identical, no new version committed --------------
       for (root <- Seq(rootEvents, rootUsers)) {
-        val t = new TableCdcTarget(s, root)
+        val t = new PartitionedTableCdcTarget(s, root)
         val lastTxn = VersionedTable.committedTxns(root).max
         val vBefore = VersionedTable.versions(root).size
         val stateBefore = t.snapshot.as[CdcApplied].collect().toSet

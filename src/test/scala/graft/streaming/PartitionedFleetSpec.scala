@@ -9,12 +9,11 @@ import graft.sources.{ChangeIngest, VersionedTable}
 /** The 100 TB write path as the PROVEN fleet path (VERDICT r12 item
   * 4): wire records → registry row → [[PipelineRegistry.reconcile]] →
   * [[PipelineManager.startCdc]] → [[PartitionedTableCdcTarget]] —
-  * with a driver crash-restart in the middle. The COW
-  * [[TableCdcTarget]] compositions stay as the small-table fast path;
-  * this pins that the partition-scoped target rides the exact same
-  * managed machinery: checkpoint resume, manifest-txn redelivery
-  * no-ops, and O(touched)-partition rewrites all inside the fleet
-  * loop, not just in direct-call unit specs. */
+  * with a driver crash-restart in the middle. This pins that the
+  * lakehouse target rides the same managed machinery as the other
+  * targets: checkpoint resume, manifest-txn redelivery no-ops, and
+  * O(touched)-partition rewrites all inside the fleet loop, not just
+  * in direct-call unit specs. */
 class PartitionedFleetSpec extends SparkSpec {
 
   private def rec(id: Long, ts: String, uid: Long, tpe: String,

@@ -14,11 +14,12 @@ import graft.sources.VersionedTable
   *  (a) untouched partition dirs ride commits verbatim — byte-
   *      identical files, no rewrite;
   *  (b) the [[CdcTarget]] contract (out-of-order, redelivery no-op,
-  *      stale pre-delete) holds exactly as in the copy-on-write form;
-  *  (c) snapshots are EQUAL to the copy-on-write target's under the
-  *      same batch sequence;
-  *  (d) a flat copy-on-write table migrates in place on first merge,
-  *      then gets partition-scoped rewrites.
+  *      stale pre-delete, in-batch duplicates) holds, directly and
+  *      through [[CdcStream.mergeInto]];
+  *  (c) snapshots are EQUAL to [[InMemoryCdcTarget]]'s (the contract's
+  *      reference model) under the same batch sequence;
+  *  (d) the partition-count stamp and retention hold across restarts
+  *      and maintenance.
   */
 class PartitionedTableCdcTargetSpec extends SparkSpec {
 
@@ -97,13 +98,21 @@ class PartitionedTableCdcTargetSpec extends SparkSpec {
     val root = freshRoot()
     val target = new PartitionedTableCdcTarget(spark, root, P)
 
-    target.merge(0, Seq(ap(1, 2, 2000, 2.0), ap(2, 3, 1500, 5.0)).toDS())
-    val b1 = Seq(ap(1, 0, 500, 9.9), ap(2, 4, 2500, 0.0, del = true))
+    // in-batch duplicates keep the newest per key (the first merge)
+    target.merge(0, Seq(ap(1, 1, 1000, 1.0), ap(1, 2, 2000, 2.0),
+      ap(2, 3, 1500, 5.0), ap(2, 1, 1200, 4.0)).toDS())
+    assert(byKey(target.snapshot)(1L).event_id == 2 &&
+      byKey(target.snapshot)(2L).value == 5.0)
+    // stale row for key 1 + newer delete for key 2 + in-batch
+    // duplicates of key 3 (a later merge)
+    val b1 = Seq(ap(1, 0, 500, 9.9), ap(2, 4, 2500, 0.0, del = true),
+      ap(3, 7, 7000, 7.0), ap(3, 9, 9000, 9.0), ap(3, 8, 8000, 8.0))
     target.merge(1, b1.toDS())
     val snap = byKey(target.snapshot)
     assert(snap(1L).event_id == 2 && snap(1L).value == 2.0,
       "stale row regressed newer state")
     assert(!snap.contains(2L), "newer delete must tombstone the key")
+    assert(snap(3L).event_id == 9, "in-batch duplicates kept an older row")
 
     // redelivery: whole-batch no-op, no new version
     val vBefore = VersionedTable.versions(root).size
@@ -117,10 +126,34 @@ class PartitionedTableCdcTargetSpec extends SparkSpec {
     assert(!byKey(target.snapshot).contains(2L))
   }
 
-  test("snapshot equality with the copy-on-write form") {
-    val cowRoot = freshRoot(); val partRoot = freshRoot()
-    val cow = new TableCdcTarget(spark, cowRoot)
-    val part = new PartitionedTableCdcTarget(spark, partRoot, P)
+  test("mergeInto streams micro-batches end-to-end into the table") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    def ev(id: Long, t: Long, uid: Long, tpe: String, v: Double) =
+      CdcEvent(id, new Timestamp(t), uid, tpe, v)
+
+    val root = freshRoot()
+    val target = new PartitionedTableCdcTarget(spark, root, P)
+    val input = MemoryStream[CdcEvent]
+    val checkpoint = Files.createTempDirectory("graft_tbl_ckpt").toString
+    val q = CdcStream.mergeInto(input.toDS(), target, checkpoint)
+    try {
+      input.addData(ev(1, 1000, 1, "update", 1.0), ev(2, 2000, 2, "update", 2.0))
+      q.processAllAvailable()
+      input.addData(ev(3, 3000, 1, "update", 3.0), ev(4, 4000, 2, "error", 0.0))
+      q.processAllAvailable()
+      val snap = byKey(target.snapshot)
+      assert(snap.keySet == Set(1L) && snap(1L).value == 3.0,
+        s"stream merge end state wrong: $snap")
+      // every micro-batch landed as its own version, its batch id the txn
+      assert(VersionedTable.versions(root).size == 2)
+      assert(VersionedTable.committedTxns(root) == Set(0L, 1L))
+    } finally q.stop()
+  }
+
+  test("snapshot equality with the in-memory target") {
+    val memory = new InMemoryCdcTarget
+    val part = new PartitionedTableCdcTarget(spark, freshRoot(), P)
     val batches: Seq[Seq[CdcApplied]] = Seq(
       (1L to 25L).map(k => ap(k, k, 1000 + k, k.toDouble)),
       Seq(ap(3, 100, 50000, 3.3), ap(9, 101, 50001, 0.0, del = true),
@@ -128,33 +161,10 @@ class PartitionedTableCdcTargetSpec extends SparkSpec {
       Seq(ap(3, 50, 900, 111.1), // stale, must lose on both targets
         ap(9, 103, 60000, 9.9))) // post-delete revive with newer seq
     batches.zipWithIndex.foreach { case (b, i) =>
-      cow.merge(i.toLong, b.toDS()); part.merge(i.toLong, b.toDS())
+      memory.merge(i.toLong, b.toDS()); part.merge(i.toLong, b.toDS())
     }
-    assert(byKey(part.snapshot) == byKey(cow.snapshot),
-      "partition-scoped and copy-on-write merges diverged")
-  }
-
-  test("migrates a flat copy-on-write table in place") {
-    val root = freshRoot()
-    val cow = new TableCdcTarget(spark, root)
-    cow.merge(0, (1L to 10L).map(k => ap(k, k, 1000 + k, k.toDouble)).toDS())
-    cow.merge(1, Seq(ap(2, 50, 9000, 2.5)).toDS())
-    assert(VersionedTable.parts(root).isEmpty, "precondition: flat table")
-
-    val part = new PartitionedTableCdcTarget(spark, root, P)
-    part.merge(2, Seq(ap(11, 60, 9500, 11.0)).toDS())
-    val parts = VersionedTable.parts(root)
-    assert(parts.nonEmpty, "first partitioned merge must migrate the layout")
-    val snap = byKey(part.snapshot)
-    assert(snap.size == 11 && snap(2L).value == 2.5 && snap(11L).value == 11.0)
-
-    // next merge is partition-scoped: only the touched pid moves
-    val touchedPid = pidOf(3L).toString
-    part.merge(3, Seq(ap(3, 70, 9900, 3.9)).toDS())
-    val parts2 = VersionedTable.parts(root)
-    assert(parts2 - touchedPid == parts - touchedPid,
-      "post-migration merge rewrote untouched partitions")
-    assert(byKey(part.snapshot)(3L).value == 3.9)
+    assert(byKey(part.snapshot) == memory.snapshot,
+      "the lakehouse merge diverged from the in-memory reference")
   }
 
   test("the manifest's partition count survives a misconfigured restart") {

@@ -124,7 +124,7 @@ class RescaleSpec extends SparkSpec {
       Seq(ap(7, 300, 97000, 7.7)).toDS().toDF(),
       pk = "user_id", seqCols = Seq("ts", "event_id"),
       cols = Seq("user_id", "event_id", "ts", "value", "is_deleted"),
-      configuredP = 8, migrateFlat = true,
+      configuredP = 8,
       beforeCommit = () => if (!fired) {
         fired = true
         VersionedTable.rescalePartitions(spark, root, "user_id", 16)

@@ -259,7 +259,10 @@ class TableFollowerSpec extends SparkSpec {
     // txn-LESS foreign commit: invisible to committedTxns, caught by
     // the provenance check instead
     val s2 = spark; import s2.implicits._
-    VersionedTable.commit(Seq(1L).toDF("id"), dst)
+    VersionedTable.commitPartitionsOnce(VersionedTable.stagePartitioned(
+      Seq(1L).toDF("user_id")
+        .withColumn(VersionedTable.PidCol, VersionedTable.keyPid("user_id", P)),
+      dst, VersionedTable.PidCol), dst, expected = 0, nParts = Some(P))
     val follower = new TableFollower(spark, src, dst, "user_id", P)
     val e = intercept[IllegalStateException] { follower.tick() }
     assert(e.getMessage.contains("no follower provenance"), e.getMessage)
