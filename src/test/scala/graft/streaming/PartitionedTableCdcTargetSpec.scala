@@ -126,6 +126,56 @@ class PartitionedTableCdcTargetSpec extends SparkSpec {
     assert(!byKey(target.snapshot).contains(2L))
   }
 
+  test("copy-on-write fold absorbs out-of-order, redelivery, stale pre-delete") {
+    val root = freshRoot()
+    val target = new PartitionedTableCdcTarget(spark, root, P)
+    target.merge(0, Seq(ap(1, 2, 2000, 2.0), ap(2, 3, 1500, 5.0)).toDS())
+    target.merge(1, Seq(ap(3, 1, 1000, 3.0)).toDS())
+    assert(VersionedTable.head(root).get.logs.size == 1,
+      "a one-row merge into the table must append a log")
+
+    // stale row for key 1 + newer delete for key 2, in a batch whose
+    // log outweighs the two-row base: it folds with the logged key 3
+    val b1 = Seq(ap(1, 0, 500, 9.9), ap(2, 4, 2500, 0.0, del = true)) ++
+      (1000L until 1200L).map(k => ap(k, k, 3000 + k, k.toDouble))
+    target.merge(2, b1.toDS())
+    assert(VersionedTable.head(root).get.logs.isEmpty,
+      "a log past the base's bytes must fold")
+    val snap = byKey(target.snapshot)
+    assert(snap(1L).event_id == 2 && snap(1L).value == 2.0,
+      "stale row regressed newer state")
+    assert(!snap.contains(2L), "newer delete must tombstone the key")
+    assert(snap(3L).value == 3.0 && snap.size == 2 + 200,
+      "the fold lost a row")
+
+    // redelivery of the folding batch: whole-batch no-op, no new version
+    val vBefore = VersionedTable.versions(root).size
+    target.merge(2, b1.toDS())
+    assert(byKey(target.snapshot) == snap, "redelivered batch changed state")
+    assert(VersionedTable.versions(root).size == vBefore,
+      "redelivered batch committed a new version")
+
+    // the fold kept the tombstone: a stale pre-delete row cannot
+    // resurrect the key
+    target.merge(3, Seq(ap(2, 1, 1000, 8.8)).toDS())
+    assert(!byKey(target.snapshot).contains(2L),
+      "stale pre-delete row resurrected a deleted key")
+  }
+
+  test("in-batch duplicates dedupe to latest-per-key") {
+    val target = new PartitionedTableCdcTarget(spark, freshRoot(), P)
+    // the first merge (copy-on-write)
+    target.merge(0,
+      Seq(ap(1, 1, 1000, 1.0), ap(1, 5, 5000, 5.0), ap(1, 3, 3000, 3.0)).toDS())
+    val snap = byKey(target.snapshot)
+    assert(snap(1L).event_id == 5 && snap(1L).value == 5.0)
+    // a later merge (a log append): the newest duplicate is a delete
+    target.merge(1, Seq(ap(1, 8, 8000, 0.0, del = true),
+      ap(1, 6, 6000, 6.0), ap(1, 7, 7000, 7.0)).toDS())
+    assert(!byKey(target.snapshot).contains(1L),
+      "an older in-batch duplicate outlived the newer delete")
+  }
+
   test("mergeInto streams micro-batches end-to-end into the table") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
